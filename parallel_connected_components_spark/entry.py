@@ -1197,11 +1197,18 @@ def build_queries():
         # envelope guard (r5 advisor): the DuckDB twin unrolls TRUSS_STAGES
         # rounds per stage up to k=5 — a deeper peel or higher truss at
         # some future scale factor must fail LOUDLY here, not let the two
-        # engines truncate differently and diverge silently
-        assert _info["converged"] and _info["max_truss"] <= max(TRUSS_STAGES), _info
-        assert all(
-            _info["stage_rounds"].get(k, 0) <= n for k, n in TRUSS_STAGES.items()
-        ), _info
+        # engines truncate differently and diverge silently. Raised, not
+        # asserted, so the guard survives ``python -O``.
+        if not (
+            _info["converged"]
+            and _info["max_truss"] <= max(TRUSS_STAGES)
+            and all(
+                _info["stage_rounds"].get(k, 0) <= n for k, n in TRUSS_STAGES.items()
+            )
+        ):
+            raise RuntimeError(
+                f"truss_decomp outside the DuckDB twin's envelope {TRUSS_STAGES}: {_info}"
+            )
         return out
 
     q("truss_decomp", _truss, _truss_sql(TRUSS_STAGES))

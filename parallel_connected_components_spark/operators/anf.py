@@ -32,11 +32,11 @@ The lowest-zero-bit index is computed overflow-safely as
 distinct trailing-zero values in one ball — probability ~2^-600).
 
 Scale: identical per-round plan to CC/PageRank (pinned sorted edges,
-one shuffle join, one repartition+agg); state is num_registers longs
-per vertex (32 bytes at the default 4), messages likewise — HyperANF's
-systolic refinement (send only changed sketches) corresponds to the
-frontier optimization and arrives free if ever needed, since the OR is
-monotone exactly like CC's min.
+one shuffle join, one bit_or aggregation combined before its exchange);
+state is num_registers longs per vertex (32 bytes at the default 4),
+messages likewise — HyperANF's systolic refinement (send only changed
+sketches) corresponds to the frontier optimization and arrives free if
+ever needed, since the OR is monotone exactly like CC's min.
 """
 
 from __future__ import annotations
@@ -113,8 +113,7 @@ def anf(
         obs = Observation()
         obs_holder[it] = obs
         gathered = (
-            msgs.repartition(n_part, "vertex")
-            .groupBy("vertex")
+            msgs.groupBy("vertex")
             .agg(*[F.bit_or(m).alias(f"_n{m}") for m in regs])
             .hint("shuffle_hash")
         )
@@ -158,7 +157,7 @@ def anf(
             return 0, extra
         return grew, extra
 
-    runner = FixpointRunner(spark, "anf", max_iterations=max(rounds, 1))
+    runner = FixpointRunner(spark, "anf", max_iterations=max(rounds, 1), n_part=n_part)
     out = runner.run(init, step, converged)
     final = out.select(
         "vertex", *[lowest_zero_bit(F.col(m)).alias(f"r{i}") for i, m in enumerate(regs)]
@@ -276,7 +275,6 @@ def harmonic_centrality(
         obs_holder[it] = obs
         merged = (
             msgs.union(own)
-            .repartition(n_part, "vertex")
             .groupBy("vertex")
             .agg(
                 *[F.bit_or(m).alias(m) for m in regs],
@@ -313,7 +311,9 @@ def harmonic_centrality(
             return 0, {"grew": grew}
         return grew, {"grew": grew}
 
-    runner = FixpointRunner(spark, "harmonic", max_iterations=max(rounds, 1))
+    runner = FixpointRunner(
+        spark, "harmonic", max_iterations=max(rounds, 1), n_part=n_part
+    )
     out = runner.run(init, step, converged)
     final = out.select("vertex", "score")
     e.unpersist()

@@ -68,19 +68,21 @@ def bfs_hops(
         # re-shuffled every settled (vertex, dist) row each round. A
         # vertex is newly reached exactly when it has no state row
         # (settled distances never improve: messages carry it+1, every
-        # settled dist is ≤ it).
+        # settled dist is ≤ it). Messages are built from the sender's
+        # dist + 1 (== it + 1 on the frontier), not a per-round literal,
+        # so every round generates the same code and reuses one compiled
+        # class instead of compiling a fresh one.
         msgs = (
             e.join(
                 state.filter("frontier")
-                .select(F.col("vertex").alias("src"))
+                .select(F.col("vertex").alias("src"), (F.col("dist") + 1).alias("dist"))
                 .hint("shuffle_hash"),
                 "src",
             )
-            .select(F.col("dst").alias("vertex"), F.lit(it + 1).cast("long").alias("dist"))
+            .select(F.col("dst").alias("vertex"), "dist")
         )
         arrivals = (
-            msgs.repartition(n_part, "vertex")
-            .groupBy("vertex")
+            msgs.groupBy("vertex")
             .agg(F.min("dist").alias("_m"))
             .hint("shuffle_hash")
         )
@@ -103,7 +105,9 @@ def bfs_hops(
             return 0, {"reached": reached, "capped": reached > 0}
         return reached, {"reached": reached}
 
-    runner = FixpointRunner(spark, "bfs_hops", max_iterations=max_iterations)
+    runner = FixpointRunner(
+        spark, "bfs_hops", max_iterations=max_iterations, n_part=n_part
+    )
     out = runner.run(init, step, converged)
     e.unpersist()
     return out.select("vertex", "dist"), runner

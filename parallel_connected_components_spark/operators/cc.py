@@ -707,8 +707,9 @@ def cc_label_propagation(
     it matters: dense resolved clusters.
     """
     # edges partitioned on src once; per-iteration shuffle moves only the
-    # (shrinking) frontier labels — see pagerank() for the plan-shape
-    # rationale (ghost-exchange + post-exchange aggregation).
+    # (shrinking) frontier labels, min-combined per destination in each
+    # map task before the shuffle write — see pagerank() for the
+    # plan-shape rationale (ghost exchange + pre-exchange combine).
     # ``assume_pinned=True``: the caller guarantees edges_sym is already
     # symmetrized, deduped, src-partitioned, and persisted (a pinned
     # repartition or a bucketed table scan, sources/bucketed.py) — the
@@ -738,6 +739,7 @@ def cc_label_propagation(
         checkpoint_dir=checkpoint_dir,
         max_iterations=max_iterations,
         raise_on_cap=raise_on_cap,
+        n_part=n_part,
     )
     runner.stalled = False
     changed_history: list[int] = []
@@ -762,7 +764,8 @@ def cc_label_propagation(
         # is hash(vertex)-partitioned from birth (init derives from the
         # pinned table's src side), the aggregation output matches it,
         # and the join-back needs NO exchange on either side. Net plan:
-        # ONE exchange per iteration (the message repartition) moving
+        # ONE exchange per iteration (the message aggregation's, with a
+        # partial min before it and the final min after it) moving
         # only frontier-emitted labels, where the union-carrier
         # re-shuffled all |V| state rows every round as well. Wall time
         # is within noise of the carrier at sf0.1-sf1 (the state rows
@@ -781,7 +784,6 @@ def cc_label_propagation(
             live_edges["df"]
             .join(senders, "src")
             .select(F.col("dst").alias("vertex"), "label")
-            .repartition(n_part, "vertex")
             .groupBy("vertex")
             .agg(F.min("label").alias("_m"))
             .hint("shuffle_hash")

@@ -36,8 +36,11 @@ def label_propagation_communities(
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, FixpointRunner]:
     """→ (labels(vertex, label), runner). ``edges_sym`` symmetrized."""
-    # see pagerank() for the plan-shape rationale (src-partitioned edges,
-    # post-exchange aggregation)
+    # see pagerank() for the plan-shape rationale (src-partitioned edges).
+    # Unlike CC and PageRank, the (vertex, label) counts are exchanged
+    # explicitly on vertex alone: combining them before the exchange
+    # would place it on (vertex, label), and the per-vertex argmax would
+    # then need a second exchange.
     e, n_part = pin_edges(spark, edges_sym)
     if vertices is not None:
         verts = vertices.select("id").localCheckpoint(eager=True)

@@ -14,12 +14,12 @@ meaningful — risk R5, SURVEY.md §7):
   where D_t = Σ_{outdeg(u)=0} r_t(u)  (dangling mass redistributed);
 - converged when Σ_v |r_{t+1}(v) - r_t(v)| < tol (L1), float64 throughout.
 
-Plan shape per iteration: one shuffle join (edges ⋈ ranks on src — AQE
-skew-split covers hub sources), one post-exchange partial+final sum on
-dst over NARROW (vertex, w) messages, one shuffle_hash-pinned left join
-back to the vertex set (the hint stops AQE flipping it to an in-loop
-driver broadcast); convergence delta and next-iteration dangling mass
-ride the materialization job as an Observation — zero extra actions.
+Plan shape per iteration: one shuffle join (edges ⋈ ranks on src over
+the pinned edge table), a partial sum of the NARROW (vertex, w) messages
+per dst in each map task, ONE exchange on dst and the final sum, then a
+shuffle_hash-pinned left join back to the vertex set that needs no
+exchange; convergence delta and next-iteration dangling mass ride the
+materialization job as an Observation — zero extra actions.
 """
 
 from __future__ import annotations
@@ -75,11 +75,20 @@ def pagerank(
       the driver every iteration — serial work that caps scaling (and
       Catalyst, seeing no stats on the checkpointed rank side, would
       otherwise broadcast the *edges*).
-    - messages are explicitly re-exchanged on dst BEFORE the sum
-      aggregation. Without it the map-side partial aggregation sees ~|V|
-      distinct keys per task with multiplicity < 1 — a giant hash table
-      that combines nothing; after the exchange each task owns its keys
-      and the partial agg combines at full in-degree multiplicity.
+    - messages are summed per dst inside each map task BEFORE the one
+      exchange on dst (partial aggregate → Exchange → final aggregate),
+      so a destination with several in-links from one partition ships
+      one row, not one per edge. Measured on the crawl-web benchmark
+      (5k pages, 4 cores): shuffle bytes per iteration −34%, with the
+      same iteration count and stage count. An earlier plan exchanged
+      messages explicitly on dst first, reasoning that at low in-degree
+      per partition the partial aggregate combines nothing. That holds
+      on a 300×300 lattice at local[16] (in-degree per partition ~0.3):
+      shuffle bytes +1.5%, wall time within noise — too small a loss to
+      keep a second plan (BENCH/BASELINE.md). The exchange takes
+      ``spark.sql.shuffle.partitions`` partitions, which the loop sets
+      to the edge table's ``n_part`` (plans/runner.py:fixpoint_conf), so
+      the join-back stays exchange-free.
 
     ``assume_pinned=True`` (round 5, for the streaming fold): the caller
     guarantees ``edges`` is already (src, dst)-deduped, hash-partitioned
@@ -143,7 +152,7 @@ def pagerank(
     # it does not raise — slow-converging graphs near the cap still answer
     runner = FixpointRunner(
         spark, "pagerank", checkpoint_dir=checkpoint_dir,
-        max_iterations=max_iterations, raise_on_cap=False,
+        max_iterations=max_iterations, raise_on_cap=False, n_part=n_part,
     )
 
     # dangling mass for the *next* step is computed inside the same
@@ -194,7 +203,6 @@ def pagerank(
         contribs = (
             e.join(w, "src")
             .select("dst", "w")
-            .repartition(n_part, "dst")
             .groupBy(F.col("dst").alias("vertex"))
             .agg(F.sum("w").alias("contrib"))
             .hint("shuffle_hash")

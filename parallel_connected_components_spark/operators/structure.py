@@ -324,6 +324,8 @@ def ktruss(
     # the returned edge set may be a SUPERSET of the true k-truss (the
     # r5 advisor's silent-truncation finding) — surfaced, not raised, so
     # the bounded-round behavior callers rely on is unchanged.
+    if deg is not None and _deg is None:
+        deg.unpersist()  # built here, not caller-owned
     return e, {"k": k, "rounds": rounds, "edges": n, "converged": converged}
 
 

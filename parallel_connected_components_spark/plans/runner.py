@@ -35,41 +35,51 @@ from ..sources.tables import TableLayer
 
 
 @contextmanager
-def fixpoint_conf(spark: SparkSession):
-    """Disable AQE for the duration of a fixpoint loop (round 6).
+def fixpoint_conf(spark: SparkSession, n_part: int | None = None):
+    """Disable AQE for the duration of a fixpoint loop (round 6) and, with
+    ``n_part``, plan the loop's shuffles into ``n_part`` partitions.
 
     Every iteration here is a short, fully hinted query (shuffle_hash
-    joins, explicit repartition on the message key) whose shape is pinned
-    by tests/test_plan_shape.py — there is nothing left for AQE to decide,
+    joins, one aggregation on the message key) whose shape is pinned by
+    tests/test_plan_shape.py — there is nothing left for AQE to decide,
     but its per-stage re-optimization still costs serial driver work on
     EVERY exchange of EVERY iteration. Measured (interleaved A/B, same
     JVM, sf0.1): pagerank_1e6 10.1 → 8.0 s min-of-4, cc_labelprop and
     lpa ~15-20% — and the cost class is per-iteration driver latency, the
     same scale-killer as the round-4 shuffle-metrics poll, so the win
     grows with iteration count, not with local core count. Verified at
-    18M edges too (OPTIMIZATION_r06.md).
+    18M edges too (OPTIMIZATION_r06.md). AQE on would also coalesce the
+    message aggregation's exchange, after which the join-back has to
+    re-exchange the state. One-shot (non-loop) queries keep the session's
+    AQE.
 
-    AQE's in-loop value would be runtime skew-join splitting; the loops'
-    joins are degree-bounded or salted by construction (see each
-    operator's skew notes). Deployments that want it anyway set
-    SPARK_GRAFT_LOOP_AQE=1 — one-shot (non-loop) queries keep the
-    session's AQE either way. Nested loops (scc's LP calls inside its own
-    scope) see AQE already off and no-op, restoring correctly."""
-    if os.environ.get("SPARK_GRAFT_LOOP_AQE", "0") == "1":
-        yield
-        return
-    try:
-        old = spark.conf.get("spark.sql.adaptive.enabled")
-    except Exception:  # noqa: BLE001 — conf unreadable: leave it alone
-        old = None
-    if old != "true":
-        yield
-        return
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    ``n_part`` is the pinned edge table's partition count. The message
+    aggregations let Spark place their own exchange (partial aggregate →
+    Exchange → final aggregate, combining each map task's messages per
+    destination before the shuffle write), and that exchange takes
+    ``spark.sql.shuffle.partitions`` partitions. Setting it to ``n_part``
+    keeps the aggregate co-partitioned with the hash(vertex) state, so
+    the join-back needs no exchange. ``n_part`` is not always
+    ``defaultParallelism``: ``assume_pinned`` and bucketed inputs bring
+    their own count.
+
+    Both settings are restored on exit, also when the loop raises. Nested
+    loops (scc's LP calls inside its own scope) see AQE already off and
+    leave it alone; each sets and restores its own partition count."""
+    conf = {"spark.sql.adaptive.enabled": "false"}
+    if n_part is not None:
+        conf["spark.sql.shuffle.partitions"] = str(n_part)
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @dataclass
@@ -137,8 +147,9 @@ class ShuffleMeter:
         bus. The per-iteration loop polls WITHOUT draining (round 6):
         events that land late are simply attributed to the next poll, the
         cumulative totals stay correct, and per-iteration deltas are
-        documented as diagnostics, not billing. End-of-run callers that
-        want exact totals pass drain=True."""
+        documented as diagnostics, not billing. The converged iteration's
+        poll, like any end-of-run caller that wants exact totals, passes
+        drain=True."""
         try:
             sc = spark.sparkContext
             if drain:
@@ -195,12 +206,6 @@ class ShuffleMeter:
             return read, write
         except Exception:  # noqa: BLE001 — internal API; never fail the loop
             return None
-
-
-def _shuffle_totals(spark: SparkSession) -> tuple[int, int] | None:
-    """One-shot full-scan variant (sums every retained stage). Kept for
-    callers without a live meter; loops should use :class:`ShuffleMeter`."""
-    return ShuffleMeter().totals(spark, drain=True)
 
 
 def _partition_histogram(df: DataFrame) -> list[int]:
@@ -271,7 +276,8 @@ class FixpointRunner:
 
     ``step_fn(state, iteration) -> (new_state, changed, extra_metrics)``;
     convergence is ``changed == 0``. The runner owns persistence:
-    algorithms stay pure dataflow.
+    algorithms stay pure dataflow. ``n_part`` is the pinned edge table's
+    partition count, applied to the loop's shuffles (:func:`fixpoint_conf`).
     """
 
     def __init__(
@@ -284,6 +290,7 @@ class FixpointRunner:
         record_partition_lineage: bool = True,
         raise_on_cap: bool = True,
         record_shuffle_bytes: bool | None = None,
+        n_part: int | None = None,
     ):
         if record_shuffle_bytes is None:
             # env kill-switch: lets a fresh-JVM A/B quantify the metric's
@@ -299,6 +306,7 @@ class FixpointRunner:
         self.record_partition_lineage = record_partition_lineage
         self.raise_on_cap = raise_on_cap
         self.record_shuffle_bytes = record_shuffle_bytes
+        self.n_part = n_part
         self.metrics: list[IterationMetrics] = []
 
     # -- persistence -------------------------------------------------------
@@ -349,7 +357,7 @@ class FixpointRunner:
         prev = None
         meter = ShuffleMeter() if self.record_shuffle_bytes else None
         shuffle0 = meter.totals(self.spark) if meter is not None else None
-        with fixpoint_conf(self.spark):
+        with fixpoint_conf(self.spark, self.n_part):
             for it in range(start_iter, self.max_iterations):
                 t0 = time.perf_counter()
                 # NOTE: with AQE off (fixpoint_conf), localCheckpoint
@@ -371,11 +379,13 @@ class FixpointRunner:
                 # whose whole iteration is ~0.4 s. Cumulative totals stay
                 # exact; the per-entry deltas become per-poll-window
                 # aggregates (attributed to the polling iteration), which
-                # is fine for a diagnostic.
+                # is fine for a diagnostic. The converged poll drains the
+                # listener bus (one ~60 ms wait per run) so the run's
+                # totals include its last job.
                 if shuffle0 is not None and (
                     changed == 0 or (it - start_iter) % 4 == 3
                 ):
-                    shuffle1 = meter.totals(self.spark)
+                    shuffle1 = meter.totals(self.spark, drain=changed == 0)
                     if shuffle1 is not None:
                         # Clamp: the meter's running totals are monotone even
                         # under status-store eviction (finalized stages' bytes

@@ -131,13 +131,14 @@ A — row means no stage of that run even reached the 1 s floor
 (frontier CC's stages on this graph are all sub-second — nothing
 long enough to straggle).
 
-The hub keys do NOT need salting in these plans: the per-vertex state
-aggregations are map-side partial (the hub's messages combine within
-each upstream task before the exchange), and AQE skew-join splitting
-covers the message join — so the hub's work is spread across upstream
-tasks rather than landing on one reducer. The salted two-stage pattern
-(`operators/skew.py`) stays reserved for order-sensitive top-k, where
-partial aggregation can't help.
+CC, PageRank, BFS, ANF and harmonic centrality aggregate per-vertex
+state map-side partially (a hub's messages combine within each upstream
+task before the exchange), so a hub's work is spread across upstream
+tasks rather than landing on one reducer. LPA exchanges its (vertex,
+label) counts uncombined, and the loops run with AQE off, so no runtime
+skew-join splitting covers the message join. The salted two-stage
+pattern (`operators/skew.py`) stays reserved for order-sensitive top-k,
+where partial aggregation can't help.
 {END_MARK}"""
     from mdsplice import splice_md
 

@@ -32,9 +32,10 @@ def executed_plan(df) -> str:
 
 def test_hinted_join_back_stays_shuffle_hash(spark):
     """Mirror of the PageRank step's message join + join-back shape
-    (operators/pagerank.py:step): tiny post-aggregation output is
-    exactly the case where AQE wants to broadcast — the hint must win."""
-    edges, n_part = pin_edges(
+    (operators/pagerank.py:step, messages combined per destination
+    before the exchange): tiny aggregation output is exactly the case
+    where AQE wants to broadcast — the hint must win."""
+    edges, _ = pin_edges(
         spark, spark.range(20000).select((F.col("id") % 500).alias("src"),
                                          ((F.col("id") * 7) % 500).alias("dst"))
     )
@@ -44,7 +45,6 @@ def test_hinted_join_back_stays_shuffle_hash(spark):
     contribs = (
         edges.join(state, "src")
         .select("dst", "w")
-        .repartition(n_part, "dst")
         .groupBy(F.col("dst").alias("vertex"))
         .agg(F.sum("w").alias("contrib"))
         .hint("shuffle_hash")
@@ -57,6 +57,101 @@ def test_hinted_join_back_stays_shuffle_hash(spark):
     assert "BroadcastHashJoin" not in plan, plan
     assert "ShuffledHashJoin" in plan, plan
     edges.unpersist()
+
+
+def _walk(node, ancestors=()):
+    """Yield (node, ancestors) over an executed plan's children. A cached
+    scan's inner plan (the pinned edge table's own exchange) is not a
+    child, so it is left out."""
+    yield node, ancestors
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i), ancestors + (node,))
+
+
+def _capture_step_plans(monkeypatch) -> dict:
+    """Record every fixpoint step's DataFrame by runner name and iteration.
+    The runner materializes each one inside its loop, so its executed plan
+    is the one the loop ran (planned under the loop's settings)."""
+    from parallel_connected_components_spark.plans.runner import FixpointRunner
+
+    steps: dict = {}
+    run = FixpointRunner.run
+
+    def recording_run(self, init_state, step_fn, converged_fn, resume=False):
+        def step(state, it):
+            df = step_fn(state, it)
+            steps.setdefault(self.name, {})[it] = df
+            return df
+
+        return run(self, init_state, step, converged_fn, resume=resume)
+
+    monkeypatch.setattr(FixpointRunner, "run", recording_run)
+    return steps
+
+
+def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
+    """With ``spark.sql.shuffle.partitions`` != the pinned table's
+    partition count, iteration 1 of CC and PageRank must still run ONE
+    hash exchange outside the cached edge scan, with a HashAggregate on
+    each side of it (messages combined per destination before the shuffle
+    write), and no broadcast. A partition-count mismatch between the
+    aggregation and the hash(vertex) state would add a second exchange at
+    the join-back. The session setting is restored after the loop, also
+    when a step raises."""
+    import pytest
+
+    from parallel_connected_components_spark.operators import (
+        cc_label_propagation,
+        pagerank,
+        symmetrize,
+    )
+    from parallel_connected_components_spark.plans.runner import FixpointRunner
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    n_part = spark.sparkContext.defaultParallelism
+    mismatched = str(n_part + 3)
+    spark.conf.set(key, mismatched)
+    try:
+        steps = _capture_step_plans(monkeypatch)
+        i = F.col("id")
+        # a 60-vertex path plus hub fan-in: several CC rounds, and
+        # destinations that receive many messages per map task
+        edges = spark.range(60).select(i.alias("src"), (i + 1).alias("dst")).union(
+            spark.range(2000).select((i % 200 + 100).alias("src"), (i % 7).alias("dst"))
+        )
+        cc_label_propagation(spark, symmetrize(edges))
+        pagerank(spark, edges)
+        assert spark.conf.get(key) == mismatched
+        for name in ("cc_lp", "pagerank"):
+            plan = steps[name][1]._jdf.queryExecution().executedPlan()
+            text = plan.toString()
+            assert "BroadcastHashJoin" not in text, text
+            nodes = list(_walk(plan))
+            exchanges = [
+                (n, up) for n, up in nodes
+                if n.nodeName() == "Exchange"
+                and "hashpartitioning" in n.simpleString(100)
+            ]
+            assert len(exchanges) == 1, text
+            ex, up = exchanges[0]
+            assert any(a.nodeName() == "HashAggregate" for a in up), text
+            assert any(
+                n.nodeName() == "HashAggregate" for n, _ in _walk(ex.child())
+            ), text
+
+        def boom(state, it):
+            assert spark.conf.get(key) == "3"
+            raise RuntimeError("step failed")
+
+        runner = FixpointRunner(spark, "boom", n_part=3)
+        with pytest.raises(RuntimeError, match="step failed"):
+            runner.run(spark.range(3), boom, lambda s, it: (0, {}))
+        assert spark.conf.get(key) == mismatched
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_pinned_edges_join_does_not_reexchange_edges(spark):

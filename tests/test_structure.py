@@ -82,6 +82,31 @@ def test_ktruss_k5_on_k5_clique(spark):
     assert got[(4, 9)] == 2 and got[(9, 11)] == 2
 
 
+def test_ktruss_unpersists_only_its_own_degree_table(spark, monkeypatch):
+    """ktruss(orient_by_degree=True) builds an (id, degree) table when the
+    caller passes none, and must unpersist it before returning; a
+    caller-passed ``_deg`` stays caller-owned."""
+    from parallel_connected_components_spark.operators.graph import degrees, symmetrize
+
+    k5 = [(i, j) for i in range(5) for j in range(i + 1, 5)]
+    df = spark.createDataFrame(k5 + [(4, 9), (9, 11)], "src long, dst long")
+    released = []
+    unpersist = type(df).unpersist
+
+    def spy(self, *args, **kwargs):
+        released.append(self.columns)
+        return unpersist(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "unpersist", spy)
+    edges, _ = ktruss(spark, df, k=5, orient_by_degree=True)
+    assert {(r.src, r.dst) for r in edges.collect()} == set(k5)
+    assert ["id", "degree"] in released
+    released.clear()
+    own = degrees(symmetrize(df)).localCheckpoint(eager=True)
+    ktruss(spark, df, k=5, orient_by_degree=True, _deg=own)
+    assert ["id", "degree"] not in released
+
+
 # ------------------------------------------------------- clustering coeff
 
 
