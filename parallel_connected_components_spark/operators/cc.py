@@ -45,7 +45,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner, IterationMetrics
+from ..plans.runner import FixpointRunner, IterationMetrics, release
 from .graph import canonicalize, contract_edges, pin_edges
 
 
@@ -743,7 +743,13 @@ def cc_label_propagation(
     )
     runner.stalled = False
     changed_history: list[int] = []
-    live_edges = {"df": e0, "count": e0.count(), "prune_on": bool(prune_every)}
+    # only the prune rewrite reads the live edge count; counting it on
+    # every call would cost a job per call (scc's coloring included)
+    live_edges = {
+        "df": e0,
+        "count": e0.count() if prune_every else None,
+        "prune_on": bool(prune_every),
+    }
     # Frontier invariant: every live edge must have carried its source's
     # CURRENT label at least once. Edges added by a prune rewrite violate
     # it when their source last changed BEFORE the prune (it would never
@@ -916,6 +922,7 @@ def cc_label_propagation(
         # when no snapshot exists: the fresh init is all-changed anyway)
         pending_senders["df"] = verts.select(F.col("id").alias("vertex"))
     final = runner.run(init, step, converged, resume=resume)
+    release(verts)
     if not assume_pinned:
         e0.unpersist()
     if live_edges["df"] is not e0:

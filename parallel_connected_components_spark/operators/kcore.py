@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
-from ..plans.runner import FixpointRunner
+from ..plans.runner import FixpointRunner, release
 from .graph import pin_dedup_edges, vertices_of
 
 
@@ -132,6 +132,7 @@ def coreness(
 
     runner = FixpointRunner(spark, "coreness", max_iterations=max_iterations)
     out = runner.run(init, step, converged)
+    release(verts)
     e.unpersist()
     return out.select("vertex", "core"), runner
 

@@ -24,7 +24,7 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner
+from ..plans.runner import FixpointRunner, release
 from .graph import pin_edges
 
 
@@ -114,5 +114,6 @@ def label_propagation_communities(
         return changed, {}
 
     final = runner.run(init.withColumn("old_label", F.col("label")), step, converged)
+    release(verts)
     e.unpersist()
     return final.select("vertex", "label"), runner

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.runner import release
 from .graph import canonicalize, degrees, symmetrize
 from .triangles import triangle_count, triangles_per_vertex
 
@@ -315,7 +316,7 @@ def ktruss(
         rounds += 1
         done = n_kept == n
         if owned:
-            e.unpersist()
+            release(e)
         e, owned, n = kept, True, n_kept
         if done:
             converged = True
@@ -325,7 +326,7 @@ def ktruss(
     # r5 advisor's silent-truncation finding) — surfaced, not raised, so
     # the bounded-round behavior callers rely on is unchanged.
     if deg is not None and _deg is None:
-        deg.unpersist()  # built here, not caller-owned
+        release(deg)  # built here, not caller-owned
     return e, {"k": k, "rounds": rounds, "edges": n, "converged": converged}
 
 
@@ -391,7 +392,7 @@ def truss_decomposition(
         )
         enumerations += 1
         if backing is not None:
-            backing.unpersist()
+            release(backing)
         survivors, backing = st.select("src", "dst"), st
         while True:
             stage_rounds[k] = stage_rounds.get(k, 0) + 1
@@ -420,17 +421,17 @@ def truss_decomposition(
                 .localCheckpoint(eager=True)
             )
             if truss_owned:
-                truss.unpersist()
+                release(truss)
             else:
-                canon.unpersist()  # truss's base view just materialized
+                release(canon)  # truss's base view just materialized
             truss, truss_owned = new_truss, True
             k += 1
             if k > max_k:
                 break
     if backing is not None:
-        backing.unpersist()  # not returned; truss snapshots are independent
+        release(backing)  # not returned; truss snapshots are independent
     if deg is not None:
-        deg.unpersist()
+        release(deg)
     return truss, {
         "stage_rounds": stage_rounds,
         "max_truss": k - 1,

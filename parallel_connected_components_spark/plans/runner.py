@@ -101,6 +101,43 @@ class IterationMetrics:
         return d
 
 
+class CompileMeter:
+    """Cumulative (generated classes compiled, JIT milliseconds) of the
+    driver JVM: the count of Spark's ``CodegenMetrics`` compilation-time
+    histogram (one entry per Janino compile, i.e. per codegen cache miss)
+    and ``CompilationMXBean.getTotalCompilationTime``. The JVM handles are
+    looked up once, so :meth:`totals` costs two py4j calls. Warm reruns of
+    a pipeline should compile nothing; a count that keeps rising means the
+    codegen cache is too small for the working set or a per-run literal
+    is defeating it (session.py, ``spark.sql.codegen.cache.maxEntries``)."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        jvm = spark.sparkContext._jvm
+        self._compiles = (
+            jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        )
+        self._jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+
+    def totals(self) -> tuple[int, int]:
+        return self._compiles.getCount(), self._jit.getTotalCompilationTime()
+
+
+def release(df: DataFrame) -> None:
+    """``df.unpersist()`` that also frees a ``localCheckpoint``'s blocks.
+
+    On Spark 4.1.2 ``DataFrame.unpersist()`` only drops cache-manager
+    entries; a checkpoint's blocks belong to the RDD inside its
+    ``LogicalRDD`` and stay in ``getPersistentRDDs()`` until Python and
+    JVM garbage collection let the ContextCleaner drop them. The caller
+    must not read ``df`` afterwards (non-blocking, like ``unpersist()``).
+    Goes through ``SparkContext.unpersistRDD``: ``RDD.unpersist`` would
+    log a lineage warning for every released checkpoint."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), False)
+
+
 class ShuffleMeter:
     """Incremental cumulative (shuffle read bytes, shuffle write bytes) from
     the JVM app-status store — the raw material for the reference's
@@ -278,6 +315,15 @@ class FixpointRunner:
     convergence is ``changed == 0``. The runner owns persistence:
     algorithms stay pure dataflow. ``n_part`` is the pinned edge table's
     partition count, applied to the loop's shuffles (:func:`fixpoint_conf`).
+
+    Every 4th iteration and at convergence the runner polls its meters and
+    records the deltas since the previous poll in ``IterationMetrics.extra``:
+    ``shuffle_read_bytes`` / ``shuffle_write_bytes`` (:class:`ShuffleMeter`),
+    ``codegen_compiles``, the generated classes Spark compiled (codegen cache
+    misses), and ``jit_ms``, the driver JVM's JIT compilation time
+    (:class:`CompileMeter`). A warm rerun of the same pipeline should show
+    ``codegen_compiles == 0``; ``pagerank`` is the known exception (its
+    per-iteration dangling mass is an inlined double literal).
     """
 
     def __init__(
@@ -357,6 +403,8 @@ class FixpointRunner:
         prev = None
         meter = ShuffleMeter() if self.record_shuffle_bytes else None
         shuffle0 = meter.totals(self.spark) if meter is not None else None
+        compiles = CompileMeter(self.spark)
+        compiles0 = compiles.totals()
         with fixpoint_conf(self.spark, self.n_part):
             for it in range(start_iter, self.max_iterations):
                 t0 = time.perf_counter()
@@ -371,20 +419,27 @@ class FixpointRunner:
                 new_state = step_fn(state, it).localCheckpoint(eager=True)
                 changed, extra = converged_fn(new_state, it)
                 if prev is not None:
-                    prev.unpersist()
+                    release(prev)
                 prev, state = state, new_state
-                # Poll the meter every few iterations plus at convergence
-                # (round 6): each poll costs ~20-40 ms of py4j round-trips
-                # even incrementally, a per-iteration driver tax on loops
-                # whose whole iteration is ~0.4 s. Cumulative totals stay
-                # exact; the per-entry deltas become per-poll-window
-                # aggregates (attributed to the polling iteration), which
-                # is fine for a diagnostic. The converged poll drains the
-                # listener bus (one ~60 ms wait per run) so the run's
-                # totals include its last job.
-                if shuffle0 is not None and (
-                    changed == 0 or (it - start_iter) % 4 == 3
-                ):
+                # Poll the meters every few iterations plus at convergence
+                # (round 6): each shuffle poll costs ~20-40 ms of py4j
+                # round-trips even incrementally, a per-iteration driver
+                # tax on loops whose whole iteration is ~0.4 s. Cumulative
+                # totals stay exact; the per-entry deltas become
+                # per-poll-window aggregates (attributed to the polling
+                # iteration), which is fine for a diagnostic. The converged
+                # poll drains the listener bus (one ~60 ms wait per run) so
+                # the run's totals include its last job.
+                poll = changed == 0 or (it - start_iter) % 4 == 3
+                if poll:
+                    compiles1 = compiles.totals()
+                    extra = dict(
+                        extra,
+                        codegen_compiles=compiles1[0] - compiles0[0],
+                        jit_ms=compiles1[1] - compiles0[1],
+                    )
+                    compiles0 = compiles1
+                if poll and shuffle0 is not None:
                     shuffle1 = meter.totals(self.spark, drain=changed == 0)
                     if shuffle1 is not None:
                         # Clamp: the meter's running totals are monotone even
@@ -411,6 +466,8 @@ class FixpointRunner:
                         f"{self.name}: no convergence in {self.max_iterations} iterations"
                         " (cap analog: /root/reference/src/cc_openmp.c:82)"
                     )
+        if prev is not None:
+            release(prev)
         return state
 
     @property

@@ -81,6 +81,18 @@ def get_spark(
         # per-iteration polls (a few stages apart), small enough that the
         # one-shot full scans (task_skew_report) stay sub-second.
         .config("spark.ui.retainedStages", "2000")
+        # Codegen cache sized to the engine's working set. At Spark's
+        # default of 100 entries one hub-skew benchmark pass (cc + lpa +
+        # scc) overflows the cache, so every warm rerun recompiled 141
+        # classes it had just run and the driver paid Janino plus HotSpot
+        # JIT again; at 2200 a warm pass compiles none (BENCH/BASELINE.md,
+        # "Codegen cache residency"). Sizing run: all 61 __spark_entry__
+        # queries at sf0.01 on a cold session, cache set to 100000,
+        # 4 cores, compiled 1093 classes (scripts/check_entry.py prints
+        # the count); 2200 is that working set with a 2x margin. Static
+        # conf: it applies when the session starts, and extra_conf below
+        # still overrides it.
+        .config("spark.sql.codegen.cache.maxEntries", "2200")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     # Input-split sizing for the local sandbox: bench/test parquet is

@@ -154,6 +154,44 @@ def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
         spark.conf.set(key, old)
 
 
+def test_step_code_is_identical_across_iterations(spark, monkeypatch):
+    """Iterations 2 and 3 of each loop must generate the same code, so the
+    codegen cache serves every iteration after the first few from one set
+    of compiled classes. A value that changes per iteration and is planned
+    as a literal, such as ``F.lit(it + 1)`` for a BFS message's distance,
+    is inlined into the generated code and forces a fresh compile each
+    round. Known exception, not tested here:
+    ``pagerank`` inlines its per-iteration dangling mass (a double
+    literal), so each of its iterations compiles one new class. Compares
+    the whole-stage code text of the executed step plans, so it does not
+    depend on what the shared codegen cache already holds."""
+    from parallel_connected_components_spark.operators import (
+        bfs_hops,
+        cc_label_propagation,
+        coreness,
+        label_propagation_communities,
+        symmetrize,
+    )
+
+    steps = _capture_step_plans(monkeypatch)
+    i = F.col("id")
+    path = spark.range(19).select(i.alias("src"), (i + 1).alias("dst"))
+    sym = symmetrize(path)
+    cc_label_propagation(spark, sym)
+    label_propagation_communities(spark, sym, max_iterations=5)
+    bfs_hops(spark, path, spark.range(1))
+    coreness(spark, sym)
+
+    def code(df) -> list[str]:
+        seq = df._jdf.queryExecution().debug().codegenToSeq()
+        return [seq.apply(k)._2() for k in range(seq.size())]
+
+    for name in ("cc_lp", "lpa", "bfs_hops", "coreness"):
+        it2, it3 = code(steps[name][2]), code(steps[name][3])
+        assert it2, name
+        assert it2 == it3, name
+
+
 def test_pinned_edges_join_does_not_reexchange_edges(spark):
     """The message join over pin_edges must reuse the pinned partitioning:
     exactly one Exchange on the state side, none over the cached edge

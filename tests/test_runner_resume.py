@@ -446,3 +446,30 @@ def test_shuffle_meter_multi_attempt_keeps_max():
     ]
     assert m.totals(fake) == (9, 9)
     assert m.totals(fake) == (9, 9)
+
+
+def test_checkpoint_blocks_released_per_iteration(spark):
+    """The runner frees each superseded iteration's localCheckpoint blocks
+    (plans/runner.py:release). ``DataFrame.unpersist()`` alone leaves a
+    checkpoint's RDD persisted until garbage collection, so the RDDs a
+    run left behind grew by one per iteration. Two paths that need
+    different iteration counts must leave the same RDDs: only the
+    returned labels."""
+    from parallel_connected_components_spark.operators import (
+        cc_label_propagation,
+        symmetrize,
+    )
+
+    jsc = spark.sparkContext._jsc
+    i = F.col("id")
+    left, iterations, results = [], [], []
+    for n in (4, 16):
+        before = set(jsc.getPersistentRDDs().keySet())
+        path = spark.range(n).select(i.alias("src"), (i + 1).alias("dst"))
+        labels, runner = cc_label_propagation(spark, symmetrize(path))
+        assert labels.count() == n + 1
+        results.append(labels)  # held: its blocks are the run's output
+        left.append(set(jsc.getPersistentRDDs().keySet()) - before)
+        iterations.append(runner.num_iterations)
+    assert iterations[1] > iterations[0] + 4, iterations
+    assert [len(x) for x in left] == [1, 1], left
