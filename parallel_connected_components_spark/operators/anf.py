@@ -19,8 +19,9 @@ min() swapped for bitwise OR):
   estimate of |ball_K(v)| is 2^R / 0.77351 with R the index of the
   lowest UNSET bit, averaged over registers. Unions are exact on the
   bitmasks, so sketch merging is associative/commutative/idempotent —
-  the whole round is one bit_or aggregation with the carrier-row
-  pattern, and re-delivery or re-ordering cannot corrupt state.
+  the whole round is one bit_or aggregation over the neighbors' masks
+  OR-merged into the own masks, and re-delivery or re-ordering cannot
+  corrupt state.
 
 Everything up to the final floating-point estimate is INTEGER bit math
 (shift, or, xor, bit_count), portable bit-for-bit across engines — the
@@ -41,10 +42,10 @@ ever needed, since the OR is monotone exactly like CC's min.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import portable_hash64_col
-from ..plans.runner import FixpointRunner
+from ..plans.runner import FixpointRunner, gather, release
 from .graph import pin_dedup_edges, vertices_of
 
 
@@ -69,6 +70,38 @@ def _init_mask(vertex_col, i: int):
 def lowest_zero_bit(mask_col):
     """Index of the lowest unset bit — the FM register value R."""
     return (F.bit_count(mask_col.bitwiseXOR(mask_col + 1)) - 1).cast("long")
+
+
+def _or_neighbors(e: DataFrame, state: DataFrame, regs: list[str]) -> DataFrame:
+    """One sketch round: every vertex ORs its in-neighbors' masks into its
+    own. → ``vertex``, the state's other columns, the new masks
+    ``regs``, the old masks ``_o<m>`` and ``changed`` (any mask moved). The neighbor masks
+    are bit_or-folded over the messages alone (plans/runner.py:gather),
+    then merged with the own masks in an exchange-free join-back — with
+    AQE off in the loop the checkpointed state keeps its hash(vertex)
+    partitioning, so the own rows never cross the exchange."""
+    gathered = gather(
+        e, state.select("vertex", *regs), *[F.bit_or(m).alias(f"_n{m}") for m in regs]
+    )
+    rest = [c for c in state.columns if c not in ("vertex", "changed", *regs)]
+    merged = (
+        state.select("vertex", *rest, *[F.col(m).alias(f"_o{m}") for m in regs])
+        .join(gathered, "vertex", "left")
+        .select(
+            "vertex",
+            *rest,
+            *[
+                F.col(f"_o{m}").bitwiseOR(F.coalesce(F.col(f"_n{m}"), F.lit(0))).alias(m)
+                for m in regs
+            ],
+            *[F.col(f"_o{m}") for m in regs],
+        )
+    )
+    changed = None
+    for m in regs:
+        c = F.col(m) != F.col(f"_o{m}")
+        changed = c if changed is None else (changed | c)
+    return merged.withColumn("changed", changed)
 
 
 def anf(
@@ -97,68 +130,28 @@ def anf(
         "vertex", *[_init_mask(F.col("vertex"), i).alias(m) for i, m in enumerate(regs)]
     )
 
-    obs_holder: dict[int, Observation] = {}
-
     def step(state: DataFrame, it: int) -> DataFrame:
-        # Join-back update (round 6, same rationale as
-        # cc_label_propagation): neighbor registers are bit_or-folded
-        # over the messages alone, then OR-merged with the own registers
-        # in an exchange-free join-back — the checkpointed state keeps
-        # its hash(vertex) partitioning with AQE off in the loop, so the
-        # 8·num_registers-byte own rows stop riding the shuffle.
-        msgs = e.join(
-            state.select(F.col("vertex").alias("src"), *regs).hint("shuffle_hash"),
-            "src",
-        ).select(F.col("dst").alias("vertex"), *regs)
-        obs = Observation()
-        obs_holder[it] = obs
-        gathered = (
-            msgs.groupBy("vertex")
-            .agg(*[F.bit_or(m).alias(f"_n{m}") for m in regs])
-            .hint("shuffle_hash")
-        )
-        merged = (
-            state.select("vertex", *[F.col(m).alias(f"_o{m}") for m in regs])
-            .join(gathered, "vertex", "left")
-            .select(
-                "vertex",
-                *[
-                    F.col(f"_o{m}")
-                    .bitwiseOR(F.coalesce(F.col(f"_n{m}"), F.lit(0)))
-                    .alias(m)
-                    for m in regs
-                ],
-                *[F.col(f"_o{m}") for m in regs],
-            )
-        )
-        changed = None
-        for m in regs:
-            c = F.col(m) != F.col(f"_o{m}")
-            changed = c if changed is None else (changed | c)
-        # the global neighborhood function N(t) = Σ_v |ball_t(v)| rides
-        # the SAME Observation (one more aggregate expression in the
-        # materialization job — still zero extra actions per round):
-        # per-row FM estimate 2^(mean lowest-zero index) / 0.77351
-        mean_r = sum(
-            (F.bit_count(F.col(m).bitwiseXOR(F.col(m) + 1)) - 1) for m in regs
-        ) / float(len(regs))
-        nf = F.sum(F.pow(F.lit(2.0), mean_r) / F.lit(0.77351))
-        return merged.select("vertex", *regs, changed.alias("changed")).observe(
-            obs,
-            F.sum(F.col("changed").cast("long")).alias("changed"),
-            nf.alias("nf"),
-        )
+        return _or_neighbors(e, state, regs).select("vertex", *regs, "changed")
 
-    def converged(new_state: DataFrame, it: int):
-        got = obs_holder.pop(it).get
+    def converged(got: dict, it: int):
         grew = got["changed"] or 0
         extra = {"grew": grew, "neighborhood_function": got["nf"]}
         if it + 1 >= rounds:
             return 0, extra
         return grew, extra
 
+    # the global neighborhood function N(t) = Σ_v |ball_t(v)| rides the
+    # same Observation as the changed count (one more aggregate in the
+    # materialization job — still zero extra actions per round): per-row
+    # FM estimate 2^(mean lowest-zero index) / 0.77351
+    mean_r = sum(lowest_zero_bit(F.col(m)) for m in regs) / float(len(regs))
+    observe = [
+        F.sum(F.col("changed").cast("long")).alias("changed"),
+        F.sum(F.pow(F.lit(2.0), mean_r) / F.lit(0.77351)).alias("nf"),
+    ]
     runner = FixpointRunner(spark, "anf", max_iterations=max(rounds, 1), n_part=n_part)
-    out = runner.run(init, step, converged)
+    out = runner.run(init, step, observe, converged)
+    release(verts)
     final = out.select(
         "vertex", *[lowest_zero_bit(F.col(m)).alias(f"r{i}") for i, m in enumerate(regs)]
     )
@@ -223,8 +216,8 @@ def harmonic_centrality(
     honesty note as effective_diameter.
 
     State carries (masks, est, score); the round update is the anf
-    bit_or gather with two more integer columns folded in the same
-    single aggregation. Early stop when sketches saturate is exact:
+    bit_or gather, with est and score updated in the same join-back.
+    Early stop when sketches saturate is exact:
     stable masks ⇒ Δest = 0 ⇒ later terms vanish, matching a fixed-K
     unrolled twin."""
     from math import lcm
@@ -256,57 +249,26 @@ def harmonic_centrality(
         "vertex", *regs, est_of(regs).alias("est"), F.lit(0).cast("long").alias("score")
     )
 
-    obs_holder: dict[int, Observation] = {}
-
     def step(state: DataFrame, it: int) -> DataFrame:
         coeff = big_l // (it + 1)
-        msgs = e.join(
-            state.select(F.col("vertex").alias("src"), *regs).hint("shuffle_hash"),
-            "src",
-        ).select(
-            F.col("dst").alias("vertex"),
-            *regs,
-            F.lit(None).cast("long").alias("est"),
-            F.lit(None).cast("long").alias("score"),
-            F.lit(False).alias("is_self"),
-        )
-        own = state.select("vertex", *regs, "est", "score", F.lit(True).alias("is_self"))
-        obs = Observation()
-        obs_holder[it] = obs
-        merged = (
-            msgs.union(own)
-            .groupBy("vertex")
-            .agg(
-                *[F.bit_or(m).alias(m) for m in regs],
-                *[
-                    F.max(F.when(F.col("is_self"), F.col(m))).alias(f"_o{m}")
-                    for m in regs
-                ],
-                F.max(F.when(F.col("is_self"), F.col("est"))).alias("_pe"),
-                F.max(F.when(F.col("is_self"), F.col("score"))).alias("_ps"),
-            )
-        )
+        merged = _or_neighbors(e, state, regs)
         new_est = est_of(regs)
-        # early stop must watch the MASKS, not est: a mask can gain a
-        # high bit without moving its lowest zero (est unchanged) yet
-        # still affect neighbors' est in later rounds — stopping on
+        # early stop watches the MASKS (``changed``), not est: a mask can
+        # gain a high bit without moving its lowest zero (est unchanged)
+        # yet still affect neighbors' est in later rounds — stopping on
         # Δest==0 would diverge from the fixed-K unrolled twin
-        changed = None
-        for m in regs:
-            c = F.col(m) != F.col(f"_o{m}")
-            changed = c if changed is None else (changed | c)
         return merged.select(
             "vertex",
             *regs,
             new_est.alias("est"),
-            (F.col("_ps") + F.lit(coeff).cast("long") * (new_est - F.col("_pe"))).alias(
+            (F.col("score") + F.lit(coeff).cast("long") * (new_est - F.col("est"))).alias(
                 "score"
             ),
-            changed.alias("changed"),
-        ).observe(obs, F.sum(F.col("changed").cast("long")).alias("changed"))
+            "changed",
+        )
 
-    def converged(new_state: DataFrame, it: int):
-        grew = obs_holder.pop(it).get["changed"] or 0
+    def converged(got: dict, it: int):
+        grew = got["changed"] or 0
         if it + 1 >= rounds:
             return 0, {"grew": grew}
         return grew, {"grew": grew}
@@ -314,7 +276,10 @@ def harmonic_centrality(
     runner = FixpointRunner(
         spark, "harmonic", max_iterations=max(rounds, 1), n_part=n_part
     )
-    out = runner.run(init, step, converged)
+    out = runner.run(
+        init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
+    )
+    release(verts)
     final = out.select("vertex", "score")
     e.unpersist()
     return final, runner

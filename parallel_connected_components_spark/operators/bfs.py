@@ -7,14 +7,14 @@ neighborhoods around seed sets are a routine link-graph curation step
 (expand a trusted/spam seed list a few hops before scoring, extract a
 subgraph for inspection, bound a crawl frontier).
 
-State is (vertex, dist, frontier). Per round, exactly the package's
-carrier-row shape: frontier rows send dist+1 over the pinned directed
-edges, settled rows ride the same shuffle as self-retention rows, and
-ONE aggregation takes min(dist) — a settled vertex keeps its (smaller)
-distance for free, a newly reached vertex settles at the round number,
-and `frontier` for the next round is exactly `min == round`. Convergence
-(empty frontier) rides the materialization job via Observation; the
-optional ``max_hops`` cap bounds the walk for neighborhood extraction.
+State is (vertex, dist, frontier). Per round, frontier rows send dist+1
+over the pinned directed edges, one min aggregation combines the
+arrivals per receiver, and a full-outer join back to the state settles
+every newly reached vertex at the round number — a settled vertex keeps
+its (smaller) distance, and `frontier` for the next round is exactly the
+set of newly reached vertices. Convergence (empty frontier) rides the
+materialization job via Observation; the optional ``max_hops`` cap
+bounds the walk for neighborhood extraction.
 
 Direction: the edge table is used AS GIVEN (src → dst). Pass the
 symmetrized table for undirected distance, the raw directed table for
@@ -29,9 +29,9 @@ integer recurrence; tests differential against a plain Python BFS.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner
+from ..plans.runner import FixpointRunner, gather
 from .graph import pin_dedup_edges
 
 
@@ -57,37 +57,22 @@ def bfs_hops(
         F.lit(True).alias("frontier"),
     ).dropDuplicates(["vertex"])
 
-    obs_holder: dict[int, Observation] = {}
-
     def step(state: DataFrame, it: int) -> DataFrame:
-        # Join-back update (round 6, same rationale as cc_label_propagation):
-        # with AQE off in the loop the checkpointed state keeps its
+        # With AQE off in the loop the checkpointed state keeps its
         # hash(vertex) partitioning, so the full-outer join-back against
-        # the aggregated frontier needs no exchange on either side and
-        # only the frontier's messages shuffle — the union-carrier form
-        # re-shuffled every settled (vertex, dist) row each round. A
-        # vertex is newly reached exactly when it has no state row
-        # (settled distances never improve: messages carry it+1, every
-        # settled dist is ≤ it). Messages are built from the sender's
-        # dist + 1 (== it + 1 on the frontier), not a per-round literal,
-        # so every round generates the same code and reuses one compiled
-        # class instead of compiling a fresh one.
-        msgs = (
-            e.join(
-                state.filter("frontier")
-                .select(F.col("vertex").alias("src"), (F.col("dist") + 1).alias("dist"))
-                .hint("shuffle_hash"),
-                "src",
-            )
-            .select(F.col("dst").alias("vertex"), "dist")
+        # the gathered arrivals needs no exchange on either side and only
+        # the frontier's messages shuffle. A vertex is newly reached
+        # exactly when it has no state row (settled distances never
+        # improve: messages carry it+1, every settled dist is ≤ it).
+        # Messages are built from the sender's dist + 1 (== it + 1 on the
+        # frontier), not a per-round literal, so every round generates the
+        # same code and reuses one compiled class instead of compiling a
+        # fresh one.
+        arrivals = gather(
+            e,
+            state.filter("frontier").select("vertex", (F.col("dist") + 1).alias("dist")),
+            F.min("dist").alias("_m"),
         )
-        arrivals = (
-            msgs.groupBy("vertex")
-            .agg(F.min("dist").alias("_m"))
-            .hint("shuffle_hash")
-        )
-        obs = Observation()
-        obs_holder[it] = obs
         return (
             state.select("vertex", F.col("dist").alias("_old"))
             .join(arrivals, "vertex", "full")
@@ -96,11 +81,10 @@ def bfs_hops(
                 F.coalesce("_old", "_m").alias("dist"),
                 F.col("_old").isNull().alias("frontier"),
             )
-            .observe(obs, F.sum(F.col("frontier").cast("long")).alias("reached"))
         )
 
-    def converged(new_state: DataFrame, it: int):
-        reached = obs_holder.pop(it).get["reached"] or 0
+    def converged(got: dict, it: int):
+        reached = got["reached"] or 0
         if max_hops is not None and it + 1 >= max_hops:
             return 0, {"reached": reached, "capped": reached > 0}
         return reached, {"reached": reached}
@@ -108,7 +92,10 @@ def bfs_hops(
     runner = FixpointRunner(
         spark, "bfs_hops", max_iterations=max_iterations, n_part=n_part
     )
-    out = runner.run(init, step, converged)
+    out = runner.run(
+        init, step, [F.sum(F.col("frontier").cast("long")).alias("reached")],
+        converged,
+    )
     e.unpersist()
     return out.select("vertex", "dist"), runner
 

@@ -30,12 +30,9 @@ tests/ by asserting pairwise equality plus equality with
 
 Skew: hub vertices make some neighborhoods enormous. The groupBy-min
 aggregations are safe (partial aggregation bounds reduce-side rows per key
-by the map-task count); the joins are covered by AQE skew-join splitting
-(session.py). The Afforest giant-component trick
+by the map-task count). The Afforest giant-component trick
 (/root/reference/src/cc_openmp.c:596-613) generalizes to the frontier:
-resolved regions leave the frontier and stop shuffling; ``prune_every``
-additionally rewrites same-label edges into per-endpoint label shortcuts
-(connectivity-preserving contraction, see :func:`cc_label_propagation`).
+resolved regions leave the frontier and stop shuffling.
 """
 
 from __future__ import annotations
@@ -43,9 +40,9 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner, IterationMetrics, release
+from ..plans.runner import FixpointRunner, IterationMetrics, gather, release
 from .graph import canonicalize, contract_edges, pin_edges
 
 
@@ -174,28 +171,24 @@ def cc_alternating_stars(
         spark, "cc_stars", checkpoint_dir=checkpoint_dir, max_iterations=max_iterations
     )
     prev_sum = {"v": None}
-    obs_holder: dict[int, Observation] = {}
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        out = _small_star(_large_star(state))
-        obs = Observation()
-        obs_holder[it] = obs
-        # set-equality checksum observed during materialization (no extra
-        # job): count + XOR of per-edge hashes, sound because deduped
-        return out.observe(
-            obs,
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        )
+        return _small_star(_large_star(state))
 
-    def converged(new_state: DataFrame, it: int):
-        got = obs_holder.pop(it).get
+    # set-equality checksum observed during materialization (no extra
+    # job): count + XOR of per-edge hashes, sound because deduped
+    observe = [
+        F.count(F.lit(1)).alias("c"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+    ]
+
+    def converged(got: dict, it: int):
         chk = (got["c"], got["h"] or 0)
         changed = 0 if chk == prev_sum["v"] else 1
         prev_sum["v"] = chk
         return changed, {"edges": chk[0]}
 
-    final_edges = runner.run(init, step, converged, resume=resume)
+    final_edges = runner.run(init, step, observe, converged, resume=resume)
     labels = labels_from_star_edges(final_edges, vertices)
     return labels, runner
 
@@ -646,11 +639,9 @@ def cc_label_propagation(
     spark: SparkSession,
     edges_sym: DataFrame,
     vertices: DataFrame | None = None,
-    frontier: bool = True,
     checkpoint_dir: str | None = None,
     max_iterations: int = 200,
     resume: bool = False,
-    prune_every: int = 0,
     stall_window: int = 0,
     stall_ratio: float = 0.6,
     stall_min_iterations: int = 5,
@@ -661,19 +652,13 @@ def cc_label_propagation(
     (label_propagation_sync_omp, /root/reference/src/cc_openmp.c:38-142;
     double-buffering is free — DataFrames are immutable).
 
-    ``frontier=True`` sends messages only from vertices whose label
-    changed last round (the reference's queue-based delta iteration,
-    /root/reference/src/cc_sequential.c:131-161).
+    Only vertices whose label changed last round send messages (the
+    queue-based delta iteration of the reference's
+    src/cc_sequential.c:131-161). Every edge has then
+    carried its source's current label at least once, so a run resumed
+    from a snapshot (which keeps each vertex's ``changed`` flag) simply
+    continues.
 
-    ``prune_every`` is DEPRECATED (round 3): measured in its own
-    hypothesized payoff regime (dense hub blocks resolving in ~2 rounds
-    + a long-path tail driving 24-32 further rounds,
-    scripts/prune_regime_bench.py), pruning is at best cost-neutral per
-    tail iteration and strictly pays its early O(|E|) relabel-join jobs
-    for nothing — per-iteration cost on this substrate is dominated by
-    the vertex-state exchange, which pruning cannot shrink, not by the
-    edge-table probe the frontier semi-join already bounds. Kept only
-    for API compatibility, correctness-tested; default off.
     ``stall_window=w`` (w > 0) arms a high-diameter stall detector: LP is
     O(diameter) rounds, which on web graphs (diameter ~ log V) converges
     in a handful of rounds but on road-network-like graphs (diameter
@@ -688,36 +673,15 @@ def cc_label_propagation(
     ``runner.stalled = True`` and mid-flight labels — :func:`cc_auto`
     then finishes the job with O(log n) alternating stars on the
     label-contracted graph. Default off (w=0): plain LP to convergence.
-
-    ``prune_every=k`` rewrites the live edge set every k rounds: edges whose endpoints
-    share a (transient) label are dropped and replaced by shortcut edges
-    from each dropped endpoint to its current label vertex — the
-    giant-component exclusion (/root/reference/src/cc_openmp.c:596-613)
-    generalized to label propagation. A shared transient label does NOT
-    mean the component is resolved, so dropping alone would sever the
-    message path of a minimum still in flight (counterexample: path
-    1-6-5-7 pruned at (5,7) after round 1 strands 7; regression test
-    ``test_label_prop_prune_path_counterexample``). The shortcut edges
-    restore it: label provenance guarantees ``l(u)`` lies in u's
-    component, and for any dropped edge (u,v), u—l(u)—v is a retained
-    path (l(u)==l(v)), so the rewritten graph has exactly the original
-    components — and the shortcuts double as pointer-doubling hops that
-    speed later rounds. Net shrink = (intra-cluster edges dropped) −
-    (≤2 shortcut edges per dropped endpoint), a large win exactly where
-    it matters: dense resolved clusters.
     """
-    # edges partitioned on src once; per-iteration shuffle moves only the
-    # (shrinking) frontier labels, min-combined per destination in each
-    # map task before the shuffle write — see pagerank() for the
-    # plan-shape rationale (ghost exchange + pre-exchange combine).
     # ``assume_pinned=True``: the caller guarantees edges_sym is already
     # symmetrized, deduped, src-partitioned, and persisted (a pinned
     # repartition or a bucketed table scan, sources/bucketed.py) — the
     # pin exchange is skipped and the table is NOT unpersisted on return.
     if assume_pinned:
-        e0, n_part = edges_sym, edges_sym.rdd.getNumPartitions()
+        e, n_part = edges_sym, edges_sym.rdd.getNumPartitions()
     else:
-        e0, n_part = pin_edges(spark, edges_sym)  # (already materialized)
+        e, n_part = pin_edges(spark, edges_sym)  # (already materialized)
     if vertices is not None:
         verts = vertices.select(F.col("id")).localCheckpoint(eager=True)
     else:
@@ -726,7 +690,7 @@ def cc_label_propagation(
         # distinct needs NO exchange (vs the union-both-endpoints +
         # distinct full shuffle of vertices_of; round 6)
         verts = (
-            e0.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+            e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
         )
     init = verts.select(
         F.col("id").alias("vertex"),
@@ -743,59 +707,16 @@ def cc_label_propagation(
     )
     runner.stalled = False
     changed_history: list[int] = []
-    # only the prune rewrite reads the live edge count; counting it on
-    # every call would cost a job per call (scc's coloring included)
-    live_edges = {
-        "df": e0,
-        "count": e0.count() if prune_every else None,
-        "prune_on": bool(prune_every),
-    }
-    # Frontier invariant: every live edge must have carried its source's
-    # CURRENT label at least once. Edges added by a prune rewrite violate
-    # it when their source last changed BEFORE the prune (it would never
-    # resend, stranding the other endpoint at a stale label — regression
-    # test: test_label_prop_prune_frontier_stale_shortcut). The prune
-    # therefore queues every rewritten edge's source to send once more.
-    pending_senders = {"df": None}
-    obs_holder: dict[int, Observation] = {}
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        # Join-back state update (round 6). History: round 3 replaced the
-        # join-back with a union-carrier (state rows riding the message
-        # shuffle) because under AQE the join-back cost an extra exchange
-        # and flipped to an in-loop driver broadcast. Both problems died
-        # with the round-6 fixpoint_conf: AQE is off in the loop, so (a)
-        # the shuffle_hash hint is planned as hinted, and (b) a
-        # localCheckpoint PRESERVES its output partitioning — the state
-        # is hash(vertex)-partitioned from birth (init derives from the
-        # pinned table's src side), the aggregation output matches it,
-        # and the join-back needs NO exchange on either side. Net plan:
-        # ONE exchange per iteration (the message aggregation's, with a
-        # partial min before it and the final min after it) moving
-        # only frontier-emitted labels, where the union-carrier
-        # re-shuffled all |V| state rows every round as well. Wall time
-        # is within noise of the carrier at sf0.1-sf1 (the state rows
-        # are narrow), but per-iteration shuffle bytes drop by the state
-        # table's size — the term that dominates on a real network.
-        senders = state.filter("changed") if frontier else state
-        senders = senders.select("vertex", "label")
-        if frontier and pending_senders["df"] is not None:
-            extra = state.join(pending_senders["df"], "vertex", "left_semi").select(
-                "vertex", "label"
-            )
-            senders = senders.union(extra).dropDuplicates(["vertex"])
-            pending_senders["df"] = None
-        senders = senders.select(F.col("vertex").alias("src"), "label").hint("shuffle_hash")
-        mins = (
-            live_edges["df"]
-            .join(senders, "src")
-            .select(F.col("dst").alias("vertex"), "label")
-            .groupBy("vertex")
-            .agg(F.min("label").alias("_m"))
-            .hint("shuffle_hash")
+        # The state is hash(vertex)-partitioned from birth (init derives
+        # from the pinned table's src side) and gather's output matches
+        # it, so the join-back needs no exchange: one exchange per
+        # iteration, moving only frontier-emitted labels.
+        mins = gather(
+            e, state.filter("changed").select("vertex", "label"),
+            F.min("label").alias("_m"),
         )
-        obs = Observation()
-        obs_holder[it] = obs
         return (
             state.select("vertex", F.col("label").alias("_old"))
             .join(mins, "vertex", "left")
@@ -804,11 +725,10 @@ def cc_label_propagation(
                 F.least(F.col("_old"), F.coalesce("_m", F.col("_old"))).alias("label"),
                 (F.coalesce("_m", F.col("_old")) < F.col("_old")).alias("changed"),
             )
-            .observe(obs, F.sum(F.col("changed").cast("long")).alias("changed"))
         )
 
-    def converged(new_state: DataFrame, it: int):
-        changed = obs_holder.pop(it).get["changed"] or 0
+    def converged(got: dict, it: int):
+        changed = got["changed"] or 0
         if stall_window > 0 and changed > 0:
             changed_history.append(changed)
             if (
@@ -818,115 +738,15 @@ def cc_label_propagation(
             ):
                 runner.stalled = True
                 return 0, {"stalled": True, "changed_at_stall": changed}
-        # the `changed` guard also guarantees at least one more iteration
-        # runs after a rewrite, so the queued pending_senders always fire
-        if live_edges["prune_on"] and changed and (it + 1) % prune_every == 0:
-            lab = new_state.select("vertex", "label")
-            # materialized once — keep/stars both read it (the double
-            # label join would otherwise recompute per consumer)
-            tagged = (
-                live_edges["df"]
-                .join(lab.withColumnsRenamed({"vertex": "src", "label": "_ls"}), "src")
-                .join(lab.withColumnsRenamed({"vertex": "dst", "label": "_ld"}), "dst")
-                .localCheckpoint(eager=True)
-            )
-            # An edge already in shortcut form — it points at the label
-            # vertex itself (dst == l(src) or src == l(dst)) — is exactly
-            # what a rewrite would produce, so rewriting it again would
-            # only re-queue its source for a resend. Measured (round-3
-            # prune_regime_bench): without this, every prune re-rewrote
-            # the previous prune's shortcut stars and the mandatory
-            # resend re-shuffled the whole resolved region every cycle —
-            # 10x the per-iteration shuffle of no-prune. Keep them as-is.
-            already_shortcut = (F.col("dst") == F.col("_ls")) | (
-                F.col("src") == F.col("_ld")
-            )
-            keep = tagged.filter(
-                (F.col("_ls") != F.col("_ld")) | already_shortcut
-            ).select("src", "dst")
-            # Shortcuts for dropped endpoints: (u, l(u)) both directions,
-            # frozen at this round's labels. Keeps the rewritten graph's
-            # components identical to the original (see docstring proof);
-            # self-shortcuts (l(u)==u) are meaningless and filtered.
-            # Single pass over the dropped set via inline explode.
-            dropped_stars = (
-                tagged.filter((F.col("_ls") == F.col("_ld")) & ~already_shortcut)
-                .select(
-                    F.explode(
-                        F.array(
-                            F.struct(F.col("src").alias("vertex"), F.col("_ls").alias("lab")),
-                            F.struct(F.col("dst").alias("vertex"), F.col("_ld").alias("lab")),
-                        )
-                    ).alias("p")
-                )
-                .select("p.vertex", "p.lab")
-                .filter(F.col("vertex") != F.col("lab"))
-                .dropDuplicates(["vertex", "lab"])
-            )
-            shortcuts = dropped_stars.select(
-                F.col("vertex").alias("src"), F.col("lab").alias("dst")
-            ).union(
-                dropped_stars.select(F.col("lab").alias("src"), F.col("vertex").alias("dst"))
-            )
-            e = keep.union(shortcuts).dropDuplicates(["src", "dst"])
-            # persist-and-count on top of the checkpoint: localCheckpoint
-            # PRESERVES the original plan's ESTIMATED stats, and Catalyst
-            # join estimates MULTIPLY children's sizeInBytes — so
-            # repeated join→checkpoint rewrite cycles grow the BigInt
-            # stat ~3.7x in DIGITS per prune (measured: 23→73→267→996→…)
-            # until a single stats computation takes minutes and the
-            # driver appears hung. A materialized InMemoryRelation
-            # replaces the estimate with REAL byte sizes, resetting the
-            # growth at every rewrite boundary; the metrics count below
-            # doubles as the materializing action.
-            old_live = live_edges["df"]
-            # order matters: localCheckpoint FIRST (truncates the lineage
-            # and the multiplying join-size stats), THEN repartition +
-            # persist — a checkpointed RDD reports UnknownPartitioning,
-            # so persisting the checkpoint directly made every later
-            # message join re-exchange the whole edge table per iteration
-            # (measured: +2.6MB/iter shuffle on a 400k-edge remainder)
-            live_edges["df"] = (
-                e.localCheckpoint(eager=True).repartition(n_part, "src").persist()
-            )
-            # frontier invariant repair: every rewritten edge's source
-            # must send its current label once over the new edge set.
-            # (frontier=False resends everything every round — the
-            # invariant holds trivially, skip the extra job there.)
-            if frontier:
-                pending_senders["df"] = (
-                    shortcuts.select(F.col("src").alias("vertex"))
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-            n_live = live_edges["df"].count()  # also fills the stats-resetting cache
-            if old_live is not e0:
-                old_live.unpersist()
-            # Adaptive disable: a prune that barely shrinks the edge set
-            # signals the dense regions are done — the tail's occasional
-            # same-label edge can never repay an O(|E_live|) relabel join
-            # every k rounds (measured, scripts/prune_regime_bench.py:
-            # steady-state prune checks were the remaining 2x overhead).
-            if live_edges["count"] - n_live < 0.05 * live_edges["count"]:
-                live_edges["prune_on"] = False
-            live_edges["count"] = n_live
-            return changed, {"live_edges": n_live}
         return changed, {}
 
-    if resume and frontier:
-        # a resumed snapshot restores labels with changed=False for
-        # settled vertices while live_edges resets to the FULL edge
-        # table — edges that were pruned before the snapshot have never
-        # carried their source's current label, so schedule one full
-        # resend round to re-establish the frontier invariant (harmless
-        # when no snapshot exists: the fresh init is all-changed anyway)
-        pending_senders["df"] = verts.select(F.col("id").alias("vertex"))
-    final = runner.run(init, step, converged, resume=resume)
+    final = runner.run(
+        init, step, [F.sum(F.col("changed").cast("long")).alias("changed")],
+        converged, resume=resume,
+    )
     release(verts)
     if not assume_pinned:
-        e0.unpersist()
-    if live_edges["df"] is not e0:
-        live_edges["df"].unpersist()
+        e.unpersist()
     return final.select("vertex", "label"), runner
 
 
@@ -974,7 +794,6 @@ def cc_auto(
         spark,
         edges_sym,
         vertices=vertices,
-        frontier=True,
         checkpoint_dir=checkpoint_dir,
         max_iterations=max_iterations,
         stall_window=stall_window,

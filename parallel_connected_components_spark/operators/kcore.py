@@ -39,7 +39,7 @@ differential against the independent sequential peel
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.runner import FixpointRunner, release
 from .graph import pin_dedup_edges, vertices_of
@@ -74,8 +74,6 @@ def coreness(
         ).select("vertex", F.coalesce("core", F.lit(0)).cast("long").alias("core"))
     )
 
-    obs_holder: dict[int, Observation] = {}
-
     def step(state: DataFrame, it: int) -> DataFrame:
         # The H-index comes from a window rank over the gathered
         # neighbor values — rank desc within each vertex, H = max rank
@@ -101,8 +99,6 @@ def coreness(
             )
             .select(F.col("dst").alias("vertex"), F.col("core").alias("_nc"))
         )
-        obs = Observation()
-        obs_holder[it] = obs
         w = Window.partitionBy("vertex").orderBy(F.desc("_nc"))
         h = (
             msgs.repartition(n_part, "vertex")
@@ -124,14 +120,15 @@ def coreness(
                 new_core.alias("core"),
                 (new_core < F.col("_old")).alias("changed"),
             )
-            .observe(obs, F.sum(F.col("changed").cast("long")).alias("changed"))
         )
 
-    def converged(new_state: DataFrame, it: int):
-        return obs_holder.pop(it).get["changed"] or 0, {}
+    def converged(got: dict, it: int):
+        return got["changed"] or 0, {}
 
     runner = FixpointRunner(spark, "coreness", max_iterations=max_iterations)
-    out = runner.run(init, step, converged)
+    out = runner.run(
+        init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
+    )
     release(verts)
     e.unpersist()
     return out.select("vertex", "core"), runner

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, release
 from .graph import pin_edges
@@ -36,8 +36,8 @@ def label_propagation_communities(
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, FixpointRunner]:
     """→ (labels(vertex, label), runner). ``edges_sym`` symmetrized."""
-    # see pagerank() for the plan-shape rationale (src-partitioned edges).
-    # Unlike CC and PageRank, the (vertex, label) counts are exchanged
+    # src-partitioned edges as in plans/runner.py:gather, but unlike CC
+    # and PageRank the (vertex, label) counts are exchanged
     # explicitly on vertex alone: combining them before the exchange
     # would place it on (vertex, label), and the per-vertex argmax would
     # then need a second exchange.
@@ -58,7 +58,6 @@ def label_propagation_communities(
         spark, "lpa", checkpoint_dir=checkpoint_dir, max_iterations=max_iterations,
         raise_on_cap=False,
     )
-    obs_holder: dict[int, Observation] = {}
 
     def step(state: DataFrame, it: int) -> DataFrame:
         lab = state.select(F.col("vertex").alias("src"), "label").hint("shuffle_hash")
@@ -93,8 +92,6 @@ def label_propagation_communities(
         best = counts.groupBy("vertex").agg(
             F.max_by("label", key).alias("new_label")
         ).hint("shuffle_hash")
-        obs = Observation()
-        obs_holder[it] = obs
         return (
             state.select("vertex", F.col("label").alias("old_label"))
             .join(best, "vertex", "left")
@@ -103,17 +100,17 @@ def label_propagation_communities(
                 F.coalesce("new_label", F.col("old_label")).alias("label"),
                 "old_label",
             )
-            .observe(
-                obs,
-                F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed"),
-            )
         )
 
-    def converged(new_state: DataFrame, it: int):
-        changed = obs_holder.pop(it).get["changed"] or 0
-        return changed, {}
+    def converged(got: dict, it: int):
+        return got["changed"] or 0, {}
 
-    final = runner.run(init.withColumn("old_label", F.col("label")), step, converged)
+    final = runner.run(
+        init.withColumn("old_label", F.col("label")),
+        step,
+        [F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed")],
+        converged,
+    )
     release(verts)
     e.unpersist()
     return final.select("vertex", "label"), runner

@@ -27,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner
+from ..plans.runner import FixpointRunner, gather, release
 from .graph import pin_dedup_edges, pin_edges, vertices_of
 
 
@@ -65,30 +65,10 @@ def pagerank(
     first (``streaming.graph._rescale_by_component``) — the incremental
     fold does this automatically.
 
-    Per-iteration plan shape (measured on an 18M-edge graph, see git
-    history for the alternatives that lost):
-    - the edge table is hash-partitioned on src ONCE and persisted; the
-      per-iteration shuffle-hash join then moves only the rank table —
-      the ghost-exchange pattern (/root/reference/src/mpi/cc_mpi.c:950-1049):
-      static topology stays put, per-iteration state travels. No
-      broadcast: a broadcast of either side rebuilds a hashed relation on
-      the driver every iteration — serial work that caps scaling (and
-      Catalyst, seeing no stats on the checkpointed rank side, would
-      otherwise broadcast the *edges*).
-    - messages are summed per dst inside each map task BEFORE the one
-      exchange on dst (partial aggregate → Exchange → final aggregate),
-      so a destination with several in-links from one partition ships
-      one row, not one per edge. Measured on the crawl-web benchmark
-      (5k pages, 4 cores): shuffle bytes per iteration −34%, with the
-      same iteration count and stage count. An earlier plan exchanged
-      messages explicitly on dst first, reasoning that at low in-degree
-      per partition the partial aggregate combines nothing. That holds
-      on a 300×300 lattice at local[16] (in-degree per partition ~0.3):
-      shuffle bytes +1.5%, wall time within noise — too small a loss to
-      keep a second plan (BENCH/BASELINE.md). The exchange takes
-      ``spark.sql.shuffle.partitions`` partitions, which the loop sets
-      to the edge table's ``n_part`` (plans/runner.py:fixpoint_conf), so
-      the join-back stays exchange-free.
+    Per-iteration plan shape: the ``rank/outdeg`` messages travel through
+    one exchange, summed per dst before it (plans/runner.py:gather holds
+    the rationale), then a left join back to the vertex set that needs no
+    exchange.
 
     ``assume_pinned=True`` (round 5, for the streaming fold): the caller
     guarantees ``edges`` is already (src, dst)-deduped, hash-partitioned
@@ -177,38 +157,18 @@ def pagerank(
         )
     dangling_holder = {"v": dangling0}
 
-    # convergence delta + next-iteration dangling mass ride along the
-    # state materialization via Observation — zero extra jobs per
-    # iteration (the C analog computes `changed` inside the same parallel
-    # loop that writes labels, /root/reference/src/cc_openmp.c:92-118).
-    obs_holder: dict[int, Observation] = {}
-
     def step(state: DataFrame, it: int) -> DataFrame:
-        dangling = dangling_holder["v"]
         # dangling vertices (outdeg=0) send no edge mass — filter
         # before the divide (ANSI mode makes x/0 an error, not inf)
-        w = state.filter(F.col("outdeg") > 0).select(
-            F.col("vertex").alias("src"), (F.col("rank") / F.col("outdeg")).alias("w")
-        ).hint("shuffle_hash")
-        # Narrow messages (vertex, w only — 24B rows) + join-back pinned
-        # with shuffle_hash on BOTH sides. The hint on `contribs` is the
-        # load-bearing part: without it AQE flips this join to a
-        # BroadcastHashJoin once the aggregate output looks small — a
-        # serial driver hashed-relation build per iteration. A carrier-row
-        # union (as in cc_label_propagation) was measured too: it avoids
-        # the join but widens every message by two nullable columns
-        # (+40% shuffle bytes/iter at 18M msgs) and lost at 8 cores
-        # (83.8s vs 74.8s) and on 2→8 efficiency (0.75 vs 0.91) — CC
-        # keeps the union form because its carrier adds only a bool.
-        contribs = (
-            e.join(w, "src")
-            .select("dst", "w")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(F.sum("w").alias("contrib"))
-            .hint("shuffle_hash")
+        contribs = gather(
+            e,
+            state.filter(F.col("outdeg") > 0).select(
+                "vertex", (F.col("rank") / F.col("outdeg")).alias("w")
+            ),
+            F.sum("w").alias("contrib"),
         )
-        base = (1.0 - damping) / n + damping * dangling / n
-        new_state = (
+        base = (1.0 - damping) / n + damping * dangling_holder["v"] / n
+        return (
             state.select("vertex", "outdeg", F.col("rank").alias("prev_rank"))
             .join(contribs, "vertex", "left")
             .select(
@@ -218,23 +178,30 @@ def pagerank(
                 "prev_rank",
             )
         )
-        obs = Observation()
-        obs_holder[it] = obs
-        return new_state.observe(
-            obs,
-            F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
-            F.sum(
-                F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))
-            ).alias("dangling"),
-        )
 
-    def converged(new_state: DataFrame, it: int):
-        got = obs_holder.pop(it).get
+    # convergence delta + next-iteration dangling mass ride along the
+    # state materialization — zero extra jobs per iteration (the C analog
+    # computes `changed` inside the same parallel loop that writes
+    # labels, the reference's src/cc_openmp.c:92-118).
+    observe = [
+        F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
+        F.sum(
+            F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))
+        ).alias("dangling"),
+    ]
+
+    def converged(got: dict, it: int):
         delta = got["delta"] or 0.0
         dangling_holder["v"] = got["dangling"] or 0.0
         return (0 if delta < tol else 1), {"l1_delta": delta}
 
-    final = runner.run(init.withColumn("prev_rank", F.col("rank")), step, converged, resume=resume)
+    final = runner.run(
+        init.withColumn("prev_rank", F.col("rank")), step, observe, converged,
+        resume=resume,
+    )
+    release(vo)
+    if init_ranks is not None:
+        release(init)
     if not assume_pinned:
         e.unpersist()
     return final.select("vertex", "rank"), runner

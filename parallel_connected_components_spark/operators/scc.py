@@ -41,11 +41,12 @@ to the edge direction is exactly min-ancestor), the backward mark feeds
 it the REVERSED same-color edges (a color root is its class minimum, so
 v is in the root's SCC iff its min-descendant-within-class equals its
 color). The SCC operator therefore inherits the frontier semi-join, the
-join-free carrier-row update, the pinned sorted edge cache, and the
+exchange-free join-back update, the pinned sorted edge cache, and the
 Observation-based convergence (zero extra actions per step) from the CC
-path, and any future LP tuning speeds SCC for free. On a bowtie-shaped web graph the expected shape is:
-trim peels the cones, one coloring pass floods the giant SCC from its
-minimum member, one backward sweep extracts it — a handful of rounds.
+path, and any future LP tuning speeds SCC for free. On a bowtie-shaped
+web graph the expected shape is: trim peels the cones, one coloring pass
+floods the giant SCC from its minimum member, one backward sweep
+extracts it — a handful of rounds.
 The adversarial worst case (a long chain of singleton SCCs) degrades to
 O(chain) trim passes and is bounded by ``max_iterations``; a
 high-diameter escape analogous to cc_auto's is possible but not
@@ -201,7 +202,7 @@ def _scc_impl(
             # (assume_pinned) instead of re-exchanging it.
             rem_ids = rem_v.select(F.col("vertex").alias("id"))
             colors, lp_runner = cc_label_propagation(
-                spark, rem_e, vertices=rem_ids, frontier=True,
+                spark, rem_e, vertices=rem_ids,
                 max_iterations=max_iterations, assume_pinned=rem_pinned,
             )
             info["color_steps"] += lp_runner.num_iterations

@@ -23,13 +23,12 @@ unbounded logical-plan growth across iterations. Handled two ways:
 
 from __future__ import annotations
 
-import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..sources.tables import TableLayer
 
@@ -53,15 +52,11 @@ def fixpoint_conf(spark: SparkSession, n_part: int | None = None):
     re-exchange the state. One-shot (non-loop) queries keep the session's
     AQE.
 
-    ``n_part`` is the pinned edge table's partition count. The message
-    aggregations let Spark place their own exchange (partial aggregate →
-    Exchange → final aggregate, combining each map task's messages per
-    destination before the shuffle write), and that exchange takes
-    ``spark.sql.shuffle.partitions`` partitions. Setting it to ``n_part``
-    keeps the aggregate co-partitioned with the hash(vertex) state, so
-    the join-back needs no exchange. ``n_part`` is not always
-    ``defaultParallelism``: ``assume_pinned`` and bucketed inputs bring
-    their own count.
+    ``n_part`` is the pinned edge table's partition count, and becomes
+    ``spark.sql.shuffle.partitions`` so that :func:`gather`'s exchange
+    stays co-partitioned with the hash(vertex) state. ``n_part`` is not
+    always ``defaultParallelism``: ``assume_pinned`` and bucketed inputs
+    bring their own count.
 
     Both settings are restored on exit, also when the loop raises. Nested
     loops (scc's LP calls inside its own scope) see AQE already off and
@@ -80,6 +75,55 @@ def fixpoint_conf(spark: SparkSession, n_part: int | None = None):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def gather(edges: DataFrame, senders: DataFrame, *combine: Column) -> DataFrame:
+    """One message exchange over a pinned edge table: every sender row
+    ``(vertex, *payload)`` sends its payload along each out-edge
+    ``vertex → dst``, and the ``combine`` aggregates fold the messages per
+    receiver. → ``(vertex, *combine)``, one row per vertex that received
+    a message.
+
+    Plan shape (measured on an 18M-edge graph and pinned by
+    tests/test_plan_shape.py):
+    - ``edges`` is hash-partitioned on src once and persisted
+      (``graph.pin_edges``), so the shuffle_hash join on src moves only
+      the sender side — the ghost-exchange pattern of the reference's MPI
+      code (src/mpi/cc_mpi.c:950-1049): static topology
+      stays put, per-iteration state travels. No broadcast: broadcasting
+      either side rebuilds a hashed relation on the driver every
+      iteration, serial work that caps scaling (and Catalyst, seeing no
+      stats on a checkpointed state, would otherwise broadcast the edges).
+    - the messages are combined per receiver inside each map task before
+      the one exchange on the receiver (partial aggregate → Exchange →
+      final aggregate), so a receiver with several in-links from one
+      partition ships one row, not one per edge: −34% shuffle bytes per
+      iteration on the crawl-web benchmark at the same iteration and
+      stage count. At low in-degree per partition the partial aggregate
+      combines little (a 300×300 lattice at local[16]: +1.5% bytes, wall
+      time in noise — BENCH/BASELINE.md).
+    - the exchange takes ``spark.sql.shuffle.partitions`` partitions,
+      which :func:`fixpoint_conf` sets to the edge table's ``n_part``, so
+      the output is co-partitioned with a hash(vertex) state and the
+      caller's left join-back needs no exchange. The output carries the
+      shuffle_hash hint: without it the join-back can be planned as a
+      broadcast of the (small-looking) aggregate.
+
+    Only associative, commutative combines belong here (min, sum, bit_or).
+    A fold that needs all of one receiver's messages in a fixed order, or
+    a two-level aggregation such as LPA's per-(vertex, label) counts,
+    repartitions the messages on the receiver explicitly instead."""
+    vertex, *payload = senders.columns
+    return (
+        edges.join(
+            senders.select(F.col(vertex).alias("src"), *payload).hint("shuffle_hash"),
+            "src",
+        )
+        .select(F.col("dst").alias("vertex"), *payload)
+        .groupBy("vertex")
+        .agg(*combine)
+        .hint("shuffle_hash")
+    )
 
 
 @dataclass
@@ -309,12 +353,18 @@ def task_skew_report(
 
 
 class FixpointRunner:
-    """Drive ``state = step(state)`` to convergence.
+    """Drive ``state = step(state)`` to convergence: the one gather/apply
+    superstep loop every message-passing operator runs on.
 
-    ``step_fn(state, iteration) -> (new_state, changed, extra_metrics)``;
-    convergence is ``changed == 0``. The runner owns persistence:
-    algorithms stay pure dataflow. ``n_part`` is the pinned edge table's
-    partition count, applied to the loop's shuffles (:func:`fixpoint_conf`).
+    Per iteration the runner builds ``step(state, it)`` (a lazy plan),
+    attaches the ``observe`` aggregates to it as one Observation,
+    materializes it once (``localCheckpoint``: lineage truncation, one
+    Spark job), and hands the observed values to ``converged(observed,
+    it) -> (changed, extra)``; convergence is ``changed == 0``. The
+    convergence test therefore always rides the iteration's own job. The
+    runner owns persistence: algorithms stay pure dataflow. ``n_part`` is
+    the pinned edge table's partition count, applied to the loop's
+    shuffles (:func:`fixpoint_conf`).
 
     Every 4th iteration and at convergence the runner polls its meters and
     records the deltas since the previous poll in ``IterationMetrics.extra``:
@@ -333,25 +383,15 @@ class FixpointRunner:
         checkpoint_dir: str | None = None,
         snapshot_every: int = 5,
         max_iterations: int = 200,
-        record_partition_lineage: bool = True,
         raise_on_cap: bool = True,
-        record_shuffle_bytes: bool | None = None,
         n_part: int | None = None,
     ):
-        if record_shuffle_bytes is None:
-            # env kill-switch: lets a fresh-JVM A/B quantify the metric's
-            # own overhead (measured ~0 — see BENCH/BASELINE.md)
-            record_shuffle_bytes = (
-                os.environ.get("SPARK_GRAFT_SHUFFLE_METRICS", "1") != "0"
-            )
         self.spark = spark
         self.name = name
         self.tables = TableLayer(spark, checkpoint_dir) if checkpoint_dir else None
         self.snapshot_every = snapshot_every
         self.max_iterations = max_iterations
-        self.record_partition_lineage = record_partition_lineage
         self.raise_on_cap = raise_on_cap
-        self.record_shuffle_bytes = record_shuffle_bytes
         self.n_part = n_part
         self.metrics: list[IterationMetrics] = []
 
@@ -362,10 +402,9 @@ class FixpointRunner:
             "changed": m.changed,
             "seconds": m.seconds,
             "num_partitions": state.rdd.getNumPartitions(),
+            "partition_rows": _partition_histogram(state),
             **m.extra,
         }
-        if self.record_partition_lineage:
-            lineage["partition_rows"] = _partition_histogram(state)
         return self.tables.save_snapshot(self.name, state, lineage=lineage)
 
     def latest(self) -> tuple[DataFrame, int] | None:
@@ -377,18 +416,30 @@ class FixpointRunner:
         return self.tables.load(self.name), it
 
     # -- the loop ----------------------------------------------------------
+    def _observed(
+        self, step_df: DataFrame, observe: list[Column], it: int
+    ) -> tuple[DataFrame, Observation]:
+        """The frame the runner materializes for iteration ``it``:
+        ``step_df`` with the ``observe`` aggregates attached as one
+        Observation. Plan-capture tools wrap this method to read the plan
+        the loop actually ran."""
+        obs = Observation()
+        return step_df.observe(obs, *observe), obs
+
     def run(
         self,
-        init_state: DataFrame | Callable[[], DataFrame],
-        step_fn: Callable[[DataFrame, int], DataFrame],
-        converged_fn: Callable[[DataFrame, int], tuple[int, dict]],
+        init_state: DataFrame,
+        step: Callable[[DataFrame, int], DataFrame],
+        observe: list[Column],
+        converged: Callable[[dict, int], tuple[int, dict]],
         resume: bool = False,
     ) -> DataFrame:
-        """``step_fn(state, it)`` returns the next state as a *lazy* plan;
-        the runner materializes it (lineage truncation) exactly once, then
-        ``converged_fn(new_state, it)`` computes ``(changed, extra)`` over
-        the materialized state — so convergence actions never recompute
-        the iteration's dataflow."""
+        """``step(state, it)`` returns the next state as a *lazy* plan;
+        ``observe`` lists aggregate Columns over that plan. The runner
+        materializes each step exactly once with the aggregates attached,
+        then calls ``converged(observed, it)`` with their values (a dict
+        keyed by alias) for ``(changed, extra)`` — so convergence never
+        costs a job of its own or recomputes the iteration's dataflow."""
         start_iter = 0
         state: DataFrame | None = None
         if resume:
@@ -397,12 +448,11 @@ class FixpointRunner:
                 state, start_iter = got
                 start_iter += 1
         if state is None:
-            state = init_state() if callable(init_state) else init_state
-            state = state.localCheckpoint(eager=True)
+            state = init_state.localCheckpoint(eager=True)
 
         prev = None
-        meter = ShuffleMeter() if self.record_shuffle_bytes else None
-        shuffle0 = meter.totals(self.spark) if meter is not None else None
+        meter = ShuffleMeter()
+        shuffle0 = meter.totals(self.spark)
         compiles = CompileMeter(self.spark)
         compiles0 = compiles.totals()
         with fixpoint_conf(self.spark, self.n_part):
@@ -416,8 +466,9 @@ class FixpointRunner:
                 # as co-partitioned with the pinned edge table and the
                 # aggregation output in the next iteration's plan, while
                 # still truncating lineage every iteration.
-                new_state = step_fn(state, it).localCheckpoint(eager=True)
-                changed, extra = converged_fn(new_state, it)
+                df, obs = self._observed(step(state, it), observe, it)
+                new_state = df.localCheckpoint(eager=True)
+                changed, extra = converged(obs.get, it)
                 if prev is not None:
                     release(prev)
                 prev, state = state, new_state

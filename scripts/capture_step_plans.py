@@ -8,8 +8,9 @@ first one still re-partitions the freshly built state) to
 ``<out_dir>/<query>.txt``. SCC contributes two captures, its coloring LP
 and its backward-mark BFS.
 
-The plan is read after the runner materialized the step, so it is the
-plan the loop ran, under the loop's session settings.
+The plan is read from the frame the runner materialized (the step with
+its Observation attached), so it is the plan the loop ran, under the
+loop's session settings.
 
 Usage: python scripts/capture_step_plans.py <out_dir> [sf]
 """
@@ -35,22 +36,25 @@ HEADER = (
 
 
 def record_steps() -> dict:
-    """Wrap FixpointRunner.run so every step DataFrame is kept:
-    {runner name: [{iteration: df}, ...]}, one dict per loop run."""
+    """Wrap FixpointRunner so every frame a loop materializes is kept:
+    {runner name: [{iteration: df}, ...]}, one dict per loop run. The
+    wrapped method is the one that attaches the Observation: the step's
+    own return value is a different DataFrame that never executes."""
     runs: dict = {}
-    run = FixpointRunner.run
+    run, observed = FixpointRunner.run, FixpointRunner._observed
 
-    def recording_run(self, init_state, step_fn, converged_fn, resume=False):
-        steps: dict = {}
-        runs.setdefault(self.name, []).append(steps)
+    def recording_run(self, *args, **kwargs):
+        self._recorded = {}
+        runs.setdefault(self.name, []).append(self._recorded)
+        return run(self, *args, **kwargs)
 
-        def step(state, it):
-            steps[it] = step_fn(state, it)
-            return steps[it]
-
-        return run(self, init_state, step, converged_fn, resume=resume)
+    def recording_observed(self, step_df, observe, it):
+        df, obs = observed(self, step_df, observe, it)
+        self._recorded[it] = df
+        return df, obs
 
     FixpointRunner.run = recording_run
+    FixpointRunner._observed = recording_observed
     return runs
 
 

@@ -53,7 +53,6 @@ def main(num_pages: int = 1_000_000, write_md: bool = False) -> dict:
     algos = {
         "cc_afforest": lambda: cc_afforest(spark, edges),
         "cc_labelprop_frontier": lambda: cc_label_propagation(spark, sym),
-        "cc_labelprop_pruned": lambda: cc_label_propagation(spark, sym, prune_every=2),
         "cc_two_phase": lambda: cc_two_phase(spark, edges, assume_canonical=True),
         "cc_alternating_stars": lambda: cc_alternating_stars(
             spark, edges, assume_oriented=False

@@ -132,30 +132,6 @@ def test_vertices_of(spark, golden_edges):
     assert {r["id"] for r in vertices_of(golden_edges).collect()} == set(range(6))
 
 
-def test_label_prop_prune_every(spark):
-    """Edge pruning (the giant-component exclusion generalized): same
-    labels with and without prune_every."""
-    base = gen_component_graph(300, 6, 3, seed=17)
-    sym = symmetrize(spark.createDataFrame(base, "src long, dst long"))
-    plain = labels_dict(cc_label_propagation(spark, sym)[0])
-    pruned = labels_dict(cc_label_propagation(spark, sym, prune_every=2)[0])
-    assert plain == pruned == union_find_oracle(base)
-
-
-def test_label_prop_prune_path_counterexample(spark):
-    """ADVICE r1 regression: pruning same-TRANSIENT-label edges severed
-    the message path (edges {(5,6),(5,7),(1,6)}, prune_every=1 left
-    vertex 7 labeled 5). The connectivity-preserving rewrite (label
-    shortcuts for dropped endpoints) must converge 7 → 1."""
-    e = spark.createDataFrame([(5, 6), (5, 7), (1, 6)], "src long, dst long")
-    labels = labels_dict(cc_label_propagation(spark, symmetrize(e), prune_every=1)[0])
-    assert labels == {1: 1, 5: 1, 6: 1, 7: 1}
-    # and the aggressive-prune path agrees with the oracle on a bigger graph
-    base = gen_component_graph(200, 4, 2, seed=23)
-    sym = symmetrize(spark.createDataFrame(base, "src long, dst long"))
-    assert labels_dict(cc_label_propagation(spark, sym, prune_every=1)[0]) == union_find_oracle(base)
-
-
 def test_two_phase_empty_edges_with_vertices(spark):
     """ADVICE r1 regression: edge-less input must label supplied vertices
     as themselves, not crash on empty-schema inference."""
@@ -197,38 +173,22 @@ def test_afforest_hub_graph(spark):
     assert runner.num_iterations == sum(phases.values())
 
 
-def test_label_prop_prune_frontier_stale_shortcut(spark):
-    """Round-2 review regression: a shortcut edge added at prune time
-    whose source last changed BEFORE the prune must still deliver that
-    source's current label (the prune queues rewritten-edge sources to
-    resend once). Chain 0-8-9-1-2-3-4-5 with prune_every=2 stranded
-    vertex 5 at label 1 before the fix."""
-    chain = [(0, 8), (8, 9), (9, 1), (1, 2), (2, 3), (3, 4), (4, 5)]
-    sym = symmetrize(spark.createDataFrame(chain, "src long, dst long"))
-    got = labels_dict(cc_label_propagation(spark, sym, prune_every=2)[0])
-    assert got == union_find_oracle(chain)
-    # and on a longer path (worst case for stale shortcuts: the minimum
-    # travels the full diameter) — shortcuts compress it as they appear
-    path = [(i, i + 1) for i in range(12)]
-    sym2 = symmetrize(spark.createDataFrame(path, "src long, dst long"))
-    got = labels_dict(cc_label_propagation(spark, sym2, prune_every=1)[0])
-    assert got == union_find_oracle(path)
-
-
 def test_label_prop_prune_resume_invariant(spark, tmp_path):
-    """Round-2 review regression: resuming a pruned run restores labels
-    (changed=False for settled vertices) while live_edges resets to the
-    FULL edge table — without the scheduled full resend round, an edge
-    pruned before the snapshot never re-carries its source's current
-    label and the resumed run converges to wrong components."""
+    """Resume keeps the frontier invariant without a resend round: cap a
+    checkpointed run mid-way (snapshot at iteration 4), resume from the
+    snapshot, and the labels must equal the oracle. The snapshot keeps
+    each vertex's ``changed`` flag and the edge set never changes, so
+    every edge has already carried, or is about to carry, its source's
+    current label. (Named after the deleted edge-pruning path, whose
+    rewritten edge sets needed a full resend on resume.)"""
     chain = [(0, 8), (8, 9), (9, 1), (1, 2), (2, 3), (3, 4), (4, 5)]
     sym = symmetrize(spark.createDataFrame(chain, "src long, dst long"))
     with pytest.raises(RuntimeError):  # cap mid-run, snapshot persisted
         cc_label_propagation(
-            spark, sym, prune_every=2, checkpoint_dir=str(tmp_path), max_iterations=5
+            spark, sym, checkpoint_dir=str(tmp_path), max_iterations=5
         )
     labels, runner = cc_label_propagation(
-        spark, sym, prune_every=2, checkpoint_dir=str(tmp_path), resume=True
+        spark, sym, checkpoint_dir=str(tmp_path), resume=True
     )
     assert runner.metrics[0].iteration > 0  # genuinely resumed
     assert labels_dict(labels) == union_find_oracle(chain)

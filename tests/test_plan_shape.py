@@ -10,8 +10,8 @@ regressions (PLANS.md §3, §8):
 2. `pin_edges` output must report a known hash partitioning so the
    per-iteration message join moves only the state side (a
    localCheckpoint-then-persist in the wrong order reports
-   UnknownPartitioning and silently re-exchanges the edge table — the
-   round-3 prune-path bug).
+   UnknownPartitioning and silently re-exchanges the edge table every
+   iteration).
 
 AQE decides at RUNTIME, so plans are read AFTER an action, from the
 adaptive executed plan (`isFinalPlan=true` state), not from a static
@@ -70,23 +70,22 @@ def _walk(node, ancestors=()):
 
 
 def _capture_step_plans(monkeypatch) -> dict:
-    """Record every fixpoint step's DataFrame by runner name and iteration.
-    The runner materializes each one inside its loop, so its executed plan
-    is the one the loop ran (planned under the loop's settings)."""
+    """Record the frame each fixpoint iteration materializes (the step
+    with its Observation attached) by runner name and iteration. Its
+    executed plan is the one the loop ran, planned under the loop's
+    settings; the step's own return value is a different, never-executed
+    DataFrame."""
     from parallel_connected_components_spark.plans.runner import FixpointRunner
 
     steps: dict = {}
-    run = FixpointRunner.run
+    observed = FixpointRunner._observed
 
-    def recording_run(self, init_state, step_fn, converged_fn, resume=False):
-        def step(state, it):
-            df = step_fn(state, it)
-            steps.setdefault(self.name, {})[it] = df
-            return df
+    def recording_observed(self, step_df, observe, it):
+        df, obs = observed(self, step_df, observe, it)
+        steps.setdefault(self.name, {})[it] = df
+        return df, obs
 
-        return run(self, init_state, step, converged_fn, resume=resume)
-
-    monkeypatch.setattr(FixpointRunner, "run", recording_run)
+    monkeypatch.setattr(FixpointRunner, "_observed", recording_observed)
     return steps
 
 
@@ -147,7 +146,10 @@ def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
 
         runner = FixpointRunner(spark, "boom", n_part=3)
         with pytest.raises(RuntimeError, match="step failed"):
-            runner.run(spark.range(3), boom, lambda s, it: (0, {}))
+            runner.run(
+                spark.range(3), boom, [F.count(F.lit(1)).alias("c")],
+                lambda got, it: (0, {}),
+            )
         assert spark.conf.get(key) == mismatched
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
@@ -211,35 +213,6 @@ def test_pinned_edges_join_does_not_reexchange_edges(spark):
     edge_branch = plan.split("InMemoryTableScan", 1)[1]
     assert "Exchange" not in edge_branch.split("\n\n")[0].split("+- ==")[0], plan
     edges.unpersist()
-
-
-def test_prune_rewrite_does_not_inflate_tail_shuffle(spark):
-    """Behavioral regression guard for the round-3 prune-path bug: after
-    an edge-set rewrite, tail iterations must NOT shuffle more bytes than
-    the equivalent un-pruned run's tail (the broken checkpoint/persist
-    order re-exchanged the whole rewritten edge table every remaining
-    iteration — tail bytes jumped ~3.4x on this shape)."""
-    from parallel_connected_components_spark.operators import (
-        cc_label_propagation,
-        symmetrize,
-    )
-
-    # dense blocks (resolve fast → prune fires) + a path tail (keeps
-    # iterating afterward)
-    i = F.col("id")
-    dense = spark.range(4000).select(i.alias("src"), (i - i % 40).alias("dst"))
-    path = spark.range(20).select((i + 100000).alias("src"), (i + 100001).alias("dst"))
-    edges = symmetrize(dense.union(path).filter("src != dst"))
-
-    def tail_bytes(prune):
-        _, runner = cc_label_propagation(spark, edges, prune_every=prune)
-        tail = [
-            m.extra.get("shuffle_write_bytes", 0) for m in runner.metrics[-5:]
-        ]
-        return sum(tail) / len(tail)
-
-    plain, pruned = tail_bytes(0), tail_bytes(2)
-    assert pruned <= plain * 2.0, (plain, pruned)
 
 
 def test_dedup_pair_generation_never_cross_joins(spark):

@@ -12,23 +12,23 @@ from parallel_connected_components_spark.sources.tables import TableLayer
 
 def make_countdown(spark, start=7):
     """State: one column n; step decrements until 0 — a deterministic
-    fixpoint with a known iteration count."""
+    fixpoint with a known iteration count. → (init, step, observe,
+    converged), the arguments of FixpointRunner.run."""
     init = spark.createDataFrame([(start,)], "n long")
 
     def step(state, it):
         return state.select((F.col("n") - 1).alias("n"))
 
-    def converged(state, it):
-        n = state.collect()[0]["n"]
-        return (0 if n <= 0 else 1), {"n": n}
+    def converged(got, it):
+        return (0 if got["n"] <= 0 else 1), {"n": got["n"]}
 
-    return init, step, converged
+    return init, step, [F.min("n").alias("n")], converged
 
 
 def test_metrics_and_lineage(spark, tmp_path):
-    init, step, conv = make_countdown(spark, 5)
+    init, step, obs, conv = make_countdown(spark, 5)
     runner = FixpointRunner(spark, "cnt", checkpoint_dir=str(tmp_path), snapshot_every=2)
-    final = runner.run(init, step, conv)
+    final = runner.run(init, step, obs, conv)
     assert final.collect()[0]["n"] == 0
     assert runner.num_iterations == 5
     assert [m.iteration for m in runner.metrics] == list(range(5))
@@ -58,11 +58,11 @@ def test_shuffle_bytes_recorded_per_iteration(spark):
             .join(spark.range(2000).select((F.col("id") % 50).alias("k")), "k")
         )
 
-    def converged(state, it):
+    def converged(got, it):
         return (0 if it >= 2 else 1), {}
 
     runner = FixpointRunner(spark, "shuf")
-    runner.run(init, step, converged)
+    runner.run(init, step, [F.count(F.lit(1)).alias("c")], converged)
     assert runner.num_iterations == 3
     # Round 6: the meter is polled every few iterations plus at
     # convergence (per-iteration polling was a measured ~30 ms/iteration
@@ -75,26 +75,59 @@ def test_shuffle_bytes_recorded_per_iteration(spark):
 
 
 def test_resume_from_snapshot(spark, tmp_path):
-    init, step, conv = make_countdown(spark, 6)
+    init, step, obs, conv = make_countdown(spark, 6)
     # first run: stop early by capping iterations under convergence
     r1 = FixpointRunner(
         spark, "cnt", checkpoint_dir=str(tmp_path), snapshot_every=2,
         max_iterations=3, raise_on_cap=False,
     )
-    mid = r1.run(init, step, conv)
+    mid = r1.run(init, step, obs, conv)
     assert mid.collect()[0]["n"] == 3  # 3 iterations done, snapshot at it=1
     # resume: picks up from latest durable snapshot (iteration 1 → n=4)
     r2 = FixpointRunner(spark, "cnt", checkpoint_dir=str(tmp_path), snapshot_every=2)
-    final = r2.run(init, step, conv, resume=True)
+    final = r2.run(init, step, obs, conv, resume=True)
     assert final.collect()[0]["n"] == 0
     # resumed at iteration 2 (after snapshot at 1), so 4 more iterations
     assert [m.iteration for m in r2.metrics] == [2, 3, 4, 5]
 
 
+def test_one_job_per_iteration_with_observed_convergence(spark):
+    """Without a checkpoint_dir each iteration is exactly one Spark job:
+    the step's materialization, which also carries the ``observe``
+    aggregates, so ``converged`` receives their values and never runs a
+    job of its own. The step shuffles (a groupBy), which under AQE would
+    run as several jobs; the loop plans it as one."""
+    sc = spark.sparkContext
+    group = "runner-one-job-per-iteration"
+    init = spark.range(2000).select((F.col("id") % 50).alias("k"), F.lit(0).alias("it"))
+    jobs, seen = [], []
+
+    def step(state, it):
+        return state.groupBy("k").agg((F.max("it") + 1).alias("it"))
+
+    def converged(got, it):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        seen.append(dict(got))
+        return (0 if it >= 3 else 1), {}
+
+    sc.setJobGroup(group, "one job per iteration")
+    try:
+        FixpointRunner(spark, "jobs").run(
+            init, step,
+            [F.count(F.lit(1)).alias("rows"), F.max("it").alias("top")],
+            converged,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [b - a for a, b in zip(jobs, jobs[1:])] == [1, 1, 1], jobs
+    assert seen == [{"rows": 50, "top": it + 1} for it in range(4)], seen
+
+
 def test_resume_without_snapshot_starts_fresh(spark, tmp_path):
-    init, step, conv = make_countdown(spark, 2)
+    init, step, obs, conv = make_countdown(spark, 2)
     r = FixpointRunner(spark, "fresh", checkpoint_dir=str(tmp_path))
-    final = r.run(init, step, conv, resume=True)
+    final = r.run(init, step, obs, conv, resume=True)
     assert final.collect()[0]["n"] == 0
     assert r.metrics[0].iteration == 0
 
@@ -232,18 +265,18 @@ def test_iceberg_branch_runner_resume(spark, tmp_path):
     """The full FixpointRunner resume cycle over the iceberg branch: cap a
     run mid-way, resume from the iceberg snapshot, converge — mirror of
     test_resume_from_snapshot on the other backend."""
-    init, step, conv = make_countdown(spark, 6)
+    init, step, obs, conv = make_countdown(spark, 6)
     shared = _FakeIcebergLayer(spark, tmp_path)
     r1 = FixpointRunner(
         spark, "cnt", checkpoint_dir=str(tmp_path), snapshot_every=2,
         max_iterations=3, raise_on_cap=False,
     )
     r1.tables = shared
-    mid = r1.run(init, step, conv)
+    mid = r1.run(init, step, obs, conv)
     assert mid.collect()[0]["n"] == 3
     r2 = FixpointRunner(spark, "cnt", checkpoint_dir=str(tmp_path), snapshot_every=2)
     r2.tables = shared
-    final = r2.run(init, step, conv, resume=True)
+    final = r2.run(init, step, obs, conv, resume=True)
     assert final.collect()[0]["n"] == 0
     assert [m.iteration for m in r2.metrics] == [2, 3, 4, 5]
 
