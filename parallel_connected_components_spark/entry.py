@@ -279,98 +279,92 @@ def _hash31_sql(expr: str) -> str:
     return f"((('0x' || substr(md5({expr}), 1, 15))::BIGINT) % {MERSENNE_31})"
 
 
-def _pagerank_fixed_sql(n_iterations: int, damping: float = 0.85, top: int = 20) -> str:
-    """Unrolled fixed-iteration PageRank (DuckDB), the bit-exact twin of
-    operators.pagerank.pagerank_fixed: every float literal is ::DOUBLE
-    (bare decimals parse as DECIMAL in DuckDB — exact 0.15 converts to a
-    DIFFERENT double than IEEE 1.0-0.85), contribution and dangling sums
-    are left folds over key-ordered lists (list_reduce over
-    list_prepend(0.0, list(x ORDER BY k))), matching Spark's
-    aggregate(array_sort(collect_list(...)), 0.0, +)."""
+def _ordered_sum_sql(lst: str) -> str:
+    """DuckDB side of plans/runner.py:ordered_sum: a left fold from 0.0
+    over ``lst``, a ``list(w ORDER BY k)``, so both engines add identical
+    operands in identical order."""
+    return f"list_reduce(list_prepend(0.0::DOUBLE, {lst}), (a, b) -> a + b)"
+
+
+def _power_iteration_fixed_sql(
+    graph_sql: str, setup: list[str], n_iterations: int, damping: float, top: int,
+    carried: str, teleport: str, dangling_share: str, consts: str = "",
+) -> str:
+    """Unrolled fixed-iteration power iteration (DuckDB), the bit-exact
+    twin of operators.pagerank._power_iteration_fixed. ``setup`` defines
+    ``e2`` (the edges) and ``pr0`` (vertex, outdeg, *carried, rank); step
+    t computes ``teleport + d·(coalesce(contrib, 0) + dangling_share)``
+    per vertex ``s``, with the dangling fold as ``dd.dm`` and ``consts``
+    cross-joined in. Every float literal is ::DOUBLE (bare decimals parse
+    as DECIMAL in DuckDB — exact 0.15 converts to a DIFFERENT double than
+    IEEE 1.0-0.85); contribution and dangling sums are
+    :func:`_ordered_sum_sql` folds."""
     d = f"{damping!r}::DOUBLE"
     # MATERIALIZED everywhere a CTE is referenced more than once: DuckDB
     # otherwise inlines, and the iteration chain (pr{t} referenced 3x per
     # round) would expand exponentially
-    ctes = [
-        "canon2 AS MATERIALIZED (SELECT src, dst FROM canon)",
-        "verts2 AS MATERIALIZED (SELECT src AS v FROM canon2 UNION SELECT dst FROM canon2)",
-        "deg AS (SELECT src, count(*) AS outdeg FROM canon2 GROUP BY src)",
-        """vo AS (SELECT v.v AS vertex, coalesce(d.outdeg, 0) AS outdeg
-              FROM verts2 v LEFT JOIN deg d ON d.src = v.v)""",
-        "nn AS MATERIALIZED (SELECT count(*)::DOUBLE AS nd FROM verts2)",
-        "pr0 AS MATERIALIZED (SELECT vertex, outdeg, 1.0::DOUBLE / nd AS rank FROM vo, nn)",
-    ]
-    fold = "list_reduce(list_prepend(0.0::DOUBLE, {lst}), (a, b) -> a + b)"
+    ctes = list(setup)
     for t in range(n_iterations):
-        dang_lst = "coalesce(list(rank ORDER BY vertex), [])"
-        ctes.append(
-            f"d{t} AS (SELECT {fold.format(lst=dang_lst)} AS dm "
-            f"FROM pr{t} WHERE outdeg = 0)"
-        )
-        contrib_lst = "list(p.rank / p.outdeg ORDER BY p.vertex)"
-        ctes.append(
-            f"""c{t} AS (SELECT e.dst AS vertex, {fold.format(lst=contrib_lst)} AS contrib
-              FROM canon2 e JOIN pr{t} p ON p.vertex = e.src AND p.outdeg > 0
-              GROUP BY e.dst)"""
-        )
-        ctes.append(
-            f"""pr{t + 1} AS MATERIALIZED (SELECT s.vertex, s.outdeg,
-                (1.0::DOUBLE - {d}) / nd
-                + {d} * (coalesce(c.contrib, 0.0::DOUBLE) + d{t}.dm / nd) AS rank
-              FROM pr{t} s LEFT JOIN c{t} c ON c.vertex = s.vertex, d{t}, nn)"""
-        )
+        dang = _ordered_sum_sql("coalesce(list(rank ORDER BY vertex), [])")
+        contrib = _ordered_sum_sql("list(p.rank / p.outdeg ORDER BY p.vertex)")
+        ctes += [
+            f"d{t} AS (SELECT {dang} AS dm FROM pr{t} WHERE outdeg = 0)",
+            f"""c{t} AS (SELECT e.dst AS vertex, {contrib} AS contrib
+              FROM e2 e JOIN pr{t} p ON p.vertex = e.src AND p.outdeg > 0
+              GROUP BY e.dst)""",
+            f"""pr{t + 1} AS MATERIALIZED (SELECT s.vertex, s.outdeg{carried},
+                {teleport}
+                + {d} * (coalesce(c.contrib, 0.0::DOUBLE) + {dangling_share}) AS rank
+              FROM pr{t} s LEFT JOIN c{t} c ON c.vertex = s.vertex, d{t} dd{consts})""",
+        ]
     return (
-        f"WITH {CANON_SQL}, "
+        f"WITH {graph_sql}, "
         + ",\n  ".join(ctes)
         + f"\n  SELECT vertex, rank FROM pr{n_iterations}"
         + f"\n  ORDER BY rank DESC, vertex ASC LIMIT {top}"
     )
 
 
+def _pagerank_fixed_sql(n_iterations: int, damping: float = 0.85, top: int = 20) -> str:
+    """Twin of operators.pagerank.pagerank_fixed over the CANON graph:
+    teleport (1−d)/n and dangling share dm/n."""
+    setup = [
+        "e2 AS MATERIALIZED (SELECT src, dst FROM canon)",
+        "verts2 AS MATERIALIZED (SELECT src AS v FROM e2 UNION SELECT dst FROM e2)",
+        "deg AS (SELECT src, count(*) AS outdeg FROM e2 GROUP BY src)",
+        """vo AS (SELECT v.v AS vertex, coalesce(d.outdeg, 0) AS outdeg
+              FROM verts2 v LEFT JOIN deg d ON d.src = v.v)""",
+        "nn AS MATERIALIZED (SELECT count(*)::DOUBLE AS nd FROM verts2)",
+        "pr0 AS MATERIALIZED (SELECT vertex, outdeg, 1.0::DOUBLE / nd AS rank FROM vo, nn)",
+    ]
+    return _power_iteration_fixed_sql(
+        CANON_SQL, setup, n_iterations, damping, top, carried="",
+        teleport=f"(1.0::DOUBLE - {damping!r}::DOUBLE) / nd",
+        dangling_share="dd.dm / nd", consts=", nn",
+    )
+
+
 def _ppr_fixed_sql(
     seeds: list[int], n_iterations: int, damping: float = 0.85, top: int = 20
 ) -> str:
-    """Unrolled personalized PageRank (DuckDB), bit-exact twin of
-    operators.pagerank.personalized_pagerank_fixed over the SYM graph:
-    same ::DOUBLE literals (1/|S|, d, 1-d computed once in Python and
-    repr-injected into BOTH plans), same ordered left folds."""
-    d = f"{damping!r}::DOUBLE"
-    one_minus = f"{(1.0 - damping)!r}::DOUBLE"
+    """Twin of operators.pagerank.personalized_pagerank_fixed over the SYM
+    graph: 1/|S| and 1-d computed once in Python and repr-injected into
+    BOTH plans; teleport (1−d)·tele and dangling share dm·tele."""
     tw = f"{1.0 / len(sorted(set(seeds)))!r}::DOUBLE"
     seedlist = ",".join(str(int(s)) for s in sorted(set(seeds)))
-    fold = "list_reduce(list_prepend(0.0::DOUBLE, {lst}), (a, b) -> a + b)"
-    ctes = [
-        "sym2 AS MATERIALIZED (SELECT src, dst FROM sym)",
+    setup = [
+        "e2 AS MATERIALIZED (SELECT src, dst FROM sym)",
         "verts2 AS MATERIALIZED (SELECT doc_id AS v FROM documents)",
-        "deg AS (SELECT src, count(*) AS outdeg FROM sym2 GROUP BY src)",
+        "deg AS (SELECT src, count(*) AS outdeg FROM e2 GROUP BY src)",
         f"""vo AS (SELECT v.v AS vertex, coalesce(d.outdeg, 0) AS outdeg,
               CASE WHEN v.v IN ({seedlist}) THEN {tw} ELSE 0.0::DOUBLE END AS tele
               FROM verts2 v LEFT JOIN deg d ON d.src = v.v)""",
         "pr0 AS MATERIALIZED (SELECT vertex, outdeg, tele, tele AS rank FROM vo)",
     ]
-    for t in range(n_iterations):
-        dang_lst = "coalesce(list(rank ORDER BY vertex), [])"
-        ctes.append(
-            f"d{t} AS (SELECT {fold.format(lst=dang_lst)} AS dm "
-            f"FROM pr{t} WHERE outdeg = 0)"
-        )
-        contrib_lst = "list(p.rank / p.outdeg ORDER BY p.vertex)"
-        ctes.append(
-            f"""c{t} AS (SELECT e.dst AS vertex, {fold.format(lst=contrib_lst)} AS contrib
-              FROM sym2 e JOIN pr{t} p ON p.vertex = e.src AND p.outdeg > 0
-              GROUP BY e.dst)"""
-        )
-        ctes.append(
-            f"""pr{t + 1} AS MATERIALIZED (SELECT s.vertex, s.outdeg, s.tele,
-                {one_minus} * s.tele
-                + {d} * (coalesce(c.contrib, 0.0::DOUBLE) + d{t}.dm * s.tele) AS rank
-              FROM pr{t} s LEFT JOIN c{t} c ON c.vertex = s.vertex, d{t})"""
-        )
-    return (
-        f"WITH {SYM_SQL}, "
-        + ",\n  ".join(ctes)
-        + f"\n  SELECT vertex, rank FROM pr{n_iterations}"
-        + f"\n  ORDER BY rank DESC, vertex ASC LIMIT {top}"
+    return _power_iteration_fixed_sql(
+        SYM_SQL, setup, n_iterations, damping, top, carried=", s.tele",
+        teleport=f"{(1.0 - damping)!r}::DOUBLE * s.tele",
+        dangling_share="dd.dm * s.tele",
     )
 
 
@@ -379,55 +373,37 @@ def _hits_fixed_sql(n_iterations: int) -> str:
     over the DIR graph: per half-step one gather fold (sender-id order),
     one full-vertex normalization fold (vertex order), one division —
     identical operands in identical order in both engines."""
-    fold = "list_reduce(list_prepend(0.0::DOUBLE, {lst}), (a, b) -> a + b)"
+
+    def half_step(out: str, scores: str, col_in: str, col: str, send: str, recv: str):
+        gathered = _ordered_sum_sql(f"list(s.{col_in} ORDER BY s.vertex)")
+        return [
+            f"""{out}g AS (SELECT e.{recv} AS vertex, {gathered} AS s
+              FROM dir2 e JOIN {scores} s ON s.vertex = e.{send} GROUP BY e.{recv})""",
+            f"""{out}f AS MATERIALIZED (SELECT v.vertex,
+                coalesce(g.s, 0.0::DOUBLE) AS {col}
+              FROM verts2 v LEFT JOIN {out}g g ON g.vertex = v.vertex)""",
+            f"""{out}sum AS (SELECT {_ordered_sum_sql(f"list({col} ORDER BY vertex)")}
+              AS total FROM {out}f)""",
+            f"""{out} AS MATERIALIZED (SELECT vertex,
+                coalesce({col} / nullif(total, 0.0::DOUBLE), 0.0::DOUBLE) AS {col}
+              FROM {out}f, {out}sum)""",
+        ]
+
     ctes = [
         "dir2 AS MATERIALIZED (SELECT src, dst FROM dir)",
         "verts2 AS MATERIALIZED (SELECT doc_id AS vertex FROM documents)",
         "h0 AS MATERIALIZED (SELECT vertex, 1.0::DOUBLE AS hub FROM verts2)",
     ]
-    for t in range(n_iterations):
-        gl = "list(h.hub ORDER BY h.vertex)"
-        ctes.append(
-            f"""ag{t} AS (SELECT e.dst AS vertex, {fold.format(lst=gl)} AS s
-              FROM dir2 e JOIN h{t} h ON h.vertex = e.src GROUP BY e.dst)"""
-        )
-        ctes.append(
-            f"""af{t} AS MATERIALIZED (SELECT v.vertex,
-                coalesce(g.s, 0.0::DOUBLE) AS auth
-              FROM verts2 v LEFT JOIN ag{t} g ON g.vertex = v.vertex)"""
-        )
-        nl = "list(auth ORDER BY vertex)"
-        ctes.append(f"asum{t} AS (SELECT {fold.format(lst=nl)} AS total FROM af{t})")
-        ctes.append(
-            f"""an{t} AS MATERIALIZED (SELECT vertex,
-                coalesce(auth / nullif(total, 0.0::DOUBLE), 0.0::DOUBLE) AS auth
-              FROM af{t}, asum{t})"""
-        )
-        hl = "list(a.auth ORDER BY a.vertex)"
-        ctes.append(
-            f"""hg{t} AS (SELECT e.src AS vertex, {fold.format(lst=hl)} AS s
-              FROM dir2 e JOIN an{t} a ON a.vertex = e.dst GROUP BY e.src)"""
-        )
-        ctes.append(
-            f"""hf{t} AS MATERIALIZED (SELECT v.vertex,
-                coalesce(g.s, 0.0::DOUBLE) AS hub
-              FROM verts2 v LEFT JOIN hg{t} g ON g.vertex = v.vertex)"""
-        )
-        nh = "list(hub ORDER BY vertex)"
-        ctes.append(f"hsum{t} AS (SELECT {fold.format(lst=nh)} AS total FROM hf{t})")
-        ctes.append(
-            f"""h{t + 1} AS MATERIALIZED (SELECT vertex,
-                coalesce(hub / nullif(total, 0.0::DOUBLE), 0.0::DOUBLE) AS hub
-              FROM hf{t}, hsum{t})"""
-        )
-    last = n_iterations - 1
+    for t in range(1, n_iterations + 1):
+        ctes += half_step(f"a{t}", f"h{t - 1}", "hub", "auth", "src", "dst")
+        ctes += half_step(f"h{t}", f"a{t}", "auth", "hub", "dst", "src")
     return (
         f"WITH {DIR_SQL}, "
         + ",\n  ".join(ctes)
         + f"""
   SELECT v.vertex, a.auth AS authority, h.hub AS hub
   FROM verts2 v
-  JOIN an{last} a ON a.vertex = v.vertex
+  JOIN a{n_iterations} a ON a.vertex = v.vertex
   JOIN h{n_iterations} h ON h.vertex = v.vertex"""
     )
 
@@ -688,12 +664,9 @@ def _linkpred_sql(k: int, max_degree: int) -> str:
     operators.linkpred.link_prediction_topk: common-neighbor / Jaccard /
     resource-allocation scores over non-adjacent 2-hop pairs, wedge
     middles capped at ``max_degree``. The RA sum folds in ascending
-    middle-id order (list_reduce over list_prepend, the shared
+    middle-id order (:func:`_ordered_sum_sql`, the shared
     cross-engine-exact summation)."""
-    fold = (
-        "list_reduce(list_prepend(0.0::DOUBLE, "
-        "list(1.0::DOUBLE / CAST(dw AS DOUBLE) ORDER BY w)), (x, y) -> x + y)"
-    )
+    fold = _ordered_sum_sql("list(1.0::DOUBLE / CAST(dw AS DOUBLE) ORDER BY w)")
     return f"""WITH {SYM_SQL},
   deg AS MATERIALIZED (SELECT src AS id, count(*) AS degree FROM sym GROUP BY src),
   wed AS (

@@ -116,14 +116,12 @@ def vertices_of(edges: DataFrame) -> DataFrame:
     )
 
 
-def pin_edges(
-    spark, edges: DataFrame, key: str = "src", sort: bool = True
-) -> tuple[DataFrame, int]:
-    """Partition the static edge table on its message-join key ONCE and
-    pin it in memory — every iterative operator's opening move (the
-    ghost-exchange precondition; plan rationale in pagerank()). Eagerly
-    materialized so iteration 0 doesn't pay the exchange and so the
-    in-loop joins see real cached stats instead of estimates (the
+def pin_edges(spark, edges: DataFrame, sort: bool = True) -> tuple[DataFrame, int]:
+    """Partition the static edge table on src, its message-join key, ONCE
+    and pin it in memory — every iterative operator's opening move (the
+    ghost-exchange precondition; plan rationale in plans/runner.py:gather).
+    Eagerly materialized so iteration 0 doesn't pay the exchange and so
+    the in-loop joins see real cached stats instead of estimates (the
     in-loop-broadcast guard, PLANS.md §7). → (pinned edges, n_part);
     caller owns the unpersist.
 
@@ -136,19 +134,19 @@ def pin_edges(
     Same mechanism as the bucketed layout's sortBy (sources/bucketed.py,
     BENCH/BASELINE.md bucketed section)."""
     n_part = spark.sparkContext.defaultParallelism
-    e = edges.select("src", "dst").repartition(n_part, key)
+    e = edges.select("src", "dst").repartition(n_part, "src")
     if sort:
-        e = e.sortWithinPartitions(key, "dst" if key == "src" else "src")
+        e = e.sortWithinPartitions("src", "dst")
     e = e.persist()
     e.count()
     return e, n_part
 
 
 def pin_dedup_edges(
-    spark, edges: DataFrame, key: str = "src", drop_self_loops: bool = True
+    spark, edges: DataFrame, drop_self_loops: bool = True
 ) -> tuple[DataFrame, int]:
     """Fused self-loop filter + (src, dst) dedup + pin in ONE exchange
-    (round 6): hash(key) partitioning satisfies the (src, dst) dedup's
+    (round 6): hash(src) partitioning satisfies the (src, dst) dedup's
     clustering requirement (equal-key rows are co-located), so the dedup
     aggregation runs inside the pin's exchange instead of adding its own
     — the raw edge table crosses the network once, not twice. Output is
@@ -162,11 +160,10 @@ def pin_dedup_edges(
     e = edges.select("src", "dst")
     if drop_self_loops:
         e = e.filter(F.col("src") != F.col("dst"))
-    other = "dst" if key == "src" else "src"
     e = (
-        e.repartition(n_part, key)
+        e.repartition(n_part, "src")
         .dropDuplicates(["src", "dst"])
-        .sortWithinPartitions(key, other)
+        .sortWithinPartitions("src", "dst")
         .persist()
     )
     e.count()

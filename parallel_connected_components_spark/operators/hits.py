@@ -11,29 +11,28 @@ scores stay a probability-like distribution and never overflow:
     h_{t+1}(u) = Σ_{u→v} a_{t+1}(v)    then h ← h / Σ_u h(u)
 
 Self-loops are dropped (a page endorsing itself is noise for HITS) and
-duplicate edges deduped. Summation is order-deterministic (the shared
-``_ordered_fold`` discipline from operators.pagerank): per-vertex gathers
-fold neighbor-id-sorted arrays and the normalization denominators fold
-vertex-sorted (vertex, score) pairs, so the DuckDB twin
-(entry._hits_fixed_sql) reproduces every score BIT-EXACTLY — the same
-operands added in the same order, then one identical division.
+duplicate edges deduped. Summation is order-deterministic
+(``plans/runner.py:ordered_gather`` folds each receiver's messages in
+sender-id order, ``ordered_total`` folds the normalization denominator
+in vertex order), so the DuckDB twin (entry._hits_fixed_sql) reproduces
+every score BIT-EXACTLY — the same operands added in the same order,
+then one identical division.
 
-Plan shape per half-step: one shuffle join (edges ⋈ scores), one
-repartition+fold on the receiving endpoint, one left join back onto the
-pinned vertex table; the two normalization sums ride as 1-row broadcast
-cross joins. Scale note: the fold arrays are bounded by max degree (the
-packed-adjacency gather, same bound as pagerank_fixed); a production
-deployment at 100 TB would swap the folds for plain SUMs (order-free,
-partial-agg-friendly) — the fold variant exists for the cross-engine
-correctness gate, exactly as pagerank_fixed vs pagerank.
+Both half-steps are one :func:`_half_step`; the hub direction sends over
+the reversed edge frame. The normalization sum rides as a 1-row
+broadcast cross join. Scale note: the fold arrays are bounded by max
+degree (the packed-adjacency gather, same bound as pagerank_fixed); a
+production deployment at 100 TB would swap the folds for plain SUMs
+(order-free, partial-agg-friendly) — the fold variant exists for the
+cross-engine correctness gate, exactly as pagerank_fixed vs pagerank.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.runner import ordered_gather, ordered_total, release
 from .graph import pin_dedup_edges, vertices_of
-from .pagerank import _ordered_fold
 
 
 def hits_fixed(
@@ -43,10 +42,13 @@ def hits_fixed(
     vertices: DataFrame | None = None,
 ) -> DataFrame:
     """→ (vertex long, authority double, hub double) after exactly
-    ``n_iterations`` rounds. ``vertices`` (optional superset of the edge
-    endpoints) adds isolated vertices with authority = hub = 0."""
+    ``n_iterations`` rounds (at least 1). ``vertices`` (optional superset
+    of the edge endpoints) adds isolated vertices with authority = hub = 0."""
+    if n_iterations < 1:
+        raise ValueError(f"hits_fixed needs n_iterations >= 1, got {n_iterations}")
     e_raw = edges.select("src", "dst")
     e, n_part = pin_dedup_edges(spark, e_raw)
+    e_rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     verts = (
         # default vertex set from the RAW endpoints: a self-loop-only
         # vertex stays in the output (scores 0 — its loop is dropped)
@@ -55,54 +57,30 @@ def hits_fixed(
         .localCheckpoint(eager=True)
     )
 
-    def _gather(scores: DataFrame, score_col: str, edge_from: str, edge_to: str, out: str):
-        """Fold `score_col` from each `edge_from` endpoint onto its
-        `edge_to` endpoint, key-sorted by the sending vertex id."""
-        s = scores.select(
-            F.col("vertex").alias(edge_from), F.col(score_col).alias("_w")
-        ).hint("shuffle_hash")
-        return (
-            e.join(s, edge_from)
-            .select(edge_to, edge_from, "_w")
-            .repartition(n_part, edge_to)
-            .groupBy(F.col(edge_to).alias("vertex"))
-            .agg(
-                _ordered_fold(
-                    F.collect_list(
-                        F.struct(F.col(edge_from).alias("k"), F.col("_w").alias("w"))
-                    )
-                ).alias(out)
-            )
-        )
-
-    def _normalize(state: DataFrame, col: str) -> DataFrame:
-        total = state.agg(
-            _ordered_fold(
-                F.collect_list(
-                    F.struct(F.col("vertex").alias("k"), F.col(col).alias("w"))
-                )
-            ).alias("_s")
-        )
+    def _half_step(edges: DataFrame, scores: DataFrame, col: str) -> DataFrame:
+        """``col`` = the L1-normalized fold of ``scores`` sent along
+        ``edges``, for every vertex (0 without in-messages)."""
+        got = verts.join(ordered_gather(edges, scores, n_part, col), "vertex", "left")
+        s = got.select("vertex", F.coalesce(col, F.lit(0.0)).alias(col))
         # try_divide -> NULL when the graph has no edges at all (total 0);
         # coalesce keeps the all-zero fixpoint instead of an ANSI error
-        return state.crossJoin(F.broadcast(total)).select(
-            "vertex",
-            F.coalesce(F.try_divide(F.col(col), F.col("_s")), F.lit(0.0)).alias(col),
+        return (
+            s.crossJoin(F.broadcast(ordered_total(s, col, "_s")))
+            .select(
+                "vertex",
+                F.coalesce(F.try_divide(F.col(col), F.col("_s")), F.lit(0.0)).alias(col),
+            )
+            .localCheckpoint(eager=True)
         )
 
     hub = verts.select("vertex", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(n_iterations):
-        auth = _normalize(
-            verts.join(_gather(hub, "hub", "src", "dst", "auth"), "vertex", "left")
-            .select("vertex", F.coalesce("auth", F.lit(0.0)).alias("auth")),
-            "auth",
-        ).localCheckpoint(eager=True)
-        hub = _normalize(
-            verts.join(_gather(auth, "auth", "dst", "src", "hub"), "vertex", "left")
-            .select("vertex", F.coalesce("hub", F.lit(0.0)).alias("hub")),
-            "hub",
-        ).localCheckpoint(eager=True)
+    for it in range(n_iterations):
+        new_auth = _half_step(e, hub, "auth")
+        new_hub = _half_step(e_rev, new_auth, "hub")
+        if it:  # the first hub is a projection of verts, which `out` reads
+            release(auth)
+            release(hub)
+        auth, hub = new_auth, new_hub
     out = (
         verts.join(auth, "vertex", "left")
         .join(hub, "vertex", "left")

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..plans.runner import FixpointRunner, release
+from ..plans.runner import FixpointRunner, release, send
 from .graph import pin_dedup_edges, vertices_of
 
 
@@ -90,18 +90,10 @@ def coreness(
         # old core joins back exchange-free — the checkpointed state keeps
         # its hash(vertex) partitioning with AQE off in the loop, so only
         # the messages shuffle.
-        msgs = (
-            e.join(
-                state.select(F.col("vertex").alias("src"), "core").hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .select(F.col("dst").alias("vertex"), F.col("core").alias("_nc"))
-        )
         w = Window.partitionBy("vertex").orderBy(F.desc("_nc"))
         h = (
-            msgs.repartition(n_part, "vertex")
+            send(e, state.select("vertex", F.col("core").alias("_nc")))
+            .repartition(n_part, "vertex")
             .withColumn("rn", F.row_number().over(w))
             .groupBy("vertex")
             .agg(

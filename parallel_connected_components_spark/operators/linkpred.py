@@ -15,8 +15,8 @@ deliberately: RA is reported at least as accurate on link prediction
 benchmarks, and 1/deg is a single correctly-rounded IEEE754 division,
 so the score is reproducible BIT-EXACTLY by an independent engine —
 Adamic-Adar's ln() is libm-dependent and would break the cross-engine
-gate. The RA sum folds in ascending common-neighbor order (the shared
-``_ordered_fold`` discipline from operators.pagerank).
+gate. The RA sum folds in ascending common-neighbor order
+(``plans/runner.py:ordered_sum``, shared with the fixed-iteration twins).
 
 Plan: one wedge self-join through the middle vertex w — candidate pairs
 are exactly the 2-hop pairs — then an anti-join against the existing
@@ -33,8 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..plans.runner import ordered_sum
 from .graph import canonicalize, degrees, symmetrize
-from .pagerank import _ordered_fold
 
 
 def link_prediction_topk(
@@ -58,7 +58,7 @@ def link_prediction_topk(
     plain associative F.sum — constant aggregation state with map-side
     partial combine. True (the verification mode, what the oracle-gated
     entry query passes) folds Σ 1/deg(w) in ascending middle-id order
-    via collect_list — bit-reproducible by any engine, but the per-pair
+    (``ordered_sum``) — bit-reproducible by any engine, but the per-pair
     struct lists are real aggregation-state memory at crawl scale.
     Identical operands either way, so the two differ by at most
     summation-order ulps."""
@@ -90,13 +90,7 @@ def link_prediction_topk(
         "left_anti",
     )
     ra_term = F.lit(1.0) / F.col("dw").cast("double")
-    ra = (
-        _ordered_fold(
-            F.collect_list(F.struct(F.col("w").alias("k"), ra_term.alias("w")))
-        )
-        if exact_fold
-        else F.sum(ra_term)
-    )
+    ra = ordered_sum("w", ra_term) if exact_fold else F.sum(ra_term)
     scored = cand.groupBy(F.col("u").alias("src"), F.col("v").alias("dst")).agg(
         F.count("*").alias("common_neighbors"),
         ra.alias("resource_alloc"),

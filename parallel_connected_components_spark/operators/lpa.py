@@ -24,7 +24,7 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner, release
+from ..plans.runner import FixpointRunner, release, send
 from .graph import pin_edges
 
 
@@ -37,7 +37,7 @@ def label_propagation_communities(
 ) -> tuple[DataFrame, FixpointRunner]:
     """→ (labels(vertex, label), runner). ``edges_sym`` symmetrized."""
     # src-partitioned edges as in plans/runner.py:gather, but unlike CC
-    # and PageRank the (vertex, label) counts are exchanged
+    # and PageRank the sent (vertex, label) rows are exchanged
     # explicitly on vertex alone: combining them before the exchange
     # would place it on (vertex, label), and the per-vertex argmax would
     # then need a second exchange.
@@ -60,10 +60,8 @@ def label_propagation_communities(
     )
 
     def step(state: DataFrame, it: int) -> DataFrame:
-        lab = state.select(F.col("vertex").alias("src"), "label").hint("shuffle_hash")
         counts = (
-            e.join(lab, "src")
-            .select(F.col("dst").alias("vertex"), "label")
+            send(e, state.select("vertex", "label"))
             .repartition(n_part, "vertex")
             .groupBy("vertex", "label")
             .agg(F.count("*").alias("cnt"))

@@ -14,21 +14,21 @@ meaningful — risk R5, SURVEY.md §7):
   where D_t = Σ_{outdeg(u)=0} r_t(u)  (dangling mass redistributed);
 - converged when Σ_v |r_{t+1}(v) - r_t(v)| < tol (L1), float64 throughout.
 
-Plan shape per iteration: one shuffle join (edges ⋈ ranks on src over
-the pinned edge table), a partial sum of the NARROW (vertex, w) messages
-per dst in each map task, ONE exchange on dst and the final sum, then a
-shuffle_hash-pinned left join back to the vertex set that needs no
-exchange; convergence delta and next-iteration dangling mass ride the
-materialization job as an Observation — zero extra actions.
+:func:`pagerank` iterates to the L1 tolerance; :func:`pagerank_fixed`
+and :func:`personalized_pagerank_fixed` run a fixed number of steps of
+one shared loop with order-deterministic sums, bit-exact against their
+DuckDB twins.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner, gather, release
-from .graph import pin_dedup_edges, pin_edges, vertices_of
+from ..plans.runner import (
+    FixpointRunner, gather, ordered_gather, ordered_total, release,
+)
+from .graph import pin_dedup_edges
 
 
 def pagerank(
@@ -85,36 +85,7 @@ def pagerank(
     else:
         # fused dedup+pin: one exchange instead of two (pin_dedup_edges)
         e, n_part = pin_dedup_edges(spark, edges, drop_self_loops=False)
-    # vertex table with outdeg (0 for dangling), reused every iteration.
-    # Round 6: built in ONE aggregation (outdeg = count of src-side rows)
-    # instead of distinct-endpoints + count + outdeg join — |V| and the
-    # dangling-vertex count ride the materialization as an Observation,
-    # so setup costs one job, not four.
-    if vertices is not None:
-        outdeg = e.groupBy(F.col("src").alias("vertex")).agg(
-            F.count("*").alias("outdeg")
-        )
-        vo_plan = (
-            vertices.select(F.col("id").alias("vertex"))
-            .join(outdeg, "vertex", "left")
-            .select("vertex", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        )
-    else:
-        vo_plan = (
-            e.select(F.col("src").alias("vertex"), F.lit(1).alias("o"))
-            .union(e.select(F.col("dst").alias("vertex"), F.lit(0).alias("o")))
-            .groupBy("vertex")
-            .agg(F.sum("o").alias("outdeg"))
-        )
-    vo_obs = Observation()
-    vo = vo_plan.observe(
-        vo_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("outdeg") == 0).cast("long")).alias("nd"),
-    ).localCheckpoint(eager=True)
-    got_vo = vo_obs.get
-    n = got_vo["n"]
-    n_dangling = got_vo["nd"] or 0
+    vo, n, n_dangling = _vertex_table(e, vertices)
 
     if init_ranks is not None:
         pr = init_ranks.select("vertex", F.col("rank").alias("_r0"))
@@ -207,15 +178,42 @@ def pagerank(
     return final.select("vertex", "rank"), runner
 
 
-def _ordered_fold(pairs_struct):
-    """Left fold over the key-sorted struct array; 0.0 + x == x exactly in
-    IEEE754, so the fold equals w1 + w2 + … in ascending-key order — the
-    order-deterministic summation shared by every cross-engine-exact
-    fixpoint twin here (DuckDB side: list_reduce over list_prepend(0.0,
-    list(w ORDER BY k)))."""
-    return F.aggregate(
-        F.array_sort(pairs_struct), F.lit(0.0), lambda acc, x: acc + x["w"]
+def _vertex_table(
+    e: DataFrame, vertices: DataFrame | None, *carried: Column
+) -> tuple[DataFrame, int, int]:
+    """→ (vo, |V|, dangling count): the checkpointed vertex table
+    ``(vertex, outdeg, *carried)`` over a pinned deduped edge table, with
+    outdeg 0 for dangling vertices. ``vertices`` (id) replaces the edge
+    endpoints as the vertex set. One job (round 6): outdeg is the count
+    of src-side rows of one aggregation over both endpoints, and |V| and
+    the dangling count ride the materialization as an Observation."""
+    if vertices is not None:
+        outdeg = e.groupBy(F.col("src").alias("vertex")).agg(
+            F.count("*").alias("outdeg")
+        )
+        plan = (
+            vertices.select(F.col("id").alias("vertex"))
+            .join(outdeg, "vertex", "left")
+            .select("vertex", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
+        )
+    else:
+        plan = (
+            e.select(F.col("src").alias("vertex"), F.lit(1).alias("o"))
+            .union(e.select(F.col("dst").alias("vertex"), F.lit(0).alias("o")))
+            .groupBy("vertex")
+            .agg(F.sum("o").alias("outdeg"))
+        )
+    obs = Observation()
+    vo = (
+        plan.select("vertex", "outdeg", *carried)
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("outdeg") == 0).cast("long")).alias("nd"),
+        )
+        .localCheckpoint(eager=True)
     )
+    return vo, obs.get["n"], obs.get["nd"] or 0
 
 
 def pagerank_fixed(
@@ -229,12 +227,11 @@ def pagerank_fixed(
     same damping/dangling handling), built so an independent SQL engine
     reproduces every rank BIT-EXACTLY:
 
-    - per-vertex contribution sums fold an array sorted by source id
-      (collect_list → array_sort → aggregate left-fold) instead of an
-      order-arbitrary SUM, so both engines compute ((0+w1)+w2)+… over
-      identical operands in identical order;
-    - the dangling mass folds (vertex, rank) sorted by vertex the same
-      way;
+    - per-vertex contributions and the dangling mass are summed with
+      ``plans/runner.py:ordered_sum`` (a left fold over the source-id- or
+      vertex-sorted array) instead of an order-arbitrary SUM, so both
+      engines compute ((0+w1)+w2)+… over identical operands in identical
+      order;
     - scalar constants ((1−d)/n, 1/n) are computed once driver-side and
       injected as literals into both plans.
 
@@ -248,60 +245,13 @@ def pagerank_fixed(
     → ranks(vertex long, rank double) after exactly ``n_iterations``
     steps. DuckDB twin: entry._pagerank_fixed_sql().
     """
-    e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    verts = vertices_of(e).localCheckpoint(eager=True)
-    n = verts.count()
-    e, n_part = pin_edges(spark, e)
-    outdeg = e.groupBy(F.col("src").alias("vertex")).agg(F.count("*").alias("outdeg"))
-    vo = (
-        verts.select(F.col("id").alias("vertex"))
-        .join(outdeg, "vertex", "left")
-        .select("vertex", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .localCheckpoint(eager=True)
+    e, n_part = pin_dedup_edges(spark, edges, drop_self_loops=False)
+    vo, n, _ = _vertex_table(e, None)
+    return _power_iteration_fixed(
+        spark, e, n_part, vo, F.lit(1.0 / n), n_iterations, damping, "pagerank_fixed",
+        teleport=F.lit((1.0 - damping) / n),
+        dangling_share=F.col("dm") / F.lit(float(n)),
     )
-    base = (1.0 - damping) / n  # driver-side literal, shared with the SQL twin
-    state = vo.select("vertex", "outdeg", F.lit(1.0 / n).alias("rank"))
-
-    for _ in range(n_iterations):
-        dang = state.filter(F.col("outdeg") == 0).agg(
-            _ordered_fold(
-                F.collect_list(F.struct(F.col("vertex").alias("k"), F.col("rank").alias("w")))
-            ).alias("dm")
-        )
-        w = state.filter(F.col("outdeg") > 0).select(
-            F.col("vertex").alias("src"), (F.col("rank") / F.col("outdeg")).alias("w")
-        ).hint("shuffle_hash")
-        contribs = (
-            e.join(w, "src")
-            .select("dst", "src", "w")
-            .repartition(n_part, "dst")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(
-                _ordered_fold(
-                    F.collect_list(F.struct(F.col("src").alias("k"), F.col("w").alias("w")))
-                ).alias("contrib")
-            )
-        )
-        state = (
-            state.select("vertex", "outdeg")
-            .join(contribs, "vertex", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "vertex",
-                "outdeg",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    return state.select("vertex", "rank")
 
 
 def personalized_pagerank_fixed(
@@ -319,20 +269,16 @@ def personalized_pagerank_fixed(
         r_0 = t
         r_{t+1}(v) = (1-d)·t(v) + d·( Σ_{u→v} r_t(u)/outdeg(u) + D_t·t(v) )
 
-    Same order-deterministic fold discipline as :func:`pagerank_fixed`
-    (per-vertex contributions fold source-id-sorted arrays, the dangling
-    mass folds vertex-sorted (vertex, rank) pairs, 1/|S| is one
-    driver-computed literal injected into both plans), so an independent
-    SQL engine reproduces every score bit-exactly — DuckDB twin:
-    entry._ppr_fixed_sql(). ``vertices`` (optional, must be a SUPERSET of
-    the edge endpoints — same contract as pagerank) adds isolated
-    vertices: isolated seeds keep their restart mass, isolated non-seeds
-    score exactly 0.
+    Same loop and order-deterministic sums as :func:`pagerank_fixed`
+    (1/|S| is one driver-computed literal injected into both plans), so
+    an independent SQL engine reproduces every score bit-exactly —
+    DuckDB twin: entry._ppr_fixed_sql(). ``vertices`` (optional, must be
+    a SUPERSET of the edge endpoints — same contract as pagerank) adds
+    isolated vertices: isolated seeds keep their restart mass, isolated
+    non-seeds score exactly 0.
 
-    Plan shape per iteration matches pagerank_fixed: one edges⋈ranks
-    shuffle join, one repartition+fold on dst, one left join back — the
-    seed membership test is a literal IN over a small driver list, never
-    a join. Scale note: scores are nonzero only on the seed set's
+    The seed membership test is a literal IN over a small driver list,
+    never a join. Scale note: scores are nonzero only on the seed set's
     out-reachability cone, so at 100 TB the natural deployment runs many
     seed sets batched through one edge pin; the per-vertex fold is
     bounded by max in-degree (the packed-adjacency gather), not graph
@@ -340,71 +286,67 @@ def personalized_pagerank_fixed(
     if not seeds:
         raise ValueError("personalized_pagerank_fixed needs >= 1 seed")
     seed_ids = sorted(set(int(s) for s in seeds))
-    e = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    verts = (vertices.select("id") if vertices is not None else vertices_of(e)).localCheckpoint(
-        eager=True
-    )
-    e, n_part = pin_edges(spark, e)
-    outdeg = e.groupBy(F.col("src").alias("vertex")).agg(F.count("*").alias("outdeg"))
+    e, n_part = pin_dedup_edges(spark, edges, drop_self_loops=False)
     tele_w = 1.0 / len(seed_ids)  # driver-side literal, shared with the SQL twin
-
-    def _tele(col):
-        return F.when(col.isin(seed_ids), F.lit(tele_w)).otherwise(F.lit(0.0))
-
-    vo = (
-        verts.select(F.col("id").alias("vertex"))
-        .join(outdeg, "vertex", "left")
-        .select(
-            "vertex",
-            F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
-            _tele(F.col("vertex")).alias("tele"),
-        )
-        .localCheckpoint(eager=True)
+    vo, _, _ = _vertex_table(
+        e, vertices,
+        F.when(F.col("vertex").isin(seed_ids), F.lit(tele_w))
+        .otherwise(F.lit(0.0))
+        .alias("tele"),
     )
-    state = vo.select("vertex", "outdeg", "tele", F.col("tele").alias("rank"))
-    for _ in range(n_iterations):
-        dang = state.filter(F.col("outdeg") == 0).agg(
-            _ordered_fold(
-                F.collect_list(
-                    F.struct(F.col("vertex").alias("k"), F.col("rank").alias("w"))
-                )
-            ).alias("dm")
+    tele = F.col("tele")
+    return _power_iteration_fixed(
+        spark, e, n_part, vo, tele, n_iterations, damping, "ppr_fixed",
+        teleport=F.lit(1.0 - damping) * tele,
+        dangling_share=F.col("dm") * tele,
+    )
+
+
+def _power_iteration_fixed(
+    spark: SparkSession, e: DataFrame, n_part: int, vo: DataFrame, rank0: Column,
+    n_iterations: int, damping: float, name: str, teleport: Column, dangling_share: Column,
+) -> DataFrame:
+    """``n_iterations`` steps of
+
+        rank ← teleport + d·(coalesce(contrib, 0) + dangling_share)
+
+    on :class:`FixpointRunner`, from ``rank0``. ``vo`` is the vertex table
+    ``(vertex, outdeg, *carried)``; ``contrib`` is the ordered sum of the
+    in-neighbors' rank/outdeg and ``dm`` (read by ``dangling_share``) the
+    ordered sum of the dangling vertices' ranks, a one-row broadcast.
+    The loop never converges: the iteration cap ends it. Releases ``vo``
+    and unpersists ``e``. → (vertex, rank)."""
+    carried = vo.columns
+    runner = FixpointRunner(
+        spark, name, max_iterations=n_iterations, raise_on_cap=False, n_part=n_part
+    )
+
+    def step(state: DataFrame, it: int) -> DataFrame:
+        outdeg = F.col("outdeg")
+        dm = ordered_total(state.filter(outdeg == 0), "rank", "dm")
+        # dangling vertices send nothing: filter before the divide (ANSI)
+        contribs = ordered_gather(
+            e,
+            state.filter(outdeg > 0).select("vertex", (F.col("rank") / outdeg).alias("w")),
+            n_part, "contrib",
         )
-        w = state.filter(F.col("outdeg") > 0).select(
-            F.col("vertex").alias("src"), (F.col("rank") / F.col("outdeg")).alias("w")
-        ).hint("shuffle_hash")
-        contribs = (
-            e.join(w, "src")
-            .select("dst", "src", "w")
-            .repartition(n_part, "dst")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(
-                _ordered_fold(
-                    F.collect_list(F.struct(F.col("src").alias("k"), F.col("w").alias("w")))
-                ).alias("contrib")
-            )
+        rank = teleport + F.lit(damping) * (
+            F.coalesce("contrib", F.lit(0.0)) + dangling_share
         )
-        state = (
-            state.select("vertex", "outdeg", "tele")
+        return (
+            state.select(*carried)
             .join(contribs, "vertex", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "vertex",
-                "outdeg",
-                "tele",
-                (
-                    F.lit(1.0 - damping) * F.col("tele")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("dm") * F.col("tele")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            .crossJoin(F.broadcast(dm))
+            .select(*carried, rank.alias("rank"))
         )
+
+    ranks = runner.run(
+        vo.select(*carried, rank0.alias("rank")), step,
+        [F.count(F.lit(1)).alias("n")], lambda got, it: (1, {}),
+    )
+    release(vo)
     e.unpersist()
-    return state.select("vertex", "rank")
+    return ranks.select("vertex", "rank")
 
 
 def pagerank_numpy_oracle(

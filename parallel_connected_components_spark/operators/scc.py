@@ -57,7 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..plans.runner import fixpoint_conf
+from ..plans.runner import fixpoint_conf, release
 from .graph import pin_dedup_edges, vertices_of
 
 
@@ -122,6 +122,13 @@ def _scc_impl(
     n_v = rem_v.count()
     steps = 0
 
+    def _drop(df: DataFrame):
+        # a superseded one-shot checkpoint; `verts` (the no-SCC output)
+        # and `e_pin` (unpersisted on exit) live to the end, and the
+        # `done` frames are never dropped: the output union reads them
+        if df is not verts and df is not e_pin:
+            release(df)
+
     def _tick(kind: str):
         nonlocal steps
         info[kind] += 1
@@ -167,6 +174,7 @@ def _scc_impl(
                 )
                 n_keep = obs.get["c"] or 0
                 if n_keep == n_v:
+                    release(keep)
                     break
                 # keep ⊆ endpoints(rem_e) ⊆ rem_v, so rem_v \ keep is the
                 # trimmed set (including vertices isolated by extraction)
@@ -175,9 +183,11 @@ def _scc_impl(
                     .select("vertex", F.col("vertex").alias("label"))
                     .localCheckpoint(eager=True)
                 )
+                _drop(rem_v)
                 rem_v, n_v = keep, n_keep
                 if n_v == 0:
                     break
+                old_e = rem_e
                 rem_e = (
                     rem_e.join(
                         keep.select(F.col("vertex").alias("src")).hint("shuffle_hash"),
@@ -190,6 +200,7 @@ def _scc_impl(
                     .select("src", "dst")
                     .localCheckpoint(eager=True)
                 )
+                _drop(old_e)
                 rem_pinned = False
             if n_v == 0:
                 break
@@ -210,6 +221,7 @@ def _scc_impl(
             color = colors.select(
                 "vertex", F.col("label").alias("color")
             ).localCheckpoint(eager=True)
+            release(colors)
 
             # ---- 3. backward mark from the color roots ----------------
             # A color root r is the MINIMUM of its class (color(v) = r
@@ -259,10 +271,13 @@ def _scc_impl(
                 .localCheckpoint(eager=True)
             )
             done.append(sel)
+            release(color)
+            release(dists)
             n_marked = obs.get["c"] or 0
             if n_marked >= n_v:  # everything extracted — no remainder
                 n_v = 0
                 break
+            old_v, old_e = rem_v, rem_e
             rem_v = (
                 rem_v.join(
                     sel.select("vertex").hint("shuffle_hash"), "vertex", "leftanti"
@@ -282,13 +297,18 @@ def _scc_impl(
                 .select("src", "dst")
                 .localCheckpoint(eager=True)
             )
+            _drop(old_v)
+            _drop(old_e)
             rem_pinned = False
     finally:
+        _drop(rem_v)
+        _drop(rem_e)
         e_pin.unpersist()
 
     if not done:
         out = verts.select("vertex", F.col("vertex").alias("label"))
     else:
+        release(verts)
         out = done[0]
         for d in done[1:]:
             out = out.union(d)

@@ -77,12 +77,21 @@ def fixpoint_conf(spark: SparkSession, n_part: int | None = None):
                 spark.conf.set(k, v)
 
 
+def send(edges: DataFrame, senders: DataFrame) -> DataFrame:
+    """Every sender row ``(vertex, *payload)`` sends its payload along each
+    out-edge ``vertex → dst``. → ``(vertex=dst, *payload)``, one row per
+    out-edge, before any exchange (join plan: :func:`gather`)."""
+    vertex, *payload = senders.columns
+    return edges.join(
+        senders.select(F.col(vertex).alias("src"), *payload).hint("shuffle_hash"),
+        "src",
+    ).select(F.col("dst").alias("vertex"), *payload)
+
+
 def gather(edges: DataFrame, senders: DataFrame, *combine: Column) -> DataFrame:
-    """One message exchange over a pinned edge table: every sender row
-    ``(vertex, *payload)`` sends its payload along each out-edge
-    ``vertex → dst``, and the ``combine`` aggregates fold the messages per
-    receiver. → ``(vertex, *combine)``, one row per vertex that received
-    a message.
+    """One message exchange over a pinned edge table: :func:`send`, then
+    the ``combine`` aggregates fold the messages per receiver.
+    → ``(vertex, *combine)``, one row per vertex that received a message.
 
     Plan shape (measured on an 18M-edge graph and pinned by
     tests/test_plan_shape.py):
@@ -110,20 +119,47 @@ def gather(edges: DataFrame, senders: DataFrame, *combine: Column) -> DataFrame:
       broadcast of the (small-looking) aggregate.
 
     Only associative, commutative combines belong here (min, sum, bit_or).
-    A fold that needs all of one receiver's messages in a fixed order, or
-    a two-level aggregation such as LPA's per-(vertex, label) counts,
-    repartitions the messages on the receiver explicitly instead."""
-    vertex, *payload = senders.columns
+    A fold that needs all of one receiver's messages in a fixed order
+    (:func:`ordered_gather`), or a two-level aggregation such as LPA's
+    per-(vertex, label) counts, calls :func:`send` and repartitions the
+    messages on the receiver explicitly instead."""
+    return send(edges, senders).groupBy("vertex").agg(*combine).hint("shuffle_hash")
+
+
+def ordered_sum(key: str | Column, value: str | Column) -> Column:
+    """Aggregate Column: the sum of ``value`` added in ascending ``key``
+    order, ((0 + w1) + w2) + … (a left fold over the key-sorted array;
+    0.0 + x == x exactly in IEEE754). An order-arbitrary SUM can differ
+    in the last ulp from run to run and engine to engine; this one is
+    what the bit-exact twins' DuckDB side reproduces
+    (``entry._ordered_sum_sql``). It collects one array per group, so it
+    does not combine before an exchange."""
+    k, w = (F.col(c) if isinstance(c, str) else c for c in (key, value))
+    pairs = F.array_sort(F.collect_list(F.struct(k.alias("k"), w.alias("w"))))
+    return F.aggregate(pairs, F.lit(0.0), lambda acc, x: acc + x["w"])
+
+
+def ordered_gather(
+    edges: DataFrame, senders: DataFrame, n_part: int, out: str
+) -> DataFrame:
+    """:func:`gather` for one double message ``(vertex, w)`` summed with
+    :func:`ordered_sum` in sender-id order: :func:`send` carries the
+    sender id, the messages are exchanged on the receiver and each
+    receiver folds its own. → ``(vertex, out)``."""
+    vertex, w = senders.columns
     return (
-        edges.join(
-            senders.select(F.col(vertex).alias("src"), *payload).hint("shuffle_hash"),
-            "src",
-        )
-        .select(F.col("dst").alias("vertex"), *payload)
+        send(edges, senders.select(vertex, F.col(vertex).alias("_k"), w))
+        .repartition(n_part, "vertex")
         .groupBy("vertex")
-        .agg(*combine)
+        .agg(ordered_sum("_k", w).alias(out))
         .hint("shuffle_hash")
     )
+
+
+def ordered_total(df: DataFrame, col: str, out: str) -> DataFrame:
+    """One row: ``out`` = :func:`ordered_sum` of ``col`` in vertex order
+    (0.0 on an empty ``df``)."""
+    return df.agg(ordered_sum("vertex", col).alias(out))
 
 
 @dataclass
@@ -172,12 +208,16 @@ def release(df: DataFrame) -> None:
     On Spark 4.1.2 ``DataFrame.unpersist()`` only drops cache-manager
     entries; a checkpoint's blocks belong to the RDD inside its
     ``LogicalRDD`` and stay in ``getPersistentRDDs()`` until Python and
-    JVM garbage collection let the ContextCleaner drop them. The caller
-    must not read ``df`` afterwards (non-blocking, like ``unpersist()``).
+    JVM garbage collection let the ContextCleaner drop them. ``df`` may
+    also be a projection of a checkpoint (an operator's ``final.select``
+    output): its checkpoint is freed. The caller must not read ``df`` or
+    the checkpoint afterwards (non-blocking, like ``unpersist()``).
     Goes through ``SparkContext.unpersistRDD``: ``RDD.unpersist`` would
     log a lineage warning for every released checkpoint."""
     df.unpersist()
     plan = df._jdf.queryExecution().logical()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
     if plan.nodeName() == "LogicalRDD":
         df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), False)
 

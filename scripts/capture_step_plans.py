@@ -2,10 +2,10 @@
 
 Builds the bench.py pages graph for a scale factor (100k pages at sf0.1),
 runs CC label propagation, PageRank to 1e-6, 4-hop BFS, 6-round ANF,
-6-round harmonic centrality and SCC on it, and writes the formatted
-executed plan of each loop's iteration-1 step (its second iteration: the
-first one still re-partitions the freshly built state) to
-``<out_dir>/<query>.txt``. SCC contributes two captures, its coloring LP
+6-round harmonic centrality, 8-iteration LPA, coreness and SCC on it,
+and writes the formatted executed plan of each loop's iteration-1 step
+(its second iteration: the first one still re-partitions the freshly
+built state) to ``<out_dir>/<query>.txt``. SCC contributes two captures, its coloring LP
 and its backward-mark BFS.
 
 The plan is read from the frame the runner materialized (the step with
@@ -72,8 +72,10 @@ def main(out_dir: str, sf: float = 0.1) -> None:
         bfs_hops,
         canonicalize,
         cc_label_propagation,
+        coreness,
         edges_from_pages,
         harmonic_centrality,
+        label_propagation_communities,
         pagerank,
         scc,
         symmetrize,
@@ -96,12 +98,16 @@ def main(out_dir: str, sf: float = 0.1) -> None:
     bfs_hops(spark, edges_sym, seeds, max_hops=4)
     anf(spark, edges_sym, rounds=6)
     harmonic_centrality(spark, edges_sym, rounds=6)
+    label_propagation_communities(spark, edges_sym, max_iterations=8)
+    coreness(spark, edges_sym)
     captures = {
         "cc_labelprop": runs["cc_lp"][0],
         "pagerank_1e6": runs["pagerank"][0],
         "khop4_bfs": runs["bfs_hops"][0],
         "anf6": runs["anf"][0],
         "harmonic6": runs["harmonic"][0],
+        "lpa_8iter": runs["lpa"][0],
+        "coreness": runs["coreness"][0],
     }
     runs.clear()
     scc(spark, edges_raw)

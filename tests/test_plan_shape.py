@@ -172,6 +172,8 @@ def test_step_code_is_identical_across_iterations(spark, monkeypatch):
         cc_label_propagation,
         coreness,
         label_propagation_communities,
+        pagerank_fixed,
+        personalized_pagerank_fixed,
         symmetrize,
     )
 
@@ -183,12 +185,15 @@ def test_step_code_is_identical_across_iterations(spark, monkeypatch):
     label_propagation_communities(spark, sym, max_iterations=5)
     bfs_hops(spark, path, spark.range(1))
     coreness(spark, sym)
+    # the fixed PageRanks' teleport literals are fixed per run
+    pagerank_fixed(spark, path, n_iterations=4)
+    personalized_pagerank_fixed(spark, sym, [0], n_iterations=4)
 
     def code(df) -> list[str]:
         seq = df._jdf.queryExecution().debug().codegenToSeq()
         return [seq.apply(k)._2() for k in range(seq.size())]
 
-    for name in ("cc_lp", "lpa", "bfs_hops", "coreness"):
+    for name in ("cc_lp", "lpa", "bfs_hops", "coreness", "pagerank_fixed", "ppr_fixed"):
         it2, it3 = code(steps[name][2]), code(steps[name][3])
         assert it2, name
         assert it2 == it3, name

@@ -128,6 +128,38 @@ def test_scc_block_structure(spark):
     assert info["rounds"] <= 4
 
 
+def test_scc_leaves_only_its_output_checkpoints(spark):
+    """Every superseded one-shot checkpoint of a multi-round scc (trim
+    survivors, remaining vertices and edges, colors, the coloring and
+    marking loops' results) is released: the persisted RDDs a run leaves
+    behind are exactly the checkpoints its output reads. Python GC is off
+    so that a leak cannot be hidden by a collection during the run."""
+    import gc
+
+    # three 4-cycles chained 0 -> 4 -> 8 plus a tail to trim: coloring
+    # floods all cycles from 0, so each round extracts one cycle
+    edge_list = [(b + i, b + (i + 1) % 4) for b in (0, 4, 8) for i in range(4)]
+    edge_list += [(0, 4), (4, 8), (8, 12), (12, 13)]
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    jsc = spark.sparkContext._jsc
+    gc.disable()
+    try:
+        before = set(jsc.getPersistentRDDs().keySet())
+        got, info = scc(spark, edges)
+        left = set(jsc.getPersistentRDDs().keySet()) - before
+        leaves = got._jdf.queryExecution().logical().collectLeaves()
+        read = {
+            leaves.apply(k).rdd().id()
+            for k in range(leaves.size())
+            if leaves.apply(k).nodeName() == "LogicalRDD"
+        }
+        assert labels_dict(got) == scc_python_oracle(edge_list)
+    finally:
+        gc.enable()
+    assert info["rounds"] >= 3 and info["trim_passes"] >= 2, info
+    assert left == read, (sorted(left), sorted(read))
+
+
 # ---------------------------------------------------------------------------
 # Personalized PageRank
 # ---------------------------------------------------------------------------
@@ -202,6 +234,12 @@ def test_hits_matches_reference(spark):
     for v, (a, h) in oracle.items():
         assert gd[v][0] == pytest.approx(a, abs=1e-9), v
         assert gd[v][1] == pytest.approx(h, abs=1e-9), v
+
+
+def test_hits_requires_one_round(spark):
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    with pytest.raises(ValueError):
+        hits_fixed(spark, edges, n_iterations=0)
 
 
 def test_hits_star_hub_and_authority(spark):
