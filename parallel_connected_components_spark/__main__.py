@@ -154,13 +154,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--max-iterations", type=int, default=100)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument(
-        "--two-phase-range",
-        action="store_true",
-        help="force range partitioning for the two_phase local-UF pass "
-        "(equivalent to --two-phase-partition range; kept for "
-        "compatibility)",
-    )
-    p.add_argument(
         "--two-phase-partition",
         choices=["auto", "hash", "range"],
         default="auto",
@@ -180,7 +173,8 @@ def main(argv: list[str] | None = None) -> int:
             "that hands high-diameter inputs (road networks) to O(log n) "
             "alternating stars; see BENCH/BASELINE.md 'High-diameter'. "
             "two_phase wins on graphs whose contracted form fits the "
-            "driver merge (few-M vertices), and with --two-phase-range on "
+            "driver merge (few-M vertices), and with --two-phase-partition "
+            "range on "
             "spatially-numbered ids (road networks: 1.7x over hash at 2M "
             "vertices). "
             "afforest is a faithful port kept for parity: measured SLOWER "
@@ -254,7 +248,7 @@ def main(argv: list[str] | None = None) -> int:
                     "--bucketed does not support --resume/--checkpoint-dir; "
                     "use a plain input path for durable snapshots"
                 )
-            if args.two_phase_range or args.two_phase_partition != "auto":
+            if args.two_phase_partition != "auto":
                 raise SystemExit(
                     "--two-phase-partition is fixed by the bucketed layout "
                     "(partition_by='pre'); drop the flag or use --edges"
@@ -264,13 +258,12 @@ def main(argv: list[str] | None = None) -> int:
             if algo == "labelprop":
                 from .operators import cc_label_propagation
 
-                e, _ = pin_bucketed_edges(
+                e = pin_bucketed_edges(
                     spark, _bkt_table(args.bucketed, "sym"),
                     _os.path.join(args.bucketed, "sym"),
                 )
                 labels, runner = cc_label_propagation(
-                    spark, e, assume_pinned=True, vertices=verts,
-                    max_iterations=args.max_iterations,
+                    spark, e, vertices=verts, max_iterations=args.max_iterations,
                 )
             elif algo == "two_phase":
                 e, _ = pin_bucketed_edges(
@@ -344,10 +337,7 @@ def main(argv: list[str] | None = None) -> int:
                 labels, runner = cc_two_phase(
                     spark, edges, vertices=verts, checkpoint_dir=args.checkpoint_dir,
                     max_iterations=args.max_iterations,
-                    partition_by=(
-                        "range" if args.two_phase_range
-                        else args.two_phase_partition
-                    ),
+                    partition_by=args.two_phase_partition,
                 )
                 pinfo = getattr(runner, "partition_info", None)
                 if pinfo:
@@ -385,13 +375,12 @@ def main(argv: list[str] | None = None) -> int:
                     "--bucketed does not support --resume/--checkpoint-dir; "
                     "use a plain input path for durable snapshots"
                 )
-            e, _ = pin_bucketed_edges(
+            e = pin_bucketed_edges(
                 spark, _bkt_table(args.bucketed, "canon"),
                 _os.path.join(args.bucketed, "canon"),
             )
             ranks, runner = pagerank(
-                spark, e, tol=args.tol,
-                max_iterations=args.max_iterations, assume_pinned=True,
+                spark, e, tol=args.tol, max_iterations=args.max_iterations,
                 vertices=_bucketed_vertices(spark, args.bucketed),
             )
             out["iterations"] = runner.num_iterations

@@ -45,8 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import portable_hash64_col
-from ..plans.runner import FixpointRunner, gather, release
-from .graph import pin_dedup_edges, vertices_of
+from ..plans.runner import FixpointRunner, gather
+from .graph import pinned, vertex_table, vertices_of
 
 
 def _reg_cols(k: int) -> list[str]:
@@ -120,42 +120,40 @@ def anf(
     adds isolated vertices, whose ball is just themselves."""
     regs = _reg_cols(num_registers)
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    e, n_part = pin_dedup_edges(spark, e_raw)
-    verts = (
-        (vertices.select("id") if vertices is not None else vertices_of(e_raw))
-        .select(F.col("id").cast("long").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
-    init = verts.select(
-        "vertex", *[_init_mask(F.col("vertex"), i).alias(m) for i, m in enumerate(regs)]
-    )
+    with pinned(spark, e_raw) as (e, n_part), vertex_table(
+        vertices, vertices_of(e_raw)
+    ) as verts:
+        init = verts.select(
+            F.col("id").alias("vertex"),
+            *[_init_mask(F.col("id"), i).alias(m) for i, m in enumerate(regs)],
+        )
 
-    def step(state: DataFrame, it: int) -> DataFrame:
-        return _or_neighbors(e, state, regs).select("vertex", *regs, "changed")
+        def step(state: DataFrame, it: int) -> DataFrame:
+            return _or_neighbors(e, state, regs).select("vertex", *regs, "changed")
 
-    def converged(got: dict, it: int):
-        grew = got["changed"] or 0
-        extra = {"grew": grew, "neighborhood_function": got["nf"]}
-        if it + 1 >= rounds:
-            return 0, extra
-        return grew, extra
+        def converged(got: dict, it: int):
+            grew = got["changed"] or 0
+            extra = {"grew": grew, "neighborhood_function": got["nf"]}
+            if it + 1 >= rounds:
+                return 0, extra
+            return grew, extra
 
-    # the global neighborhood function N(t) = Σ_v |ball_t(v)| rides the
-    # same Observation as the changed count (one more aggregate in the
-    # materialization job — still zero extra actions per round): per-row
-    # FM estimate 2^(mean lowest-zero index) / 0.77351
-    mean_r = sum(lowest_zero_bit(F.col(m)) for m in regs) / float(len(regs))
-    observe = [
-        F.sum(F.col("changed").cast("long")).alias("changed"),
-        F.sum(F.pow(F.lit(2.0), mean_r) / F.lit(0.77351)).alias("nf"),
-    ]
-    runner = FixpointRunner(spark, "anf", max_iterations=max(rounds, 1), n_part=n_part)
-    out = runner.run(init, step, observe, converged)
-    release(verts)
+        # the global neighborhood function N(t) = Σ_v |ball_t(v)| rides
+        # the same Observation as the changed count (one more aggregate in
+        # the materialization job — still zero extra actions per round):
+        # per-row FM estimate 2^(mean lowest-zero index) / 0.77351
+        mean_r = sum(lowest_zero_bit(F.col(m)) for m in regs) / float(len(regs))
+        observe = [
+            F.sum(F.col("changed").cast("long")).alias("changed"),
+            F.sum(F.pow(F.lit(2.0), mean_r) / F.lit(0.77351)).alias("nf"),
+        ]
+        runner = FixpointRunner(
+            spark, "anf", max_iterations=max(rounds, 1), n_part=n_part
+        )
+        out = runner.run(init, step, observe, converged)
     final = out.select(
         "vertex", *[lowest_zero_bit(F.col(m)).alias(f"r{i}") for i, m in enumerate(regs)]
     )
-    e.unpersist()
     return final, runner
 
 
@@ -225,12 +223,6 @@ def harmonic_centrality(
     regs = _reg_cols(num_registers)
     big_l = lcm(*range(1, rounds + 1)) if rounds >= 1 else 1
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    e, n_part = pin_dedup_edges(spark, e_raw)
-    verts = (
-        (vertices.select("id") if vertices is not None else vertices_of(e_raw))
-        .select(F.col("id").cast("long").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
 
     def est_of(cols) -> "F.Column":
         total = None
@@ -241,48 +233,47 @@ def harmonic_centrality(
             total = p if total is None else total + p
         return total
 
-    init = verts.select(
-        "vertex",
-        *[_init_mask(F.col("vertex"), i).alias(m) for i, m in enumerate(regs)],
-    )
-    init = init.select(
-        "vertex", *regs, est_of(regs).alias("est"), F.lit(0).cast("long").alias("score")
-    )
-
-    def step(state: DataFrame, it: int) -> DataFrame:
-        coeff = big_l // (it + 1)
-        merged = _or_neighbors(e, state, regs)
-        new_est = est_of(regs)
-        # early stop watches the MASKS (``changed``), not est: a mask can
-        # gain a high bit without moving its lowest zero (est unchanged)
-        # yet still affect neighbors' est in later rounds — stopping on
-        # Δest==0 would diverge from the fixed-K unrolled twin
-        return merged.select(
-            "vertex",
-            *regs,
-            new_est.alias("est"),
-            (F.col("score") + F.lit(coeff).cast("long") * (new_est - F.col("est"))).alias(
-                "score"
-            ),
-            "changed",
+    with pinned(spark, e_raw) as (e, n_part), vertex_table(
+        vertices, vertices_of(e_raw)
+    ) as verts:
+        init = verts.select(
+            F.col("id").alias("vertex"),
+            *[_init_mask(F.col("id"), i).alias(m) for i, m in enumerate(regs)],
+        )
+        init = init.select(
+            "vertex", *regs, est_of(regs).alias("est"), F.lit(0).cast("long").alias("score")
         )
 
-    def converged(got: dict, it: int):
-        grew = got["changed"] or 0
-        if it + 1 >= rounds:
-            return 0, {"grew": grew}
-        return grew, {"grew": grew}
+        def step(state: DataFrame, it: int) -> DataFrame:
+            coeff = big_l // (it + 1)
+            merged = _or_neighbors(e, state, regs)
+            new_est = est_of(regs)
+            # early stop watches the MASKS (``changed``), not est: a mask
+            # can gain a high bit without moving its lowest zero (est
+            # unchanged) yet still affect neighbors' est in later rounds —
+            # stopping on Δest==0 would diverge from the fixed-K unrolled twin
+            gain = F.lit(coeff).cast("long") * (new_est - F.col("est"))
+            return merged.select(
+                "vertex",
+                *regs,
+                new_est.alias("est"),
+                (F.col("score") + gain).alias("score"),
+                "changed",
+            )
 
-    runner = FixpointRunner(
-        spark, "harmonic", max_iterations=max(rounds, 1), n_part=n_part
-    )
-    out = runner.run(
-        init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
-    )
-    release(verts)
-    final = out.select("vertex", "score")
-    e.unpersist()
-    return final, runner
+        def converged(got: dict, it: int):
+            grew = got["changed"] or 0
+            if it + 1 >= rounds:
+                return 0, {"grew": grew}
+            return grew, {"grew": grew}
+
+        runner = FixpointRunner(
+            spark, "harmonic", max_iterations=max(rounds, 1), n_part=n_part
+        )
+        out = runner.run(
+            init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
+        )
+    return out.select("vertex", "score"), runner
 
 
 def anf_python_oracle(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, gather
-from .graph import pin_dedup_edges
+from .graph import pinned
 
 
 def bfs_hops(
@@ -48,55 +48,53 @@ def bfs_hops(
     are absent — join against a vertex universe downstream if a dense
     output is needed. ``max_hops`` caps the expansion (k-hop
     neighborhood); None runs to exhaustion."""
-    e, n_part = pin_dedup_edges(
+    with pinned(
         spark, edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    )
-    init = sources.select(
-        F.col("id").cast("long").alias("vertex"),
-        F.lit(0).cast("long").alias("dist"),
-        F.lit(True).alias("frontier"),
-    ).dropDuplicates(["vertex"])
+    ) as (e, n_part):
+        init = sources.select(
+            F.col("id").cast("long").alias("vertex"),
+            F.lit(0).cast("long").alias("dist"),
+            F.lit(True).alias("frontier"),
+        ).dropDuplicates(["vertex"])
 
-    def step(state: DataFrame, it: int) -> DataFrame:
-        # With AQE off in the loop the checkpointed state keeps its
-        # hash(vertex) partitioning, so the full-outer join-back against
-        # the gathered arrivals needs no exchange on either side and only
-        # the frontier's messages shuffle. A vertex is newly reached
-        # exactly when it has no state row (settled distances never
-        # improve: messages carry it+1, every settled dist is ≤ it).
-        # Messages are built from the sender's dist + 1 (== it + 1 on the
-        # frontier), not a per-round literal, so every round generates the
-        # same code and reuses one compiled class instead of compiling a
-        # fresh one.
-        arrivals = gather(
-            e,
-            state.filter("frontier").select("vertex", (F.col("dist") + 1).alias("dist")),
-            F.min("dist").alias("_m"),
-        )
-        return (
-            state.select("vertex", F.col("dist").alias("_old"))
-            .join(arrivals, "vertex", "full")
-            .select(
-                "vertex",
-                F.coalesce("_old", "_m").alias("dist"),
-                F.col("_old").isNull().alias("frontier"),
+        def step(state: DataFrame, it: int) -> DataFrame:
+            # With AQE off in the loop the checkpointed state keeps its
+            # hash(vertex) partitioning, so the full-outer join-back
+            # against the gathered arrivals needs no exchange on either
+            # side and only the frontier's messages shuffle. A vertex is
+            # newly reached exactly when it has no state row (settled
+            # distances never improve: messages carry it+1, every settled
+            # dist is ≤ it). Messages are built from the sender's dist + 1
+            # (== it + 1 on the frontier), not a per-round literal, so
+            # every round generates the same code and reuses one compiled
+            # class instead of compiling a fresh one.
+            senders = state.filter("frontier").select(
+                "vertex", (F.col("dist") + 1).alias("dist")
             )
+            arrivals = gather(e, senders, F.min("dist").alias("_m"))
+            return (
+                state.select("vertex", F.col("dist").alias("_old"))
+                .join(arrivals, "vertex", "full")
+                .select(
+                    "vertex",
+                    F.coalesce("_old", "_m").alias("dist"),
+                    F.col("_old").isNull().alias("frontier"),
+                )
+            )
+
+        def converged(got: dict, it: int):
+            reached = got["reached"] or 0
+            if max_hops is not None and it + 1 >= max_hops:
+                return 0, {"reached": reached, "capped": reached > 0}
+            return reached, {"reached": reached}
+
+        runner = FixpointRunner(
+            spark, "bfs_hops", max_iterations=max_iterations, n_part=n_part
         )
-
-    def converged(got: dict, it: int):
-        reached = got["reached"] or 0
-        if max_hops is not None and it + 1 >= max_hops:
-            return 0, {"reached": reached, "capped": reached > 0}
-        return reached, {"reached": reached}
-
-    runner = FixpointRunner(
-        spark, "bfs_hops", max_iterations=max_iterations, n_part=n_part
-    )
-    out = runner.run(
-        init, step, [F.sum(F.col("frontier").cast("long")).alias("reached")],
-        converged,
-    )
-    e.unpersist()
+        out = runner.run(
+            init, step, [F.sum(F.col("frontier").cast("long")).alias("reached")],
+            converged,
+        )
     return out.select("vertex", "dist"), runner
 
 

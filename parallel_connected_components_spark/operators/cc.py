@@ -43,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, IterationMetrics, gather, release
-from .graph import canonicalize, contract_edges, pin_edges
+from .graph import Pinned, canonicalize, contract_edges, pinned, vertex_table
 
 
 # --------------------------------------------------------------------------
@@ -476,6 +476,7 @@ def cc_two_phase(
             max_iterations=max_iterations,
             assume_oriented=True,
         )
+    release(contracted)  # unread by the labels: the star runner copies it
     # Contraction preserves the vertex set (every endpoint of `canon`
     # appears in the contracted output), so labels already cover all
     # non-isolated vertices; attach isolated ones if a vertex table came.
@@ -568,6 +569,7 @@ def cc_afforest(
     for m in runner.metrics:  # tag so phase_iterations can split a vs b
         m.extra.setdefault("phase", "a_sample")
     labels_a = labels_a.localCheckpoint(eager=True)
+    release(sym)  # phase b reads `canon`, not the sampled subgraph
     if labels_a.isEmpty():  # edge-less input: everyone is their own component
         out = (
             vertices.select(F.col("id").alias("vertex"), F.col("id").alias("label"))
@@ -637,7 +639,7 @@ def cc_afforest(
 
 def cc_label_propagation(
     spark: SparkSession,
-    edges_sym: DataFrame,
+    edges_sym: DataFrame | Pinned,
     vertices: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     max_iterations: int = 200,
@@ -646,11 +648,14 @@ def cc_label_propagation(
     stall_ratio: float = 0.6,
     stall_min_iterations: int = 5,
     raise_on_cap: bool = True,
-    assume_pinned: bool = False,
 ) -> tuple[DataFrame, FixpointRunner]:
     """Jacobi-style min-label propagation
     (label_propagation_sync_omp, /root/reference/src/cc_openmp.c:38-142;
     double-buffering is free — DataFrames are immutable).
+
+    ``edges_sym`` is symmetrized and deduped. A :class:`~.graph.Pinned`
+    table (a bucketed scan, sources/bucketed.py, or scc's own pin) is
+    used as is — no pin exchange — and stays persisted.
 
     Only vertices whose label changed last round send messages (the
     queue-based delta iteration of the reference's
@@ -674,79 +679,66 @@ def cc_label_propagation(
     then finishes the job with O(log n) alternating stars on the
     label-contracted graph. Default off (w=0): plain LP to convergence.
     """
-    # ``assume_pinned=True``: the caller guarantees edges_sym is already
-    # symmetrized, deduped, src-partitioned, and persisted (a pinned
-    # repartition or a bucketed table scan, sources/bucketed.py) — the
-    # pin exchange is skipped and the table is NOT unpersisted on return.
-    if assume_pinned:
-        e, n_part = edges_sym, edges_sym.rdd.getNumPartitions()
-    else:
-        e, n_part = pin_edges(spark, edges_sym)  # (already materialized)
-    if vertices is not None:
-        verts = vertices.select(F.col("id")).localCheckpoint(eager=True)
-    else:
+    with pinned(spark, edges_sym, dedup=False) as (e, n_part), vertex_table(
+        vertices,
         # the input is symmetrized, so every vertex appears on the src
         # side — and the pinned table is hash(src)-partitioned, so this
         # distinct needs NO exchange (vs the union-both-endpoints +
         # distinct full shuffle of vertices_of; round 6)
-        verts = (
-            e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+        e.select(F.col("src").alias("id")).distinct(),
+    ) as verts:
+        init = verts.select(
+            F.col("id").alias("vertex"),
+            F.col("id").alias("label"),
+            F.lit(True).alias("changed"),
         )
-    init = verts.select(
-        F.col("id").alias("vertex"),
-        F.col("id").alias("label"),
-        F.lit(True).alias("changed"),
-    )
-    runner = FixpointRunner(
-        spark,
-        "cc_lp",
-        checkpoint_dir=checkpoint_dir,
-        max_iterations=max_iterations,
-        raise_on_cap=raise_on_cap,
-        n_part=n_part,
-    )
-    runner.stalled = False
-    changed_history: list[int] = []
+        runner = FixpointRunner(
+            spark,
+            "cc_lp",
+            checkpoint_dir=checkpoint_dir,
+            max_iterations=max_iterations,
+            raise_on_cap=raise_on_cap,
+            n_part=n_part,
+        )
+        runner.stalled = False
+        changed_history: list[int] = []
 
-    def step(state: DataFrame, it: int) -> DataFrame:
-        # The state is hash(vertex)-partitioned from birth (init derives
-        # from the pinned table's src side) and gather's output matches
-        # it, so the join-back needs no exchange: one exchange per
-        # iteration, moving only frontier-emitted labels.
-        mins = gather(
-            e, state.filter("changed").select("vertex", "label"),
-            F.min("label").alias("_m"),
-        )
-        return (
-            state.select("vertex", F.col("label").alias("_old"))
-            .join(mins, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(F.col("_old"), F.coalesce("_m", F.col("_old"))).alias("label"),
-                (F.coalesce("_m", F.col("_old")) < F.col("_old")).alias("changed"),
+        def step(state: DataFrame, it: int) -> DataFrame:
+            # The state is hash(vertex)-partitioned from birth (init
+            # derives from the pinned table's src side) and gather's
+            # output matches it, so the join-back needs no exchange: one
+            # exchange per iteration, moving only frontier-emitted labels.
+            mins = gather(
+                e, state.filter("changed").select("vertex", "label"),
+                F.min("label").alias("_m"),
             )
+            return (
+                state.select("vertex", F.col("label").alias("_old"))
+                .join(mins, "vertex", "left")
+                .select(
+                    "vertex",
+                    F.least(F.col("_old"), F.coalesce("_m", F.col("_old"))).alias("label"),
+                    (F.coalesce("_m", F.col("_old")) < F.col("_old")).alias("changed"),
+                )
+            )
+
+        def converged(got: dict, it: int):
+            changed = got["changed"] or 0
+            if stall_window > 0 and changed > 0:
+                changed_history.append(changed)
+                if (
+                    it + 1 >= stall_min_iterations
+                    and len(changed_history) > stall_window
+                    and changed >= stall_ratio * changed_history[-stall_window - 1]
+                ):
+                    runner.stalled = True
+                    return 0, {"stalled": True, "changed_at_stall": changed}
+            return changed, {}
+
+        final = runner.run(
+            init, step, [F.sum(F.col("changed").cast("long")).alias("changed")],
+            converged, resume=resume,
         )
-
-    def converged(got: dict, it: int):
-        changed = got["changed"] or 0
-        if stall_window > 0 and changed > 0:
-            changed_history.append(changed)
-            if (
-                it + 1 >= stall_min_iterations
-                and len(changed_history) > stall_window
-                and changed >= stall_ratio * changed_history[-stall_window - 1]
-            ):
-                runner.stalled = True
-                return 0, {"stalled": True, "changed_at_stall": changed}
-        return changed, {}
-
-    final = runner.run(
-        init, step, [F.sum(F.col("changed").cast("long")).alias("changed")],
-        converged, resume=resume,
-    )
-    release(verts)
-    if not assume_pinned:
-        e.unpersist()
     return final.select("vertex", "label"), runner
 
 
@@ -822,6 +814,7 @@ def cc_auto(
     # rounds. On graphs without locality the estimator picks hash and
     # two_phase's merge IS alternating stars — never worse than before.
     lab = lp_labels.localCheckpoint(eager=True)
+    release(lp_labels)
     contracted = contract_edges(edges_sym, lab)
     finish_labels, finish_runner = cc_two_phase(
         spark,

@@ -19,9 +19,13 @@ every iteration that joins/aggregates on src.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator, NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.extract import extract_links_udf
+from ..plans.runner import release
 
 
 def vertices_from_pages(pages: DataFrame) -> DataFrame:
@@ -116,14 +120,23 @@ def vertices_of(edges: DataFrame) -> DataFrame:
     )
 
 
-def pin_edges(spark, edges: DataFrame, sort: bool = True) -> tuple[DataFrame, int]:
+class Pinned(NamedTuple):
+    """Edges ``(src, dst)`` hash-partitioned on src into ``n_part``
+    partitions and persisted, the layout the loops join against
+    (plans/runner.py:gather). Whoever pinned it owns the unpersist; an
+    operator handed one uses it as is (no dedup, no exchange)."""
+
+    edges: DataFrame
+    n_part: int
+
+
+def pin_edges(spark, edges: DataFrame, sort: bool = True) -> Pinned:
     """Partition the static edge table on src, its message-join key, ONCE
     and pin it in memory — every iterative operator's opening move (the
     ghost-exchange precondition; plan rationale in plans/runner.py:gather).
     Eagerly materialized so iteration 0 doesn't pay the exchange and so
     the in-loop joins see real cached stats instead of estimates (the
-    in-loop-broadcast guard, PLANS.md §7). → (pinned edges, n_part);
-    caller owns the unpersist.
+    in-loop-broadcast guard, PLANS.md §7). Caller owns the unpersist.
 
     ``sort=True`` adds an in-partition sort (no exchange, partitioning
     preserved) before the persist: the sorted key column RLE/delta-
@@ -139,23 +152,21 @@ def pin_edges(spark, edges: DataFrame, sort: bool = True) -> tuple[DataFrame, in
         e = e.sortWithinPartitions("src", "dst")
     e = e.persist()
     e.count()
-    return e, n_part
+    return Pinned(e, n_part)
 
 
-def pin_dedup_edges(
-    spark, edges: DataFrame, drop_self_loops: bool = True
-) -> tuple[DataFrame, int]:
+def pin_dedup_edges(spark, edges: DataFrame, drop_self_loops: bool = True) -> Pinned:
     """Fused self-loop filter + (src, dst) dedup + pin in ONE exchange
     (round 6): hash(src) partitioning satisfies the (src, dst) dedup's
     clustering requirement (equal-key rows are co-located), so the dedup
     aggregation runs inside the pin's exchange instead of adding its own
     — the raw edge table crosses the network once, not twice. Output is
     exactly ``pin_edges(filter + dropDuplicates)``: deduped, sorted
-    within partitions, persisted; → (pinned, n_part), caller owns the
-    unpersist. Trade-off vs dedup-first: duplicate rows of one hot key
-    are no longer map-side combined before the exchange — a win whenever
-    duplicates are rare (every graph here), and the per-key fan-in is
-    the same deg(hub) the src-pinned layout carries anyway."""
+    within partitions, persisted; caller owns the unpersist. Trade-off
+    vs dedup-first: duplicate rows of one hot key are no longer map-side
+    combined before the exchange — a win whenever duplicates are rare
+    (every graph here), and the per-key fan-in is the same deg(hub) the
+    src-pinned layout carries anyway."""
     n_part = spark.sparkContext.defaultParallelism
     e = edges.select("src", "dst")
     if drop_self_loops:
@@ -167,7 +178,45 @@ def pin_dedup_edges(
         .persist()
     )
     e.count()
-    return e, n_part
+    return Pinned(e, n_part)
+
+
+@contextmanager
+def pinned(
+    spark, edges: DataFrame | Pinned, dedup: bool = True, drop_self_loops: bool = True
+) -> Iterator[Pinned]:
+    """Scope of a loop operator's edges: a :class:`Pinned` input as is, or
+    a DataFrame pinned by :func:`pin_dedup_edges` (:func:`pin_edges` if
+    ``dedup=False``: already deduped) and unpersisted on exit, also when
+    the body raises."""
+    if isinstance(edges, Pinned):
+        yield edges
+        return
+    p = (
+        pin_dedup_edges(spark, edges, drop_self_loops)
+        if dedup
+        else pin_edges(spark, edges)
+    )
+    try:
+        yield p
+    finally:
+        p.edges.unpersist()
+
+
+@contextmanager
+def vertex_table(vertices: DataFrame | None, default: DataFrame) -> Iterator[DataFrame]:
+    """Scope of a loop operator's vertex set ``(id long)``: the ids of
+    ``vertices``, else of ``default``, checkpointed and released on exit,
+    also when the body raises, so the operator's output must not read it."""
+    verts = (
+        (vertices if vertices is not None else default)
+        .select(F.col("id").cast("long"))
+        .localCheckpoint(eager=True)
+    )
+    try:
+        yield verts
+    finally:
+        release(verts)
 
 
 def degrees(edges_sym: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import ordered_gather, ordered_total, release
-from .graph import pin_dedup_edges, vertices_of
+from .graph import pinned, vertices_of
 
 
 def hits_fixed(
@@ -47,50 +47,51 @@ def hits_fixed(
     if n_iterations < 1:
         raise ValueError(f"hits_fixed needs n_iterations >= 1, got {n_iterations}")
     e_raw = edges.select("src", "dst")
-    e, n_part = pin_dedup_edges(spark, e_raw)
-    e_rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    verts = (
-        # default vertex set from the RAW endpoints: a self-loop-only
-        # vertex stays in the output (scores 0 — its loop is dropped)
-        (vertices.select("id") if vertices is not None else vertices_of(e_raw))
-        .select(F.col("id").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _half_step(edges: DataFrame, scores: DataFrame, col: str) -> DataFrame:
-        """``col`` = the L1-normalized fold of ``scores`` sent along
-        ``edges``, for every vertex (0 without in-messages)."""
-        got = verts.join(ordered_gather(edges, scores, n_part, col), "vertex", "left")
-        s = got.select("vertex", F.coalesce(col, F.lit(0.0)).alias(col))
-        # try_divide -> NULL when the graph has no edges at all (total 0);
-        # coalesce keeps the all-zero fixpoint instead of an ANSI error
-        return (
-            s.crossJoin(F.broadcast(ordered_total(s, col, "_s")))
-            .select(
-                "vertex",
-                F.coalesce(F.try_divide(F.col(col), F.col("_s")), F.lit(0.0)).alias(col),
-            )
+    # only the edge table is scoped: the output reads `verts`
+    with pinned(spark, e_raw) as (e, n_part):
+        e_rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        verts = (
+            # default vertex set from the RAW endpoints: a self-loop-only
+            # vertex stays in the output (scores 0 — its loop is dropped)
+            (vertices.select("id") if vertices is not None else vertices_of(e_raw))
+            .select(F.col("id").alias("vertex"))
             .localCheckpoint(eager=True)
         )
 
-    hub = verts.select("vertex", F.lit(1.0).alias("hub"))
-    for it in range(n_iterations):
-        new_auth = _half_step(e, hub, "auth")
-        new_hub = _half_step(e_rev, new_auth, "hub")
-        if it:  # the first hub is a projection of verts, which `out` reads
-            release(auth)
-            release(hub)
-        auth, hub = new_auth, new_hub
-    out = (
-        verts.join(auth, "vertex", "left")
-        .join(hub, "vertex", "left")
-        .select(
-            "vertex",
-            F.coalesce("auth", F.lit(0.0)).alias("authority"),
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
+        def _half_step(edges: DataFrame, scores: DataFrame, col: str) -> DataFrame:
+            """``col`` = the L1-normalized fold of ``scores`` sent along
+            ``edges``, for every vertex (0 without in-messages)."""
+            got = verts.join(
+                ordered_gather(edges, scores, n_part, col), "vertex", "left"
+            )
+            s = got.select("vertex", F.coalesce(col, F.lit(0.0)).alias(col))
+            # try_divide -> NULL when the graph has no edges at all (total
+            # 0); coalesce keeps the all-zero fixpoint instead of an ANSI
+            # error
+            norm = F.coalesce(F.try_divide(F.col(col), F.col("_s")), F.lit(0.0))
+            return (
+                s.crossJoin(F.broadcast(ordered_total(s, col, "_s")))
+                .select("vertex", norm.alias(col))
+                .localCheckpoint(eager=True)
+            )
+
+        hub = verts.select("vertex", F.lit(1.0).alias("hub"))
+        for it in range(n_iterations):
+            new_auth = _half_step(e, hub, "auth")
+            new_hub = _half_step(e_rev, new_auth, "hub")
+            if it:  # the first hub is a projection of verts, which `out` reads
+                release(auth)
+                release(hub)
+            auth, hub = new_auth, new_hub
+        out = (
+            verts.join(auth, "vertex", "left")
+            .join(hub, "vertex", "left")
+            .select(
+                "vertex",
+                F.coalesce("auth", F.lit(0.0)).alias("authority"),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            )
         )
-    )
-    e.unpersist()
     return out
 
 

@@ -41,8 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..plans.runner import FixpointRunner, release, send
-from .graph import pin_dedup_edges, vertices_of
+from ..plans.runner import FixpointRunner, send
+from .graph import pinned, vertex_table, vertices_of
 
 
 def coreness(
@@ -59,70 +59,64 @@ def coreness(
     edges deduped; ``vertices`` (optional superset of endpoints) adds
     isolated vertices with core 0."""
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    e, n_part = pin_dedup_edges(spark, e_raw)
-    verts = (
-        (vertices.select("id") if vertices is not None else vertices_of(e_raw))
-        .select(F.col("id").cast("long").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
-
-    init = (
-        verts.join(
-            e.groupBy(F.col("src").alias("vertex")).agg(F.count("*").alias("core")),
-            "vertex",
-            "left",
-        ).select("vertex", F.coalesce("core", F.lit(0)).cast("long").alias("core"))
-    )
-
-    def step(state: DataFrame, it: int) -> DataFrame:
-        # The H-index comes from a window rank over the gathered
-        # neighbor values — rank desc within each vertex, H = max rank
-        # whose value still >= rank. Measured 2.4x over the collect_list
-        # + sort_array + HOF-fold formulation (10.8 -> 4.4 s/round at
-        # 18M edges, local[32], interleaved A/B, identical integers):
-        # the window sorts rows in place inside the exchange's
-        # partitions instead of materializing a per-vertex array per row
-        # group. A vertex with no incoming rows keeps core (0-degree =>
-        # H=0 from init — least(old, H) also guards monotonicity).
-        # Join-back update (round 6, same rationale as cc_label_propagation):
-        # the H-index window + aggregation run over the gathered NEIGHBOR
-        # values only (no null-tagged self rows to rank around), and the
-        # old core joins back exchange-free — the checkpointed state keeps
-        # its hash(vertex) partitioning with AQE off in the loop, so only
-        # the messages shuffle.
-        w = Window.partitionBy("vertex").orderBy(F.desc("_nc"))
-        h = (
-            send(e, state.select("vertex", F.col("core").alias("_nc")))
-            .repartition(n_part, "vertex")
-            .withColumn("rn", F.row_number().over(w))
-            .groupBy("vertex")
-            .agg(
-                F.max(F.when(F.col("_nc") >= F.col("rn"), F.col("rn")))
-                .cast("long")
-                .alias("_h")
-            )
-            .hint("shuffle_hash")
-        )
-        new_core = F.least(F.coalesce("_h", F.lit(0).cast("long")), F.col("_old"))
-        return (
-            state.select("vertex", F.col("core").alias("_old"))
-            .join(h, "vertex", "left")
-            .select(
+    with pinned(spark, e_raw) as (e, n_part), vertex_table(
+        vertices, vertices_of(e_raw)
+    ) as verts:
+        init = (
+            verts.select(F.col("id").alias("vertex")).join(
+                e.groupBy(F.col("src").alias("vertex")).agg(F.count("*").alias("core")),
                 "vertex",
-                new_core.alias("core"),
-                (new_core < F.col("_old")).alias("changed"),
-            )
+                "left",
+            ).select("vertex", F.coalesce("core", F.lit(0)).cast("long").alias("core"))
         )
 
-    def converged(got: dict, it: int):
-        return got["changed"] or 0, {}
+        def step(state: DataFrame, it: int) -> DataFrame:
+            # The H-index comes from a window rank over the gathered
+            # neighbor values — rank desc within each vertex, H = max rank
+            # whose value still >= rank. Measured 2.4x over the collect_list
+            # + sort_array + HOF-fold formulation (10.8 -> 4.4 s/round at
+            # 18M edges, local[32], interleaved A/B, identical integers):
+            # the window sorts rows in place inside the exchange's
+            # partitions instead of materializing a per-vertex array per row
+            # group. A vertex with no incoming rows keeps core (0-degree =>
+            # H=0 from init — least(old, H) also guards monotonicity).
+            # Join-back update (round 6, same rationale as cc_label_propagation):
+            # the H-index window + aggregation run over the gathered NEIGHBOR
+            # values only (no null-tagged self rows to rank around), and the
+            # old core joins back exchange-free — the checkpointed state keeps
+            # its hash(vertex) partitioning with AQE off in the loop, so only
+            # the messages shuffle.
+            w = Window.partitionBy("vertex").orderBy(F.desc("_nc"))
+            h = (
+                send(e, state.select("vertex", F.col("core").alias("_nc")))
+                .repartition(n_part, "vertex")
+                .withColumn("rn", F.row_number().over(w))
+                .groupBy("vertex")
+                .agg(
+                    F.max(F.when(F.col("_nc") >= F.col("rn"), F.col("rn")))
+                    .cast("long")
+                    .alias("_h")
+                )
+                .hint("shuffle_hash")
+            )
+            new_core = F.least(F.coalesce("_h", F.lit(0).cast("long")), F.col("_old"))
+            return (
+                state.select("vertex", F.col("core").alias("_old"))
+                .join(h, "vertex", "left")
+                .select(
+                    "vertex",
+                    new_core.alias("core"),
+                    (new_core < F.col("_old")).alias("changed"),
+                )
+            )
 
-    runner = FixpointRunner(spark, "coreness", max_iterations=max_iterations)
-    out = runner.run(
-        init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
-    )
-    release(verts)
-    e.unpersist()
+        def converged(got: dict, it: int):
+            return got["changed"] or 0, {}
+
+        runner = FixpointRunner(spark, "coreness", max_iterations=max_iterations)
+        out = runner.run(
+            init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
+        )
     return out.select("vertex", "core"), runner
 
 

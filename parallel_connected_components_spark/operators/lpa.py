@@ -24,13 +24,13 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..plans.runner import FixpointRunner, release, send
-from .graph import pin_edges
+from ..plans.runner import FixpointRunner, send
+from .graph import Pinned, pinned, vertex_table
 
 
 def label_propagation_communities(
     spark: SparkSession,
-    edges_sym: DataFrame,
+    edges_sym: DataFrame | Pinned,
     vertices: DataFrame | None = None,
     max_iterations: int = 20,
     checkpoint_dir: str | None = None,
@@ -41,74 +41,69 @@ def label_propagation_communities(
     # explicitly on vertex alone: combining them before the exchange
     # would place it on (vertex, label), and the per-vertex argmax would
     # then need a second exchange.
-    e, n_part = pin_edges(spark, edges_sym)
-    if vertices is not None:
-        verts = vertices.select("id").localCheckpoint(eager=True)
-    else:
+    with pinned(spark, edges_sym, dedup=False) as (e, n_part), vertex_table(
+        vertices,
         # symmetrized input: every vertex appears as src, and the pinned
         # table is hash(src)-partitioned — exchange-free distinct
-        verts = (
-            e.select(F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
+        e.select(F.col("src").alias("id")).distinct(),
+    ) as verts:
+        init = verts.select(F.col("id").alias("vertex"), F.col("id").alias("label"))
+        # LPA may oscillate on bipartite structures; hitting the cap
+        # returns the last state rather than raising (the reference's
+        # bounded loops, its src/pthreads/cc_pthreads.c:132).
+        runner = FixpointRunner(
+            spark, "lpa", checkpoint_dir=checkpoint_dir,
+            max_iterations=max_iterations, raise_on_cap=False,
         )
-    init = verts.select(F.col("id").alias("vertex"), F.col("id").alias("label"))
-    # LPA may oscillate on bipartite structures; hitting the cap returns
-    # the last state rather than raising (the reference's bounded loops:
-    # /root/reference/src/pthreads/cc_pthreads.c:132).
-    runner = FixpointRunner(
-        spark, "lpa", checkpoint_dir=checkpoint_dir, max_iterations=max_iterations,
-        raise_on_cap=False,
-    )
 
-    def step(state: DataFrame, it: int) -> DataFrame:
-        counts = (
-            send(e, state.select("vertex", "label"))
-            .repartition(n_part, "vertex")
-            .groupBy("vertex", "label")
-            .agg(F.count("*").alias("cnt"))
-        )
-        # argmax by (cnt, -label): most frequent, smallest label on ties.
-        # The ordering key is packed into ONE decimal(38,0):
-        #   key = cnt·2^64 + (2^63−1 − label)
-        # (cnt·2^64 ≤ 2^95 « 10^38 exact; the label offset spans (0, 2^64)
-        # so the lexicographic (cnt, −label) order is preserved exactly,
-        # for EVERY int64 label). Round 6, two reasons: a struct ordering
-        # key forces the argmax into a SortAggregate — a full sort of the
-        # (vertex, label, cnt) stream inside every iteration — while the
-        # decimal key plans as a plain HashAggregate; and struct's
-        # −label ANSI-overflows on a label of −2^63, which a 64-bit
-        # hashed vertex id can genuinely be (regression test:
-        # test_lpa_long_min_label).
-        # shuffle_hash hint on the join-back: without it AQE flips the
-        # left join to a broadcast once `best` looks small — a serial
-        # driver-side build every iteration (see cc_label_propagation)
-        key = F.col("cnt").cast("decimal(38,0)") * F.lit(Decimal(2**64)).cast(
-            "decimal(38,0)"
-        ) + (
-            F.lit(Decimal(2**63 - 1)).cast("decimal(38,0)")
-            - F.col("label").cast("decimal(38,0)")
-        )
-        best = counts.groupBy("vertex").agg(
-            F.max_by("label", key).alias("new_label")
-        ).hint("shuffle_hash")
-        return (
-            state.select("vertex", F.col("label").alias("old_label"))
-            .join(best, "vertex", "left")
-            .select(
-                "vertex",
-                F.coalesce("new_label", F.col("old_label")).alias("label"),
-                "old_label",
+        def step(state: DataFrame, it: int) -> DataFrame:
+            counts = (
+                send(e, state.select("vertex", "label"))
+                .repartition(n_part, "vertex")
+                .groupBy("vertex", "label")
+                .agg(F.count("*").alias("cnt"))
             )
+            # argmax by (cnt, -label): most frequent, smallest label on ties.
+            # The ordering key is packed into ONE decimal(38,0):
+            #   key = cnt·2^64 + (2^63−1 − label)
+            # (cnt·2^64 ≤ 2^95 « 10^38 exact; the label offset spans (0, 2^64)
+            # so the lexicographic (cnt, −label) order is preserved exactly,
+            # for EVERY int64 label). Round 6, two reasons: a struct ordering
+            # key forces the argmax into a SortAggregate — a full sort of the
+            # (vertex, label, cnt) stream inside every iteration — while the
+            # decimal key plans as a plain HashAggregate; and struct's
+            # −label ANSI-overflows on a label of −2^63, which a 64-bit
+            # hashed vertex id can genuinely be (regression test:
+            # test_lpa_long_min_label).
+            # shuffle_hash hint on the join-back: without it AQE flips the
+            # left join to a broadcast once `best` looks small — a serial
+            # driver-side build every iteration (see cc_label_propagation)
+            key = F.col("cnt").cast("decimal(38,0)") * F.lit(Decimal(2**64)).cast(
+                "decimal(38,0)"
+            ) + (
+                F.lit(Decimal(2**63 - 1)).cast("decimal(38,0)")
+                - F.col("label").cast("decimal(38,0)")
+            )
+            best = counts.groupBy("vertex").agg(
+                F.max_by("label", key).alias("new_label")
+            ).hint("shuffle_hash")
+            return (
+                state.select("vertex", F.col("label").alias("old_label"))
+                .join(best, "vertex", "left")
+                .select(
+                    "vertex",
+                    F.coalesce("new_label", F.col("old_label")).alias("label"),
+                    "old_label",
+                )
+            )
+
+        def converged(got: dict, it: int):
+            return got["changed"] or 0, {}
+
+        final = runner.run(
+            init.withColumn("old_label", F.col("label")),
+            step,
+            [F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed")],
+            converged,
         )
-
-    def converged(got: dict, it: int):
-        return got["changed"] or 0, {}
-
-    final = runner.run(
-        init.withColumn("old_label", F.col("label")),
-        step,
-        [F.sum((F.col("label") != F.col("old_label")).cast("long")).alias("changed")],
-        converged,
-    )
-    release(verts)
-    e.unpersist()
     return final.select("vertex", "label"), runner

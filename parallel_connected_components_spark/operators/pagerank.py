@@ -22,25 +22,27 @@ DuckDB twins.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..plans.runner import (
     FixpointRunner, gather, ordered_gather, ordered_total, release,
 )
-from .graph import pin_dedup_edges
+from .graph import Pinned, pinned
 
 
 def pagerank(
     spark: SparkSession,
-    edges: DataFrame,
+    edges: DataFrame | Pinned,
     damping: float = 0.85,
     tol: float = 1e-6,
     max_iterations: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = False,
     init_ranks: DataFrame | None = None,
-    assume_pinned: bool = False,
     vertices: DataFrame | None = None,
 ) -> tuple[DataFrame, FixpointRunner]:
     """→ (ranks(vertex long, rank double), runner). ``edges`` is directed.
@@ -70,123 +72,111 @@ def pagerank(
     the rationale), then a left join back to the vertex set that needs no
     exchange.
 
-    ``assume_pinned=True`` (round 5, for the streaming fold): the caller
-    guarantees ``edges`` is already (src, dst)-deduped, hash-partitioned
-    on src, and persisted — the dedup shuffle and :func:`pin_edges` are
-    skipped and the table is NOT unpersisted on return (the caller owns
-    its lifecycle). This is what makes the incremental fold's edge pass
+    ``edges`` as a :class:`~.graph.Pinned` table (round 5, for the
+    streaming fold) must be (src, dst)-deduped: the dedup and the pin
+    exchange are skipped, and the table stays persisted (whoever pinned
+    it owns it). This is what makes the incremental fold's edge pass
     delta-proportional: the accumulated table is pinned once and reused
-    across folds instead of re-shuffled per fold. A persisted bucketed
-    scan (sources/bucketed.py:pin_bucketed_edges) qualifies too — its
-    bucket partitioning co-locates the join with no exchange at all."""
-    if assume_pinned:
-        e = edges
-        n_part = e.rdd.getNumPartitions()
-    else:
-        # fused dedup+pin: one exchange instead of two (pin_dedup_edges)
-        e, n_part = pin_dedup_edges(spark, edges, drop_self_loops=False)
-    vo, n, n_dangling = _vertex_table(e, vertices)
-
-    if init_ranks is not None:
-        pr = init_ranks.select("vertex", F.col("rank").alias("_r0"))
-        seeded = vo.join(pr, "vertex", "left").select(
-            "vertex", "outdeg", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank")
-        )
-        total = seeded.agg(F.sum("rank")).collect()[0][0] or 1.0
-        init = seeded.select(
-            "vertex", "outdeg", (F.col("rank") / F.lit(total)).alias("rank")
-        ).localCheckpoint(eager=True)
-    else:
-        init = vo.select("vertex", "outdeg", F.lit(1.0 / n).alias("rank"))
-    # cap semantics match the numpy oracle: hitting max_iterations returns
-    # the best-effort ranks at the cap (last l1_delta is in the metrics),
-    # it does not raise — slow-converging graphs near the cap still answer
-    runner = FixpointRunner(
-        spark, "pagerank", checkpoint_dir=checkpoint_dir,
-        max_iterations=max_iterations, raise_on_cap=False, n_part=n_part,
-    )
-
-    # dangling mass for the *next* step is computed inside the same
-    # aggregate as the convergence delta (one job per iteration instead
-    # of two scalar actions); seeded from the state we actually start at
-    # (the latest durable snapshot when resuming). The cold-start value
-    # is n_dangling/n (every dangling vertex holds exactly 1/n) — no job;
-    # warm starts and resumes aggregate their actual seed state.
-    seed_state = init
-    resumed = False
-    if resume:
-        got = runner.latest()
-        if got is not None:
-            seed_state = got[0]
-            resumed = True
-    if init_ranks is None and not resumed:
-        dangling0 = n_dangling * (1.0 / n)
-    else:
-        dangling0 = (
-            seed_state.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-    dangling_holder = {"v": dangling0}
-
-    def step(state: DataFrame, it: int) -> DataFrame:
-        # dangling vertices (outdeg=0) send no edge mass — filter
-        # before the divide (ANSI mode makes x/0 an error, not inf)
-        contribs = gather(
-            e,
-            state.filter(F.col("outdeg") > 0).select(
-                "vertex", (F.col("rank") / F.col("outdeg")).alias("w")
-            ),
-            F.sum("w").alias("contrib"),
-        )
-        base = (1.0 - damping) / n + damping * dangling_holder["v"] / n
-        return (
-            state.select("vertex", "outdeg", F.col("rank").alias("prev_rank"))
-            .join(contribs, "vertex", "left")
-            .select(
-                "vertex",
-                "outdeg",
-                (F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
-                "prev_rank",
+    across folds instead of re-shuffled per fold. A bucketed scan
+    (sources/bucketed.py:pin_bucketed_edges) qualifies too — its bucket
+    partitioning co-locates the join with no exchange at all. A
+    DataFrame is deduped and pinned in one exchange (pin_dedup_edges)."""
+    with pinned(spark, edges, drop_self_loops=False) as (e, n_part), _vertex_table(
+        e, vertices
+    ) as (vo, n, n_dangling):
+        if init_ranks is not None:
+            pr = init_ranks.select("vertex", F.col("rank").alias("_r0"))
+            seeded = vo.join(pr, "vertex", "left").select(
+                "vertex", "outdeg", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank")
             )
+            total = seeded.agg(F.sum("rank")).collect()[0][0] or 1.0
+            init = seeded.select(
+                "vertex", "outdeg", (F.col("rank") / F.lit(total)).alias("rank")
+            ).localCheckpoint(eager=True)
+        else:
+            init = vo.select("vertex", "outdeg", F.lit(1.0 / n).alias("rank"))
+        # cap semantics match the numpy oracle: hitting max_iterations returns
+        # the best-effort ranks at the cap (last l1_delta is in the metrics),
+        # it does not raise — slow-converging graphs near the cap still answer
+        runner = FixpointRunner(
+            spark, "pagerank", checkpoint_dir=checkpoint_dir,
+            max_iterations=max_iterations, raise_on_cap=False, n_part=n_part,
         )
 
-    # convergence delta + next-iteration dangling mass ride along the
-    # state materialization — zero extra jobs per iteration (the C analog
-    # computes `changed` inside the same parallel loop that writes
-    # labels, the reference's src/cc_openmp.c:92-118).
-    observe = [
-        F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
-        F.sum(
-            F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))
-        ).alias("dangling"),
-    ]
+        # dangling mass for the *next* step is computed inside the same
+        # aggregate as the convergence delta (one job per iteration instead
+        # of two scalar actions); seeded from the state we actually start at
+        # (the latest durable snapshot when resuming). The cold-start value
+        # is n_dangling/n (every dangling vertex holds exactly 1/n) — no job;
+        # warm starts and resumes aggregate their actual seed state.
+        seed_state = init
+        resumed = False
+        if resume:
+            got = runner.latest()
+            if got is not None:
+                seed_state = got[0]
+                resumed = True
+        if init_ranks is None and not resumed:
+            dangling0 = n_dangling * (1.0 / n)
+        else:
+            dangling = seed_state.filter(F.col("outdeg") == 0).agg(F.sum("rank"))
+            dangling0 = dangling.collect()[0][0] or 0.0
+        dangling_holder = {"v": dangling0}
 
-    def converged(got: dict, it: int):
-        delta = got["delta"] or 0.0
-        dangling_holder["v"] = got["dangling"] or 0.0
-        return (0 if delta < tol else 1), {"l1_delta": delta}
+        def step(state: DataFrame, it: int) -> DataFrame:
+            # dangling vertices (outdeg=0) send no edge mass — filter
+            # before the divide (ANSI mode makes x/0 an error, not inf)
+            contribs = gather(
+                e,
+                state.filter(F.col("outdeg") > 0).select(
+                    "vertex", (F.col("rank") / F.col("outdeg")).alias("w")
+                ),
+                F.sum("w").alias("contrib"),
+            )
+            base = (1.0 - damping) / n + damping * dangling_holder["v"] / n
+            rank = F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+            return (
+                state.select("vertex", "outdeg", F.col("rank").alias("prev_rank"))
+                .join(contribs, "vertex", "left")
+                .select("vertex", "outdeg", rank.alias("rank"), "prev_rank")
+            )
 
-    final = runner.run(
-        init.withColumn("prev_rank", F.col("rank")), step, observe, converged,
-        resume=resume,
-    )
-    release(vo)
-    if init_ranks is not None:
-        release(init)
-    if not assume_pinned:
-        e.unpersist()
+        # convergence delta + next-iteration dangling mass ride along the
+        # state materialization — zero extra jobs per iteration (the C analog
+        # computes `changed` inside the same parallel loop that writes
+        # labels, the reference's src/cc_openmp.c:92-118).
+        observe = [
+            F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("delta"),
+            F.sum(
+                F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(F.lit(0.0))
+            ).alias("dangling"),
+        ]
+
+        def converged(got: dict, it: int):
+            delta = got["delta"] or 0.0
+            dangling_holder["v"] = got["dangling"] or 0.0
+            return (0 if delta < tol else 1), {"l1_delta": delta}
+
+        final = runner.run(
+            init.withColumn("prev_rank", F.col("rank")), step, observe, converged,
+            resume=resume,
+        )
+        if init_ranks is not None:
+            release(init)
     return final.select("vertex", "rank"), runner
 
 
+@contextmanager
 def _vertex_table(
     e: DataFrame, vertices: DataFrame | None, *carried: Column
-) -> tuple[DataFrame, int, int]:
-    """→ (vo, |V|, dangling count): the checkpointed vertex table
-    ``(vertex, outdeg, *carried)`` over a pinned deduped edge table, with
-    outdeg 0 for dangling vertices. ``vertices`` (id) replaces the edge
-    endpoints as the vertex set. One job (round 6): outdeg is the count
-    of src-side rows of one aggregation over both endpoints, and |V| and
-    the dangling count ride the materialization as an Observation."""
+) -> Iterator[tuple[DataFrame, int, int]]:
+    """Scope of (vo, |V|, dangling count), ``vo`` released on exit as in
+    ``graph.vertex_table``: the checkpointed ``(vertex, outdeg, *carried)``
+    over a pinned deduped edge table, outdeg 0 for dangling vertices.
+    ``vertices`` (id) replaces the edge endpoints as the vertex set. One
+    job (round 6): outdeg is the count of src-side rows of one aggregation
+    over both endpoints, and |V| and the dangling count ride the
+    materialization as an Observation."""
     if vertices is not None:
         outdeg = e.groupBy(F.col("src").alias("vertex")).agg(
             F.count("*").alias("outdeg")
@@ -213,7 +203,10 @@ def _vertex_table(
         )
         .localCheckpoint(eager=True)
     )
-    return vo, obs.get["n"], obs.get["nd"] or 0
+    try:
+        yield vo, obs.get["n"], obs.get["nd"] or 0
+    finally:
+        release(vo)
 
 
 def pagerank_fixed(
@@ -245,13 +238,14 @@ def pagerank_fixed(
     → ranks(vertex long, rank double) after exactly ``n_iterations``
     steps. DuckDB twin: entry._pagerank_fixed_sql().
     """
-    e, n_part = pin_dedup_edges(spark, edges, drop_self_loops=False)
-    vo, n, _ = _vertex_table(e, None)
-    return _power_iteration_fixed(
-        spark, e, n_part, vo, F.lit(1.0 / n), n_iterations, damping, "pagerank_fixed",
-        teleport=F.lit((1.0 - damping) / n),
-        dangling_share=F.col("dm") / F.lit(float(n)),
-    )
+    with pinned(spark, edges, drop_self_loops=False) as (e, n_part), _vertex_table(
+        e, None
+    ) as (vo, n, _):
+        return _power_iteration_fixed(
+            spark, e, n_part, vo, F.lit(1.0 / n), n_iterations, damping,
+            "pagerank_fixed", teleport=F.lit((1.0 - damping) / n),
+            dangling_share=F.col("dm") / F.lit(float(n)),
+        )
 
 
 def personalized_pagerank_fixed(
@@ -286,20 +280,19 @@ def personalized_pagerank_fixed(
     if not seeds:
         raise ValueError("personalized_pagerank_fixed needs >= 1 seed")
     seed_ids = sorted(set(int(s) for s in seeds))
-    e, n_part = pin_dedup_edges(spark, edges, drop_self_loops=False)
     tele_w = 1.0 / len(seed_ids)  # driver-side literal, shared with the SQL twin
-    vo, _, _ = _vertex_table(
+    tele = F.col("tele")
+    with pinned(spark, edges, drop_self_loops=False) as (e, n_part), _vertex_table(
         e, vertices,
         F.when(F.col("vertex").isin(seed_ids), F.lit(tele_w))
         .otherwise(F.lit(0.0))
         .alias("tele"),
-    )
-    tele = F.col("tele")
-    return _power_iteration_fixed(
-        spark, e, n_part, vo, tele, n_iterations, damping, "ppr_fixed",
-        teleport=F.lit(1.0 - damping) * tele,
-        dangling_share=F.col("dm") * tele,
-    )
+    ) as (vo, _, _):
+        return _power_iteration_fixed(
+            spark, e, n_part, vo, tele, n_iterations, damping, "ppr_fixed",
+            teleport=F.lit(1.0 - damping) * tele,
+            dangling_share=F.col("dm") * tele,
+        )
 
 
 def _power_iteration_fixed(
@@ -314,8 +307,8 @@ def _power_iteration_fixed(
     ``(vertex, outdeg, *carried)``; ``contrib`` is the ordered sum of the
     in-neighbors' rank/outdeg and ``dm`` (read by ``dangling_share``) the
     ordered sum of the dangling vertices' ranks, a one-row broadcast.
-    The loop never converges: the iteration cap ends it. Releases ``vo``
-    and unpersists ``e``. → (vertex, rank)."""
+    The loop never converges: the iteration cap ends it. → (vertex, rank),
+    reading neither ``e`` nor ``vo``."""
     carried = vo.columns
     runner = FixpointRunner(
         spark, name, max_iterations=n_iterations, raise_on_cap=False, n_part=n_part
@@ -344,8 +337,6 @@ def _power_iteration_fixed(
         vo.select(*carried, rank0.alias("rank")), step,
         [F.count(F.lit(1)).alias("n")], lambda got, it: (1, {}),
     )
-    release(vo)
-    e.unpersist()
     return ranks.select("vertex", "rank")
 
 

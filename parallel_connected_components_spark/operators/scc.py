@@ -58,7 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..plans.runner import fixpoint_conf, release
-from .graph import pin_dedup_edges, vertices_of
+from .graph import Pinned, pinned, vertices_of
 
 
 def scc(
@@ -80,7 +80,7 @@ def scc(
     - the deduped directed edge table is pinned (hash(src), sorted,
       persisted) with ONE exchange — hash(src) already satisfies the
       (src, dst) dedup's clustering requirement — and the round-1
-      coloring LP reuses it via ``assume_pinned`` instead of re-pinning;
+      coloring LP is handed that ``Pinned`` table instead of re-pinning;
     - each trim pass is one union + max-aggregation over the edge
       endpoints (has-in AND has-out) with the survivor count riding an
       Observation on the pass's own materialization — replacing the 2
@@ -93,23 +93,23 @@ def scc(
       derives the shrunken vertex count arithmetically (marked ⊆ rem_v),
       and the remainder's edge table is only rebuilt when a remainder
       exists."""
-    with fixpoint_conf(spark):
-        return _scc_impl(spark, edges, vertices, max_rounds, max_iterations)
+    e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    # fused self-loop filter + dedup + pin: one exchange total, and the
+    # result IS the round-1 coloring LP's pinned layout
+    with fixpoint_conf(spark), pinned(spark, e_raw) as e_pin:
+        return _scc_impl(spark, e_raw, e_pin, vertices, max_rounds, max_iterations)
 
 
 def _scc_impl(
     spark: SparkSession,
-    edges: DataFrame,
+    e_raw: DataFrame,
+    e_pin: Pinned,
     vertices: DataFrame | None,
     max_rounds: int,
     max_iterations: int,
 ) -> tuple[DataFrame, dict]:
     from .cc import cc_label_propagation
 
-    e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    # fused self-loop filter + dedup + pin: one exchange total, and the
-    # result IS the round-1 coloring LP's pinned layout
-    e_pin, _n_part = pin_dedup_edges(spark, e_raw)
     verts = (
         (vertices.select("id") if vertices is not None else vertices_of(e_raw))
         .select(F.col("id").cast("long").alias("vertex"))
@@ -117,16 +117,16 @@ def _scc_impl(
     )
     info = {"rounds": 0, "trim_passes": 0, "color_steps": 0, "mark_steps": 0}
     done: list[DataFrame] = []
-    rem_v, rem_e = verts, e_pin
-    rem_pinned = True  # rem_e is e_pin (src-partitioned + persisted)
+    rem_v, rem_e = verts, e_pin.edges
+    color = None
     n_v = rem_v.count()
     steps = 0
 
     def _drop(df: DataFrame):
         # a superseded one-shot checkpoint; `verts` (the no-SCC output)
-        # and `e_pin` (unpersisted on exit) live to the end, and the
-        # `done` frames are never dropped: the output union reads them
-        if df is not verts and df is not e_pin:
+        # lives to the end, `e_pin` belongs to the caller's scope, and
+        # the `done` frames are never dropped: the output union reads them
+        if df is not verts and df is not e_pin.edges:
             release(df)
 
     def _tick(kind: str):
@@ -201,7 +201,6 @@ def _scc_impl(
                     .localCheckpoint(eager=True)
                 )
                 _drop(old_e)
-                rem_pinned = False
             if n_v == 0:
                 break
 
@@ -209,12 +208,12 @@ def _scc_impl(
             # This IS min-label propagation restricted to the edge
             # direction: feeding cc_label_propagation the DIRECTED edge
             # table makes its fixpoint label(v) = min({v} ∪ {u : u ⇝ v})
-            # — exactly the coloring. Round 1 reuses the pinned table
-            # (assume_pinned) instead of re-exchanging it.
+            # — exactly the coloring. While nothing was trimmed, the LP
+            # gets the pinned table itself instead of re-exchanging it.
             rem_ids = rem_v.select(F.col("vertex").alias("id"))
             colors, lp_runner = cc_label_propagation(
-                spark, rem_e, vertices=rem_ids,
-                max_iterations=max_iterations, assume_pinned=rem_pinned,
+                spark, e_pin if rem_e is e_pin.edges else rem_e,
+                vertices=rem_ids, max_iterations=max_iterations,
             )
             info["color_steps"] += lp_runner.num_iterations
             steps += lp_runner.num_iterations
@@ -299,11 +298,15 @@ def _scc_impl(
             )
             _drop(old_v)
             _drop(old_e)
-            rem_pinned = False
+    except BaseException:
+        # the cap or a failing step: nothing will read the output's frames
+        for df in (*done, verts, color):
+            if df is not None:
+                release(df)
+        raise
     finally:
         _drop(rem_v)
         _drop(rem_e)
-        e_pin.unpersist()
 
     if not done:
         out = verts.select("vertex", F.col("vertex").alias("label"))

@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.hashing import portable_hash64_col
-from .graph import pin_dedup_edges
+from ..plans.runner import release
+from .graph import pinned
 
 
 def random_walks(
@@ -48,45 +49,45 @@ def random_walks(
     seed id (walk_id = the seed), following edges src → dst for up to
     ``walk_len`` steps with the deterministic hash-arg-min transition.
     Pass the symmetrized table for undirected walks."""
-    e, n_part = pin_dedup_edges(
+    with pinned(
         spark, edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    )
-    pos = (
-        seeds.select(F.col("id").cast("long").alias("walk_id"))
-        .dropDuplicates(["walk_id"])
-        .select("walk_id", F.col("walk_id").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
-    corpus = [pos.select("walk_id", F.lit(0).alias("step"), "vertex")]
-    for t in range(1, walk_len + 1):
-        h = portable_hash64_col(
-            F.concat_ws(
-                ":",
-                F.col("walk_id").cast("string"),
-                F.lit(str(t)),
-                F.col("src").cast("string"),
-                F.col("dst").cast("string"),
-            )
-        )
+    ) as (e, _):
         pos = (
-            e.join(
-                pos.select("walk_id", F.col("vertex").alias("src")).hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .select("walk_id", "dst", h.alias("_h"))
-            .groupBy("walk_id")
-            .agg(F.min_by("dst", "_h").alias("vertex"))
+            seeds.select(F.col("id").cast("long").alias("walk_id"))
+            .dropDuplicates(["walk_id"])
+            .select("walk_id", F.col("walk_id").alias("vertex"))
             .localCheckpoint(eager=True)
         )
-        if pos.isEmpty():
-            break
-        corpus.append(pos.select("walk_id", F.lit(t).alias("step"), "vertex"))
+        corpus = [pos.select("walk_id", F.lit(0).alias("step"), "vertex")]
+        for t in range(1, walk_len + 1):
+            h = portable_hash64_col(
+                F.concat_ws(
+                    ":",
+                    F.col("walk_id").cast("string"),
+                    F.lit(str(t)),
+                    F.col("src").cast("string"),
+                    F.col("dst").cast("string"),
+                )
+            )
+            pos = (
+                e.join(
+                    pos.select("walk_id", F.col("vertex").alias("src")).hint(
+                        "shuffle_hash"
+                    ),
+                    "src",
+                )
+                .select("walk_id", "dst", h.alias("_h"))
+                .groupBy("walk_id")
+                .agg(F.min_by("dst", "_h").alias("vertex"))
+                .localCheckpoint(eager=True)
+            )
+            if pos.isEmpty():  # every walk ended: the corpus never reads it
+                release(pos)
+                break
+            corpus.append(pos.select("walk_id", F.lit(t).alias("step"), "vertex"))
     out = corpus[0]
     for c in corpus[1:]:
         out = out.unionAll(c)
-    e.unpersist()
     return out
 
 

@@ -55,8 +55,8 @@ def fixpoint_conf(spark: SparkSession, n_part: int | None = None):
     ``n_part`` is the pinned edge table's partition count, and becomes
     ``spark.sql.shuffle.partitions`` so that :func:`gather`'s exchange
     stays co-partitioned with the hash(vertex) state. ``n_part`` is not
-    always ``defaultParallelism``: ``assume_pinned`` and bucketed inputs
-    bring their own count.
+    always ``defaultParallelism``: a ``Pinned`` input (a bucketed scan,
+    say) brings its own count.
 
     Both settings are restored on exit, also when the loop raises. Nested
     loops (scc's LP calls inside its own scope) see AQE already off and
@@ -479,7 +479,8 @@ class FixpointRunner:
         materializes each step exactly once with the aggregates attached,
         then calls ``converged(observed, it)`` with their values (a dict
         keyed by alias) for ``(changed, extra)`` — so convergence never
-        costs a job of its own or recomputes the iteration's dataflow."""
+        costs a job of its own or recomputes the iteration's dataflow.
+        A raising loop releases its states too."""
         start_iter = 0
         state: DataFrame | None = None
         if resume:
@@ -495,68 +496,74 @@ class FixpointRunner:
         shuffle0 = meter.totals(self.spark)
         compiles = CompileMeter(self.spark)
         compiles0 = compiles.totals()
-        with fixpoint_conf(self.spark, self.n_part):
-            for it in range(start_iter, self.max_iterations):
-                t0 = time.perf_counter()
-                # NOTE: with AQE off (fixpoint_conf), localCheckpoint
-                # PRESERVES the state's output partitioning (LogicalRDD
-                # captures the physical plan's partitioning; only under
-                # AQE does it report UnknownPartitioning) — so a state
-                # materialized hash(vertex)-partitioned stays recognized
-                # as co-partitioned with the pinned edge table and the
-                # aggregation output in the next iteration's plan, while
-                # still truncating lineage every iteration.
-                df, obs = self._observed(step(state, it), observe, it)
-                new_state = df.localCheckpoint(eager=True)
-                changed, extra = converged(obs.get, it)
-                if prev is not None:
-                    release(prev)
-                prev, state = state, new_state
-                # Poll the meters every few iterations plus at convergence
-                # (round 6): each shuffle poll costs ~20-40 ms of py4j
-                # round-trips even incrementally, a per-iteration driver
-                # tax on loops whose whole iteration is ~0.4 s. Cumulative
-                # totals stay exact; the per-entry deltas become
-                # per-poll-window aggregates (attributed to the polling
-                # iteration), which is fine for a diagnostic. The converged
-                # poll drains the listener bus (one ~60 ms wait per run) so
-                # the run's totals include its last job.
-                poll = changed == 0 or (it - start_iter) % 4 == 3
-                if poll:
-                    compiles1 = compiles.totals()
-                    extra = dict(
-                        extra,
-                        codegen_compiles=compiles1[0] - compiles0[0],
-                        jit_ms=compiles1[1] - compiles0[1],
-                    )
-                    compiles0 = compiles1
-                if poll and shuffle0 is not None:
-                    shuffle1 = meter.totals(self.spark, drain=changed == 0)
-                    if shuffle1 is not None:
-                        # Clamp: the meter's running totals are monotone even
-                        # under status-store eviction (finalized stages' bytes
-                        # are remembered Python-side), but the diagnostic must
-                        # never go negative regardless.
+        try:
+            with fixpoint_conf(self.spark, self.n_part):
+                for it in range(start_iter, self.max_iterations):
+                    t0 = time.perf_counter()
+                    # NOTE: with AQE off (fixpoint_conf), localCheckpoint
+                    # PRESERVES the state's output partitioning (LogicalRDD
+                    # captures the physical plan's partitioning; only under
+                    # AQE does it report UnknownPartitioning) — so a state
+                    # materialized hash(vertex)-partitioned stays recognized
+                    # as co-partitioned with the pinned edge table and the
+                    # aggregation output in the next iteration's plan, while
+                    # still truncating lineage every iteration.
+                    df, obs = self._observed(step(state, it), observe, it)
+                    new_state = df.localCheckpoint(eager=True)
+                    if prev is not None:
+                        release(prev)
+                    prev, state = state, new_state
+                    changed, extra = converged(obs.get, it)
+                    # Poll the meters every few iterations plus at convergence
+                    # (round 6): each shuffle poll costs ~20-40 ms of py4j
+                    # round-trips even incrementally, a per-iteration driver
+                    # tax on loops whose whole iteration is ~0.4 s. Cumulative
+                    # totals stay exact; the per-entry deltas become
+                    # per-poll-window aggregates (attributed to the polling
+                    # iteration), which is fine for a diagnostic. The converged
+                    # poll drains the listener bus (one ~60 ms wait per run) so
+                    # the run's totals include its last job.
+                    poll = changed == 0 or (it - start_iter) % 4 == 3
+                    if poll:
+                        compiles1 = compiles.totals()
                         extra = dict(
                             extra,
-                            shuffle_read_bytes=max(0, shuffle1[0] - shuffle0[0]),
-                            shuffle_write_bytes=max(0, shuffle1[1] - shuffle0[1]),
+                            codegen_compiles=compiles1[0] - compiles0[0],
+                            jit_ms=compiles1[1] - compiles0[1],
                         )
-                        shuffle0 = shuffle1
-                m = IterationMetrics(it, changed, time.perf_counter() - t0, extra=extra)
-                if self.tables is not None and (
-                    changed == 0 or (it + 1) % self.snapshot_every == 0
-                ):
-                    m.snapshot = self._save(state, it, m)
-                self.metrics.append(m)
-                if changed == 0:
-                    break
-            else:
-                if self.raise_on_cap:
-                    raise RuntimeError(
-                        f"{self.name}: no convergence in {self.max_iterations} iterations"
-                        " (cap analog: /root/reference/src/cc_openmp.c:82)"
-                    )
+                        compiles0 = compiles1
+                    if poll and shuffle0 is not None:
+                        shuffle1 = meter.totals(self.spark, drain=changed == 0)
+                        if shuffle1 is not None:
+                            # Clamp: the meter's running totals are monotone even
+                            # under status-store eviction (finalized stages' bytes
+                            # are remembered Python-side), but the diagnostic must
+                            # never go negative regardless.
+                            extra = dict(
+                                extra,
+                                shuffle_read_bytes=max(0, shuffle1[0] - shuffle0[0]),
+                                shuffle_write_bytes=max(0, shuffle1[1] - shuffle0[1]),
+                            )
+                            shuffle0 = shuffle1
+                    m = IterationMetrics(it, changed, time.perf_counter() - t0, extra=extra)
+                    if self.tables is not None and (
+                        changed == 0 or (it + 1) % self.snapshot_every == 0
+                    ):
+                        m.snapshot = self._save(state, it, m)
+                    self.metrics.append(m)
+                    if changed == 0:
+                        break
+                else:
+                    if self.raise_on_cap:
+                        raise RuntimeError(
+                            f"{self.name}: no convergence in {self.max_iterations}"
+                            " iterations (cap analog: the reference's src/cc_openmp.c:82)"
+                        )
+        except BaseException:  # the cap or a failing step: nobody reads these
+            release(state)
+            if prev is not None:
+                release(prev)
+            raise
         if prev is not None:
             release(prev)
         return state

@@ -118,19 +118,20 @@ def load_bucketed_edges(
     return spark.table(name), n
 
 
-def pin_bucketed_edges(
-    spark: SparkSession, name: str, path: str | None = None
-) -> tuple[DataFrame, int]:
-    """Load + persist + materialize a bucketed edge table for the
-    iterative operators' ``assume_pinned=True`` path. The persisted
-    InMemoryRelation inherits the scan's bucket partitioning, so the
-    in-loop joins co-locate without any exchange on the edge side
-    (same mechanism as pinned-repartition, PLANS.md §7 lesson 18).
-    Caller owns the unpersist."""
+def pin_bucketed_edges(spark: SparkSession, name: str, path: str | None = None):
+    """Load + persist + materialize a bucketed edge table as an
+    ``operators.graph.Pinned`` (edges, num_buckets), which the iterative
+    operators take in place of a DataFrame and use without a pin
+    exchange. The persisted InMemoryRelation inherits the scan's bucket
+    partitioning, so the in-loop joins co-locate without any exchange on
+    the edge side (same mechanism as pinned-repartition, PLANS.md §7
+    lesson 18). Caller owns the unpersist."""
+    from ..operators.graph import Pinned  # operators import sources at load
+
     e, n = load_bucketed_edges(spark, name, path)
     e = e.persist()
     e.count()
-    return e, n
+    return Pinned(e, n)
 
 
 def _num_buckets(spark: SparkSession, name: str) -> int:

@@ -36,6 +36,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.graph import pin_edges
+
 _STATE_SCHEMA = "vertex long, label long"
 
 
@@ -220,40 +222,24 @@ def _pr_efold_versions(state_dir: str) -> list[int]:
     return sorted(out)
 
 
-def _pin_sorted(df, n_part):
-    """Shared edge-pin recipe for the PR fold (one code path for the
-    initial read and both grow branches): repartition on the join key +
-    in-partition sort (halves the columnar cache — see pin_edges) +
-    persist. Caller materializes and owns the unpersist."""
-    return (
-        df.repartition(n_part, "src")
-        .sortWithinPartitions("src", "dst")
-        .persist()
-    )
-
-
 def _pr_pinned_edges(spark: SparkSession, state_dir: str):
-    """(pinned edges df | None, n_part, committed fold versions)."""
+    """(pinned edges | None, committed fold versions)."""
     vs = _pr_efold_versions(state_dir)
     cached = _PR_EDGE_CACHE.get(state_dir)
     if cached is not None and cached["versions"] == vs and cached["session"] is spark:
-        return cached["df"], cached["n_part"], vs
+        return cached["pinned"], vs
     if cached is not None:
         try:
-            cached["df"].unpersist()
+            cached["pinned"].edges.unpersist()
         except Exception:  # noqa: BLE001 — stale session/df
             pass
         _PR_EDGE_CACHE.pop(state_dir, None)
-    n_part = spark.sparkContext.defaultParallelism
     if not vs:
-        return None, n_part, vs
+        return None, vs
     paths = [os.path.join(state_dir, f"efold_v{v}", "edges") for v in vs]
-    df = _pin_sorted(spark.read.parquet(*paths), n_part)
-    df.count()
-    _PR_EDGE_CACHE[state_dir] = {
-        "df": df, "n_part": n_part, "versions": vs, "session": spark
-    }
-    return df, n_part, vs
+    pinned = pin_edges(spark, spark.read.parquet(*paths))
+    _PR_EDGE_CACHE[state_dir] = {"pinned": pinned, "versions": vs, "session": spark}
+    return pinned, vs
 
 
 def update_pagerank_state(
@@ -274,8 +260,8 @@ def update_pagerank_state(
     pinned state with two broadcast map-side joins (no shuffle of the
     accumulated table), appended as one versioned commit, and the pinned
     table is extended with a single exchange; the PageRank loop then runs
-    ``assume_pinned`` so nothing re-deduplicates or re-pins O(|E|) per
-    fold. Replay-safe: a retried batch deduplicates to an empty delta and
+    on the ``Pinned`` table so nothing re-deduplicates or re-pins O(|E|)
+    per fold. Replay-safe: a retried batch deduplicates to an empty delta and
     the rank recompute is idempotent."""
     import json as _json
     import shutil as _shutil
@@ -288,13 +274,13 @@ def update_pagerank_state(
         .dropDuplicates(["src", "dst"])
         .localCheckpoint(eager=True)
     )
-    pinned, n_part, vs = _pr_pinned_edges(spark, state_dir)
+    pinned, vs = _pr_pinned_edges(spark, state_dir)
     if pinned is None:
         new = delta
     else:
         # broadcast the (small) delta both ways: the accumulated table is
         # scanned from cache map-side, never exchanged
-        matched = pinned.join(F.broadcast(delta), ["src", "dst"], "left_semi")
+        matched = pinned.edges.join(F.broadcast(delta), ["src", "dst"], "left_semi")
         new = delta.join(F.broadcast(matched), ["src", "dst"], "left_anti")
     new = new.localCheckpoint(eager=True)
     n_new = new.count()
@@ -310,22 +296,16 @@ def update_pagerank_state(
             _json.dump({"new_edges": n_new}, f)
         os.replace(tmp, os.path.join(vdir, "meta.json"))
         vs = vs + [next_v]
-        if pinned is None:
-            grown = _pin_sorted(new, n_part)
-        else:
-            # one exchange over the union; localCheckpoint FIRST would
-            # drop partitioning (UnknownPartitioning), so truncate via
-            # the persisted parents instead — lineage depth stays O(1)
-            # because `pinned` is materialized and `new` checkpointed
-            grown = _pin_sorted(pinned.union(new), n_part)
-        grown.count()
+        # one exchange over the union; localCheckpoint FIRST would drop
+        # partitioning (UnknownPartitioning), so truncate via the
+        # persisted parents instead — lineage depth stays O(1) because
+        # `pinned` is materialized and `new` checkpointed
+        grown = pin_edges(spark, new if pinned is None else pinned.edges.union(new))
         old = _PR_EDGE_CACHE.pop(state_dir, None)
-        _PR_EDGE_CACHE[state_dir] = {
-            "df": grown, "n_part": n_part, "versions": vs, "session": spark
-        }
+        _PR_EDGE_CACHE[state_dir] = {"pinned": grown, "versions": vs, "session": spark}
         if old is not None:
             try:
-                old["df"].unpersist()
+                old["pinned"].edges.unpersist()
             except Exception:  # noqa: BLE001
                 pass
         pinned = grown
@@ -346,7 +326,7 @@ def update_pagerank_state(
         )
     ranks, runner = pagerank(
         spark, pinned, damping=damping, tol=tol,
-        max_iterations=max_iterations, init_ranks=prev, assume_pinned=True,
+        max_iterations=max_iterations, init_ranks=prev,
     )
     next_rv = (rv[-1] + 1) if rv else 0
     ranks.write.mode("overwrite").parquet(

@@ -79,27 +79,27 @@ def main() -> None:
         # shuffled pin the report contrasts against (pin_edges itself
         # now defaults to sort=True in production — the r5 follow-up
         # section of BENCH/BASELINE.md measures that separately)
-        e, _ = pin_edges(spark, sym, sort=False)
+        e = pin_edges(spark, sym, sort=False)
         t_pin = time.monotonic() - t0
         _record_cache("pin", before)
         t0 = time.monotonic()
-        labels, runner = cc_label_propagation(spark, e, assume_pinned=True)
+        labels, runner = cc_label_propagation(spark, e)
         nc = count_components(labels)
         t_loop = time.monotonic() - t0
-        e.unpersist()
+        e.edges.unpersist()
         return t_pin, t_loop, nc, runner.num_iterations
 
     def run_bucketed():
         before = _storage()
         t0 = time.monotonic()
-        e, _ = pin_bucketed_edges(spark, "pccs_bench_bkt", bkt_path)
+        e = pin_bucketed_edges(spark, "pccs_bench_bkt", bkt_path)
         t_pin = time.monotonic() - t0
         _record_cache("bucketed", before)
         t0 = time.monotonic()
-        labels, runner = cc_label_propagation(spark, e, assume_pinned=True)
+        labels, runner = cc_label_propagation(spark, e)
         nc = count_components(labels)
         t_loop = time.monotonic() - t0
-        e.unpersist()
+        e.edges.unpersist()
         return t_pin, t_loop, nc, runner.num_iterations
 
     # alternate leg order between reps: the box carries oscillating

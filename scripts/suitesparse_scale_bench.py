@@ -12,7 +12,7 @@ Pipeline, all through public surfaces:
    code path a real collection download takes;
 3. drive `python -m parallel_connected_components_spark cc --mtx ...`
    (the spark-submit deployment surface) for --algorithm auto and
-   two_phase --two-phase-range, capturing the CLI's own JSON.
+   two_phase --two-phase-partition range, capturing the CLI's own JSON.
 
 Usage: python scripts/suitesparse_scale_bench.py
 Prints one JSON line; BENCH/BASELINE.md quotes it.
@@ -73,7 +73,7 @@ def main() -> None:
             (
                 "two_phase_range",
                 ["cc", "--mtx", fetched_mtx, "--algorithm", "two_phase",
-                 "--two-phase-range"],
+                 "--two-phase-partition", "range"],
             ),
         ):
             t0 = time.perf_counter()

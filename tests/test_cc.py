@@ -173,6 +173,54 @@ def test_afforest_hub_graph(spark):
     assert runner.num_iterations == sum(phases.values())
 
 
+def rdds_read_by(df) -> set[int]:
+    """Ids of the RDDs ``df``'s logical plan reads (its checkpoints, and
+    the local data of a ``createDataFrame``)."""
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        leaves.apply(k).rdd().id()
+        for k in range(leaves.size())
+        if leaves.apply(k).nodeName() == "LogicalRDD"
+    }
+
+
+@pytest.mark.parametrize("algo", ["two_phase", "afforest", "auto"])
+def test_cc_family_leaves_only_its_output_checkpoints(spark, algo):
+    """cc_two_phase, cc_afforest and cc_auto release every checkpoint they
+    supersede (the contracted graph, afforest's symmetrized sample
+    source, the label-propagation labels cc_auto re-checkpoints): the
+    persisted RDDs a call leaves behind are exactly those its output
+    reads. cc_auto runs on a 300-vertex path, where the stall detector
+    hands it to two-phase. Python GC is off so that a collection cannot
+    free a leak during the check."""
+    import gc
+
+    from parallel_connected_components_spark.operators import cc_afforest, cc_auto
+
+    if algo == "auto":
+        edge_list = [(v, v + 1) for v in range(299)]
+        edges = symmetrize(spark.createDataFrame(edge_list, "src long, dst long"))
+        run = lambda: cc_auto(spark, edges)  # noqa: E731
+    else:
+        edge_list = gen_component_graph(500, 5, 2, seed=23)
+        edges = spark.createDataFrame(edge_list, "src long, dst long")
+        fn = cc_two_phase if algo == "two_phase" else cc_afforest
+        run = lambda: fn(spark, edges)  # noqa: E731
+    jsc = spark.sparkContext._jsc
+    gc.disable()
+    try:
+        before = set(jsc.getPersistentRDDs().keySet())
+        labels, info = run()
+        after = set(jsc.getPersistentRDDs().keySet())
+        left, read = after - before, rdds_read_by(labels) & after
+        assert labels_dict(labels) == union_find_oracle(edge_list)
+    finally:
+        gc.enable()
+    if algo == "auto":
+        assert info["algorithm"] == "lp+two_phase", info["algorithm"]
+    assert left == read, (sorted(left), sorted(read))
+
+
 def test_label_prop_prune_resume_invariant(spark, tmp_path):
     """Resume keeps the frontier invariant without a resend round: cap a
     checkpointed run mid-way (snapshot at iteration 4), resume from the

@@ -308,7 +308,7 @@ def test_bucketed_edges_join_has_no_exchange_on_edge_side(spark, tmp_path):
 def test_bucketed_reload_after_catalog_loss_and_lp_parity(spark, tmp_path):
     """Fresh-session deployment path: drop the catalog entry (the
     in-memory catalog's restart analog), re-register from the sidecar,
-    and run frontier LP with assume_pinned=True over the persisted scan —
+    and run frontier LP on the pinned bucketed scan (a ``Pinned``) —
     labels must equal the plain pin_edges run."""
     from parallel_connected_components_spark.operators import (
         cc_label_propagation,
@@ -326,11 +326,11 @@ def test_bucketed_reload_after_catalog_loss_and_lp_parity(spark, tmp_path):
     save_bucketed_edges(spark, edges, "pccs_test_bkt2", path, num_buckets=8)
     spark.sql("DROP TABLE pccs_test_bkt2")  # simulate a fresh session
     try:
-        e, _ = pin_bucketed_edges(spark, "pccs_test_bkt2", path)
-        got, _ = cc_label_propagation(spark, e, assume_pinned=True)
+        e = pin_bucketed_edges(spark, "pccs_test_bkt2", path)
+        got, _ = cc_label_propagation(spark, e)
         want, _ = cc_label_propagation(spark, edges)
         assert labels_dict(got) == labels_dict(want)
-        e.unpersist()
+        e.edges.unpersist()
         # a same-name registration pointing at a DIFFERENT path must fail
         # loudly, not silently hand back the registered dataset
         import pytest

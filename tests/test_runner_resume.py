@@ -4,6 +4,7 @@ per-partition lineage + metrics")."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from parallel_connected_components_spark.plans.runner import FixpointRunner
@@ -506,3 +507,70 @@ def test_checkpoint_blocks_released_per_iteration(spark):
         iterations.append(runner.num_iterations)
     assert iterations[1] > iterations[0] + 4, iterations
     assert [len(x) for x in left] == [1, 1], left
+
+
+def test_runner_releases_its_states_when_it_raises(spark):
+    """A loop that raises — the countdown capped before it reaches 0, or a
+    step that fails mid-run — leaves no persisted RDD behind: the runner
+    releases its current and previous state. Python GC is off so that a
+    collection cannot free a leaked checkpoint during the check."""
+    import gc
+
+    init, step, observe, converged = make_countdown(spark, 7)
+
+    def failing_step(state, it):
+        if it == 2:
+            raise ValueError("step failed")
+        return step(state, it)
+
+    jsc = spark.sparkContext._jsc
+    gc.disable()
+    try:
+        for cap, stp, err in ((3, step, RuntimeError), (10, failing_step, ValueError)):
+            before = set(jsc.getPersistentRDDs().keySet())
+            runner = FixpointRunner(spark, "cnt", max_iterations=cap)
+            with pytest.raises(err):
+                runner.run(init, stp, observe, converged)
+            assert set(jsc.getPersistentRDDs().keySet()) - before == set(), cap
+    finally:
+        gc.enable()
+
+
+@pytest.mark.parametrize("op", ["cc_lp", "coreness", "bfs_hops", "scc", "scc_trim"])
+def test_loop_operators_release_everything_when_they_raise(spark, op):
+    """Each loop operator, capped below convergence on a 61-vertex path,
+    raises and leaves the persisted RDDs as they were: its pinned edges,
+    vertex table and loop states are freed on the way out. ``scc`` raises
+    inside its coloring loop on the symmetrized path and inside its trim
+    (with extracted singleton frames in hand) on the directed one. Python
+    GC is off so that a collection cannot free a leak during the check."""
+    import gc
+
+    from parallel_connected_components_spark.operators import (
+        bfs_hops,
+        cc_label_propagation,
+        coreness,
+        scc,
+        symmetrize,
+    )
+
+    i = F.col("id")
+    path = spark.range(60).select(i.alias("src"), (i + 1).alias("dst"))
+    sym = symmetrize(path)
+    run = {
+        "cc_lp": lambda: cc_label_propagation(spark, sym, max_iterations=2),
+        "coreness": lambda: coreness(spark, sym, max_iterations=1),
+        "bfs_hops": lambda: bfs_hops(spark, sym, spark.range(1), max_iterations=2),
+        "scc": lambda: scc(spark, sym, max_iterations=2),
+        "scc_trim": lambda: scc(spark, path, max_iterations=2),
+    }[op]
+    jsc = spark.sparkContext._jsc
+    gc.disable()
+    try:
+        before = set(jsc.getPersistentRDDs().keySet())
+        with pytest.raises(RuntimeError):
+            run()
+        left = set(jsc.getPersistentRDDs().keySet()) - before
+    finally:
+        gc.enable()
+    assert left == set(), sorted(left)
