@@ -121,7 +121,7 @@ def anf(
     regs = _reg_cols(num_registers)
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     with pinned(spark, e_raw) as (e, n_part), vertex_table(
-        vertices, vertices_of(e_raw)
+        vertices, vertices_of(e_raw), n_part
     ) as verts:
         init = verts.select(
             F.col("id").alias("vertex"),
@@ -234,7 +234,7 @@ def harmonic_centrality(
         return total
 
     with pinned(spark, e_raw) as (e, n_part), vertex_table(
-        vertices, vertices_of(e_raw)
+        vertices, vertices_of(e_raw), n_part
     ) as verts:
         init = verts.select(
             F.col("id").alias("vertex"),

@@ -43,7 +43,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, IterationMetrics, gather, release
-from .graph import Pinned, canonicalize, contract_edges, pinned, vertex_table
+from .graph import (
+    Pinned, canonicalize, contract_edges, own_labels, pinned, vertex_table,
+)
 
 
 # --------------------------------------------------------------------------
@@ -686,12 +688,9 @@ def cc_label_propagation(
         # distinct needs NO exchange (vs the union-both-endpoints +
         # distinct full shuffle of vertices_of; round 6)
         e.select(F.col("src").alias("id")).distinct(),
+        n_part,
     ) as verts:
-        init = verts.select(
-            F.col("id").alias("vertex"),
-            F.col("id").alias("label"),
-            F.lit(True).alias("changed"),
-        )
+        init = own_labels(verts).withColumn("changed", F.lit(True))
         runner = FixpointRunner(
             spark,
             "cc_lp",

@@ -19,13 +19,13 @@ every iteration that joins/aggregates on src.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from contextlib import AbstractContextManager, contextmanager
 from typing import Iterator, NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.extract import extract_links_udf
-from ..plans.runner import release
+from ..plans.runner import fixpoint_conf, release
 
 
 def vertices_from_pages(pages: DataFrame) -> DataFrame:
@@ -204,19 +204,43 @@ def pinned(
 
 
 @contextmanager
-def vertex_table(vertices: DataFrame | None, default: DataFrame) -> Iterator[DataFrame]:
-    """Scope of a loop operator's vertex set ``(id long)``: the ids of
-    ``vertices``, else of ``default``, checkpointed and released on exit,
-    also when the body raises, so the operator's output must not read it."""
-    verts = (
-        (vertices if vertices is not None else default)
-        .select(F.col("id").cast("long"))
-        .localCheckpoint(eager=True)
-    )
+def loop_table(df: DataFrame, key: str, n_part: int) -> Iterator[DataFrame]:
+    """Scope of a table a loop reads: ``df`` hash(``key``)-partitioned into
+    the loop's ``n_part`` partitions, checkpointed under the loop's
+    settings (``plans/runner.py:fixpoint_conf``, so the checkpoint keeps
+    that partitioning and the loop's joins on ``key`` need no exchange)
+    and released on exit, also when the body raises, so the operator's
+    output must not read it. A ``df`` already so partitioned plans no
+    exchange: Spark drops a repartition its input satisfies."""
+    with fixpoint_conf(df.sparkSession, n_part):
+        table = df.repartition(n_part, key).localCheckpoint(eager=True)
     try:
-        yield verts
+        yield table
     finally:
-        release(verts)
+        release(table)
+
+
+def vertex_table(
+    vertices: DataFrame | None, default: DataFrame, n_part: int
+) -> AbstractContextManager[DataFrame]:
+    """Scope of a loop operator's vertex set ``(id long)``: the ids of
+    ``vertices``, else of ``default``, as a :func:`loop_table`. Only
+    non-bigint ids are cast: the optimizer drops an identity cast, and the
+    checkpoint would then record its partitioning on an attribute it no
+    longer outputs (plans/runner.py:FixpointRunner.run)."""
+    src = vertices if vertices is not None else default
+    ids = F.col("id") if dict(src.dtypes)["id"] == "bigint" else F.col("id").cast("long")
+    return loop_table(src.select(ids), "id", n_part)
+
+
+def own_labels(verts: DataFrame) -> DataFrame:
+    """``(vertex, label)`` with every vertex of a vertex table ``(id)`` its
+    own label. ``label`` is the minimum over the vertex's own row, a new
+    attribute: ``id AS vertex, id AS label`` would alias the key twice,
+    and a checkpoint of it records ``hash(label)``
+    (plans/runner.py:FixpointRunner.run). Over a :func:`vertex_table` the
+    aggregation needs no exchange."""
+    return verts.groupBy(F.col("id").alias("vertex")).agg(F.min("id").alias("label"))
 
 
 def degrees(edges_sym: DataFrame) -> DataFrame:

@@ -60,7 +60,7 @@ def coreness(
     isolated vertices with core 0."""
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     with pinned(spark, e_raw) as (e, n_part), vertex_table(
-        vertices, vertices_of(e_raw)
+        vertices, vertices_of(e_raw), n_part
     ) as verts:
         init = (
             verts.select(F.col("id").alias("vertex")).join(
@@ -113,7 +113,9 @@ def coreness(
         def converged(got: dict, it: int):
             return got["changed"] or 0, {}
 
-        runner = FixpointRunner(spark, "coreness", max_iterations=max_iterations)
+        runner = FixpointRunner(
+            spark, "coreness", max_iterations=max_iterations, n_part=n_part
+        )
         out = runner.run(
             init, step, [F.sum(F.col("changed").cast("long")).alias("changed")], converged
         )

@@ -25,7 +25,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, send
-from .graph import Pinned, pinned, vertex_table
+from .graph import Pinned, own_labels, pinned, vertex_table
 
 
 def label_propagation_communities(
@@ -46,14 +46,15 @@ def label_propagation_communities(
         # symmetrized input: every vertex appears as src, and the pinned
         # table is hash(src)-partitioned — exchange-free distinct
         e.select(F.col("src").alias("id")).distinct(),
+        n_part,
     ) as verts:
-        init = verts.select(F.col("id").alias("vertex"), F.col("id").alias("label"))
+        init = own_labels(verts)
         # LPA may oscillate on bipartite structures; hitting the cap
         # returns the last state rather than raising (the reference's
         # bounded loops, its src/pthreads/cc_pthreads.c:132).
         runner = FixpointRunner(
             spark, "lpa", checkpoint_dir=checkpoint_dir,
-            max_iterations=max_iterations, raise_on_cap=False,
+            max_iterations=max_iterations, raise_on_cap=False, n_part=n_part,
         )
 
         def step(state: DataFrame, it: int) -> DataFrame:

@@ -28,10 +28,8 @@ from typing import Iterator
 import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from ..plans.runner import (
-    FixpointRunner, gather, ordered_gather, ordered_total, release,
-)
-from .graph import Pinned, pinned
+from ..plans.runner import FixpointRunner, gather, ordered_gather, ordered_total
+from .graph import Pinned, loop_table, pinned
 
 
 def pagerank(
@@ -82,19 +80,8 @@ def pagerank(
     partitioning co-locates the join with no exchange at all. A
     DataFrame is deduped and pinned in one exchange (pin_dedup_edges)."""
     with pinned(spark, edges, drop_self_loops=False) as (e, n_part), _vertex_table(
-        e, vertices
-    ) as (vo, n, n_dangling):
-        if init_ranks is not None:
-            pr = init_ranks.select("vertex", F.col("rank").alias("_r0"))
-            seeded = vo.join(pr, "vertex", "left").select(
-                "vertex", "outdeg", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank")
-            )
-            total = seeded.agg(F.sum("rank")).collect()[0][0] or 1.0
-            init = seeded.select(
-                "vertex", "outdeg", (F.col("rank") / F.lit(total)).alias("rank")
-            ).localCheckpoint(eager=True)
-        else:
-            init = vo.select("vertex", "outdeg", F.lit(1.0 / n).alias("rank"))
+        e, n_part, vertices
+    ) as (vo, n, n_dangling), _initial_ranks(vo, n, n_part, init_ranks) as init:
         # cap semantics match the numpy oracle: hitting max_iterations returns
         # the best-effort ranks at the cap (last l1_delta is in the metrics),
         # it does not raise — slow-converging graphs near the cap still answer
@@ -161,22 +148,42 @@ def pagerank(
             init.withColumn("prev_rank", F.col("rank")), step, observe, converged,
             resume=resume,
         )
-        if init_ranks is not None:
-            release(init)
     return final.select("vertex", "rank"), runner
 
 
 @contextmanager
+def _initial_ranks(
+    vo: DataFrame, n: int, n_part: int, init_ranks: DataFrame | None
+) -> Iterator[DataFrame]:
+    """Scope of the starting state ``(vertex, outdeg, rank)``: 1/n for
+    every vertex, or ``init_ranks`` renormalized to sum 1 (absent vertices
+    at 1/n), checkpointed as a ``graph.loop_table`` and released on exit,
+    also when the run raises."""
+    if init_ranks is None:
+        yield vo.select("vertex", "outdeg", F.lit(1.0 / n).alias("rank"))
+        return
+    pr = init_ranks.select("vertex", F.col("rank").alias("_r0"))
+    seeded = vo.join(pr, "vertex", "left").select(
+        "vertex", "outdeg", F.coalesce("_r0", F.lit(1.0 / n)).alias("rank")
+    )
+    total = seeded.agg(F.sum("rank")).collect()[0][0] or 1.0
+    with loop_table(
+        seeded.select("vertex", "outdeg", (F.col("rank") / F.lit(total)).alias("rank")),
+        "vertex", n_part,
+    ) as init:
+        yield init
+
+
+@contextmanager
 def _vertex_table(
-    e: DataFrame, vertices: DataFrame | None, *carried: Column
+    e: DataFrame, n_part: int, vertices: DataFrame | None, *carried: Column
 ) -> Iterator[tuple[DataFrame, int, int]]:
-    """Scope of (vo, |V|, dangling count), ``vo`` released on exit as in
-    ``graph.vertex_table``: the checkpointed ``(vertex, outdeg, *carried)``
-    over a pinned deduped edge table, outdeg 0 for dangling vertices.
-    ``vertices`` (id) replaces the edge endpoints as the vertex set. One
-    job (round 6): outdeg is the count of src-side rows of one aggregation
-    over both endpoints, and |V| and the dangling count ride the
-    materialization as an Observation."""
+    """Scope of (vo, |V|, dangling count), ``vo`` the ``graph.loop_table``
+    ``(vertex, outdeg, *carried)`` over a pinned deduped edge table,
+    outdeg 0 for dangling vertices. ``vertices`` (id) replaces the edge
+    endpoints as the vertex set. One job (round 6): outdeg is the count of
+    src-side rows of one aggregation over both endpoints, and |V| and the
+    dangling count ride the materialization as an Observation."""
     if vertices is not None:
         outdeg = e.groupBy(F.col("src").alias("vertex")).agg(
             F.count("*").alias("outdeg")
@@ -194,19 +201,15 @@ def _vertex_table(
             .agg(F.sum("o").alias("outdeg"))
         )
     obs = Observation()
-    vo = (
-        plan.select("vertex", "outdeg", *carried)
-        .observe(
+    with loop_table(
+        plan.select("vertex", "outdeg", *carried).observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.sum((F.col("outdeg") == 0).cast("long")).alias("nd"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    try:
+        ),
+        "vertex", n_part,
+    ) as vo:
         yield vo, obs.get["n"], obs.get["nd"] or 0
-    finally:
-        release(vo)
 
 
 def pagerank_fixed(
@@ -239,7 +242,7 @@ def pagerank_fixed(
     steps. DuckDB twin: entry._pagerank_fixed_sql().
     """
     with pinned(spark, edges, drop_self_loops=False) as (e, n_part), _vertex_table(
-        e, None
+        e, n_part, None
     ) as (vo, n, _):
         return _power_iteration_fixed(
             spark, e, n_part, vo, F.lit(1.0 / n), n_iterations, damping,
@@ -283,7 +286,7 @@ def personalized_pagerank_fixed(
     tele_w = 1.0 / len(seed_ids)  # driver-side literal, shared with the SQL twin
     tele = F.col("tele")
     with pinned(spark, edges, drop_self_loops=False) as (e, n_part), _vertex_table(
-        e, vertices,
+        e, n_part, vertices,
         F.when(F.col("vertex").isin(seed_ids), F.lit(tele_w))
         .otherwise(F.lit(0.0))
         .alias("tele"),

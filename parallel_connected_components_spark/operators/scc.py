@@ -95,8 +95,12 @@ def scc(
       exists."""
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     # fused self-loop filter + dedup + pin: one exchange total, and the
-    # result IS the round-1 coloring LP's pinned layout
-    with fixpoint_conf(spark), pinned(spark, e_raw) as e_pin:
+    # result IS the round-1 coloring LP's pinned layout. Every frame scc
+    # builds is then made in the pin's n_part partitions, the layout its
+    # LP and BFS loops run in.
+    with fixpoint_conf(spark), pinned(spark, e_raw) as e_pin, fixpoint_conf(
+        spark, e_pin.n_part
+    ):
         return _scc_impl(spark, e_raw, e_pin, vertices, max_rounds, max_iterations)
 
 

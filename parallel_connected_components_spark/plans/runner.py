@@ -58,10 +58,20 @@ def fixpoint_conf(spark: SparkSession, n_part: int | None = None):
     always ``defaultParallelism``: a ``Pinned`` input (a bucketed scan,
     say) brings its own count.
 
-    Both settings are restored on exit, also when the loop raises. Nested
-    loops (scc's LP calls inside its own scope) see AQE already off and
-    leave it alone; each sets and restores its own partition count."""
-    conf = {"spark.sql.adaptive.enabled": "false"}
+    Runtime bloom filters are off too. A checkpoint carries no size
+    statistics, so Catalyst takes every join against one for a
+    ≥10 GB application side and injects a bloom-filter subquery (its own
+    aggregation job and exchange) that prunes nothing here: the loops
+    join keys that all exist on both sides (scc's share of the saving:
+    BENCH/BASELINE.md, "Co-partitioned first superstep").
+
+    All settings are restored on exit, also when the loop raises. Nested
+    loops (scc's LP calls inside its own scope) set and restore their
+    own values the same way."""
+    conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
+    }
     if n_part is not None:
         conf["spark.sql.shuffle.partitions"] = str(n_part)
     old = {k: spark.conf.get(k, None) for k in conf}
@@ -480,7 +490,27 @@ class FixpointRunner:
         then calls ``converged(observed, it)`` with their values (a dict
         keyed by alias) for ``(changed, extra)`` — so convergence never
         costs a job of its own or recomputes the iteration's dataflow.
-        A raising loop releases its states too."""
+        A raising loop releases its states too.
+
+        ``init_state`` is checkpointed inside the loop's settings, so a
+        hash(vertex)-partitioned init keeps that partitioning and
+        iteration 0 exchanges only its messages, like every later one.
+        NOTE: a ``localCheckpoint`` records the partitioning of the plan
+        it ran (``LogicalRDD``), and three things lose it:
+        - AQE: under AQE the checkpoint records ``UnknownPartitioning``,
+          hence every checkpoint a loop reads is made inside
+          :func:`fixpoint_conf`;
+        - an identity cast: ``cast(id as bigint)`` on a column that is
+          already bigint is dropped by the optimizer, and the checkpoint
+          then records the partitioning of an attribute it no longer
+          outputs (``graph.vertex_table`` casts only other types);
+        - a key aliased twice: ``id AS vertex, id AS label`` plans a
+          partitioning on either name, of which the checkpoint keeps only
+          the first, ``hash(label)`` (``graph.own_labels`` builds that
+          state without the second alias).
+        Any of them re-exchanges the whole state in the next iteration.
+        tests/test_plan_shape.py pins every loop's checkpoints to
+        ``hashpartitioning(vertex, n_part)``."""
         start_iter = 0
         state: DataFrame | None = None
         if resume:
@@ -488,26 +518,18 @@ class FixpointRunner:
             if got is not None:
                 state, start_iter = got
                 start_iter += 1
-        if state is None:
-            state = init_state.localCheckpoint(eager=True)
 
         prev = None
-        meter = ShuffleMeter()
-        shuffle0 = meter.totals(self.spark)
-        compiles = CompileMeter(self.spark)
-        compiles0 = compiles.totals()
         try:
             with fixpoint_conf(self.spark, self.n_part):
+                if state is None:
+                    state = init_state.localCheckpoint(eager=True)
+                meter = ShuffleMeter()
+                shuffle0 = meter.totals(self.spark)
+                compiles = CompileMeter(self.spark)
+                compiles0 = compiles.totals()
                 for it in range(start_iter, self.max_iterations):
                     t0 = time.perf_counter()
-                    # NOTE: with AQE off (fixpoint_conf), localCheckpoint
-                    # PRESERVES the state's output partitioning (LogicalRDD
-                    # captures the physical plan's partitioning; only under
-                    # AQE does it report UnknownPartitioning) — so a state
-                    # materialized hash(vertex)-partitioned stays recognized
-                    # as co-partitioned with the pinned edge table and the
-                    # aggregation output in the next iteration's plan, while
-                    # still truncating lineage every iteration.
                     df, obs = self._observed(step(state, it), observe, it)
                     new_state = df.localCheckpoint(eager=True)
                     if prev is not None:
@@ -560,9 +582,9 @@ class FixpointRunner:
                             " iterations (cap analog: the reference's src/cc_openmp.c:82)"
                         )
         except BaseException:  # the cap or a failing step: nobody reads these
-            release(state)
-            if prev is not None:
-                release(prev)
+            for df in (state, prev):
+                if df is not None:
+                    release(df)
             raise
         if prev is not None:
             release(prev)

@@ -14,9 +14,9 @@ than the 200 default.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 
@@ -131,20 +131,27 @@ def _ship_package(spark: SparkSession) -> None:
     in-process equivalent of ``spark-submit --py-files`` the north rule
     deploys with. Without it, pandas-UDF closures defined in this package
     unpickle on workers only when the consumer's CWD happens to contain
-    the source tree (ModuleNotFoundError otherwise)."""
+    the source tree (ModuleNotFoundError otherwise).
+
+    Once per SparkContext: the zip is written under the context's
+    ``SparkFiles`` root, which Spark deletes when the context stops, so a
+    ``get_spark`` that returns the running session finds it there and
+    ships nothing (a second ``addPyFile`` of one path only logs a
+    warning), and no zip outlives its session."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}-pyfiles.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                        z.write(full, rel)
+    staging = os.path.join(SparkFiles.getRootDirectory(), "pyfiles")
+    zip_path = os.path.join(staging, f"{pkg_name}.zip")
+    if os.path.exists(zip_path):
+        return
+    os.makedirs(staging, exist_ok=True)
+    with zipfile.ZipFile(zip_path, "w") as z:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                    z.write(full, rel)
     spark.sparkContext.addPyFile(zip_path)

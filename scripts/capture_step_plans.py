@@ -1,16 +1,20 @@
-"""Capture iteration 1's executed step plan of each message-passing loop.
+"""Capture the executed step plans of iterations 0 and 1 of each
+message-passing loop, and check that they exchange alike.
 
 Builds the bench.py pages graph for a scale factor (100k pages at sf0.1),
 runs CC label propagation, PageRank to 1e-6, 4-hop BFS, 6-round ANF,
 6-round harmonic centrality, 8-iteration LPA, coreness and SCC on it,
 and writes the formatted executed plan of each loop's iteration-1 step
-(its second iteration: the first one still re-partitions the freshly
-built state) to ``<out_dir>/<query>.txt``. SCC contributes two captures, its coloring LP
-and its backward-mark BFS.
+to ``<out_dir>/<query>.txt`` and of its iteration-0 step to
+``<out_dir>/<query>_it0.txt``. SCC contributes two captures, its
+coloring LP and its backward-mark BFS.
 
 The plan is read from the frame the runner materialized (the step with
 its Observation attached), so it is the plan the loop ran, under the
-loop's session settings.
+loop's session settings. Each loop's state is born co-partitioned with
+its messages, so iteration 0 must run as many hash Exchanges (outside
+the cached edge scan) as iteration 1; the script prints both counts and
+exits 1 if any loop's differ.
 
 Usage: python scripts/capture_step_plans.py <out_dir> [sf]
 """
@@ -29,7 +33,7 @@ from parallel_connected_components_spark.plans.runner import FixpointRunner  # n
 from parallel_connected_components_spark.session import get_spark  # noqa: E402
 
 HEADER = (
-    "Executed plan of iteration 1's step (captured inside the fixpoint loop "
+    "Executed plan of iteration {{it}}'s step (captured inside the fixpoint loop "
     "after the iteration ran). Graph: bench sf{sf} pages ({pages} pages, "
     "{edges} canonical edges), local[{cores}].\n\n"
 )
@@ -58,13 +62,29 @@ def record_steps() -> dict:
     return runs
 
 
+def hash_exchanges(df) -> int:
+    """Hash Exchanges in ``df``'s executed plan, not counting the cached
+    edge table's own (a cached scan's inner plan is not a child)."""
+
+    def walk(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    return sum(
+        1 for n in walk(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "Exchange" and "hashpartitioning" in n.simpleString(100)
+    )
+
+
 def formatted(df) -> str:
     qe = df._jdf.queryExecution()
     mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
     return qe.explainString(mode.fromString("formatted"))
 
 
-def main(out_dir: str, sf: float = 0.1) -> None:
+def main(out_dir: str, sf: float = 0.1) -> int:
     from bench import cached_pages
 
     from parallel_connected_components_spark.operators import (
@@ -115,12 +135,20 @@ def main(out_dir: str, sf: float = 0.1) -> None:
     captures["scc_backward_mark_lp"] = runs["bfs_hops"][0]
 
     os.makedirs(out_dir, exist_ok=True)
+    differ = []
     for name, steps in captures.items():
-        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
-            f.write(header + formatted(steps[1]))
-        print(name, "captured")
+        for it, suffix in ((1, ""), (0, "_it0")):
+            with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as f:
+                f.write(header.format(it=it) + formatted(steps[it]))
+        counts = [hash_exchanges(steps[it]) for it in (0, 1)]
+        print(name, "hash exchanges at iterations 0 and 1:", *counts)
+        if counts[0] != counts[1]:
+            differ.append(name)
     spark.stop()
+    if differ:
+        print("iteration 0 exchanges differently from iteration 1:", *differ)
+    return 1 if differ else 0
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], float(sys.argv[2]) if len(sys.argv) > 2 else 0.1)
+    sys.exit(main(sys.argv[1], float(sys.argv[2]) if len(sys.argv) > 2 else 0.1))

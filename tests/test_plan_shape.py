@@ -108,7 +108,9 @@ def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
     from parallel_connected_components_spark.plans.runner import FixpointRunner
 
     key = "spark.sql.shuffle.partitions"
+    bloom = "spark.sql.optimizer.runtime.bloomFilter.enabled"
     old = spark.conf.get(key)
+    old_bloom = spark.conf.get(bloom)
     n_part = spark.sparkContext.defaultParallelism
     mismatched = str(n_part + 3)
     spark.conf.set(key, mismatched)
@@ -123,6 +125,7 @@ def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
         cc_label_propagation(spark, symmetrize(edges))
         pagerank(spark, edges)
         assert spark.conf.get(key) == mismatched
+        assert spark.conf.get(bloom) == old_bloom
         for name in ("cc_lp", "pagerank"):
             plan = steps[name][1]._jdf.queryExecution().executedPlan()
             text = plan.toString()
@@ -142,6 +145,7 @@ def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
 
         def boom(state, it):
             assert spark.conf.get(key) == "3"
+            assert spark.conf.get(bloom) == "false"
             raise RuntimeError("step failed")
 
         runner = FixpointRunner(spark, "boom", n_part=3)
@@ -151,9 +155,147 @@ def test_loop_combines_messages_before_one_exchange(spark, monkeypatch):
                 lambda got, it: (0, {}),
             )
         assert spark.conf.get(key) == mismatched
+        assert spark.conf.get(bloom) == old_bloom
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     finally:
         spark.conf.set(key, old)
+
+
+def _hash_exchanges(df) -> int:
+    """Hash Exchanges in ``df``'s executed plan outside cached scans."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return sum(
+        1 for n, _ in _walk(plan)
+        if n.nodeName() == "Exchange" and "hashpartitioning" in n.simpleString(100)
+    )
+
+
+def _hash_key(node) -> tuple[str, int] | None:
+    """(column, partitions) of a plan node's hash partitioning on one of
+    its own output columns, else None: also when the partitioning names an
+    attribute the node no longer outputs, which downstream plans treat as
+    unpartitioned."""
+    p = node.outputPartitioning()
+    if p.getClass().getSimpleName() != "HashPartitioning" or p.expressions().size() != 1:
+        return None
+    key = p.expressions().apply(0).toString()
+    out = node.output()
+    for k in range(out.size()):
+        if out.apply(k).toString() == key:
+            return out.apply(k).name(), p.numPartitions()
+    return None
+
+
+def test_first_superstep_exchanges_like_the_rest(spark, monkeypatch):
+    """Every loop's state is born co-partitioned with its messages, so
+    iteration 0 runs as many hash Exchanges as iteration 1, and every
+    state a step reads, the initial one included, is a checkpoint that
+    reports ``hashpartitioning(vertex, n_part)`` on its own ``vertex``
+    column. The session's shuffle partition count differs from
+    ``n_part``, so a checkpoint made outside the loop's settings shows.
+    ``bfs_hops`` exchanges alike too, but its full-outer join-back
+    returns an unpartitioned state, so its states are not checked."""
+    from parallel_connected_components_spark.operators import (
+        anf, bfs_hops, cc_label_propagation, coreness, harmonic_centrality,
+        label_propagation_communities, pagerank, scc, symmetrize,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    n_part = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(n_part + 3))
+    steps = _capture_step_plans(monkeypatch)
+    i = F.col("id")
+    path = spark.range(7).select(i.alias("src"), (i + 1).alias("dst"))
+    sym = symmetrize(path)
+    # a 5-cycle with a tail: scc trims the tail and colors the cycle
+    cycle = spark.range(5).select(i.alias("src"), ((i + 1) % 5).alias("dst"))
+    loops = [
+        ("cc_lp", lambda: cc_label_propagation(spark, sym)),
+        ("lpa", lambda: label_propagation_communities(spark, sym, max_iterations=3)),
+        ("pagerank", lambda: pagerank(spark, path, max_iterations=3)),
+        ("bfs_hops", lambda: bfs_hops(spark, sym, spark.range(1), max_hops=3)),
+        ("coreness", lambda: coreness(spark, sym)),
+        ("anf", lambda: anf(spark, sym, rounds=3)),
+        ("harmonic", lambda: harmonic_centrality(spark, sym, rounds=3)),
+        # scc's coloring LP, with the frames scc made before it
+        ("cc_lp", lambda: scc(spark, cycle.union(path))),
+    ]
+    try:
+        for name, run in loops:
+            steps.clear()
+            run()
+            plans = steps[name]
+            counts = [_hash_exchanges(plans[it]) for it in (0, 1)]
+            assert counts[0] == counts[1], (
+                name, counts, plans[0]._jdf.queryExecution().executedPlan().toString()
+            )
+            if name == "bfs_hops":
+                continue
+            for it, df in plans.items():
+                scans = [
+                    n for n, _ in _walk(df._jdf.queryExecution().executedPlan())
+                    if n.nodeName() == "Scan ExistingRDD"
+                ]
+                assert scans, (name, it)
+                for n in scans:
+                    assert _hash_key(n) == ("vertex", n_part), (name, it, n.toString())
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_vertex_table_keeps_its_partitioning(spark):
+    """``graph.vertex_table`` checkpoints ``(id long)`` hash(id)-partitioned
+    into ``n_part`` partitions, also when its input is already bigint (an
+    identity cast would leave the checkpoint partitioned on an attribute it
+    does not output) and when ids must be cast; the default src-distinct
+    of a pinned table plans no exchange for it."""
+    from parallel_connected_components_spark.operators.graph import vertex_table
+    from parallel_connected_components_spark.plans.runner import fixpoint_conf
+
+    e, n_part = pin_edges(
+        spark, spark.range(2000).select((F.col("id") % 300).alias("src"),
+                                        ((F.col("id") * 7) % 300).alias("dst"))
+    )
+    default = e.select(F.col("src").alias("id")).distinct()
+    with fixpoint_conf(spark, n_part):
+        assert _hash_exchanges(default.repartition(n_part, "id")) == 0
+    ints = spark.range(50).select(F.col("id").cast("int"))
+    try:
+        for vertices in (None, ints):
+            with vertex_table(vertices, default, n_part) as verts:
+                assert verts.dtypes == [("id", "bigint")]
+                node = verts._jdf.queryExecution().executedPlan()
+                assert _hash_key(node) == ("id", n_part), node.toString()
+    finally:
+        e.unpersist()
+
+
+def test_scc_runs_no_runtime_bloom_filter(spark, monkeypatch):
+    """scc joins checkpoints, which carry no size statistics and so look
+    like huge scans to Catalyst's runtime-filter rule; inside the loop
+    settings no frame scc materializes may carry a bloom-filter subquery
+    (a job and an exchange of its own that prunes nothing)."""
+    from parallel_connected_components_spark.operators import scc
+
+    frames = []
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        frames.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    i = F.col("id")
+    edges = spark.range(40).select(i.alias("src"), ((i * 7 + 3) % 40).alias("dst")).union(
+        spark.range(40).select(i.alias("src"), ((i + 1) % 13).alias("dst"))
+    )
+    scc(spark, edges)
+    assert frames
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BloomFilterAggregate" not in plan and "might_contain" not in plan, plan
 
 
 def test_step_code_is_identical_across_iterations(spark, monkeypatch):
