@@ -7,11 +7,12 @@ neighborhoods around seed sets are a routine link-graph curation step
 (expand a trusted/spam seed list a few hops before scoring, extract a
 subgraph for inspection, bound a crawl frontier).
 
-State is (vertex, dist, frontier). Per round, frontier rows send dist+1
-over the pinned directed edges, one min aggregation combines the
-arrivals per receiver, and a full-outer join back to the state settles
-every newly reached vertex at the round number — a settled vertex keeps
-its (smaller) distance, and `frontier` for the next round is exactly the
+State is (vertex, dist, frontier), one row per reached vertex. Per
+round, frontier rows send dist+1 over the pinned directed edges, one min
+aggregation combines the arrivals per receiver, and the next state is
+the union of the settled rows (``frontier`` false) and the arrivals that
+have no state row yet (a left anti join, ``frontier`` true): a settled
+vertex keeps its (smaller) distance, and the next frontier is exactly the
 set of newly reached vertices. Convergence (empty frontier) rides the
 materialization job via Observation; the optional ``max_hops`` cap
 bounds the walk for neighborhood extraction.
@@ -21,10 +22,11 @@ symmetrized table for undirected distance, the raw directed table for
 forward reachability, or the reversed table for ancestor distance.
 
 Scale: identical per-round plan to frontier CC (one shuffle join + one
-agg over the pinned sorted edge cache), so the shuffle decays with the
-frontier; rounds = the distance bound (max_hops) or the eccentricity of
-the seed set. The DuckDB twin (entry._khop_sql) unrolls the same
-integer recurrence; tests differential against a plain Python BFS.
+agg over the pinned sorted edge cache, one hash exchange, for the
+messages), so the shuffle decays with the frontier; rounds = the
+distance bound (max_hops) or the eccentricity of the seed set. The
+DuckDB twin (entry._khop_sql) unrolls the same integer recurrence;
+tests differential against a plain Python BFS.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, gather
-from .graph import pinned
+from .graph import long_ids, pinned
 
 
 def bfs_hops(
@@ -47,54 +49,53 @@ def bfs_hops(
     themselves at dist 0) following edges src → dst. Unreached vertices
     are absent — join against a vertex universe downstream if a dense
     output is needed. ``max_hops`` caps the expansion (k-hop
-    neighborhood); None runs to exhaustion."""
+    neighborhood); None runs to exhaustion. Each iteration's metrics
+    record ``reached`` (newly reached) and ``vertices`` (reached so far)."""
     with pinned(
         spark, edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     ) as (e, n_part):
-        init = sources.select(
-            F.col("id").cast("long").alias("vertex"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(True).alias("frontier"),
-        ).dropDuplicates(["vertex"])
+        # The seeds are born hash(vertex)-partitioned like every later state
+        # (a seed frame can arrive range-partitioned).
+        init = (
+            long_ids(sources)
+            .repartition(n_part, "id")
+            .groupBy(F.col("id").alias("vertex"))
+            .agg(F.lit(0).cast("long").alias("dist"), F.lit(True).alias("frontier"))
+        )
 
         def step(state: DataFrame, it: int) -> DataFrame:
-            # With AQE off in the loop the checkpointed state keeps its
-            # hash(vertex) partitioning, so the full-outer join-back
-            # against the gathered arrivals needs no exchange on either
-            # side and only the frontier's messages shuffle. A vertex is
-            # newly reached exactly when it has no state row (settled
-            # distances never improve: messages carry it+1, every settled
-            # dist is ≤ it). Messages are built from the sender's dist + 1
-            # (== it + 1 on the frontier), not a per-round literal, so
-            # every round generates the same code and reuses one compiled
-            # class instead of compiling a fresh one.
+            # The state and gather's output are both hash(vertex, n_part),
+            # so the anti join needs no exchange, the union keeps that
+            # partitioning and only the frontier's messages shuffle. A
+            # vertex is newly reached exactly when it has no state row
+            # (messages carry it+1, every settled dist is ≤ it). Messages
+            # carry the sender's dist + 1, not a per-round literal, so
+            # every round reuses one compiled class.
             senders = state.filter("frontier").select(
                 "vertex", (F.col("dist") + 1).alias("dist")
             )
-            arrivals = gather(e, senders, F.min("dist").alias("_m"))
-            return (
-                state.select("vertex", F.col("dist").alias("_old"))
-                .join(arrivals, "vertex", "full")
-                .select(
-                    "vertex",
-                    F.coalesce("_old", "_m").alias("dist"),
-                    F.col("_old").isNull().alias("frontier"),
+            arrivals = gather(e, senders, F.min("dist").alias("dist"))
+            return state.select("vertex", "dist", F.lit(False).alias("frontier")).union(
+                arrivals.join(state.hint("shuffle_hash"), "vertex", "leftanti").select(
+                    "vertex", "dist", F.lit(True).alias("frontier")
                 )
             )
 
         def converged(got: dict, it: int):
             reached = got["reached"] or 0
+            extra = {"reached": reached, "vertices": got["vertices"]}
             if max_hops is not None and it + 1 >= max_hops:
-                return 0, {"reached": reached, "capped": reached > 0}
-            return reached, {"reached": reached}
+                return 0, dict(extra, capped=reached > 0)
+            return reached, extra
 
         runner = FixpointRunner(
             spark, "bfs_hops", max_iterations=max_iterations, n_part=n_part
         )
-        out = runner.run(
-            init, step, [F.sum(F.col("frontier").cast("long")).alias("reached")],
-            converged,
-        )
+        observe = [
+            F.sum(F.col("frontier").cast("long")).alias("reached"),
+            F.count(F.lit(1)).alias("vertices"),
+        ]
+        out = runner.run(init, step, observe, converged)
     return out.select("vertex", "dist"), runner
 
 

@@ -220,17 +220,22 @@ def loop_table(df: DataFrame, key: str, n_part: int) -> Iterator[DataFrame]:
         release(table)
 
 
+def long_ids(df: DataFrame) -> DataFrame:
+    """``(id long)``: the ``id`` column of ``df``. Only non-bigint ids are
+    cast: the optimizer drops an identity cast, and a checkpoint would
+    then record its partitioning on an attribute it no longer outputs
+    (plans/runner.py:FixpointRunner.run)."""
+    ids = df.select("id")
+    return ids if dict(ids.dtypes)["id"] == "bigint" else ids.select(F.col("id").cast("long"))
+
+
 def vertex_table(
     vertices: DataFrame | None, default: DataFrame, n_part: int
 ) -> AbstractContextManager[DataFrame]:
     """Scope of a loop operator's vertex set ``(id long)``: the ids of
-    ``vertices``, else of ``default``, as a :func:`loop_table`. Only
-    non-bigint ids are cast: the optimizer drops an identity cast, and the
-    checkpoint would then record its partitioning on an attribute it no
-    longer outputs (plans/runner.py:FixpointRunner.run)."""
-    src = vertices if vertices is not None else default
-    ids = F.col("id") if dict(src.dtypes)["id"] == "bigint" else F.col("id").cast("long")
-    return loop_table(src.select(ids), "id", n_part)
+    ``vertices``, else of ``default``, as a :func:`loop_table`
+    (:func:`long_ids`)."""
+    return loop_table(long_ids(vertices if vertices is not None else default), "id", n_part)
 
 
 def own_labels(verts: DataFrame) -> DataFrame:

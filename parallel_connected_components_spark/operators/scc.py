@@ -13,7 +13,7 @@ method; same BSP skeleton as this package's CC operators):
     1. TRIM to fixpoint — a vertex with no in-edge or no out-edge in the
        remaining graph is a singleton SCC (label = itself). Removing it
        can expose more, so iterate. This peels the web graph's periphery
-       (tendrils/IN/OUT fringes) for a few cheap semi-joins per pass.
+       (tendrils/IN/OUT fringes), one edge aggregation per pass.
     2. COLOR — propagate min vertex id FORWARD to fixpoint:
        color(v) = min({v} ∪ {color(u) : u→v}). At the fixpoint color(v)
        is the smallest remaining vertex that can reach v. Every nonempty
@@ -35,18 +35,20 @@ makes results comparable with any independent SCC implementation
 (DuckDB twin in entry.py: recursive-CTE mutual reachability; tests:
 iterative Tarjan).
 
-Scale design: both fixpoints ARE :func:`cc_label_propagation` runs —
-coloring feeds it the directed edges (min-label propagation restricted
-to the edge direction is exactly min-ancestor), the backward mark feeds
-it the REVERSED same-color edges (a color root is its class minimum, so
-v is in the root's SCC iff its min-descendant-within-class equals its
-color). The SCC operator therefore inherits the frontier semi-join, the
-exchange-free join-back update, the pinned sorted edge cache, and the
-Observation-based convergence (zero extra actions per step) from the CC
-path, and any future LP tuning speeds SCC for free. On a bowtie-shaped
-web graph the expected shape is: trim peels the cones, one coloring pass
-floods the giant SCC from its minimum member, one backward sweep
-extracts it — a handful of rounds.
+Scale design: every fixpoint runs on :class:`FixpointRunner`, the
+superstep loop the CC operators share. The trim is a runner loop of its
+own whose state is the live vertex set. Coloring IS a
+:func:`cc_label_propagation` run over the directed edges (min-label
+propagation restricted to the edge direction is exactly min-ancestor).
+The backward mark is a :func:`bfs_hops` run from the color roots over
+the REVERSED same-color edges: v is in a root's SCC iff v reaches the
+root inside its class, and BFS enters each vertex into its frontier
+once. So SCC inherits the pinned sorted edge cache and the
+Observation-based convergence (zero extra actions per step) of those
+loops, and each coloring and mark step exchanges only its messages. On
+a bowtie-shaped web graph the expected shape is: trim peels the cones,
+one coloring pass floods the giant SCC from its minimum member, one
+backward sweep extracts it — a handful of rounds.
 The adversarial worst case (a long chain of singleton SCCs) degrades to
 O(chain) trim passes and is bounded by ``max_iterations``; a
 high-diameter escape analogous to cc_auto's is possible but not
@@ -55,10 +57,13 @@ implemented (road networks are not meaningfully directed).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from contextlib import ExitStack
 
-from ..plans.runner import fixpoint_conf, release
-from .graph import Pinned, pinned, vertices_of
+from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..plans.runner import FixpointRunner, fixpoint_conf, release
+from .bfs import bfs_hops
+from .graph import Pinned, long_ids, pinned, vertices_of
 
 
 def scc(
@@ -75,24 +80,24 @@ def scc(
     filter); ``vertices`` (optional superset of endpoints) adds isolated
     vertices as singleton SCCs.
 
-    Round-6 plan shape (the r5 verdict's "trim loop costs one action per
-    peel pass" fix, measured in OPTIMIZATION_r06.md):
+    Plan shape:
     - the deduped directed edge table is pinned (hash(src), sorted,
       persisted) with ONE exchange — hash(src) already satisfies the
       (src, dst) dedup's clustering requirement — and the round-1
       coloring LP is handed that ``Pinned`` table instead of re-pinning;
-    - each trim pass is one union + max-aggregation over the edge
-      endpoints (has-in AND has-out) with the survivor count riding an
-      Observation on the pass's own materialization — replacing the 2
-      distinct + 2 semi-join + count() formulation (5 jobs → 1);
-    - the backward-mark edge table keeps the color joins shuffle-hash
-      (no sort-merge sorts) and is handed to the mark LP already
-      persisted with its dst-join partitioning (= the reversed table's
-      src), skipping the third exchange;
-    - extraction fuses the marked-filter and label joins into one and
-      derives the shrunken vertex count arithmetically (marked ⊆ rem_v),
-      and the remainder's edge table is only rebuilt when a remainder
-      exists."""
+    - the trim's first pass in a round is one union + max-aggregation
+      over the round's edges (has-in AND has-out, one exchange), its
+      survivor count riding the pass's own materialization; a later
+      pass first restricts the edges to the live set. The trimmed
+      singletons and the round's edge table are built once per round,
+      after the trim has converged;
+    - the backward mark's same-color edges are joined shuffle-hash (no
+      sort-merge sorts) and its roots keep the colors' hash(vertex)
+      partitioning, so each mark step exchanges only its messages;
+    - extraction attaches the class label in one join, and the marked
+      count comes from the mark's own observed state size, not a job;
+    - the sub-loops (trim, coloring, mark) share one budget of
+      ``max_iterations`` steps per call."""
     e_raw = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     # fused self-loop filter + dedup + pin: one exchange total, and the
     # result IS the round-1 coloring LP's pinned layout. Every frame scc
@@ -114,99 +119,50 @@ def _scc_impl(
 ) -> tuple[DataFrame, dict]:
     from .cc import cc_label_propagation
 
-    verts = (
-        (vertices.select("id") if vertices is not None else vertices_of(e_raw))
-        .select(F.col("id").cast("long").alias("vertex"))
-        .localCheckpoint(eager=True)
-    )
+    ids = long_ids(vertices if vertices is not None else vertices_of(e_raw))
+    verts = ids.select(F.col("id").alias("vertex")).localCheckpoint(eager=True)
     info = {"rounds": 0, "trim_passes": 0, "color_steps": 0, "mark_steps": 0}
-    done: list[DataFrame] = []
+    n_v = verts.count()
+    if n_v == 0:
+        return verts.select("vertex", F.col("vertex").alias("label")), info
+    done: list[DataFrame] = []  # the output's frames
+    # rem_v and every rem_e but the pinned table are scc's own checkpoints
     rem_v, rem_e = verts, e_pin.edges
-    color = None
-    n_v = rem_v.count()
-    steps = 0
+    left = max_iterations  # the steps the sub-loops may still take
 
-    def _drop(df: DataFrame):
-        # a superseded one-shot checkpoint; `verts` (the no-SCC output)
-        # lives to the end, `e_pin` belongs to the caller's scope, and
-        # the `done` frames are never dropped: the output union reads them
-        if df is not verts and df is not e_pin.edges:
-            release(df)
-
-    def _tick(kind: str):
-        nonlocal steps
-        info[kind] += 1
-        steps += 1
-        if steps > max_iterations:
-            raise RuntimeError(
-                f"scc exceeded max_iterations={max_iterations} "
-                f"(rounds={info['rounds']}) — adversarially deep "
-                "condensation; raise the cap"
-            )
+    def restrict(vs: DataFrame) -> None:
+        nonlocal rem_e
+        old_e, rem_e = rem_e, _between(rem_e, vs).localCheckpoint(eager=True)
+        if old_e is not e_pin.edges:
+            release(old_e)
 
     try:
-        while n_v > 0:
+        while True:
             info["rounds"] += 1
             if info["rounds"] > max_rounds:
                 raise RuntimeError(f"scc exceeded max_rounds={max_rounds}")
 
             # ---- 1. trim to fixpoint ----------------------------------
             # A vertex with no in-edge or no out-edge in the remaining
-            # graph is a singleton SCC. One union + max-agg per pass
-            # (partial aggregation bounds hub keys); survivor count rides
-            # the pass's own materialization.
-            while True:
-                _tick("trim_passes")
-                obs = Observation()
-                keep = (
-                    rem_e.select(
-                        F.col("src").alias("vertex"),
-                        F.lit(1).alias("o"), F.lit(0).alias("i"),
-                    )
-                    .union(
-                        rem_e.select(
-                            F.col("dst").alias("vertex"),
-                            F.lit(0).alias("o"), F.lit(1).alias("i"),
-                        )
-                    )
-                    .groupBy("vertex")
-                    .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-                    .filter((F.col("o") == 1) & (F.col("i") == 1))
-                    .select("vertex")
-                    .observe(obs, F.count(F.lit(1)).alias("c"))
-                    .localCheckpoint(eager=True)
-                )
-                n_keep = obs.get["c"] or 0
-                if n_keep == n_v:
-                    release(keep)
-                    break
+            # graph is a singleton SCC.
+            keep, n_keep, runner = _trim(spark, rem_v, rem_e, n_v, e_pin.n_part, left)
+            info["trim_passes"] += runner.num_iterations
+            left -= runner.num_iterations
+            old_v, rem_v = rem_v, keep
+            if n_keep < n_v:
                 # keep ⊆ endpoints(rem_e) ⊆ rem_v, so rem_v \ keep is the
                 # trimmed set (including vertices isolated by extraction)
                 done.append(
-                    rem_v.join(keep.hint("shuffle_hash"), "vertex", "leftanti")
+                    old_v.join(keep.hint("shuffle_hash"), "vertex", "leftanti")
                     .select("vertex", F.col("vertex").alias("label"))
                     .localCheckpoint(eager=True)
                 )
-                _drop(rem_v)
-                rem_v, n_v = keep, n_keep
-                if n_v == 0:
-                    break
-                old_e = rem_e
-                rem_e = (
-                    rem_e.join(
-                        keep.select(F.col("vertex").alias("src")).hint("shuffle_hash"),
-                        "src", "leftsemi",
-                    )
-                    .join(
-                        keep.select(F.col("vertex").alias("dst")).hint("shuffle_hash"),
-                        "dst", "leftsemi",
-                    )
-                    .select("src", "dst")
-                    .localCheckpoint(eager=True)
-                )
-                _drop(old_e)
-            if n_v == 0:
+            release(old_v)
+            if n_keep == 0:
                 break
+            if n_keep < n_v:
+                restrict(keep)
+            n_v = n_keep
 
             # ---- 2. coloring: forward min-id propagation to fixpoint --
             # This IS min-label propagation restricted to the edge
@@ -214,112 +170,130 @@ def _scc_impl(
             # table makes its fixpoint label(v) = min({v} ∪ {u : u ⇝ v})
             # — exactly the coloring. While nothing was trimmed, the LP
             # gets the pinned table itself instead of re-exchanging it.
-            rem_ids = rem_v.select(F.col("vertex").alias("id"))
-            colors, lp_runner = cc_label_propagation(
+            colors, runner = cc_label_propagation(
                 spark, e_pin if rem_e is e_pin.edges else rem_e,
-                vertices=rem_ids, max_iterations=max_iterations,
+                vertices=rem_v.select(F.col("vertex").alias("id")),
+                max_iterations=left,
             )
-            info["color_steps"] += lp_runner.num_iterations
-            steps += lp_runner.num_iterations
-            color = colors.select(
-                "vertex", F.col("label").alias("color")
-            ).localCheckpoint(eager=True)
-            release(colors)
+            info["color_steps"] += runner.num_iterations
+            left -= runner.num_iterations
 
-            # ---- 3. backward mark from the color roots ----------------
-            # A color root r is the MINIMUM of its class (color(v) = r
-            # means r ⇝ v, and v ⇝ v gives r ≤ v), and v ∈ SCC(r) iff v
-            # reaches r inside the class — i.e. the marked set is the
-            # multi-source BACKWARD reachability cone of the roots over
-            # the same-color edges. Round 6 runs it as bfs_hops (sources
-            # = the roots, edges = the reversed same-color table) instead
-            # of a second min-label propagation: same round count (class
-            # eccentricity) but each vertex enters the frontier at most
-            # ONCE, so total mark messages are |V_class| instead of the
-            # LP's re-sends as smaller labels cascade. The color joins
-            # stay shuffle-hash (no sort-merge sorts); bfs_hops pins the
-            # reversed table itself (pin_dedup_edges — one exchange).
-            cs = color.select(
-                F.col("vertex").alias("src"), F.col("color").alias("_c1")
-            ).hint("shuffle_hash")
-            cd = color.select(
-                F.col("vertex").alias("dst"), F.col("color").alias("_c2")
-            ).hint("shuffle_hash")
-            ec_rev = (
-                rem_e.join(cs, "src")
-                .join(cd, "dst")
-                .filter(F.col("_c1") == F.col("_c2"))
-                .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            roots = color.filter(F.col("vertex") == F.col("color")).select(
-                F.col("vertex").alias("id")
-            )
-            from .bfs import bfs_hops
-
-            dists, bw_runner = bfs_hops(
-                spark, ec_rev, roots, max_hops=None, max_iterations=max_iterations
-            )
-            info["mark_steps"] += bw_runner.num_iterations
-            steps += bw_runner.num_iterations
-
-            # ---- 4. extract + shrink ----------------------------------
-            # the reached set IS the union of the roots' SCCs; one join
-            # attaches the class label (= the root id).
-            obs = Observation()
-            sel = (
-                dists.select("vertex")
-                .join(color.hint("shuffle_hash"), "vertex")
-                .select("vertex", F.col("color").alias("label"))
-                .observe(obs, F.count(F.lit(1)).alias("c"))
-                .localCheckpoint(eager=True)
-            )
+            # ---- 3. backward mark from the color roots + 4. extract ---
+            sel, runner = _mark(spark, rem_e, colors, left)
             done.append(sel)
-            release(color)
-            release(dists)
-            n_marked = obs.get["c"] or 0
+            info["mark_steps"] += runner.num_iterations
+            left -= runner.num_iterations
+            # the mark's final state is the marked set, sel ⊆ rem_v
+            n_marked = runner.metrics[-1].extra["vertices"]
             if n_marked >= n_v:  # everything extracted — no remainder
-                n_v = 0
                 break
-            old_v, old_e = rem_v, rem_e
-            rem_v = (
-                rem_v.join(
-                    sel.select("vertex").hint("shuffle_hash"), "vertex", "leftanti"
-                )
+            old_v, rem_v = rem_v, (
+                rem_v.join(sel.select("vertex").hint("shuffle_hash"), "vertex", "leftanti")
                 .localCheckpoint(eager=True)
             )
-            n_v -= n_marked  # sel ⊆ rem_v, distinct — no count job
-            rem_e = (
-                rem_e.join(
-                    rem_v.select(F.col("vertex").alias("src")).hint("shuffle_hash"),
-                    "src", "leftsemi",
-                )
-                .join(
-                    rem_v.select(F.col("vertex").alias("dst")).hint("shuffle_hash"),
-                    "dst", "leftsemi",
-                )
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
-            _drop(old_v)
-            _drop(old_e)
+            release(old_v)
+            n_v -= n_marked
+            restrict(rem_v)
     except BaseException:
         # the cap or a failing step: nothing will read the output's frames
-        for df in (*done, verts, color):
-            if df is not None:
-                release(df)
+        for df in done:
+            release(df)
         raise
     finally:
-        _drop(rem_v)
-        _drop(rem_e)
+        release(rem_v)
+        if rem_e is not e_pin.edges:
+            release(rem_e)
 
-    if not done:
-        out = verts.select("vertex", F.col("vertex").alias("label"))
-    else:
-        release(verts)
-        out = done[0]
-        for d in done[1:]:
-            out = out.union(d)
-    return out.select("vertex", "label"), info
+    out = done[0]
+    for d in done[1:]:
+        out = out.union(d)
+    return out, info
+
+
+def _trim(
+    spark: SparkSession,
+    rem_v: DataFrame,
+    rem_e: DataFrame,
+    n_v: int,
+    n_part: int,
+    max_iterations: int,
+) -> tuple[DataFrame, int, FixpointRunner]:
+    """Peel the vertices of ``rem_v`` (``n_v`` rows) that have no in-edge
+    or no out-edge among the live ones, until none is left to peel.
+    → (live vertices ``(vertex)``, their count, runner). The state is the
+    live set; one pass is one union + max-aggregation over the live edges
+    (partial aggregation bounds hub keys), and the live count rides the
+    pass's own materialization. The loop has converged when that count
+    stops falling."""
+
+    def step(live: DataFrame, it: int) -> DataFrame:
+        # at iteration 0 every edge is live: rem_e ⊆ rem_v × rem_v
+        e = _between(rem_e, live) if it > 0 else rem_e
+        return (
+            e.select(F.col("src").alias("vertex"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+            .union(
+                e.select(F.col("dst").alias("vertex"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+            )
+            .groupBy("vertex")
+            .agg(F.max("o").alias("o"), F.max("i").alias("i"))
+            .filter((F.col("o") == 1) & (F.col("i") == 1))
+            .select("vertex")
+        )
+
+    counts = [n_v]
+
+    def converged(got: dict, it: int):
+        counts.append(got["live"])
+        return (counts[-2] - counts[-1] if counts[-1] else 0), {"live": counts[-1]}
+
+    runner = FixpointRunner(spark, "scc_trim", max_iterations=max_iterations, n_part=n_part)
+    live = runner.run(rem_v, step, [F.count(F.lit(1)).alias("live")], converged)
+    return live, counts[-1], runner
+
+
+def _between(edges: DataFrame, vs: DataFrame) -> DataFrame:
+    """The edges with both endpoints in ``vs`` ``(vertex)``."""
+    return edges.join(
+        vs.select(F.col("vertex").alias("src")).hint("shuffle_hash"), "src", "leftsemi"
+    ).join(vs.select(F.col("vertex").alias("dst")).hint("shuffle_hash"), "dst", "leftsemi")
+
+
+def _mark(
+    spark: SparkSession, rem_e: DataFrame, colors: DataFrame, max_iterations: int
+) -> tuple[DataFrame, FixpointRunner]:
+    """→ (the SCCs of the color roots as a checkpoint ``(vertex, label)``,
+    the mark's runner). ``colors`` is the coloring LP's ``(vertex,
+    label)``; it is released here.
+
+    A color root r is the MINIMUM of its class (color(v) = r means r ⇝ v,
+    and v ⇝ v gives r ≤ v), and v ∈ SCC(r) iff v reaches r inside the
+    class: the marked set is the BACKWARD reachability cone of the roots
+    over the same-color edges. bfs_hops enters each vertex into its
+    frontier once, where a second min-label propagation would re-send as
+    smaller labels cascade. The color joins stay shuffle-hash (no
+    sort-merge sorts)."""
+    with ExitStack() as frees:
+        frees.callback(release, colors)
+        cs = colors.select(F.col("vertex").alias("src"), F.col("label").alias("_c1"))
+        cd = colors.select(F.col("vertex").alias("dst"), F.col("label").alias("_c2"))
+        ec_rev = (
+            rem_e.join(cs.hint("shuffle_hash"), "src")
+            .join(cd.hint("shuffle_hash"), "dst")
+            .filter(F.col("_c1") == F.col("_c2"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        roots = colors.filter(F.col("vertex") == F.col("label")).select(
+            F.col("vertex").alias("id")
+        )
+        dists, runner = bfs_hops(spark, ec_rev, roots, max_iterations=max_iterations)
+        frees.callback(release, dists)
+        # the reached set IS the union of the roots' SCCs, labelled by root
+        sel = (
+            dists.select("vertex")
+            .join(colors.hint("shuffle_hash"), "vertex")
+            .localCheckpoint(eager=True)
+        )
+    return sel, runner
 
 
 def scc_python_oracle(edge_list, vertex_ids=None) -> dict[int, int]:

@@ -5,7 +5,10 @@ explicit skew handling for hub vertices". Three mechanisms exist in this
 engine, ordered by when they apply:
 
 1. AQE skew-join splitting (session.py) — Catalyst-level, free, covers
-   the per-iteration joins.
+   the one-shot joins (setup, extraction). It does not cover the
+   per-iteration joins: ``plans/runner.py:fixpoint_conf`` turns AQE off
+   inside the loops, where partial aggregation before the one message
+   exchange bounds a hub's rows instead.
 2. Frontier shrinkage + giant-component exclusion
    (operators/cc.py, operators/stats.py) — algorithm-level, the
    Afforest skip (/root/reference/src/cc_openmp.c:596-613).

@@ -127,13 +127,28 @@ def test_bfs_max_hops_caps_expansion(spark):
     assert runner.metrics[-1].extra.get("capped") is True
 
 
-@pytest.mark.parametrize("seed", [4, 5])
-def test_bfs_differential_random(spark, seed):
-    edge_list = gen_graph(60, 140, seed)
+# vertex 0 (a seed) and vertex 2 take the extreme 64-bit ids
+EXTREME = {0: -(2**63), 2: 2**63 - 1}
+
+
+@pytest.mark.parametrize(
+    "seed,ids,id_type",
+    [
+        pytest.param(4, {}, "long", id="4"),
+        pytest.param(5, {}, "long", id="5"),
+        pytest.param(4, EXTREME, "long", id="extreme_ids"),
+        pytest.param(5, {}, "int", id="int_sources"),
+    ],
+)
+def test_bfs_differential_random(spark, seed, ids, id_type):
+    edge_list = [(ids.get(u, u), ids.get(v, v)) for u, v in gen_graph(60, 140, seed)]
     edges = spark.createDataFrame(edge_list, "src long, dst long")
-    srcs = spark.createDataFrame([(0,), (1,)], "id long")
+    seeds = [ids.get(0, 0), ids.get(1, 1)]
+    srcs = spark.createDataFrame([(s,) for s in seeds], f"id {id_type}")
     got, _ = bfs_hops(spark, edges, srcs)
-    assert dists_dict(got) == bfs_python_oracle(edge_list, [0, 1])
+    want = bfs_python_oracle(edge_list, seeds)
+    assert dists_dict(got) == want
+    assert set(ids.values()) <= set(want)
 
 
 def test_bfs_seed_only_when_isolated(spark):

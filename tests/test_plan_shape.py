@@ -192,9 +192,7 @@ def test_first_superstep_exchanges_like_the_rest(spark, monkeypatch):
     state a step reads, the initial one included, is a checkpoint that
     reports ``hashpartitioning(vertex, n_part)`` on its own ``vertex``
     column. The session's shuffle partition count differs from
-    ``n_part``, so a checkpoint made outside the loop's settings shows.
-    ``bfs_hops`` exchanges alike too, but its full-outer join-back
-    returns an unpartitioned state, so its states are not checked."""
+    ``n_part``, so a checkpoint made outside the loop's settings shows."""
     from parallel_connected_components_spark.operators import (
         anf, bfs_hops, cc_label_propagation, coreness, harmonic_centrality,
         label_propagation_communities, pagerank, scc, symmetrize,
@@ -220,6 +218,8 @@ def test_first_superstep_exchanges_like_the_rest(spark, monkeypatch):
         ("harmonic", lambda: harmonic_centrality(spark, sym, rounds=3)),
         # scc's coloring LP, with the frames scc made before it
         ("cc_lp", lambda: scc(spark, cycle.union(path))),
+        # scc's backward mark, seeded with the color roots
+        ("bfs_hops", lambda: scc(spark, cycle.union(path))),
     ]
     try:
         for name, run in loops:
@@ -230,8 +230,6 @@ def test_first_superstep_exchanges_like_the_rest(spark, monkeypatch):
             assert counts[0] == counts[1], (
                 name, counts, plans[0]._jdf.queryExecution().executedPlan().toString()
             )
-            if name == "bfs_hops":
-                continue
             for it, df in plans.items():
                 scans = [
                     n for n, _ in _walk(df._jdf.queryExecution().executedPlan())

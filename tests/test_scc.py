@@ -49,13 +49,31 @@ def test_scc_golden_shapes(spark, edge_list):
     assert info["rounds"] >= 1
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
-def test_scc_differential_random(spark, seed):
+@pytest.mark.parametrize(
+    "seed,ids,vertex_type",
+    [
+        pytest.param(1, {}, None, id="1"),
+        pytest.param(2, {}, None, id="2"),
+        pytest.param(3, {}, None, id="3"),
+        # the smallest and the largest 64-bit id
+        pytest.param(1, {0: -(2**63), 1: 2**63 - 1}, None, id="extreme_ids"),
+        # a vertex universe with int ids, four of them isolated
+        pytest.param(2, {}, "int", id="int_vertices"),
+    ],
+)
+def test_scc_differential_random(spark, seed, ids, vertex_type):
     # dense enough for a giant SCC plus periphery — the bowtie regime
-    edge_list = gen_digraph(60, 150, seed)
+    edge_list = [(ids.get(u, u), ids.get(v, v)) for u, v in gen_digraph(60, 150, seed)]
     edges = spark.createDataFrame(edge_list, "src long, dst long")
-    got, _ = scc(spark, edges)
-    assert labels_dict(got) == scc_python_oracle(edge_list)
+    vertex_ids = list(range(64)) if vertex_type else None
+    verts = (
+        spark.createDataFrame([(v,) for v in vertex_ids], f"id {vertex_type}")
+        if vertex_type else None
+    )
+    got, _ = scc(spark, edges, vertices=verts)
+    want = scc_python_oracle(edge_list, vertex_ids)
+    assert labels_dict(got) == want
+    assert set(ids.values()) <= set(want)
 
 
 def test_scc_sparse_differential(spark):
