@@ -11,8 +11,8 @@ convergence (exact labels) and PageRank 1e-6 — reported as
 ``cc_edges_per_sec_per_iter`` / ``pr_edges_per_sec_per_iter``.
 
 Scaling evidence (north rule's N vs 4N executors, sandbox substitution:
-two local[] levels) runs via scripts/scaling_bench.py → BENCH/BASELINE.md;
-set SPARK_GRAFT_SCALING=1 to embed it here too.
+two local[] levels): run perfbench/run.py under two CPU-affinity masks
+(it sizes its session from the affinity).
 
 Workload scale: the synthetic pages table is sized to the sf (1M pages/sf
 unit → sf0.1 = 100k pages, ~800k directed links) and cached as parquet
@@ -358,14 +358,7 @@ def main() -> None:
         **extra,
     }
 
-    if os.environ.get("SPARK_GRAFT_SCALING"):
-        spark.stop()
-        from scripts.scaling_bench import run_scaling
-
-        result["scaling"] = run_scaling(pages_path)
-    else:
-        spark.stop()
-
+    spark.stop()
     print(json.dumps(result))
 
 

@@ -154,15 +154,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--max-iterations", type=int, default=100)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument(
-        "--two-phase-partition",
-        choices=["auto", "hash", "range"],
-        default="auto",
-        help="two_phase local-UF partitioning: auto (default) samples "
-        "edge locality and picks — range wins ~1.7x wall / 5.4x merge "
-        "shuffle on spatially-numbered ids (road networks), hash on "
-        "scattered ids (see BENCH/BASELINE.md highdiam notes)",
-    )
-    p.add_argument(
         "--algorithm",
         choices=["auto", "two_phase", "stars", "labelprop", "afforest"],
         default="auto",
@@ -173,10 +164,9 @@ def main(argv: list[str] | None = None) -> int:
             "that hands high-diameter inputs (road networks) to O(log n) "
             "alternating stars; see BENCH/BASELINE.md 'High-diameter'. "
             "two_phase wins on graphs whose contracted form fits the "
-            "driver merge (few-M vertices), and with --two-phase-partition "
-            "range on "
-            "spatially-numbered ids (road networks: 1.7x over hash at 2M "
-            "vertices). "
+            "driver merge (few-M vertices); it samples edge locality and "
+            "range-partitions spatially-numbered ids (road networks: 1.7x "
+            "over hash at 2M vertices). "
             "afforest is a faithful port kept for parity: measured SLOWER "
             "than labelprop on every graph shape tried on this substrate "
             "(BENCH/BASELINE.md skewed-graph shootout) — pick it only to "
@@ -247,11 +237,6 @@ def main(argv: list[str] | None = None) -> int:
                 raise SystemExit(
                     "--bucketed does not support --resume/--checkpoint-dir; "
                     "use a plain input path for durable snapshots"
-                )
-            if args.two_phase_partition != "auto":
-                raise SystemExit(
-                    "--two-phase-partition is fixed by the bucketed layout "
-                    "(partition_by='pre'); drop the flag or use --edges"
                 )
             algo = "labelprop" if args.algorithm == "auto" else args.algorithm
             verts = _bucketed_vertices(spark, args.bucketed)
@@ -337,11 +322,9 @@ def main(argv: list[str] | None = None) -> int:
                 labels, runner = cc_two_phase(
                     spark, edges, vertices=verts, checkpoint_dir=args.checkpoint_dir,
                     max_iterations=args.max_iterations,
-                    partition_by=args.two_phase_partition,
+                    partition_by="auto",
                 )
-                pinfo = getattr(runner, "partition_info", None)
-                if pinfo:
-                    out["partition_info"] = pinfo
+                out["partition_info"] = runner.partition_info
             out["algorithm"] = args.algorithm
             out["num_components"] = count_components(labels)
             out["iterations"] = runner.num_iterations

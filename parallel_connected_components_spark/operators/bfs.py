@@ -34,12 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, gather
-from .graph import long_ids, pinned
+from .graph import Pinned, long_ids, pinned
 
 
 def bfs_hops(
     spark: SparkSession,
-    edges: DataFrame,
+    edges: DataFrame | Pinned,
     sources: DataFrame,
     max_hops: int | None = None,
     max_iterations: int = 500,
@@ -50,10 +50,11 @@ def bfs_hops(
     are absent — join against a vertex universe downstream if a dense
     output is needed. ``max_hops`` caps the expansion (k-hop
     neighborhood); None runs to exhaustion. Each iteration's metrics
-    record ``reached`` (newly reached) and ``vertices`` (reached so far)."""
-    with pinned(
-        spark, edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    ) as (e, n_part):
+    record ``reached`` (newly reached) and ``vertices`` (reached so far).
+    A :class:`~.graph.Pinned` ``edges`` is used as is and stays persisted."""
+    if not isinstance(edges, Pinned):
+        edges = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    with pinned(spark, edges) as (e, n_part):
         # The seeds are born hash(vertex)-partitioned like every later state
         # (a seed frame can arrive range-partitioned).
         init = (

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, IterationMetrics, gather, release
 from .graph import (
-    Pinned, canonicalize, contract_edges, own_labels, pinned, vertex_table,
+    Pinned, canonicalize, contract_edges, distinct_ids, own_labels, pinned, vertex_table,
 )
 
 
@@ -87,15 +87,19 @@ def labels_from_star_edges(star_edges: DataFrame, vertices: DataFrame | None) ->
     ).union(
         star_edges.select(F.col("dst").alias("vertex"), F.col("dst").alias("label"))
     ).groupBy("vertex").agg(F.min("label").alias("label"))
-    if vertices is not None:
-        labels = (
-            vertices.select(F.col("id").alias("vertex"))
-            .join(labels, "vertex", "left")
-            .select(
-                "vertex", F.coalesce("label", F.col("vertex")).alias("label")
-            )
-        )
-    return labels
+    return with_vertices(labels, vertices)
+
+
+def with_vertices(labels: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """``labels`` over the distinct ids of ``vertices`` (as is when None):
+    an id without a label (an isolated vertex) labels itself."""
+    if vertices is None:
+        return labels
+    return (
+        distinct_ids(vertices).select(F.col("id").alias("vertex"))
+        .join(labels, "vertex", "left")
+        .select("vertex", F.coalesce("label", F.col("vertex")).alias("label"))
+    )
 
 
 def normalize_labels(labels: DataFrame) -> DataFrame:
@@ -482,12 +486,7 @@ def cc_two_phase(
     # Contraction preserves the vertex set (every endpoint of `canon`
     # appears in the contracted output), so labels already cover all
     # non-isolated vertices; attach isolated ones if a vertex table came.
-    if vertices is not None:
-        labels = (
-            vertices.select(F.col("id").alias("vertex"))
-            .join(labels, "vertex", "left")
-            .select("vertex", F.coalesce("label", F.col("vertex")).alias("label"))
-        )
+    labels = with_vertices(labels, vertices)
     runner.partition_info = partition_info  # None unless partition_by="auto"
     return labels, runner
 
@@ -573,12 +572,7 @@ def cc_afforest(
     labels_a = labels_a.localCheckpoint(eager=True)
     release(sym)  # phase b reads `canon`, not the sampled subgraph
     if labels_a.isEmpty():  # edge-less input: everyone is their own component
-        out = (
-            vertices.select(F.col("id").alias("vertex"), F.col("id").alias("label"))
-            if vertices is not None
-            else labels_a
-        )
-        return out, runner
+        return with_vertices(labels_a, vertices), runner
 
     # giant detection — the sampling vote, recorded like the reference's
     # "skipping component X (sampled share Y)" progress line. Purely
@@ -626,13 +620,7 @@ def cc_afforest(
         )
         .select("vertex", F.coalesce("_root", F.col("label")).alias("label"))
     )
-    if vertices is not None:
-        labels = (
-            vertices.select(F.col("id").alias("vertex"))
-            .join(labels, "vertex", "left")
-            .select("vertex", F.coalesce("label", F.col("vertex")).alias("label"))
-        )
-    return labels, runner
+    return with_vertices(labels, vertices), runner
 
 
 # --------------------------------------------------------------------------

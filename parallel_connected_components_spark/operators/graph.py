@@ -229,13 +229,22 @@ def long_ids(df: DataFrame) -> DataFrame:
     return ids if dict(ids.dtypes)["id"] == "bigint" else ids.select(F.col("id").cast("long"))
 
 
+def distinct_ids(vertices: DataFrame) -> DataFrame:
+    """A caller's vertex set as ``(id)`` with each id once: an id listed
+    twice would otherwise join into two output rows and count twice in
+    |V|. The operators' own default vertex sets are distinct already and
+    do not pass through here."""
+    return vertices.select("id").distinct()
+
+
 def vertex_table(
     vertices: DataFrame | None, default: DataFrame, n_part: int
 ) -> AbstractContextManager[DataFrame]:
-    """Scope of a loop operator's vertex set ``(id long)``: the ids of
-    ``vertices``, else of ``default``, as a :func:`loop_table`
+    """Scope of a loop operator's vertex set ``(id long)``: the distinct
+    ids of ``vertices``, else of ``default``, as a :func:`loop_table`
     (:func:`long_ids`)."""
-    return loop_table(long_ids(vertices if vertices is not None else default), "id", n_part)
+    ids = default if vertices is None else distinct_ids(vertices)
+    return loop_table(long_ids(ids), "id", n_part)
 
 
 def own_labels(verts: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import ordered_gather, ordered_total, release
-from .graph import pinned, vertices_of
+from .graph import distinct_ids, pinned, vertices_of
 
 
 def hits_fixed(
@@ -53,7 +53,7 @@ def hits_fixed(
         verts = (
             # default vertex set from the RAW endpoints: a self-loop-only
             # vertex stays in the output (scores 0 — its loop is dropped)
-            (vertices.select("id") if vertices is not None else vertices_of(e_raw))
+            (distinct_ids(vertices) if vertices is not None else vertices_of(e_raw))
             .select(F.col("id").alias("vertex"))
             .localCheckpoint(eager=True)
         )

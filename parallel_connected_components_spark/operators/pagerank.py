@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, gather, ordered_gather, ordered_total
-from .graph import Pinned, loop_table, pinned
+from .graph import Pinned, distinct_ids, loop_table, pinned
 
 
 def pagerank(
@@ -189,7 +189,7 @@ def _vertex_table(
             F.count("*").alias("outdeg")
         )
         plan = (
-            vertices.select(F.col("id").alias("vertex"))
+            distinct_ids(vertices).select(F.col("id").alias("vertex"))
             .join(outdeg, "vertex", "left")
             .select("vertex", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
         )

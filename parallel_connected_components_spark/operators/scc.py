@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import FixpointRunner, fixpoint_conf, release
 from .bfs import bfs_hops
-from .graph import Pinned, long_ids, pinned, vertices_of
+from .graph import Pinned, distinct_ids, long_ids, pinned, vertices_of
 
 
 def scc(
@@ -119,7 +119,7 @@ def _scc_impl(
 ) -> tuple[DataFrame, dict]:
     from .cc import cc_label_propagation
 
-    ids = long_ids(vertices if vertices is not None else vertices_of(e_raw))
+    ids = long_ids(distinct_ids(vertices) if vertices is not None else vertices_of(e_raw))
     verts = ids.select(F.col("id").alias("vertex")).localCheckpoint(eager=True)
     info = {"rounds": 0, "trim_passes": 0, "color_steps": 0, "mark_steps": 0}
     n_v = verts.count()
@@ -285,7 +285,10 @@ def _mark(
         roots = colors.filter(F.col("vertex") == F.col("label")).select(
             F.col("vertex").alias("id")
         )
-        dists, runner = bfs_hops(spark, ec_rev, roots, max_iterations=max_iterations)
+        # rem_e is deduplicated and loop-free, and the color joins add no
+        # rows, so the reversed edges are pinned without a dedup
+        ec = frees.enter_context(pinned(spark, ec_rev, dedup=False))
+        dists, runner = bfs_hops(spark, ec, roots, max_iterations=max_iterations)
         frees.callback(release, dists)
         # the reached set IS the union of the roots' SCCs, labelled by root
         sel = (

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import release
-from .graph import canonicalize, degrees, symmetrize
+from .graph import canonicalize, degrees, distinct_ids, symmetrize
 from .triangles import triangle_count, triangles_per_vertex
 
 
@@ -51,7 +51,7 @@ def clustering_coefficients(
     deg = degrees(sym).select(F.col("id").alias("vertex"), "degree")
     tri = triangles_per_vertex(spark, edges, orient_by_degree=orient_by_degree)
     base = (
-        vertices.select(F.col("id").alias("vertex"))
+        distinct_ids(vertices).select(F.col("id").alias("vertex"))
         if vertices is not None
         else deg.select("vertex")
     )

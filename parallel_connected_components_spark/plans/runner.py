@@ -26,7 +26,7 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
@@ -350,7 +350,10 @@ def _partition_histogram(df: DataFrame) -> list[int]:
 
 
 def task_skew_report(
-    spark: SparkSession, min_tasks: int = 4, min_stage_ms: int = 500
+    spark: SparkSession,
+    min_tasks: int = 4,
+    min_stage_ms: int = 500,
+    stage_ids: Iterable[int] | None = None,
 ) -> list[dict]:
     """Per-stage task-runtime skew from the app-status store:
     [{stage_id, tasks, p50_ms, max_ms, ratio}] for completed stages with
@@ -359,8 +362,9 @@ def task_skew_report(
     diagnostic the reference's pthread harness prints as per-thread work
     imbalance (/root/reference/src/pthreads/afforest_simple.c:622-649);
     here a hub key that defeats the partitioner shows up as one long task
-    on the exchange stage. Best-effort internal API: returns [] if
-    unavailable."""
+    on the exchange stage. ``stage_ids`` looks up only those stages;
+    otherwise every retained stage is read, ~1 ms each. Best-effort
+    internal API: returns [] if unavailable."""
     try:
         sc = spark.sparkContext
         try:
@@ -369,16 +373,18 @@ def task_skew_report(
             pass
         jvm, gw = sc._jvm, sc._gateway
         store = sc._jsc.sc().statusStore()
-        stages = store.stageList(
-            jvm.java.util.ArrayList(), False, False,
-            gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-        )
+        if stage_ids is None:
+            it = store.stageList(
+                jvm.java.util.ArrayList(), False, False,
+                gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+            ).iterator()
+            stages = (it.next() for _ in iter(it.hasNext, False))
+        else:
+            stages = [store.lastStageAttempt(i) for i in stage_ids]
         q = gw.new_array(jvm.double, 2)
         q[0], q[1] = 0.5, 1.0
         out = []
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
+        for s in stages:
             if s.numCompleteTasks() < min_tasks:
                 continue
             summ = store.taskSummary(s.stageId(), s.attemptId(), q)

@@ -11,9 +11,11 @@ This script produces the measured evidence VERDICT r3 asked for:
    its measured sec/iter extrapolated to the full diameter (running it
    out would take hours — that is the point).
 
-Results splice into BENCH/BASELINE.md between the highdiam markers.
+``run(spark, width, height, ...)`` measures one grid size and returns its
+rows; tests/test_scripts.py runs it on a toy grid. With ``--md`` the
+results splice into BENCH/BASELINE.md between the highdiam markers.
 
-Usage: python scripts/highdiam_bench.py [--small-only]
+Usage: python scripts/highdiam_bench.py [--small-only] [--cores N] [--md]
 """
 
 from __future__ import annotations
@@ -37,11 +39,13 @@ from parallel_connected_components_spark.operators.cc import (  # noqa: E402
     count_components,
 )
 from parallel_connected_components_spark.operators.graph import symmetrize  # noqa: E402
+from parallel_connected_components_spark.plans.runner import release  # noqa: E402
 from parallel_connected_components_spark.session import get_spark  # noqa: E402
 from parallel_connected_components_spark.sources.grids import (  # noqa: E402
     gen_grid_edges,
     grid_diameter,
 )
+from scripts.mdsplice import splice_md  # noqa: E402
 
 BEGIN_MARK = "<!-- highdiam:begin (auto-generated by scripts/highdiam_bench.py) -->"
 END_MARK = "<!-- highdiam:end -->"
@@ -58,8 +62,12 @@ def check_exact(labels, width: int, height: int, num_grids: int) -> None:
     assert count_components(labels) == num_grids
 
 
-def run_grid(spark, width: int, height: int, num_grids: int, lp_cap: int | None):
-    """→ list of result dicts for one grid size."""
+def run(
+    spark, width: int, height: int, num_grids: int = 1, lp_cap: int | None = None
+) -> dict:
+    """Run every CC algorithm on ``num_grids`` ``width`` x ``height`` grids
+    → the grid's sizes and one result row per algorithm. ``lp_cap`` caps
+    plain LP and extrapolates its time over the diameter."""
     diam = grid_diameter(width, height)
     edges = symmetrize(
         gen_grid_edges(spark, width, height, num_grids=num_grids)
@@ -86,10 +94,13 @@ def run_grid(spark, width: int, height: int, num_grids: int, lp_cap: int | None)
         out.append(row)
         print(f"    {name}: {row}")
 
+    def iterations(result):
+        return result[0], {"iterations": result[1].num_iterations}
+
     if lp_cap is None:
         timed(
             "labelprop (full)",
-            lambda: (lambda r: (r[0], {"iterations": r[1].num_iterations}))(
+            lambda: iterations(
                 cc_label_propagation(spark, edges, max_iterations=diam + 10)
             ),
         )
@@ -97,36 +108,36 @@ def run_grid(spark, width: int, height: int, num_grids: int, lp_cap: int | None)
         # capped: measures per-iteration cost only; labels are mid-flight
         # (not checked); total extrapolated over the diameter
         def capped():
-            r = cc_label_propagation(
+            labels, meta = iterations(cc_label_propagation(
                 spark, edges, max_iterations=lp_cap, raise_on_cap=False
-            )
-            r[0].count()  # materialization parity with the full runs
-            return r[0], {"iterations": r[1].num_iterations, "capped": True}
+            ))
+            labels.count()  # materialization parity with the full runs
+            return labels, {**meta, "capped": True}
 
         timed(f"labelprop (capped at {lp_cap} iters)", capped, check=False,
               extrapolate=True)
 
     timed(
         "alternating stars",
-        lambda: (lambda r: (r[0], {"iterations": r[1].num_iterations}))(
-            cc_alternating_stars(spark, edges.where("src < dst"), assume_oriented=False)
-        ),
+        lambda: iterations(cc_alternating_stars(spark, edges.where("src < dst"))),
     )
     timed(
         "two-phase (local UF + stars)",
-        lambda: (lambda r: (r[0], {"iterations": r[1].num_iterations}))(
-            cc_two_phase(spark, edges.where("src < dst"))
-        ),
+        lambda: iterations(cc_two_phase(spark, edges.where("src < dst"))),
     )
-    timed(
-        "cc_auto (LP -> stall -> two_phase auto)",
-        lambda: (lambda r: (r[0], {
-            "iterations": r[1]["lp_iterations"] + r[1]["finish_iterations"],
-            "path": r[1]["algorithm"],
-            "lp_iters": r[1]["lp_iterations"],
-            "finish_iters": r[1]["finish_iterations"],
-        }))(cc_auto(spark, edges)),
-    )
+
+    def auto():
+        labels, info = cc_auto(spark, edges)
+        return labels, {
+            "iterations": info["lp_iterations"] + info["finish_iterations"],
+            "path": info["algorithm"],
+            "lp_iters": info["lp_iterations"],
+            "finish_iters": info["finish_iterations"],
+            "partition": (info.get("partition_info") or {}).get("selected"),
+        }
+
+    timed("cc_auto (LP -> stall -> two_phase auto)", auto)
+    release(edges)
     return {
         "width": width, "height": height, "num_grids": num_grids,
         "diameter": diam, "n_edges": n_edges,
@@ -152,7 +163,8 @@ def _table(res: dict) -> str:
         if r.get("path"):
             notes.append(
                 f"path={r['path']} ({r['lp_iters']} LP + "
-                f"{r['finish_iters']} two-phase finish rounds)"
+                f"{r['finish_iters']} two-phase finish rounds"
+                + (f", {r['partition']} partitioning)" if r.get("partition") else ")")
             )
         if r.get("exact"):
             notes.append("labels exact")
@@ -178,67 +190,35 @@ by-construction component formula:
 
 {sections}
 
-Reading: on the road-scale grid plain LP's projected wall time is
+Reading: on the last grid plain LP's projected wall time is
 **~{results[-1]['rows'][0].get('projected_sec', '?')} s** (diameter x
-sec/iter) vs the O(log n) algorithms completing in minutes — the
-measured scale-killer VERDICT r3 called out. `cc_auto` closes it without
-giving up the web-graph fast path: its stall detector (changed count not
-decaying over a 3-round window) fires after ~5 LP rounds, contracts the
-graph by the mid-flight labels, and (round 5) finishes with
-auto-partitioned two-phase — the locality estimator sees that label ids
-keep the grid's spatial numbering, picks range, and the local-UF
-contraction + driver/star merge beats pure stars. The probe now pays
-for itself: the round-4 stars-escape cost ~1.4x direct stars on the
-road-scale grid (102.5 s vs 71.6 s that session); the round-5
-two-phase-escape auto is FASTER than direct stars on the same regime
-while remaining exactly LP (2.4x faster than stars, earlier sections) on
-web graphs — the right default when the diameter is unknown, which at
-100 TB it always is. On web-shaped graphs cc_auto IS frontier LP — the
-detector never fires (bench: auto/labelprop median ratio 0.95).
-
-Two structural notes from the table: (1) two-phase dominates the SMALL
-grid because its contracted graph fits under the driver-UF merge
-threshold (~2M rows) — the rank-0 shortcut, available at any id layout
-when |V| is a few million or less; at 2M vertices it tips over the
-threshold into distributed star rounds. A round-4 correction and
-follow-up: cc_two_phase hash-partitions by src, so upstream id locality
-was never actually being exploited — the partition_by="range" option
-keeps contiguous id blocks together, and on spatially-numbered inputs
-(road networks/meshes; this grid) it cut the merge-phase shuffle 5.4x
-(509 -> 96 MB), merge rounds 13 -> 6, and wall 51.9 -> 30.2 s measured
-same-session at 2M vertices in round 4. Round 5 removed the need to
-know which regime you are in: partition_by="auto" samples edge locality
-(same-equal-width-block endpoint fraction: grids >0.8, hash-random
-~1/num_ranges) and picks; the numbers in this file's tables use each
-script's stated mode. (2) stars' round count is size-stable
-(10 -> 13 rounds for 30x the vertices — the O(log n) guarantee in
-practice).
+sec/iter). `cc_auto` keeps the web-graph fast path, where its stall
+detector never fires and it IS frontier LP, and escapes the lattice
+regime: the detector (changed count not decaying over a 3-round window)
+fires after a few LP rounds, the mid-flight labels contract the graph,
+and two-phase finishes it under `partition_by="auto"`, which samples
+edge locality and picks range on spatially-numbered ids and hash
+otherwise (the notes column names the pick). Two-phase merges in one
+driver union-find while the contracted graph fits under
+`final_local_threshold` (2M rows), and in distributed star rounds above.
 {END_MARK}"""
-    from mdsplice import splice_md
-
     splice_md(md, BEGIN_MARK, END_MARK, generated)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--small-only", action="store_true")
-    ap.add_argument("--big-only", action="store_true",
-                    help="reuse cached small-grid results from the json")
     ap.add_argument("--cores", type=int, default=None)
+    ap.add_argument("--md", action="store_true",
+                    help="splice the results into BENCH/BASELINE.md")
     args = ap.parse_args()
-    cache = os.path.join(REPO, "BENCH", "highdiam_results.json")
     spark = get_spark("highdiam-bench", cores=args.cores)
-    cores = int(spark.conf.get("spark.default.parallelism"))
-    results = []
-    if args.big_only and os.path.exists(cache):
-        results = [r for r in json.load(open(cache)) if r["n_vertices"] < 1_000_000]
-    else:
-        results.append(run_grid(spark, 220, 150, num_grids=2, lp_cap=None))
+    results = [run(spark, 220, 150, num_grids=2)]
     if not args.small_only:
-        results.append(run_grid(spark, 2000, 1000, num_grids=1, lp_cap=10))
-    with open(cache, "w", encoding="utf-8") as f:
-        json.dump(results, f, indent=1)
-    write_md(results, cores)
+        results.append(run(spark, 2000, 1000, lp_cap=10))
+    print(json.dumps(results))
+    if args.md:
+        write_md(results, int(spark.conf.get("spark.default.parallelism")))
     spark.stop()
 
 

@@ -1,5 +1,5 @@
 """Shared marker-splice for the bench scripts that maintain generated
-sections of BENCH/BASELINE.md (scaling, highdiam, hubskew): replace the
+sections of BENCH/BASELINE.md (highdiam, hubskew, bucketed): replace the
 text between a begin/end marker pair, appending the whole block if the
 markers are not present yet. One implementation so splice semantics
 can't drift between scripts."""

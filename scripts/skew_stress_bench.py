@@ -11,6 +11,9 @@ repartition/groupBy exchange — the criterion is max/median task time
 reference's per-thread work-imbalance print,
 /root/reference/src/pthreads/afforest_simple.c:622-649).
 
+``run(spark, num_pages)`` measures one graph size and returns the
+result; tests/test_scripts.py runs it on a toy graph.
+
 Usage: python scripts/skew_stress_bench.py [num_pages] [--md]
 """
 
@@ -24,57 +27,68 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from parallel_connected_components_spark.plans.runner import task_skew_report  # noqa: E402
+from parallel_connected_components_spark.operators import (  # noqa: E402
+    canonicalize,
+    cc_label_propagation,
+    edges_from_pages,
+    label_propagation_communities,
+    pagerank,
+    symmetrize,
+)
+from parallel_connected_components_spark.plans.runner import (  # noqa: E402
+    release,
+    task_skew_report,
+)
 from parallel_connected_components_spark.session import get_spark  # noqa: E402
+from parallel_connected_components_spark.sources import gen_pages  # noqa: E402
+from scripts.mdsplice import splice_md  # noqa: E402
 
 BEGIN_MARK = "<!-- hubskew:begin (auto-generated by scripts/skew_stress_bench.py) -->"
 END_MARK = "<!-- hubskew:end -->"
 
 
-def main(num_pages: int = 1_000_000, write_md: bool = False) -> dict:
-    from parallel_connected_components_spark.operators import (
-        canonicalize,
-        cc_label_propagation,
-        edges_from_pages,
-        label_propagation_communities,
-        pagerank,
-        symmetrize,
-    )
-    from parallel_connected_components_spark.sources import gen_pages
-
-    spark = get_spark("skew-stress")
+def run(
+    spark, num_pages: int, iterations: int = 8, min_stage_ms: int = 1000
+) -> dict:
+    """Run PageRank and LPA for ``iterations`` iterations and frontier-LP
+    CC to convergence over a ``num_pages``-page hub graph → per op its
+    wall time, the stages of ≥4 tasks whose longest task took at least
+    ``min_stage_ms``, and the worst max/median task-time ratio among them."""
     num_components = 64
-    path = os.path.join(
-        REPO, ".data", f"bench_hub_edges_v{num_pages}_c{num_components}"
+    pages = gen_pages(
+        spark, num_pages, num_components, links_per_page=6, seed=42, hub=True
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        pages = gen_pages(
-            spark, num_pages, num_components, links_per_page=6, seed=42, hub=True
-        )
-        canonicalize(edges_from_pages(pages)).write.mode("overwrite").parquet(path)
-    edges = spark.read.parquet(path).localCheckpoint(eager=True)
+    edges = canonicalize(edges_from_pages(pages)).localCheckpoint(eager=True)
     n_edges = edges.count()
     sym = symmetrize(edges, dedup=False).localCheckpoint(eager=True)
 
     ops = {
-        "pagerank": lambda: pagerank(spark, edges, max_iterations=8)[0].count(),
+        "pagerank": lambda: pagerank(spark, edges, max_iterations=iterations)[0],
         "lpa_8iter": lambda: label_propagation_communities(
-            spark, sym, max_iterations=8
-        )[0].count(),
-        "cc_labelprop_frontier": lambda: cc_label_propagation(spark, sym)[0].count(),
+            spark, sym, max_iterations=iterations
+        )[0],
+        "cc_labelprop_frontier": lambda: cc_label_propagation(spark, sym)[0],
     }
+    sc = spark.sparkContext
     results = {}
     for name, fn in ops.items():
-        before = task_skew_report(spark, min_tasks=1, min_stage_ms=0)
-        watermark = max((s["stage_id"] for s in before), default=-1)
-        t0 = time.perf_counter()
-        fn()
-        wall = time.perf_counter() - t0
-        stages = [
-            s
-            for s in task_skew_report(spark, min_tasks=4, min_stage_ms=1000)
-            if s["stage_id"] > watermark
-        ]
+        tag = f"skew-stress-{name}"
+        sc.addJobTag(tag)
+        try:
+            t0 = time.perf_counter()
+            out = fn()
+            out.count()
+            wall = time.perf_counter() - t0
+        finally:
+            sc.removeJobTag(tag)
+        release(out)
+        stages = task_skew_report(
+            spark, min_tasks=4, min_stage_ms=min_stage_ms,
+            stage_ids={
+                sid for job in sc._jsc.sc().statusTracker().getJobIdsForTag(tag)
+                for sid in sc.statusTracker().getJobInfo(job).stageIds
+            },
+        )
         worst = stages[0] if stages else None
         results[name] = {
             "wall_s": round(wall, 1),
@@ -84,15 +98,24 @@ def main(num_pages: int = 1_000_000, write_md: bool = False) -> dict:
             "top3": stages[:3],
         }
         print(name, json.dumps(results[name]))
+    release(sym)
+    release(edges)
+    return {
+        "num_pages": num_pages, "n_edges": n_edges, "iterations": iterations,
+        "ops": results,
+    }
 
-    out = {"num_pages": num_pages, "n_edges": n_edges, "ops": results}
+
+def main() -> None:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 1_000_000
+    spark = get_spark("skew-stress")
+    out = run(spark, n)
     print(json.dumps({k: v for k, v in out.items() if k != "ops"} | {
-        "worst_ratios": {k: v["worst_ratio"] for k, v in results.items()}
+        "worst_ratios": {k: v["worst_ratio"] for k, v in out["ops"].items()}
     }))
-    if write_md:
+    if "--md" in sys.argv:
         _write_md(out)
     spark.stop()
-    return out
 
 
 def _write_md(out: dict) -> None:
@@ -118,8 +141,8 @@ def _write_md(out: dict) -> None:
 ## Hub-skew task-time balance for the iterative ops (round 4)
 
 Hub graph ({out['num_pages']} pages, 64 block-root hubs of ~94k degree,
-{out['n_edges']} canonical edges) through PageRank (8 iters), LPA
-(8 iters) and frontier-LP CC to convergence; per-stage task-runtime
+{out['n_edges']} canonical edges) through PageRank ({out['iterations']} iters), LPA
+({out['iterations']} iters) and frontier-LP CC to convergence; per-stage task-runtime
 distributions read from the app-status store after each run. Criterion:
 max/median task time ≤ ~4x on every stage with ≥4 tasks and ≥1 s max —
 a hub key that defeated the partitioning would show as one long task on
@@ -140,11 +163,8 @@ skew-join splitting covers the message join. The salted two-stage
 pattern (`operators/skew.py`) stays reserved for order-sensitive top-k,
 where partial aggregation can't help.
 {END_MARK}"""
-    from mdsplice import splice_md
-
     splice_md(md, BEGIN_MARK, END_MARK, generated)
 
 
 if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 1_000_000
-    main(n, write_md="--md" in sys.argv)
+    main()

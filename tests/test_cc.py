@@ -12,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from parallel_connected_components_spark.operators import (
+    cc_afforest,
     cc_alternating_stars,
+    cc_auto,
     cc_label_propagation,
     cc_two_phase,
     count_components,
@@ -73,6 +75,25 @@ def test_property_graphs_match_oracle(spark, algo, num_vertices, num_components,
     # union_find_oracle only covers vertices appearing in edges; ours too
     assert got == oracle
     assert count_components(labels) == num_components
+
+
+@pytest.mark.parametrize(
+    "algo",
+    [cc_alternating_stars, cc_two_phase, cc_afforest, cc_label_propagation, cc_auto],
+    ids=lambda f: f.__name__,
+)
+def test_duplicate_vertex_ids_label_once(spark, algo):
+    """A caller's vertex set that lists every id twice (four of them
+    isolated) labels each vertex once, as the oracle does."""
+    edge_list = gen_component_graph(60, 3, 4, seed=1)
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    if algo in (cc_label_propagation, cc_auto):
+        edges = symmetrize(edges)
+    verts = spark.createDataFrame([(v,) for v in range(64)] * 2, "id long")
+    labels = algo(spark, edges, vertices=verts)[0]
+    want = {v: v for v in range(64)} | union_find_oracle(edge_list)
+    assert labels_dict(labels) == want
+    assert labels.count() == len(want)  # labels_dict would hide a duplicate row
 
 
 def test_idempotent_under_duplicates_and_self_loops(spark):

@@ -157,11 +157,6 @@ def test_bucketed_rejects_incompatible_flags(cli, tmp_path):
         cli.main(["cc", "--bucketed", str(tmp_path), "--resume"])
     with pytest.raises(SystemExit):
         cli.main(
-            ["cc", "--bucketed", str(tmp_path),
-             "--two-phase-partition", "range"]
-        )
-    with pytest.raises(SystemExit):
-        cli.main(
             ["pagerank", "--bucketed", str(tmp_path),
              "--checkpoint-dir", str(tmp_path / "ck")]
         )

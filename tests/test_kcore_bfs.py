@@ -59,12 +59,28 @@ def test_coreness_golden(spark, edge_list, want):
     assert runner.num_iterations >= 1
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
-def test_coreness_differential_random(spark, seed):
+@pytest.mark.parametrize(
+    "seed,copies",
+    [
+        pytest.param(1, 0, id="1"),
+        pytest.param(2, 0, id="2"),
+        pytest.param(3, 0, id="3"),
+        # a vertex universe (four isolated ids) with every id listed twice
+        pytest.param(3, 2, id="duplicate_vertices"),
+    ],
+)
+def test_coreness_differential_random(spark, seed, copies):
     edge_list = gen_graph(50, 160, seed)
     edges = spark.createDataFrame(sym(edge_list), "src long, dst long")
-    got, _ = coreness(spark, edges)
-    assert cores_dict(got) == coreness_python_oracle(edge_list)
+    vertex_ids = list(range(54)) if copies else None
+    verts = (
+        spark.createDataFrame([(v,) for v in vertex_ids * copies], "id long")
+        if copies else None
+    )
+    got, _ = coreness(spark, edges, vertices=verts)
+    want = coreness_python_oracle(edge_list, vertex_ids)
+    assert cores_dict(got) == want
+    assert got.count() == len(want)  # cores_dict would hide a duplicate row
 
 
 def test_coreness_long_cascade_and_sql_round_bound(spark):

@@ -66,6 +66,17 @@ def test_pagerank_explicit_vertex_universe(spark):
     assert set(ranks_dict(got2)) == {1, 2}
 
 
+def test_pagerank_duplicate_vertex_ids(spark):
+    """A ``vertices`` that lists every id twice ranks each vertex once,
+    as the distinct universe does (|V| counts each id once)."""
+    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+    verts = spark.createDataFrame([(1,), (2,), (3,)], "id long")
+    once = ranks_dict(pagerank(spark, edges, tol=1e-9, vertices=verts)[0])
+    got, _ = pagerank(spark, edges, tol=1e-9, vertices=verts.union(verts))
+    assert ranks_dict(got) == pytest.approx(once, abs=1e-9)
+    assert got.count() == 3  # ranks_dict would hide a duplicate row
+
+
 def test_pagerank_deterministic_across_partitioning(spark):
     edge_list = gen_component_graph(100, 3, 2, seed=9)
     edges = spark.createDataFrame(edge_list, "src long, dst long")

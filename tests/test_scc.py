@@ -50,29 +50,32 @@ def test_scc_golden_shapes(spark, edge_list):
 
 
 @pytest.mark.parametrize(
-    "seed,ids,vertex_type",
+    "seed,ids,vertex_type,copies",
     [
-        pytest.param(1, {}, None, id="1"),
-        pytest.param(2, {}, None, id="2"),
-        pytest.param(3, {}, None, id="3"),
+        pytest.param(1, {}, None, 1, id="1"),
+        pytest.param(2, {}, None, 1, id="2"),
+        pytest.param(3, {}, None, 1, id="3"),
         # the smallest and the largest 64-bit id
-        pytest.param(1, {0: -(2**63), 1: 2**63 - 1}, None, id="extreme_ids"),
+        pytest.param(1, {0: -(2**63), 1: 2**63 - 1}, None, 1, id="extreme_ids"),
         # a vertex universe with int ids, four of them isolated
-        pytest.param(2, {}, "int", id="int_vertices"),
+        pytest.param(2, {}, "int", 1, id="int_vertices"),
+        # the same universe with every id listed twice
+        pytest.param(3, {}, "long", 2, id="duplicate_vertices"),
     ],
 )
-def test_scc_differential_random(spark, seed, ids, vertex_type):
+def test_scc_differential_random(spark, seed, ids, vertex_type, copies):
     # dense enough for a giant SCC plus periphery — the bowtie regime
     edge_list = [(ids.get(u, u), ids.get(v, v)) for u, v in gen_digraph(60, 150, seed)]
     edges = spark.createDataFrame(edge_list, "src long, dst long")
     vertex_ids = list(range(64)) if vertex_type else None
     verts = (
-        spark.createDataFrame([(v,) for v in vertex_ids], f"id {vertex_type}")
+        spark.createDataFrame([(v,) for v in vertex_ids * copies], f"id {vertex_type}")
         if vertex_type else None
     )
     got, _ = scc(spark, edges, vertices=verts)
     want = scc_python_oracle(edge_list, vertex_ids)
     assert labels_dict(got) == want
+    assert got.count() == len(want)  # labels_dict would hide a duplicate row
     assert set(ids.values()) <= set(want)
 
 
