@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.hashing import portable_hash64_py
+from ..plans.runner import release
 from .skew import salted_topk_per_key
 
 
@@ -281,6 +282,7 @@ def kmeans_fit(
         if new == centroids:
             break
         centroids = new
+    release(v)
     return centroids
 
 

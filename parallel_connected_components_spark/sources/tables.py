@@ -22,11 +22,21 @@ are direct Spark API passthroughs in production and interception points
 for the jar-less sandbox tests (tests/test_runner_resume.py asserts the
 exact DDL/read calls both branches make). The caller-visible API is
 identical either way, so flipping ``backend="iceberg"`` on a real
-cluster changes no caller code.
+cluster changes no caller code. A table's identifier carries a digest
+of ``root``, so two layers over different roots never share a table,
+just as their parquet directories differ.
+
+Two callers: :class:`~..plans.runner.FixpointRunner` snapshots a loop's
+state every ``snapshot_every`` iterations and resumes from the latest;
+``streaming/graph.py`` keeps every versioned fold state here, as full
+snapshots (CC labels, PageRank ranks) and as per-fold delta snapshots
+(the accumulated edges), which :meth:`TableLayer.load_all` reads back
+as one table (parquet backend only).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -75,7 +85,8 @@ class TableLayer:
         return os.path.join(self._table_dir(name), f"snap={snap}")
 
     def _ident(self, name: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{name}"
+        digest = hashlib.sha1(os.path.abspath(self.root).encode()).hexdigest()[:12]
+        return f"{self.catalog}.{self.namespace}.{name}_{digest}"
 
     # -- iceberg seams: direct passthroughs, interceptable in tests -------
     def _sql(self, stmt: str):
@@ -185,6 +196,20 @@ class TableLayer:
         if k < 0:
             raise FileNotFoundError(f"table {name} has no snapshot")
         return self.spark.read.parquet(self._snap_dir(name, k))
+
+    def load_all(self, name: str) -> DataFrame:
+        """Every committed snapshot of ``name`` as one table (one multi-path
+        read): the accumulated state of a table whose snapshots are
+        deltas. Parquet backend only: on Iceberg each replace commit's
+        delta lives only in the snapshot history, which expiry deletes."""
+        if self.backend == "iceberg":
+            raise NotImplementedError("load_all reads parquet snapshots only")
+        snaps = self.read_meta(name)["snapshots"]
+        if not snaps:
+            raise FileNotFoundError(f"table {name} has no snapshot")
+        return self.spark.read.parquet(
+            *(self._snap_dir(name, s["snap"]) for s in snaps)
+        )
 
     def latest_snapshot(self, name: str) -> int:
         if self.backend == "iceberg":

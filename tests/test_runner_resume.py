@@ -176,9 +176,10 @@ class _FakeIcebergLayer(TableLayer):
     """TableLayer with the iceberg seams backed by an in-memory snapshot
     log + real parquet files (one dir per commit)."""
 
-    def __init__(self, spark, tmp, **kw):
+    def __init__(self, spark, tmp, store=None, **kw):
         super().__init__(spark, str(tmp), backend="iceberg", **kw)
-        self._store: dict[str, list[dict]] = {}
+        # the catalog's tables; layers handed one store share a catalog
+        self._store: dict[str, list[dict]] = {} if store is None else store
         self._files = str(tmp)
         self.sql_log: list[str] = []
         self._next_id = 9000
@@ -247,6 +248,8 @@ def test_iceberg_branch_snapshot_semantics(spark, tmp_path):
     # lineage rides the commit summary and roundtrips through JSON
     assert [s["lineage"]["iteration"] for s in tl.snapshots("t")] == [0, 1]
     # the DDL a real cluster would receive
+    ident = tl._ident("t")
+    assert ident.startswith("spark_catalog.pccs.t_"), ident
     assert any(
         s.startswith("CREATE NAMESPACE IF NOT EXISTS spark_catalog.pccs")
         for s in tl.sql_log
@@ -254,11 +257,11 @@ def test_iceberg_branch_snapshot_semantics(spark, tmp_path):
     assert any(
         # snapshot_id tiebreaker: ms-granularity committed_at ties must
         # not make ordinal time travel nondeterministic (round-5 ADVICE)
-        "FROM spark_catalog.pccs.t.snapshots ORDER BY committed_at, snapshot_id" in s
+        f"FROM {ident}.snapshots ORDER BY committed_at, snapshot_id" in s
         for s in tl.sql_log
     )
     tl.drop("t")
-    assert tl.sql_log[-1] == "DROP TABLE IF EXISTS spark_catalog.pccs.t"
+    assert tl.sql_log[-1] == f"DROP TABLE IF EXISTS {ident}"
     assert tl.latest_snapshot("t") == -1
 
 
@@ -280,6 +283,50 @@ def test_iceberg_branch_runner_resume(spark, tmp_path):
     final = r2.run(init, step, obs, conv, resume=True)
     assert final.collect()[0]["n"] == 0
     assert [m.iteration for m in r2.metrics] == [2, 3, 4, 5]
+
+
+def test_iceberg_table_identity_includes_the_root(spark, tmp_path):
+    """Two layers over one catalog but different roots never share a
+    table, as their parquet directories would not; a layer over the same
+    root finds the first one's snapshots, so resume still works. Without
+    the root in the identifier, a runner resuming on a fresh
+    checkpoint_dir picked up another directory's snapshots."""
+    store: dict = {}
+    a = _FakeIcebergLayer(spark, tmp_path / "a", store=store)
+    a_again = _FakeIcebergLayer(spark, tmp_path / "a", store=store)
+    b = _FakeIcebergLayer(spark, tmp_path / "b", store=store)
+    assert a._ident("t") == a_again._ident("t") != b._ident("t")
+    a.save_snapshot("t", spark.range(3).selectExpr("id AS n"))
+    assert a_again.latest_snapshot("t") == 0
+    assert a_again.load("t").count() == 3
+    assert b.latest_snapshot("t") == -1
+
+
+def test_only_the_table_layer_commits_with_os_replace():
+    """``sources/tables.py`` is the one store that commits by an atomic
+    rename; any other package module writing versioned state goes
+    through its ``TableLayer``."""
+    import ast
+    import pathlib
+
+    import parallel_connected_components_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    callers = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "replace"
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and any(a.name == "replace" for a in node.names)
+            ):
+                callers.add(path.relative_to(root).as_posix())
+    assert callers == {"sources/tables.py"}, sorted(callers)
 
 
 def test_task_skew_report_reads_executed_stages(spark):

@@ -3,7 +3,10 @@ closed file source equals the batch aggregation on the same data."""
 
 from __future__ import annotations
 
+import os
 import shutil
+
+import pytest
 
 from parallel_connected_components_spark.streaming import (
     batch_event_counts,
@@ -225,6 +228,7 @@ def test_incremental_cc_stream_equals_batch(spark, tmp_path):
     )
     from parallel_connected_components_spark.sources.grids import gen_grid_edges
     from parallel_connected_components_spark.sources.pages import gen_pages
+    from parallel_connected_components_spark.sources.tables import TableLayer
     from parallel_connected_components_spark.operators.graph import edges_from_pages
     from parallel_connected_components_spark.streaming.graph import (
         cc_state_labels,
@@ -276,9 +280,10 @@ def test_incremental_cc_stream_equals_batch(spark, tmp_path):
     assert got == {v: uf.get(v, v) for v in got}
     assert set(got) == {v for uv in rows for v in uv}
     # versioned snapshots: one per non-empty micro-batch, monotone
-    versions = sorted(
-        int(d[1:]) for d in os.listdir(state_dir) if d.startswith("v")
-    )
+    versions = [
+        s["snap"]
+        for s in TableLayer(spark, state_dir, backend="parquet").snapshots("labels")
+    ]
     assert versions == list(range(len(versions))) and len(versions) >= 2
 
 
@@ -390,17 +395,19 @@ def test_incremental_triangles_replay_after_crash(spark, tmp_path):
     state = str(tmp_path / "tri_crash")
     out1 = update_triangle_state(spark, spark.createDataFrame(b1, "src long, dst long"), state)
 
-    # simulate a crash mid-fold of batch 2: edges land, commit marker doesn't
+    # simulate a crash mid-fold of batch 2: edges land, the pointer swap
+    # doesn't — roll the table's metadata pointer back to batch 1's
+    meta = os.path.join(state, "edges", "_meta.json")
+    shutil.copy(meta, meta + ".fold1")
     out2 = update_triangle_state(spark, spark.createDataFrame(b2, "src long, dst long"), state)
-    v1 = os.path.join(state, "v1")
-    assert os.path.exists(os.path.join(v1, "meta.json"))
-    os.unlink(os.path.join(v1, "meta.json"))  # roll back the commit marker only
+    assert os.path.isdir(os.path.join(state, "edges", "snap=1"))
+    shutil.copy(meta + ".fold1", meta)
 
     # the uncommitted fold is invisible: state total == batch-1 total
     assert triangle_state_total(state) == out1["total"]
 
     # replay batch 2 (Structured Streaming re-runs the failed batch):
-    # identical delta/total, the partial v1 simply overwritten
+    # identical delta/total, the partial snap=1 simply overwritten
     out2_replay = update_triangle_state(
         spark, spark.createDataFrame(b2, "src long, dst long"), state
     )
@@ -414,3 +421,93 @@ def test_incremental_triangles_replay_after_crash(spark, tmp_path):
     )
     assert again["delta"] == 0 and again["total"] == expected
     shutil.rmtree(state)
+
+
+def _chain_batches(spark):
+    """Two directed edge batches over four 6-vertex chains; batch 2 joins
+    pairs of chains, so its edges merge components of batch 1."""
+    b1 = [(c * 10 + i, c * 10 + i + 1) for c in range(4) for i in range(5)]
+    b2 = [(0, 10), (25, 35), (3, 1), (12, 14)]
+    return b1, b2, [spark.createDataFrame(b, "src long, dst long") for b in (b1, b2)]
+
+
+def test_pagerank_fold_failing_in_cc_update_replays_into_cc_state(
+    spark, tmp_path, monkeypatch
+):
+    """A PageRank fold that fails in its CC update must not lose the
+    batch's edges from the CC side-state: the replay has to find them new
+    again. The fold merges into the CC state before it commits the edges;
+    committing first made the replay dedup to an empty delta and skip the
+    CC update, leaving ``_rescale_by_component`` stale labels for good."""
+    from parallel_connected_components_spark.operators.cc import union_find_oracle
+    from parallel_connected_components_spark.streaming import graph as sg
+
+    b1, b2, (d1, d2) = _chain_batches(spark)
+    state = str(tmp_path / "pr_state")
+    real, calls = sg.update_cc_state, []
+
+    def failing_once(spark_, batch, state_dir):
+        calls.append(state_dir)
+        if len(calls) == 2:
+            raise RuntimeError("CC update failed")
+        return real(spark_, batch, state_dir)
+
+    monkeypatch.setattr(sg, "update_cc_state", failing_once)
+    sg.update_pagerank_state(spark, d1, state, tol=1e-4)
+    with pytest.raises(RuntimeError, match="CC update failed"):
+        sg.update_pagerank_state(spark, d2, state, tol=1e-4)
+    sg.update_pagerank_state(spark, d2, state, tol=1e-4)  # the replay
+    got = {
+        r["vertex"]: r["label"]
+        for r in sg.cc_state_labels(spark, os.path.join(state, "cc")).collect()
+    }
+    uf = union_find_oracle(b1 + b2)
+    assert got == {v: uf.get(v, v) for v in {v for e in b1 + b2 for v in e}}
+    assert len(calls) == 3  # the replay merged the batch into the CC state
+
+
+def test_folds_leave_no_checkpoint_persisted(spark, tmp_path):
+    """A second fold of each kind leaves no new persisted RDD, except the
+    PageRank fold's pinned edge cache (it replaces the first fold's), and
+    the exact k-means fit leaves none: every one-shot checkpoint is
+    released. Python GC is off so that a collection cannot free a leaked
+    checkpoint during the check."""
+    import gc
+
+    from parallel_connected_components_spark.operators import kmeans_fit
+    from parallel_connected_components_spark.streaming import graph as sg
+
+    _, _, (d1, d2) = _chain_batches(spark)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    folds = {
+        "cc": lambda d, st: sg.update_cc_state(spark, d, st),
+        "triangles": lambda d, st: sg.update_triangle_state(spark, d, st),
+        "pagerank": lambda d, st: sg.update_pagerank_state(spark, d, st, tol=1e-4),
+    }
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5)]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+    gc.disable()
+    try:
+        for kind, fold in folds.items():
+            state = str(tmp_path / kind)
+            fold(d1, state)
+            before = persisted()
+            fold(d2, state)
+            left = persisted() - before
+            if kind == "pagerank":
+                # only the grown pinned edge cache; dropping it leaves nothing
+                assert len(left) == 1, left
+                sg._PR_EDGE_CACHE.pop(state)["pinned"].edges.unpersist()
+                left = persisted() - before
+            assert left == set(), (kind, sorted(left))
+        before = persisted()
+        kmeans_fit(vecs, k=2, n_iterations=3, sample_target=0)
+        assert persisted() - before == set()
+    finally:
+        gc.enable()
