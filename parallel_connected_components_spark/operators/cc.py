@@ -371,14 +371,17 @@ def _local_uf_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     yield pd.DataFrame({"src": nodes[keep], "dst": roots[keep]})
 
 
+# Contracted graphs up to this many rows finish in one driver-side
+# union-find; larger ones run distributed star rounds.
+FINAL_LOCAL_THRESHOLD = 2_000_000
+
+
 def cc_two_phase(
     spark: SparkSession,
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     max_iterations: int = 50,
-    final_local_threshold: int = 2_000_000,
     assume_canonical: bool = False,
     partition_by: str = "hash",
 ) -> tuple[DataFrame, FixpointRunner]:
@@ -407,7 +410,7 @@ def cc_two_phase(
     vs 13 star rounds (BENCH/BASELINE.md).
 
     Merge strategy: if the contracted graph fits comfortably on the
-    driver (< final_local_threshold rows) finish with one in-memory
+    driver (≤ FINAL_LOCAL_THRESHOLD rows) finish with one in-memory
     union-find — the analog of the MPI version gathering final state at
     rank 0 (/root/reference/src/mpi/cc_mpi.c:1393-1406) and ~10x cheaper
     than log-rounds of star shuffles at that size. Above the threshold,
@@ -415,7 +418,7 @@ def cc_two_phase(
     rounds) take over, so the operator has no driver-memory cliff at
     10^12-vertex scale.
     """
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     # ``assume_canonical`` skips the dedup shuffle when the caller already
     # holds a canonical (src<dst, deduped, no-self-loop) edge table
     canon = edges if assume_canonical else canonicalize(edges)
@@ -452,7 +455,7 @@ def cc_two_phase(
         .localCheckpoint(eager=True)
     )
     n_contracted = contracted.count()
-    if n_contracted <= final_local_threshold:
+    if n_contracted <= FINAL_LOCAL_THRESHOLD:
         import time as _time
 
         t0 = _time.perf_counter()
@@ -494,13 +497,14 @@ def cc_two_phase(
 # --------------------------------------------------------------------------
 # 3. Afforest: k-neighbor sampling pre-rounds + giant-component skip
 # --------------------------------------------------------------------------
+SAMPLE_ROUNDS = 2  # neighbors sampled per vertex in afforest's phase a
+GIANT_SAMPLES = 1024  # vertices voting in the optional giant detection
+
 
 def cc_afforest(
     spark: SparkSession,
     edges: DataFrame,
     vertices: DataFrame | None = None,
-    sample_rounds: int = 2,
-    num_samples: int = 1024,
     checkpoint_dir: str | None = None,
     max_iterations: int = 50,
     detect_giant: bool = False,
@@ -510,10 +514,10 @@ def cc_afforest(
     (/root/reference/README.md:150, cc_openmp.c:560-621):
 
     phase a (sampling pre-rounds, cc_openmp.c:582-594): link each vertex
-      to its r-th neighbor only, for r = 1..sample_rounds — here the r
+      to its r-th neighbor only, for r = 1..SAMPLE_ROUNDS — here the r
       smallest neighbors per vertex via r chained MIN aggregations (no
       per-vertex sort, partial agg bounds hub keys), then the sampled
-      subgraph (≤ sample_rounds·|V| edges, independent of |E|) is fully
+      subgraph (≤ SAMPLE_ROUNDS·|V| edges, independent of |E|) is fully
       resolved with :func:`cc_two_phase` (round 5: the vectorized
       local-UF contraction + driver/star merge resolves the ≤2|V|-edge
       subgraph in one pass — measured 1.7 s vs 7.1 s for alternating
@@ -521,7 +525,7 @@ def cc_afforest(
       same min-id fixpoint either way). On power-law graphs this cheap
       pass already collapses most of the giant component.
 
-    giant detection (cc_openmp.c:422-496): ~num_samples random vertices
+    giant detection (cc_openmp.c:422-496): ~GIANT_SAMPLES random vertices
       vote; the plurality label is the probable giant component —
       recorded in the runner metrics (the reference's skew detector).
       OFF by default: in the reference the vote *feeds* the skip, but
@@ -549,10 +553,10 @@ def cc_afforest(
     n_part = spark.sparkContext.defaultParallelism
     sym = sym.repartition(n_part, "src").localCheckpoint(eager=True)
 
-    # phase a: r-th-smallest-neighbor edges, r = 1..sample_rounds
+    # phase a: r-th-smallest-neighbor edges, r = 1..SAMPLE_ROUNDS
     picked = sym.groupBy("src").agg(F.min("dst").alias("dst"))
     sampled = picked
-    for _ in range(1, sample_rounds):
+    for _ in range(1, SAMPLE_ROUNDS):
         picked = (
             sym.join(picked.withColumnRenamed("dst", "_prev"), "src")
             .filter(F.col("dst") > F.col("_prev"))
@@ -582,13 +586,13 @@ def cc_afforest(
         from .stats import giant_component_sample
 
         giant_label, giant_hits = giant_component_sample(
-            labels_a, num_samples=num_samples
+            labels_a, num_samples=GIANT_SAMPLES
         )
         runner.metrics.append(
             IterationMetrics(
                 len(runner.metrics), -1, 0.0,
                 extra={"phase": "giant_sample", "giant_label": giant_label,
-                       "giant_hits": giant_hits, "num_samples": num_samples},
+                       "giant_hits": giant_hits, "num_samples": GIANT_SAMPLES},
             )
         )
 

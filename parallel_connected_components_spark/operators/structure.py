@@ -7,8 +7,7 @@ analytics engine" surface): all are standard web-graph structure
 measures built on the package's existing triangle/degree plans — the
 reference's canonical-orientation trick (/root/reference/src/
 cc_sequential.c:418) is what makes every one of them a plain
-equi-join + aggregation, so they inherit the triangle module's skew
-story (degree orientation + AQE skew-join splits for hub wedges).
+equi-join + aggregation.
 
 Cross-engine exactness: every emitted number is either an integer
 aggregate (counts, supports, truss numbers) or ONE IEEE754 division of
@@ -16,14 +15,16 @@ two integer-exact operands — both are reproduced bit-identically by the
 DuckDB oracle twins in entry.py, with no transcendental functions and
 no order-dependent float accumulation anywhere.
 
-Scale notes (100 TB): the triangle enumeration underneath support/truss
-is the same two-shuffle oriented join the triangle counter uses —
-degree orientation bounds per-vertex wedge fan-out by O(sqrt(E)).
-Assortativity/transitivity/reciprocity are single-pass integer
-aggregations with map-side partial combine (no per-key blowup at all).
-Truss peeling re-enumerates triangles over the SURVIVING edge set each
-round — the standard distributed k-truss (Cohen's MapReduce truss
-algorithm), where each round's input only shrinks.
+Scale notes (100 TB): clustering, transitivity, supports and the truss
+peel all read the one triangle enumerator,
+:func:`.triangles.triangles`, and inherit its skew handling: degree
+orientation bounds per-vertex wedge fan-out by O(sqrt(E)), and AQE's
+skew join splits hot middle keys. Assortativity/transitivity/reciprocity
+are single-pass integer aggregations with map-side partial combine (no
+per-key blowup at all). Truss peeling re-enumerates triangles over the
+SURVIVING edge set each round — the standard distributed k-truss
+(Cohen's MapReduce truss algorithm), where each round's input only
+shrinks.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.runner import release
 from .graph import canonicalize, degrees, distinct_ids, symmetrize
-from .triangles import triangle_count, triangles_per_vertex
+from .triangles import _degree_table, _per_vertex, triangles
 
 
 def clustering_coefficients(
@@ -47,9 +48,9 @@ def clustering_coefficients(
     One division of two exact integers per vertex — bit-identical in any
     IEEE754 engine. ``vertices`` (optional superset) adds isolated
     vertices with degree = triangles = 0."""
-    sym = symmetrize(edges)
-    deg = degrees(sym).select(F.col("id").alias("vertex"), "degree")
-    tri = triangles_per_vertex(spark, edges, orient_by_degree=orient_by_degree)
+    deg = degrees(symmetrize(edges))
+    tri = _per_vertex(triangles(canonicalize(edges), deg if orient_by_degree else None))
+    deg = deg.select(F.col("id").alias("vertex"), "degree")
     base = (
         distinct_ids(vertices).select(F.col("id").alias("vertex"))
         if vertices is not None
@@ -88,8 +89,8 @@ def transitivity(
     integer degree aggregation), so the single division is bit-exact
     cross-engine. 0.0 when the graph has no wedge. All integer paths use
     integer division (DIV / //) so no float accumulation sneaks in."""
-    n_tri = triangle_count(spark, edges, orient_by_degree=orient_by_degree)
     deg = degrees(symmetrize(edges))
+    n_tri = triangles(canonicalize(edges), deg if orient_by_degree else None).count()
     w = deg.agg(F.sum(F.col("degree") * (F.col("degree") - 1)).alias("sum_dd1"))
     return w.select(
         F.lit(n_tri).cast("long").alias("triangles"),
@@ -192,15 +193,13 @@ def edge_support(
     """→ (src, dst, support) over the canonical (src < dst) edge table:
     support = number of triangles through the edge = |N(src) ∩ N(dst)|.
 
-    Same two-join plan as the triangle counter, but an INNER closure join
-    (not semi) so each triangle emits support for all three of its
-    edges. Edges in no triangle get support 0 (left join back onto the
-    edge table). ``orient_by_degree`` enumerates under the (degree, id)
-    order — identical output, hub-skew-safe wedge fan-out (see
-    ``_supports``)."""
+    The triangle counter's enumeration, each triangle emitting support
+    for all three of its edges. Edges in no triangle get support 0 (left
+    join back onto the edge table). ``orient_by_degree`` enumerates
+    under the (degree, id) order — identical output, hub-skew-safe
+    wedge fan-out (see ``_supports``)."""
     canon = canonicalize(edges)
-    deg = degrees(symmetrize(edges)) if orient_by_degree else None
-    sup = _supports(canon, deg)
+    sup = _supports(canon, _degree_table(edges, orient_by_degree))
     return (
         canon.join(sup.hint("shuffle_hash"), ["src", "dst"], "left")
         .select("src", "dst", F.coalesce("support", F.lit(0)).alias("support"))
@@ -208,126 +207,38 @@ def edge_support(
 
 
 def _supports(canon: DataFrame, deg: DataFrame | None = None) -> DataFrame:
-    """(src, dst, support) for canonical edges with ≥1 triangle.
-
-    The edge input of each join is shuffle_hash-hinted: per-partition
-    edge slices are bounded build sides, and sort-merge's per-join sorts
-    of the 18M-edge table are pure overhead — measured 46s (SMJ) vs 19s
-    (hash) warm at 18M edges, local[32]. The wedge stream stays the
-    PROBE side (no hint): hinting it too lets Spark's meaningless
-    self-join size estimate pick a 100M-row build map → executor OOM.
-
-    ``deg`` (optional ``(id, degree)`` table) switches the enumeration
-    to degree orientation — each edge low→high by (degree, id) instead
-    of id — which bounds every vertex's oriented out-degree by O(√E) and
-    kills the wedge blowup of a mid-id hub (a hub that is its block's
-    MINIMUM id is harmless under id order, which is why the synthetic
-    bench graph doesn't need this; a crawl hub has no such luck). Any
-    total order enumerates each triangle exactly once, so supports are
-    identical; emitted edges are re-canonicalized by id. For the truss
-    peel, degrees of the ORIGINAL graph remain a valid total order on
-    every survivor subset — no per-round degree recount."""
-    if deg is None:
-        e = canon
-    else:
-        d = deg.select(F.col("id"), F.col("degree"))
-        ed = canon.join(
-            d.withColumnsRenamed({"id": "src", "degree": "_ds"}).hint("shuffle_hash"),
-            "src",
-        ).join(
-            d.withColumnsRenamed({"id": "dst", "degree": "_dd"}).hint("shuffle_hash"),
-            "dst",
-        )
-        fwd = F.struct("_ds", "src") < F.struct("_dd", "dst")
-        e = ed.select(
-            F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("src"),
-            F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
-        )
-    ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    bc = e.select(F.col("src").alias("b"), F.col("dst").alias("c")).hint("shuffle_hash")
-    ac = e.select(F.col("src").alias("a"), F.col("dst").alias("c")).hint("shuffle_hash")
-    tri = ab.join(bc, "b").join(ac, ["a", "c"])  # one row per triangle
-    pairs = [("a", "b"), ("b", "c"), ("a", "c")]
-    if deg is None:
-        sides = [
-            tri.select(F.col(x).alias("src"), F.col(y).alias("dst")) for x, y in pairs
-        ]  # orientation IS canonical (a<b<c by id)
-    else:
-        sides = [
-            tri.select(F.least(x, y).alias("src"), F.greatest(x, y).alias("dst"))
-            for x, y in pairs
-        ]
-    per_edge = sides[0].unionAll(sides[1]).unionAll(sides[2])
+    """(src, dst, support) for canonical edges with ≥1 triangle: each
+    triangle of :func:`.triangles.triangles` counts once for each of its
+    three edges, re-canonicalized by id (the enumeration order may be
+    (degree, id)). ``deg`` switches to degree orientation, which kills
+    the wedge blowup of a mid-id hub (a hub that is its block's MINIMUM
+    id is harmless under id order, which is why the synthetic bench graph
+    doesn't need it; a crawl hub has no such luck). For the truss peel,
+    degrees of the ORIGINAL graph remain a valid total order on every
+    survivor subset — no per-round degree recount."""
+    sides = [
+        F.struct(F.least(x, y).alias("src"), F.greatest(x, y).alias("dst"))
+        for x, y in (("a", "b"), ("b", "c"), ("a", "c"))
+    ]
+    per_edge = triangles(canon, deg).select(F.inline(F.array(*sides)))
     return per_edge.groupBy("src", "dst").agg(F.count("*").alias("support"))
 
 
 def ktruss(
-    spark: SparkSession,
-    edges: DataFrame,
-    k: int,
-    max_rounds: int = 64,
-    orient_by_degree: bool = False,
-    _pinned: bool = False,
-    _deg: DataFrame | None = None,
+    spark: SparkSession, edges: DataFrame, k: int, orient_by_degree: bool = False
 ) -> tuple[DataFrame, dict]:
     """→ (edges (src, dst) of the k-truss, info): the maximal subgraph
-    whose every edge sits in ≥ k−2 triangles WITHIN the subgraph —
-    iterative support peel (Cohen's MapReduce k-truss): recount supports
-    over survivors, drop edges below k−2, repeat to fixpoint.
-
-    Each round is one triangle enumeration + one filter over a set that
-    only shrinks; peeling is monotone, so re-running a converged round is
-    a no-op (the property the unrolled DuckDB twin relies on).
-    localCheckpoint truncates lineage per round, and the superseded
-    round's checkpoint blocks are unpersisted immediately (the runner's
-    prev-unpersist discipline — without it the per-round edge snapshots
-    accumulate and a deep peel at 18M edges exhausts the executor
-    heap). ``_pinned`` (internal, truss_decomposition) declares the
-    input already canonical + checkpointed: skips the redundant copy
-    and never unpersists the caller-owned input. ``orient_by_degree``
-    enumerates under the original graph's (degree, id) order — a valid
-    total order on every survivor subset, identical peel result,
-    hub-skew-safe (``_deg`` lets truss_decomposition pass the degree
-    table once instead of recomputing per stage)."""
-    e = edges if _pinned else canonicalize(edges).localCheckpoint(eager=True)
-    owned = not _pinned
-    deg = _deg
-    if orient_by_degree and deg is None:
-        deg = degrees(symmetrize(e)).localCheckpoint(eager=True)
-    n = e.count()
-    rounds = 0
-    converged = False
-    # NOTE: unlike the message-passing fixpoints, this loop keeps AQE ON —
-    # the wedge join's fan-out is data-dependent and AQE's runtime
-    # partition sizing measurably beats the fixed-partition plan here
-    # (A/B on the bench graph: 4.3 vs 8.2 s, OPTIMIZATION_r06.md).
-    for _ in range(max_rounds):
-        if n == 0:
-            converged = True
-            break
-        sup = _supports(e, deg)
-        kept = (
-            e.join(sup.hint("shuffle_hash"), ["src", "dst"], "left")
-            .filter(F.coalesce("support", F.lit(0)) >= k - 2)
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        n_kept = kept.count()
-        rounds += 1
-        done = n_kept == n
-        if owned:
-            release(e)
-        e, owned, n = kept, True, n_kept
-        if done:
-            converged = True
-            break
-    # ``converged=False`` means the peel hit max_rounds mid-cascade and
-    # the returned edge set may be a SUPERSET of the true k-truss (the
-    # r5 advisor's silent-truncation finding) — surfaced, not raised, so
-    # the bounded-round behavior callers rely on is unchanged.
-    if deg is not None and _deg is None:
-        release(deg)  # built here, not caller-owned
-    return e, {"k": k, "rounds": rounds, "edges": n, "converged": converged}
+    whose every edge sits in ≥ k−2 triangles WITHIN the subgraph — by
+    definition the edges of truss number ≥ k, so this is
+    :func:`truss_decomposition` stopped at ``max_k=k``. info:
+    ``converged`` False iff a peel stage hit its round cap (the edge set
+    may then be a SUPERSET of the k-truss), ``edges`` the edge count,
+    and the decomposition's stage counters."""
+    truss, info = truss_decomposition(
+        spark, edges, max_k=k, orient_by_degree=orient_by_degree
+    )
+    kept = truss.filter(F.col("truss") >= k).select("src", "dst")
+    return kept, {**info, "k": k, "edges": kept.count()}
 
 
 def truss_decomposition(
@@ -360,7 +271,7 @@ def truss_decomposition(
     hub-skew-safe enumeration order, identical truss numbers (degrees
     computed once on the input graph — a valid total order on every
     survivor subset)."""
-    max_rounds = 64  # per-stage safety valve, matching ktruss's default
+    max_rounds = 64  # per-stage safety valve
     canon = canonicalize(edges).localCheckpoint(eager=True)
     deg = (
         degrees(symmetrize(canon)).localCheckpoint(eager=True)
@@ -376,7 +287,10 @@ def truss_decomposition(
     enumerations = 0
     converged = True
     k = 3
-    # AQE stays ON here — see ktruss's note on the wedge join.
+    # NOTE: unlike the message-passing fixpoints, this loop keeps AQE ON —
+    # the wedge join's fan-out is data-dependent and AQE's runtime
+    # partition sizing measurably beats the fixed-partition plan here
+    # (A/B on the bench graph: 4.3 vs 8.2 s, OPTIMIZATION_r06.md).
     while n > 0 and k <= max_k:
         # one triangle enumeration, materialized WITH its support
         # column — every threshold below reads this cache; the

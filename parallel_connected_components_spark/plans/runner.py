@@ -362,8 +362,9 @@ def task_skew_report(
     diagnostic the reference's pthread harness prints as per-thread work
     imbalance (/root/reference/src/pthreads/afforest_simple.c:622-649);
     here a hub key that defeats the partitioner shows up as one long task
-    on the exchange stage. ``stage_ids`` looks up only those stages;
-    otherwise every retained stage is read, ~1 ms each. Best-effort
+    on the exchange stage. ``stage_ids`` looks up only those stages (ids
+    the store no longer holds are skipped); otherwise every retained
+    stage is read, ~1 ms each. Best-effort
     internal API: returns [] if unavailable."""
     try:
         sc = spark.sparkContext
@@ -380,7 +381,14 @@ def task_skew_report(
             ).iterator()
             stages = (it.next() for _ in iter(it.hasNext, False))
         else:
-            stages = [store.lastStageAttempt(i) for i in stage_ids]
+            # the store evicts stages past spark.ui.retainedStages (never-run,
+            # skipped stages first), so an id may be gone: skip it
+            stages = []
+            for i in stage_ids:
+                try:
+                    stages.append(store.lastStageAttempt(i))
+                except Exception:  # noqa: BLE001
+                    pass
         q = gw.new_array(jvm.double, 2)
         q[0], q[1] = 0.5, 1.0
         out = []

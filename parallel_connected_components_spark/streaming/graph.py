@@ -54,6 +54,7 @@ on vertex), a CC on the tiny contracted graph, and one relabel join.
 from __future__ import annotations
 
 import os
+from contextlib import ExitStack
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -102,34 +103,35 @@ def update_cc_state(
         .union(edges.select(F.col("dst")))
         .distinct()
     )
-    cur = (
-        verts.join(labels, "vertex", "left")
-        .select("vertex", F.coalesce("label", F.col("vertex")).alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    # contracted merge graph over labels — the only thing CC must run on
-    merge_edges = (
-        contract_edges(edges, cur)
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
-    # full state = old rows ∪ newly seen vertices, relabeled through the
-    # merge result when something merges; labels outside the touched
-    # components pass through
-    new_state = labels.unionByName(
-        cur.join(labels.select("vertex"), "vertex", "left_anti")
-    )
-    if not merge_edges.isEmpty():
-        mlabels, _ = cc_two_phase(spark, merge_edges)
-        remap = mlabels.select(
-            F.col("vertex").alias("label"), F.col("label").alias("_new")
+    with ExitStack() as frees:
+        cur = (
+            verts.join(labels, "vertex", "left")
+            .select("vertex", F.coalesce("label", F.col("vertex")).alias("label"))
+            .localCheckpoint(eager=True)
         )
-        new_state = new_state.join(remap, "label", "left").select(
-            "vertex", F.coalesce("_new", F.col("label")).alias("label")
+        frees.callback(release, cur)
+        # contracted merge graph over labels — the only thing CC must run on
+        merge_edges = (
+            contract_edges(edges, cur)
+            .dropDuplicates(["src", "dst"])
+            .localCheckpoint(eager=True)
         )
-    _tables(spark, state_dir).save_snapshot("labels", new_state)
-    release(cur)
-    release(merge_edges)
+        frees.callback(release, merge_edges)
+        # full state = old rows ∪ newly seen vertices, relabeled through the
+        # merge result when something merges; labels outside the touched
+        # components pass through
+        new_state = labels.unionByName(
+            cur.join(labels.select("vertex"), "vertex", "left_anti")
+        )
+        if not merge_edges.isEmpty():
+            mlabels, _ = cc_two_phase(spark, merge_edges)
+            remap = mlabels.select(
+                F.col("vertex").alias("label"), F.col("label").alias("_new")
+            )
+            new_state = new_state.join(remap, "label", "left").select(
+                "vertex", F.coalesce("_new", F.col("label")).alias("label")
+            )
+        _tables(spark, state_dir).save_snapshot("labels", new_state)
 
 
 def _drain(spark, source_dir, schema_from, state_dir, fold, timeout_sec, what) -> None:
@@ -279,48 +281,48 @@ def update_pagerank_state(
 
     tables = _tables(spark, state_dir)
     cc_dir = os.path.join(state_dir, "cc")
-    delta = (
-        batch_edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=True)
-    )
-    pinned = _pr_pinned_edges(spark, state_dir)
-    new = delta
-    if pinned is not None:
-        # broadcast the (small) delta both ways: the accumulated table is
-        # scanned from cache map-side, never exchanged
-        matched = pinned.edges.join(F.broadcast(delta), ["src", "dst"], "left_semi")
-        new = delta.join(F.broadcast(matched), ["src", "dst"], "left_anti")
-        new = new.localCheckpoint(eager=True)
-        release(delta)
-    n_new = new.count()
-    if n_new:
-        # incremental CC labeling keeps the rescale delta-proportional
-        update_cc_state(spark, new, cc_dir)
-        snap = tables.save_snapshot("edges", new, lineage={"new_edges": n_new})
-        # one exchange over the union; the committed snapshot, not `new`,
-        # feeds it, so the pin's lineage is the old pin and parquet files
-        committed = tables.load("edges", snap)
-        grown = pin_edges(spark, committed if pinned is None else pinned.edges.union(committed))
-        _cache_pinned(spark, state_dir, snap, grown)
-        pinned = grown
-    release(new)
+    with ExitStack() as frees:
+        delta = (
+            batch_edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+            .dropDuplicates(["src", "dst"])
+            .localCheckpoint(eager=True)
+        )
+        frees.callback(release, delta)
+        pinned = _pr_pinned_edges(spark, state_dir)
+        new = delta
+        if pinned is not None:
+            # broadcast the (small) delta both ways: the accumulated table is
+            # scanned from cache map-side, never exchanged
+            matched = pinned.edges.join(F.broadcast(delta), ["src", "dst"], "left_semi")
+            new = delta.join(F.broadcast(matched), ["src", "dst"], "left_anti")
+            new = new.localCheckpoint(eager=True)
+            frees.callback(release, new)
+        n_new = new.count()
+        if n_new:
+            # incremental CC labeling keeps the rescale delta-proportional
+            update_cc_state(spark, new, cc_dir)
+            snap = tables.save_snapshot("edges", new, lineage={"new_edges": n_new})
+            # one exchange over the union; the committed snapshot, not `new`,
+            # feeds it, so the pin's lineage is the old pin and parquet files
+            committed = tables.load("edges", snap)
+            grown = pin_edges(spark, committed if pinned is None else pinned.edges.union(committed))
+            _cache_pinned(spark, state_dir, snap, grown)
+            pinned = grown
 
-    if pinned is None:  # first-ever fold carried zero (new) edges
-        return 0
+        if pinned is None:  # first-ever fold carried zero (new) edges
+            return 0
 
-    labels = prev = None
-    if tables.latest_snapshot("ranks") >= 0:
-        labels = cc_state_labels(spark, cc_dir).localCheckpoint(eager=True)
-        prev = _rescale_by_component(labels, tables.load("ranks"))
-    ranks, runner = pagerank(
-        spark, pinned, damping=damping, tol=tol,
-        max_iterations=max_iterations, init_ranks=prev,
-    )
-    tables.save_snapshot("ranks", ranks)
-    release(ranks)
-    if labels is not None:
-        release(labels)
+        prev = None
+        if tables.latest_snapshot("ranks") >= 0:
+            labels = cc_state_labels(spark, cc_dir).localCheckpoint(eager=True)
+            frees.callback(release, labels)
+            prev = _rescale_by_component(labels, tables.load("ranks"))
+        ranks, runner = pagerank(
+            spark, pinned, damping=damping, tol=tol,
+            max_iterations=max_iterations, init_ranks=prev,
+        )
+        frees.callback(release, ranks)
+        tables.save_snapshot("ranks", ranks)
     return runner.num_iterations
 
 
@@ -379,54 +381,54 @@ def update_triangle_state(
     mid-fold crash recomputes against exactly the pre-fold state. A batch
     with no new edges has delta 0 and commits nothing."""
     from ..operators.graph import canonicalize
-    from ..operators.triangles import triangle_count
+    from ..operators.triangles import triangles
 
     total = triangle_state_total(state_dir)
     s = triangle_state_edges(spark, state_dir)
     b = canonicalize(batch_edges)
     if s is not None:
         b = b.join(s, ["src", "dst"], "left_anti")
-    b = b.localCheckpoint(eager=True)
-    n_new = b.count()
-    if not n_new:
-        release(b)
-        return {"delta": 0, "total": total}
-    # t3: triangles wholly inside the batch
-    delta = triangle_count(spark, b)
-    if s is not None:
-        sym_s = s.unionByName(
-            s.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).localCheckpoint(eager=True)
-        # t1: B edge closed by an S-S wedge through any common neighbor x
-        t1 = (
-            b.join(sym_s.select(F.col("src").alias("src"), F.col("dst").alias("x")), "src")
-            .join(
-                sym_s.select(F.col("src").alias("dst"), F.col("dst").alias("x")),
-                ["dst", "x"],
+    with ExitStack() as frees:
+        b = b.localCheckpoint(eager=True)
+        frees.callback(release, b)
+        n_new = b.count()
+        if not n_new:
+            return {"delta": 0, "total": total}
+        # t3: triangles wholly inside the batch (b is canonical already)
+        delta = triangles(b).count()
+        if s is not None:
+            sym_s = s.unionByName(
+                s.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            ).localCheckpoint(eager=True)
+            frees.callback(release, sym_s)
+            # t1: B edge closed by an S-S wedge through any common neighbor x
+            t1 = (
+                b.join(sym_s.select(F.col("src").alias("src"), F.col("dst").alias("x")), "src")
+                .join(
+                    sym_s.select(F.col("src").alias("dst"), F.col("dst").alias("x")),
+                    ["dst", "x"],
+                )
+                .count()
             )
-            .count()
-        )
-        release(sym_s)
-        # t2: wedge of two B edges (shared center vertex), endpoints a < c,
-        # closed by an S edge (a, c) — the center is unique per triangle
-        sym_b = b.unionByName(
-            b.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        wedges2 = (
-            sym_b.select(F.col("src").alias("center"), F.col("dst").alias("a"))
-            .join(
-                sym_b.select(F.col("src").alias("center"), F.col("dst").alias("c")),
-                "center",
+            # t2: wedge of two B edges (shared center vertex), endpoints a < c,
+            # closed by an S edge (a, c) — the center is unique per triangle
+            sym_b = b.unionByName(
+                b.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-            .where(F.col("a") < F.col("c"))
+            wedges2 = (
+                sym_b.select(F.col("src").alias("center"), F.col("dst").alias("a"))
+                .join(
+                    sym_b.select(F.col("src").alias("center"), F.col("dst").alias("c")),
+                    "center",
+                )
+                .where(F.col("a") < F.col("c"))
+            )
+            t2 = wedges2.join(s, (wedges2.a == s.src) & (wedges2.c == s.dst), "left_semi").count()
+            delta += t1 + t2
+        total += delta
+        _tables(spark, state_dir).save_snapshot(
+            "edges", b, lineage={"new_edges": n_new, "delta": delta, "total": total}
         )
-        t2 = wedges2.join(s, (wedges2.a == s.src) & (wedges2.c == s.dst), "left_semi").count()
-        delta += t1 + t2
-    total += delta
-    _tables(spark, state_dir).save_snapshot(
-        "edges", b, lineage={"new_edges": n_new, "delta": delta, "total": total}
-    )
-    release(b)
     return {"delta": delta, "total": total}
 
 

@@ -200,7 +200,7 @@ and two-phase finishes it under `partition_by="auto"`, which samples
 edge locality and picks range on spatially-numbered ids and hash
 otherwise (the notes column names the pick). Two-phase merges in one
 driver union-find while the contracted graph fits under
-`final_local_threshold` (2M rows), and in distributed star rounds above.
+`cc.FINAL_LOCAL_THRESHOLD` (2M rows), and in distributed star rounds above.
 {END_MARK}"""
     splice_md(md, BEGIN_MARK, END_MARK, generated)
 

@@ -49,7 +49,7 @@ def gen_component_graph(num_vertices: int, num_components: int, extra_per_vertex
 
 ALGOS = {
     "stars": lambda spark, e: cc_alternating_stars(spark, e)[0],
-    "two_phase": lambda spark, e: cc_two_phase(spark, e, num_partitions=4)[0],
+    "two_phase": lambda spark, e: cc_two_phase(spark, e)[0],
     "label_prop": lambda spark, e: cc_label_propagation(spark, symmetrize(e))[0],
 }
 

@@ -350,6 +350,32 @@ def test_task_skew_report_reads_executed_stages(spark):
     )
 
 
+def test_task_skew_report_skips_stage_ids_the_store_evicted(spark):
+    """A stage id the app-status store no longer holds (it evicts stages
+    past ``spark.ui.retainedStages``, skipped ones first) is skipped; the
+    stages it still holds are reported as without it."""
+    from parallel_connected_components_spark.plans.runner import task_skew_report
+
+    sc = spark.sparkContext
+    sc.addJobTag("skew-report-evicted")
+    try:
+        spark.range(0, 200_000, 1, 8).selectExpr("id % 97 AS k").groupBy(
+            "k"
+        ).count().count()
+    finally:
+        sc.removeJobTag("skew-report-evicted")
+    ids = {
+        sid for job in sc._jsc.sc().statusTracker().getJobIdsForTag("skew-report-evicted")
+        for sid in sc.statusTracker().getJobInfo(job).stageIds
+    }
+    held = task_skew_report(spark, min_tasks=2, min_stage_ms=0, stage_ids=ids)
+    assert held
+    gone = max(ids) + 1_000_000
+    assert task_skew_report(
+        spark, min_tasks=2, min_stage_ms=0, stage_ids=ids | {gone}
+    ) == held
+
+
 def test_iceberg_load_ordinal_bounds(spark, tmp_path):
     tl = _FakeIcebergLayer(spark, tmp_path)
     tl.save_snapshot("t", spark.range(3).selectExpr("id AS n"))

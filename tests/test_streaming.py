@@ -466,15 +466,16 @@ def test_pagerank_fold_failing_in_cc_update_replays_into_cc_state(
     assert len(calls) == 3  # the replay merged the batch into the CC state
 
 
-def test_folds_leave_no_checkpoint_persisted(spark, tmp_path):
+def test_folds_leave_no_checkpoint_persisted(spark, tmp_path, monkeypatch):
     """A second fold of each kind leaves no new persisted RDD, except the
     PageRank fold's pinned edge cache (it replaces the first fold's), and
     the exact k-means fit leaves none: every one-shot checkpoint is
-    released. Python GC is off so that a collection cannot free a leaked
-    checkpoint during the check."""
+    released. So does a second fold whose inner step raises (CC's merge,
+    the triangle enumeration, PageRank's CC update). Python GC is off so
+    that a collection cannot free a leaked checkpoint during the check."""
     import gc
 
-    from parallel_connected_components_spark.operators import kmeans_fit
+    from parallel_connected_components_spark.operators import cc, kmeans_fit, triangles
     from parallel_connected_components_spark.streaming import graph as sg
 
     _, _, (d1, d2) = _chain_batches(spark)
@@ -483,11 +484,16 @@ def test_folds_leave_no_checkpoint_persisted(spark, tmp_path):
     def persisted():
         return set(jsc.getPersistentRDDs().keySet())
 
+    def boom(*args, **kwargs):
+        raise RuntimeError("inner step failed")
+
     folds = {
         "cc": lambda d, st: sg.update_cc_state(spark, d, st),
         "triangles": lambda d, st: sg.update_triangle_state(spark, d, st),
         "pagerank": lambda d, st: sg.update_pagerank_state(spark, d, st, tol=1e-4),
     }
+    failing = {"cc": (cc, "cc_two_phase"), "triangles": (triangles, "triangles"),
+               "pagerank": (sg, "update_cc_state")}
     vecs = spark.createDataFrame(
         [(i, [float(i % 3), float(i % 5)]) for i in range(30)],
         "vec_id long, embedding array<double>",
@@ -498,6 +504,11 @@ def test_folds_leave_no_checkpoint_persisted(spark, tmp_path):
             state = str(tmp_path / kind)
             fold(d1, state)
             before = persisted()
+            with monkeypatch.context() as m:
+                m.setattr(*failing[kind], boom)
+                with pytest.raises(RuntimeError, match="inner step failed"):
+                    fold(d2, state)
+            assert persisted() - before == set(), (kind, "raised")
             fold(d2, state)
             left = persisted() - before
             if kind == "pagerank":

@@ -24,6 +24,16 @@ from parallel_connected_components_spark.operators import (
     truss_python_oracle,
     walk_cooccurrence,
 )
+from parallel_connected_components_spark.operators.graph import (
+    canonicalize,
+    degrees,
+    symmetrize,
+)
+from parallel_connected_components_spark.operators.triangles import (
+    triangles,
+    triangles_per_vertex,
+)
+from tests.test_cc import rdds_read_by
 
 
 def _rand_edges(seed, n=24, m=70):
@@ -82,29 +92,33 @@ def test_ktruss_k5_on_k5_clique(spark):
     assert got[(4, 9)] == 2 and got[(9, 11)] == 2
 
 
-def test_ktruss_unpersists_only_its_own_degree_table(spark, monkeypatch):
-    """ktruss(orient_by_degree=True) builds an (id, degree) table when the
-    caller passes none, and must unpersist it before returning; a
-    caller-passed ``_deg`` stays caller-owned."""
-    from parallel_connected_components_spark.operators.graph import degrees, symmetrize
+@pytest.mark.parametrize("op", ["ktruss", "truss_decomposition"])
+def test_truss_family_leaves_only_its_output_checkpoints(spark, op):
+    """ktruss and truss_decomposition under degree orientation release
+    every checkpoint they supersede (the canonical input, the degree
+    table, each round's supports and truss table): the persisted RDDs a
+    call leaves behind are exactly those its output reads. Python GC is
+    off so that a collection cannot free a leak during the check."""
+    import gc
 
     k5 = [(i, j) for i in range(5) for j in range(i + 1, 5)]
-    df = spark.createDataFrame(k5 + [(4, 9), (9, 11)], "src long, dst long")
-    released = []
-    unpersist = type(df).unpersist
-
-    def spy(self, *args, **kwargs):
-        released.append(self.columns)
-        return unpersist(self, *args, **kwargs)
-
-    monkeypatch.setattr(type(df), "unpersist", spy)
-    edges, _ = ktruss(spark, df, k=5, orient_by_degree=True)
-    assert {(r.src, r.dst) for r in edges.collect()} == set(k5)
-    assert ["id", "degree"] in released
-    released.clear()
-    own = degrees(symmetrize(df)).localCheckpoint(eager=True)
-    ktruss(spark, df, k=5, orient_by_degree=True, _deg=own)
-    assert ["id", "degree"] not in released
+    rest = [(4, 9), (3, 9), (9, 11)]  # a 3-truss triangle and a pendant
+    df = spark.createDataFrame(k5 + rest, "src long, dst long")
+    jsc = spark.sparkContext._jsc
+    gc.disable()
+    try:
+        before = set(jsc.getPersistentRDDs().keySet())
+        if op == "ktruss":
+            out, _ = ktruss(spark, df, k=4, orient_by_degree=True)
+        else:
+            out, _ = truss_decomposition(spark, df, orient_by_degree=True)
+        after = set(jsc.getPersistentRDDs().keySet())
+        left, read = after - before, rdds_read_by(out) & after
+        got = {(r.src, r.dst) for r in out.collect()}
+    finally:
+        gc.enable()
+    assert left == read, (sorted(left), sorted(read))
+    assert got == set(k5) if op == "ktruss" else got == set(k5 + rest)
 
 
 # ------------------------------------------------------- clustering coeff
@@ -292,26 +306,39 @@ def test_walk_cooccurrence_differential(spark):
 # ------------------------------------------------------------- plan shape
 
 
-def test_support_enumeration_plan_shape(spark):
-    """The triangle-enumeration joins must execute as ShuffledHashJoin
-    with the EDGE table as build side and never fall back to sort-merge:
-    the wedge stream is unbounded (self-join fan-out) so it must stay
-    the probe/stream side — a build-side flip was a measured executor
-    OOM at 18M edges, and sort-merge's sorts were a measured 2.4x
-    overhead (COVERAGE.md round-5 notes)."""
-    edge_list = _rand_edges(31, n=40, m=160)
-    df = spark.createDataFrame(edge_list, "src long, dst long")
-    sup = edge_support(spark, df)
-    sup.collect()  # executed (final, AQE-resolved) plan
-    plan = sup._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, plan
-    assert "ShuffledHashJoin" in plan, plan
-    # every hash build is BuildRight: probe (stream) side is always the
-    # wedge stream / canonical table on the left
+@pytest.mark.parametrize("orient_by_degree", [False, True])
+@pytest.mark.parametrize("frame", ["triangles", "triangles_per_vertex", "edge_support"])
+def test_support_enumeration_plan_shape(spark, frame, orient_by_degree):
+    """Every join of the triangle family — the enumerator's frame (what
+    triangle_count counts), the per-vertex counts and the edge supports,
+    under id and under degree orientation — must execute as
+    ShuffledHashJoin with the EDGE (or degree) table as build side and
+    never fall back to sort-merge or broadcast: the wedge stream is
+    unbounded (self-join fan-out) so it must stay the probe/stream side —
+    a build-side flip was a measured executor OOM at 18M edges, and
+    sort-merge's sorts were a measured 2.4x overhead (COVERAGE.md round-5
+    notes). An un-hinted degree join broadcasts the degree table at this
+    size and sort-merges once it passes the broadcast threshold."""
     import re
 
+    edge_list = _rand_edges(31, n=40, m=160)
+    df = spark.createDataFrame(edge_list, "src long, dst long")
+    if frame == "triangles":
+        deg = degrees(symmetrize(df)) if orient_by_degree else None
+        out = triangles(canonicalize(df), deg)
+    elif frame == "triangles_per_vertex":
+        out = triangles_per_vertex(spark, df, orient_by_degree=orient_by_degree)
+    else:
+        out = edge_support(spark, df, orient_by_degree=orient_by_degree)
+    out.collect()  # executed (final, AQE-resolved) plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    # every hash build is BuildRight: probe (stream) side is always the
+    # wedge stream / canonical table on the left
     builds = re.findall(r"ShuffledHashJoin .*?(Build\w+)", plan)
-    assert builds and all(b == "BuildRight" for b in builds), plan
+    assert len(builds) >= 2 + 2 * orient_by_degree, plan
+    assert all(b == "BuildRight" for b in builds), plan
 
 
 def test_link_prediction_scale_fold_matches_exact(spark):
