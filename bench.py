@@ -185,14 +185,19 @@ def main() -> None:
     )
 
     def run_cc_2p():
-        labels, runner = cc_two_phase(spark, edges_canon, assume_canonical=True)
+        from parallel_connected_components_spark.operators.graph import pin_edges
+
+        # edges_canon is canonical already: pinned, two-phase reads it as is
+        pinned = pin_edges(spark, edges_canon, sort=False)
+        labels, runner = cc_two_phase(spark, pinned)
         ncomp = count_components(labels)
+        pinned.edges.unpersist()
         assert ncomp == expected_components, f"cc wrong: {ncomp}"
         return runner
 
     timed("cc_two_phase", run_cc_2p)
 
-    # Afforest (sampling pre-rounds + giant skip): timed OUTSIDE the
+    # Afforest (sampling pre-rounds + contraction finish): timed OUTSIDE the
     # headline sum — it is an alternative algorithm for the same result
     # as cc_labelprop (BENCH/BASELINE.md records the shootout; frontier
     # label-prop is the default), so adding it to the suite total would

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from .operators import (
     canonicalize,
+    cc_label_propagation,
     cc_two_phase,
     component_stats,
     count_components,
@@ -239,30 +240,22 @@ def main(argv: list[str] | None = None) -> int:
                     "use a plain input path for durable snapshots"
                 )
             algo = "labelprop" if args.algorithm == "auto" else args.algorithm
-            verts = _bucketed_vertices(spark, args.bucketed)
             if algo == "labelprop":
-                from .operators import cc_label_propagation
-
-                e = pin_bucketed_edges(
-                    spark, _bkt_table(args.bucketed, "sym"),
-                    _os.path.join(args.bucketed, "sym"),
-                )
-                labels, runner = cc_label_propagation(
-                    spark, e, vertices=verts, max_iterations=args.max_iterations,
-                )
+                cc_fn, table = cc_label_propagation, "sym"
             elif algo == "two_phase":
-                e, _ = pin_bucketed_edges(
-                    spark, _bkt_table(args.bucketed, "canon"),
-                    _os.path.join(args.bucketed, "canon"),
-                )
-                labels, runner = cc_two_phase(
-                    spark, e, partition_by="pre", assume_canonical=True,
-                    vertices=verts, max_iterations=args.max_iterations,
-                )
+                cc_fn, table = cc_two_phase, "canon"
             else:
                 raise SystemExit(
                     "--bucketed supports --algorithm labelprop or two_phase"
                 )
+            e = pin_bucketed_edges(
+                spark, _bkt_table(args.bucketed, table),
+                _os.path.join(args.bucketed, table),
+            )
+            labels, runner = cc_fn(
+                spark, e, vertices=_bucketed_vertices(spark, args.bucketed),
+                max_iterations=args.max_iterations,
+            )
             out["algorithm"] = algo
             out["num_components"] = count_components(labels)
             out["iterations"] = runner.num_iterations
@@ -304,8 +297,6 @@ def main(argv: list[str] | None = None) -> int:
                     max_iterations=args.max_iterations,
                 )
             elif args.algorithm == "labelprop":
-                from .operators import cc_label_propagation
-
                 labels, runner = cc_label_propagation(
                     spark, symmetrize(edges), vertices=verts,
                     checkpoint_dir=args.checkpoint_dir, resume=args.resume,

@@ -3,7 +3,6 @@ from .graph import (  # noqa: F401
     canonicalize,
     degree_stats,
     degrees,
-    detect_hubs,
     edges_from_pages,
     symmetrize,
     vertices_from_pages,
@@ -56,7 +55,6 @@ from .stats import (  # noqa: F401
     component_sizes,
     component_stats,
     count_components_approx,
-    exclude_giant_component,
     giant_component_sample,
     top_components,
 )

@@ -1,7 +1,8 @@
-"""Connected components — three Spark-native algorithms + the oracle.
+"""Connected components — four Spark-native algorithms, a hybrid and the
+oracle.
 
 The reference implements ~15 CC variants over 5 backends (SURVEY.md §2.4);
-they collapse into three genuinely distinct dataflow strategies here:
+they collapse into these dataflow strategies here:
 
 1. :func:`cc_alternating_stars` — large-star/small-star (Kiveris et al.,
    "Connected Components in MapReduce and Beyond"), the DataFrame
@@ -12,16 +13,29 @@ they collapse into three genuinely distinct dataflow strategies here:
    ``mapInPandas`` (path-halving + union-by-min, the reference's oracle
    algorithm /root/reference/src/cc_sequential.c:264-368, run on each
    partition's edge batch) contracting the graph by ~the average local
-   component size, then alternating stars on the contracted remainder.
-   This is the Spark blueprint of the MPI distributed union-find
-   (/root/reference/src/mpi/cc_mpi.c:2018-2341): local UF per rank,
-   batched exchange of cross-rank (root,root) edges, iterate.
-3. :func:`cc_label_propagation` — min-label propagation with the
+   component size, then a driver union-find or alternating stars on the
+   contracted remainder. This is the Spark blueprint of the MPI
+   distributed union-find (/root/reference/src/mpi/cc_mpi.c:2018-2341):
+   local UF per rank, batched exchange of cross-rank (root,root) edges,
+   iterate.
+3. :func:`cc_afforest` — k-neighbor sampling pre-rounds resolved by
+   two-phase, then the hand-off below.
+4. :func:`cc_label_propagation` — min-label propagation with the
    frontier/delta optimization (queue + in_queue bitmap in the
    reference, /root/reference/src/cc_sequential.c:75-162; here a
    semi-join of edges against the changed-vertex set).
+5. :func:`cc_auto` — label propagation with a stall detector that hands a
+   high-diameter graph off to two-phase.
 
-All three converge to identical labels under the min-vertex-id convention
+The hand-off, :func:`relabel`, is how every partly solved labeling
+finishes (Afforest's phase b, cc_auto's stall escape, the streaming CC
+fold): contract the edges through the labels at hand
+(``graph.contract_edges``), resolve the small remainder with two-phase
+and map each label through the result — the reference's Afforest skip
+(/root/reference/src/cc_openmp.c:596-613) and MPI final merge
+(/root/reference/src/mpi/cc_mpi.c:1393-1406).
+
+All converge to identical labels under the min-vertex-id convention
 (union-by-minimum /root/reference/src/cc_sequential.c:325-331) — the
 reference's cross-algorithm differential test
 (/root/reference/benchmarks/benchmark_sequential.c:81-98) is reproduced in
@@ -30,9 +44,10 @@ tests/ by asserting pairwise equality plus equality with
 
 Skew: hub vertices make some neighborhoods enormous. The groupBy-min
 aggregations are safe (partial aggregation bounds reduce-side rows per key
-by the map-task count). The Afforest giant-component trick
-(/root/reference/src/cc_openmp.c:596-613) generalizes to the frontier:
-resolved regions leave the frontier and stop shuffling.
+by the map-task count). Resolved regions stop shuffling: they leave the
+frontier in label propagation, and the hand-off's contraction drops
+every edge inside an already labeled region, the giant component's
+included.
 """
 
 from __future__ import annotations
@@ -200,7 +215,8 @@ def cc_alternating_stars(
 
 
 # --------------------------------------------------------------------------
-# 2. Two-phase: partition-local union-find contraction + stars
+# 2. Two-phase: partition-local union-find contraction + merge, and the
+#    hand-off that finishes a partly solved labeling through it
 # --------------------------------------------------------------------------
 
 def estimate_edge_locality(
@@ -378,11 +394,10 @@ FINAL_LOCAL_THRESHOLD = 2_000_000
 
 def cc_two_phase(
     spark: SparkSession,
-    edges: DataFrame,
+    edges: DataFrame | Pinned,
     vertices: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     max_iterations: int = 50,
-    assume_canonical: bool = False,
     partition_by: str = "hash",
 ) -> tuple[DataFrame, FixpointRunner]:
     """Local-UF contraction, then merge of the contracted graph.
@@ -392,11 +407,16 @@ def cc_two_phase(
     the MPI UF (local pass, then only cross-partition (root, root) edges
     travel, /root/reference/src/mpi/cc_mpi.c:2018-2341).
 
-    ``partition_by``: "hash" (default), "range", "auto" (sample edge
-    locality and pick), or "pre" (input is already partitioned — e.g. a
-    bucketed canonical table — phase 1 runs with zero exchange).
-    Contraction quality is
-    entirely a function of how much of the graph is partition-LOCAL:
+    A DataFrame ``edges`` is canonicalized and laid out by
+    ``partition_by``: "hash" (default), "range" or "auto" (sample edge
+    locality and pick). A :class:`~.graph.Pinned` table (a bucketed
+    canonical table, sources/bucketed.py) is read partition-as-is: no
+    canonicalize and no exchange in phase 1, and ``partition_by`` does
+    not apply. The local pass needs no canonical form: it drops
+    self-loops, and a duplicate or reversed edge only repeats a union.
+
+    Contraction quality is entirely a function of how much of the graph
+    is partition-LOCAL:
     hash partitioning scatters ids, so on hash-random vertex ids the
     local pass barely contracts (round-2 measurement: 18M → 16.5M).
     When ids CORRELATE with topology — road networks and meshes number
@@ -419,35 +439,27 @@ def cc_two_phase(
     10^12-vertex scale.
     """
     n = spark.sparkContext.defaultParallelism
-    # ``assume_canonical`` skips the dedup shuffle when the caller already
-    # holds a canonical (src<dst, deduped, no-self-loop) edge table
-    canon = edges if assume_canonical else canonicalize(edges)
     partition_info: dict | None = None
-    if partition_by == "auto":
-        # measured (BENCH/BASELINE.md, 2M-vertex grid): range vs hash is
-        # 30.2s vs 51.9s wall / 96 vs 509 MB merge shuffle when ids carry
-        # spatial locality, and a wash on hash-random ids — the caller
-        # shouldn't have to know which regime they're in
-        locality, pinfo = estimate_edge_locality(canon, n)
-        partition_by = "range" if locality >= 0.5 else "hash"
-        partition_info = {**pinfo, "locality": round(locality, 4), "selected": partition_by}
-    if partition_by == "range":
-        parted = canon.repartitionByRange(n, "src")
-    elif partition_by == "hash":
-        parted = canon.repartition(n, "src")
-    elif partition_by == "pre":
-        # Caller already laid the edges out (a bucketed canonical table,
-        # sources/bucketed.py, or any deliberate partitioning): the local
-        # pass reads partitions as-is — zero exchange in phase 1. Pair
-        # with assume_canonical=True, else the canonicalize dedup above
-        # re-shuffles anyway and "pre" buys nothing. Contraction quality
-        # is whatever the caller's layout gives (bucketed-by-src ≈ hash).
-        parted = canon
+    if isinstance(edges, Pinned):
+        parted = edges.edges
     else:
-        raise ValueError(
-            f"partition_by must be 'hash', 'range', 'auto' or 'pre', "
-            f"got {partition_by!r}"
-        )
+        canon = canonicalize(edges)
+        if partition_by == "auto":
+            # measured (BENCH/BASELINE.md, 2M-vertex grid): range vs hash is
+            # 30.2s vs 51.9s wall / 96 vs 509 MB merge shuffle when ids carry
+            # spatial locality, and a wash on hash-random ids — the caller
+            # shouldn't have to know which regime they're in
+            locality, pinfo = estimate_edge_locality(canon, n)
+            partition_by = "range" if locality >= 0.5 else "hash"
+            partition_info = {**pinfo, "locality": round(locality, 4), "selected": partition_by}
+        if partition_by == "range":
+            parted = canon.repartitionByRange(n, "src")
+        elif partition_by == "hash":
+            parted = canon.repartition(n, "src")
+        else:
+            raise ValueError(
+                f"partition_by must be 'hash', 'range' or 'auto', got {partition_by!r}"
+            )
     contracted = (
         parted
         .mapInPandas(_local_uf_partition, schema="src long, dst long")
@@ -486,19 +498,44 @@ def cc_two_phase(
             assume_oriented=True,
         )
     release(contracted)  # unread by the labels: the star runner copies it
-    # Contraction preserves the vertex set (every endpoint of `canon`
-    # appears in the contracted output), so labels already cover all
+    # Contraction preserves the vertex set (every endpoint of a non-loop
+    # edge appears in the contracted output), so labels already cover all
     # non-isolated vertices; attach isolated ones if a vertex table came.
     labels = with_vertices(labels, vertices)
     runner.partition_info = partition_info  # None unless partition_by="auto"
     return labels, runner
 
 
+def relabel(
+    spark: SparkSession, labels: DataFrame, contracted: DataFrame, **two_phase
+) -> tuple[DataFrame, FixpointRunner]:
+    """The hand-off that finishes a partly solved labeling (the Afforest
+    skip, /root/reference/src/cc_openmp.c:596-613; the MPI final merge,
+    /root/reference/src/mpi/cc_mpi.c:1393-1406). ``labels`` (vertex,
+    label) gives each vertex a vertex of its component, and
+    ``contracted`` is an edge table mapped through it
+    (``graph.contract_edges``). :func:`cc_two_phase` (``two_phase`` are
+    its options) resolves ``contracted`` and every label maps through
+    the result, label(v) = root(labels(v)); a label that no contracted
+    edge reaches is final already (left join + coalesce).
+    → (labels, the two-phase runner).
+
+    Exact under the min-id convention whenever each component's minimum
+    vertex m has labels(m) = m: contraction preserves components (l(u)
+    is a vertex of u's component), so the root of m's region is m."""
+    roots, runner = cc_two_phase(spark, contracted, **two_phase)
+    out = labels.join(
+        roots.select(F.col("vertex").alias("label"), F.col("label").alias("_root")),
+        "label",
+        "left",
+    ).select("vertex", F.coalesce("_root", F.col("label")).alias("label"))
+    return out, runner
+
+
 # --------------------------------------------------------------------------
-# 3. Afforest: k-neighbor sampling pre-rounds + giant-component skip
+# 3. Afforest: k-neighbor sampling pre-rounds + the hand-off
 # --------------------------------------------------------------------------
 SAMPLE_ROUNDS = 2  # neighbors sampled per vertex in afforest's phase a
-GIANT_SAMPLES = 1024  # vertices voting in the optional giant detection
 
 
 def cc_afforest(
@@ -507,7 +544,6 @@ def cc_afforest(
     vertices: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     max_iterations: int = 50,
-    detect_giant: bool = False,
 ) -> tuple[DataFrame, FixpointRunner]:
     """Afforest (Sutton/Ben-Nun/Barak, IPDPS'18) re-expressed as Spark
     dataflow — the reference's best algorithm on skewed graphs
@@ -525,26 +561,14 @@ def cc_afforest(
       same min-id fixpoint either way). On power-law graphs this cheap
       pass already collapses most of the giant component.
 
-    giant detection (cc_openmp.c:422-496): ~GIANT_SAMPLES random vertices
-      vote; the plurality label is the probable giant component —
-      recorded in the runner metrics (the reference's skew detector).
-      OFF by default: in the reference the vote *feeds* the skip, but
-      here the contraction subsumes the skip, so the vote is purely
-      diagnostic — a count + sample job that doesn't belong on the
-      critical path unless explicitly requested.
-
-    phase b (the skip, cc_openmp.c:596-613, strengthened): edges whose
-      endpoints share a phase-a label are redundant for connectivity —
-      the reference skips exactly the giant's internal edges; mapping
-      every edge through the phase-a labels and keeping only
-      differing-label pairs drops the giant's internal edges AND every
-      other already-resolved region, i.e. contraction subsumes the
-      giant-component exclusion. The contracted remainder (tiny after a
-      good phase a) finishes with :func:`cc_two_phase`, and final labels
-      compose: label(v) = root(label_a(v)). Sound because phase-a labels
-      are component minima of a SUBgraph (never cross true components)
-      and every dropped edge's endpoints stay connected through their
-      shared representative.
+    phase b (the skip, cc_openmp.c:596-613, strengthened): :func:`relabel`
+      on the edges contracted through the phase-a labels. Contraction
+      drops every edge whose endpoints share a phase-a label: the
+      reference skips exactly the giant's internal edges (after a
+      sampled vote, cc_openmp.c:422-496); here the giant's internal
+      edges go with every other already-resolved region's, so no vote
+      is needed. Sound because phase-a labels are component minima of a
+      SUBgraph (never cross true components).
     """
     canon = canonicalize(edges)
     sym = canon.union(
@@ -578,58 +602,28 @@ def cc_afforest(
     if labels_a.isEmpty():  # edge-less input: everyone is their own component
         return with_vertices(labels_a, vertices), runner
 
-    # giant detection — the sampling vote, recorded like the reference's
-    # "skipping component X (sampled share Y)" progress line. Purely
-    # diagnostic here (the contraction below subsumes the skip), so it is
-    # flag-gated: it costs a count + a sample job on the critical path.
-    if detect_giant:
-        from .stats import giant_component_sample
-
-        giant_label, giant_hits = giant_component_sample(
-            labels_a, num_samples=GIANT_SAMPLES
-        )
-        runner.metrics.append(
-            IterationMetrics(
-                len(runner.metrics), -1, 0.0,
-                extra={"phase": "giant_sample", "giant_label": giant_label,
-                       "giant_hits": giant_hits, "num_samples": GIANT_SAMPLES},
-            )
-        )
-
     # phase b: contract through phase-a labels, finish on the remainder
-    la = labels_a.withColumnsRenamed({"vertex": "src", "label": "_ls"})
-    lb = labels_a.withColumnsRenamed({"vertex": "dst", "label": "_ld"})
-    contracted = (
-        canon.join(la, "src")
-        .join(lb, "dst")
-        .filter(F.col("_ls") != F.col("_ld"))
-        .select(
-            F.least("_ls", "_ld").alias("src"), F.greatest("_ls", "_ld").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    roots, runner_b = cc_two_phase(
-        spark, contracted, vertices=None,
+    labels, runner_b = relabel(
+        spark, labels_a, contract_edges(canon, labels_a),
         checkpoint_dir=checkpoint_dir, max_iterations=max_iterations,
-        assume_canonical=True,
     )
     for m in runner_b.metrics:
         m.extra.setdefault("phase", "b_finish")
     runner.metrics.extend(runner_b.metrics)
-    labels = (
-        labels_a.join(
-            roots.select(F.col("vertex").alias("label"), F.col("label").alias("_root")),
-            "label",
-            "left",
-        )
-        .select("vertex", F.coalesce("_root", F.col("label")).alias("label"))
-    )
     return with_vertices(labels, vertices), runner
 
 
 # --------------------------------------------------------------------------
 # 4. Min-label propagation with frontier
 # --------------------------------------------------------------------------
+
+# The stall detector of cc_label_propagation(stall=True): the loop stops
+# once changed(it) >= STALL_RATIO · changed(it - STALL_WINDOW), after at
+# least STALL_MIN_ITERATIONS rounds. Read at call time.
+STALL_WINDOW = 3
+STALL_RATIO = 0.6
+STALL_MIN_ITERATIONS = 5
+
 
 def cc_label_propagation(
     spark: SparkSession,
@@ -638,9 +632,7 @@ def cc_label_propagation(
     checkpoint_dir: str | None = None,
     max_iterations: int = 200,
     resume: bool = False,
-    stall_window: int = 0,
-    stall_ratio: float = 0.6,
-    stall_min_iterations: int = 5,
+    stall: bool = False,
     raise_on_cap: bool = True,
 ) -> tuple[DataFrame, FixpointRunner]:
     """Jacobi-style min-label propagation
@@ -658,7 +650,7 @@ def cc_label_propagation(
     from a snapshot (which keeps each vertex's ``changed`` flag) simply
     continues.
 
-    ``stall_window=w`` (w > 0) arms a high-diameter stall detector: LP is
+    ``stall=True`` arms a high-diameter stall detector: LP is
     O(diameter) rounds, which on web graphs (diameter ~ log V) converges
     in a handful of rounds but on road-network-like graphs (diameter
     O(sqrt V) — the reference's roadNet-CA/europe_osm validation set,
@@ -667,11 +659,10 @@ def cc_label_propagation(
     changed-count stops decaying: on a web graph `changed` drops
     geometrically (each round resolves a constant fraction), while on a
     lattice the propagation is a wavefront of roughly constant size. When
-    ``changed(it) >= stall_ratio · changed(it - w)`` after at least
-    ``stall_min_iterations`` rounds, the loop exits early with
+    the module's STALL_* test holds, the loop exits early with
     ``runner.stalled = True`` and mid-flight labels — :func:`cc_auto`
-    then finishes the job with O(log n) alternating stars on the
-    label-contracted graph. Default off (w=0): plain LP to convergence.
+    then finishes the job with :func:`relabel`. Default off: plain LP to
+    convergence.
     """
     with pinned(spark, edges_sym, dedup=False) as (e, n_part), vertex_table(
         vertices,
@@ -715,12 +706,12 @@ def cc_label_propagation(
 
         def converged(got: dict, it: int):
             changed = got["changed"] or 0
-            if stall_window > 0 and changed > 0:
+            if stall and changed > 0:
                 changed_history.append(changed)
                 if (
-                    it + 1 >= stall_min_iterations
-                    and len(changed_history) > stall_window
-                    and changed >= stall_ratio * changed_history[-stall_window - 1]
+                    it + 1 >= STALL_MIN_ITERATIONS
+                    and len(changed_history) > STALL_WINDOW
+                    and changed >= STALL_RATIO * changed_history[-STALL_WINDOW - 1]
                 ):
                     runner.stalled = True
                     return 0, {"stalled": True, "changed_at_stall": changed}
@@ -734,7 +725,7 @@ def cc_label_propagation(
 
 
 # --------------------------------------------------------------------------
-# 4. Auto-selecting hybrid: frontier LP with a high-diameter escape hatch
+# 5. Auto-selecting hybrid: frontier LP with a high-diameter escape hatch
 # --------------------------------------------------------------------------
 
 def cc_auto(
@@ -743,9 +734,6 @@ def cc_auto(
     vertices: DataFrame | None = None,
     checkpoint_dir: str | None = None,
     max_iterations: int = 200,
-    stall_window: int = 3,
-    stall_ratio: float = 0.6,
-    stall_min_iterations: int = 5,
 ) -> tuple[DataFrame, dict]:
     """Algorithm-selecting CC: frontier label propagation until it either
     converges (web-graph regime, diameter ~ log V — measured 2.4x faster
@@ -753,19 +741,14 @@ def cc_auto(
     (road-network regime, diameter O(sqrt V) — the reference's
     roadNet-CA/europe_osm validation graphs,
     /root/reference/README.md:120-123, where O(diameter) LP is a
-    scale-killer), in which case the mid-flight labels contract the graph
-    and O(log n) alternating stars finishes.
+    scale-killer), in which case :func:`relabel` finishes from the
+    mid-flight labels.
 
     Correctness of the hand-off: at any LP round, ``l(v)`` is the id of a
-    vertex in v's component (labels only ever arrive over edges), so
-    contracting every edge (u, v) to (l(u), l(v)) preserves the component
-    structure exactly — components of the contracted graph are the images
-    of the original components. Stars then yields, per contracted
-    component, its minimum label value; since the true minimum vertex m
-    of an original component always has ``l(m) = m`` (labels are
-    min-monotone, nothing smaller exists to displace it), that minimum IS
-    the component's min vertex id, and composing
-    ``label(v) = stars_label(l(v))`` gives the exact min-id labeling —
+    vertex in v's component (labels only ever arrive over edges), and the
+    true minimum vertex m of a component always has ``l(m) = m`` (labels
+    are min-monotone, nothing smaller exists to displace it) — the
+    condition under which :func:`relabel` gives the exact min-id labeling,
     identical to every other algorithm in this module (differential test:
     tests/test_highdiam.py).
 
@@ -779,9 +762,7 @@ def cc_auto(
         vertices=vertices,
         checkpoint_dir=checkpoint_dir,
         max_iterations=max_iterations,
-        stall_window=stall_window,
-        stall_ratio=stall_ratio,
-        stall_min_iterations=stall_min_iterations,
+        stall=True,
     )
     info: dict = {
         "algorithm": "label_propagation",
@@ -790,7 +771,7 @@ def cc_auto(
         "lp_iterations": lp_runner.num_iterations,
         "finish_iterations": 0,
     }
-    if not getattr(lp_runner, "stalled", False):
+    if not lp_runner.stalled:
         return lp_labels, info
 
     # High-diameter escape: contract by the mid-flight labels, then finish
@@ -806,27 +787,16 @@ def cc_auto(
     # two_phase's merge IS alternating stars — never worse than before.
     lab = lp_labels.localCheckpoint(eager=True)
     release(lp_labels)
-    contracted = contract_edges(edges_sym, lab)
-    finish_labels, finish_runner = cc_two_phase(
-        spark,
-        contracted,
+    final, finish_runner = relabel(
+        spark, lab, contract_edges(edges_sym, lab),
         max_iterations=max_iterations,
         checkpoint_dir=checkpoint_dir,
         partition_by="auto",
-    )
-    # Compose: label(v) = finish_label(l(v)); labels whose component was
-    # already fully resolved by LP never reach the contracted graph —
-    # left join + coalesce keeps them as-is.
-    finish_map = finish_labels.select(
-        F.col("vertex").alias("label"), F.col("label").alias("_sl")
-    )
-    final = lab.join(finish_map, "label", "left").select(
-        "vertex", F.coalesce("_sl", F.col("label")).alias("label")
     )
     info.update(
         algorithm="lp+two_phase",
         finish_runner=finish_runner,
         finish_iterations=finish_runner.num_iterations,
-        partition_info=getattr(finish_runner, "partition_info", None),
+        partition_info=finish_runner.partition_info,
     )
     return final, info

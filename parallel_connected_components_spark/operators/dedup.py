@@ -207,14 +207,6 @@ def _simhash_from_hashes(hashes: Column, bits: int) -> Column:
     return out
 
 
-def simhash_col(text: Column | str, bits: int = 64) -> Column:
-    """Convenience single-expression form (small/test data — see the HOF
-    re-evaluation note in textstats.shingles_col; hot paths use
-    :func:`simhash_signatures`, which materializes the hash array once)."""
-    words = F.split(normalized_text_col(text), " ")
-    return _simhash_from_hashes(F.transform(words, portable_hash64_col), bits)
-
-
 def simhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 60
 ) -> DataFrame:

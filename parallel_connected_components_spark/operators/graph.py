@@ -89,11 +89,11 @@ def canonicalize(edges: DataFrame) -> DataFrame:
 
 def contract_edges(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Map every edge (u, v) to (label(u), label(v)), dropping
-    now-internal edges — the graph-contraction step shared by cc_auto's
-    LP→stars hand-off, the streaming incremental-CC batch fold, and the
-    (deprecated) prune rewrite's keep/star split. ``labels`` is
-    (vertex, label); edges whose endpoints miss from it keep their own id
-    (vertex = its own label), matching the union-by-min convention.
+    now-internal edges — the contraction that feeds ``cc.relabel``, the
+    hand-off of Afforest's phase b, cc_auto's stall escape and the
+    streaming CC fold. ``labels`` is (vertex, label); edges whose
+    endpoints miss from it keep their own id (vertex = its own label),
+    matching the union-by-min convention.
 
     Contraction preserves components exactly: l(u) is always a vertex of
     u's component, so (l(u), l(v)) connects the same two components
@@ -272,11 +272,3 @@ def degree_stats(edges_sym: DataFrame) -> DataFrame:
         F.count("*").alias("num_vertices"),
     )
 
-
-def detect_hubs(edges_sym: DataFrame, degree_threshold: int) -> DataFrame:
-    """Vertices with degree above threshold — the skew set. The
-    reference's analog is the sampled giant-component detector
-    (cc_openmp.c:422-496); hubs here are the *cause* (power-law in-links)
-    rather than the symptom. Used to route hub keys through the salted
-    aggregation path."""
-    return degrees(edges_sym).filter(F.col("degree") > degree_threshold).select("id", "degree")

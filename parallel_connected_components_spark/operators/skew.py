@@ -9,8 +9,10 @@ engine, ordered by when they apply:
    per-iteration joins: ``plans/runner.py:fixpoint_conf`` turns AQE off
    inside the loops, where partial aggregation before the one message
    exchange bounds a hub's rows instead.
-2. Frontier shrinkage + giant-component exclusion
-   (operators/cc.py, operators/stats.py) — algorithm-level, the
+2. Frontier shrinkage and contraction (operators/cc.py) —
+   algorithm-level: resolved regions leave label propagation's frontier,
+   and the CC hand-off (``cc.relabel``) contracts every resolved
+   region's internal edges away, the giant component's included — the
    Afforest skip (/root/reference/src/cc_openmp.c:596-613).
 3. This module — plan-level two-stage salted aggregation for the cases
    partial aggregation does NOT cover: aggregates with super-constant

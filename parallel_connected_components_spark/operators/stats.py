@@ -9,13 +9,14 @@ Ports of the reference's reporting/aggregation layer (SURVEY.md §2.3):
   → probable largest component (/root/reference/src/cc_openmp.c:422-496,
   /root/reference/src/pthreads/afforest_simple.c:522-611). This is the
   reference's skew detector, feeding the Afforest skip-largest-component
-  path (/root/reference/src/cc_openmp.c:596-613); the Spark analog feeds
-  a broadcast anti-join exclusion set.
+  path (/root/reference/src/cc_openmp.c:596-613). Here it is a report
+  only: Afforest's contraction (``cc.relabel``) drops the giant's
+  internal edges with every other resolved region's, no vote needed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def component_sizes(labels: DataFrame) -> DataFrame:
@@ -76,20 +77,3 @@ def giant_component_sample(
         )
     return top[0]["label"], top[0]["hits"]
 
-
-def exclude_giant_component(
-    spark: SparkSession, edges: DataFrame, labels: DataFrame, giant_label: int
-) -> DataFrame:
-    """Anti-join edges whose endpoints are inside the giant component —
-    the Afforest skip (cc_openmp.c:598-612) as a broadcast anti-join;
-    the giant vertex *set* is only broadcast-able when small, so the
-    filter joins on labels instead: keep edges with at least one endpoint
-    outside."""
-    lab = labels.select(F.col("vertex"), F.col("label"))
-    e = (
-        edges.join(lab.withColumnsRenamed({"vertex": "src", "label": "_ls"}), "src")
-        .join(lab.withColumnsRenamed({"vertex": "dst", "label": "_ld"}), "dst")
-        .filter((F.col("_ls") != F.lit(giant_label)) | (F.col("_ld") != F.lit(giant_label)))
-        .select("src", "dst")
-    )
-    return e

@@ -607,22 +607,16 @@ class FixpointRunner:
     @property
     def num_iterations(self) -> int:
         """CCResult.num_iterations analog (/root/reference/inc/cc_sequential.h:8).
-
-        Counts engine iterations only: diagnostic marker rows (recorded
-        with ``changed == -1``, e.g. Afforest's giant-sample vote) are
-        excluded so the count is comparable across ``--algorithm``
-        choices. Multi-phase algorithms additionally report per-phase
-        counts in :attr:`phase_iterations`."""
-        return sum(1 for m in self.metrics if m.changed >= 0)
+        Multi-phase algorithms additionally report per-phase counts in
+        :attr:`phase_iterations`."""
+        return len(self.metrics)
 
     @property
     def phase_iterations(self) -> dict[str, int]:
         """Iteration count per phase (``extra["phase"]`` tag; untagged
-        metrics count under ``"main"``). Diagnostic rows excluded."""
+        metrics count under ``"main"``)."""
         out: dict[str, int] = {}
         for m in self.metrics:
-            if m.changed < 0:
-                continue
             key = m.extra.get("phase", "main")
             out[key] = out.get(key, 0) + 1
         return out

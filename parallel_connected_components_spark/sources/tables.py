@@ -29,7 +29,8 @@ just as their parquet directories differ.
 Two callers: :class:`~..plans.runner.FixpointRunner` snapshots a loop's
 state every ``snapshot_every`` iterations and resumes from the latest;
 ``streaming/graph.py`` keeps every versioned fold state here, as full
-snapshots (CC labels, PageRank ranks) and as per-fold delta snapshots
+snapshots (CC labels, PageRank ranks; :meth:`TableLayer.expire` deletes
+the superseded ones after each commit) and as per-fold delta snapshots
 (the accumulated edges), which :meth:`TableLayer.load_all` reads back
 as one table (parquet backend only).
 """
@@ -195,7 +196,10 @@ class TableLayer:
         k = meta["latest"] if snap is None else snap
         if k < 0:
             raise FileNotFoundError(f"table {name} has no snapshot")
-        return self.spark.read.parquet(self._snap_dir(name, k))
+        path = self._snap_dir(name, k)
+        if not os.path.isdir(path):  # never written, or expired
+            raise FileNotFoundError(f"table {name} has no data for snapshot {k}")
+        return self.spark.read.parquet(path)
 
     def load_all(self, name: str) -> DataFrame:
         """Every committed snapshot of ``name`` as one table (one multi-path
@@ -210,6 +214,20 @@ class TableLayer:
         return self.spark.read.parquet(
             *(self._snap_dir(name, s["snap"]) for s in snaps)
         )
+
+    def expire(self, name: str) -> None:
+        """Delete the data of every snapshot of ``name`` but the latest: a
+        full-state table is read only at its latest snapshot. The
+        snapshot log keeps every entry; ``load`` of an expired snapshot
+        raises FileNotFoundError. Parquet backend only, as
+        :meth:`load_all`."""
+        if self.backend == "iceberg":
+            raise NotImplementedError("expire deletes parquet snapshots only")
+        keep = os.path.basename(self._snap_dir(name, self.read_meta(name)["latest"]))
+        table = self._table_dir(name)
+        for d in os.listdir(table):
+            if d.startswith("snap=") and d != keep:
+                shutil.rmtree(os.path.join(table, d))
 
     def latest_snapshot(self, name: str) -> int:
         if self.backend == "iceberg":

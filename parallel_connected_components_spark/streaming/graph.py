@@ -38,13 +38,15 @@ PageRank   ``cc/labels``  full: CC of those edges    —
 triangles  ``edges``      delta: the new edges       new_edges, delta, total
 =========  =============  =========================  =======================
 
-A full snapshot is read with ``load`` (the latest), a delta table's
-accumulated edges with ``load_all`` (every committed snapshot as one
-table); a fold with no new edges commits no delta. The tables are
-parquet (``backend="parquet"``): an Iceberg ``TableLayer`` commits by
-replacing the table, so a delta table's history would go with snapshot
-expiry. Iceberg streaming state waits for an append commit and an
-Iceberg runtime to test it against.
+A full snapshot is read with ``load`` (the latest), and each commit of
+one deletes the data of the snapshots it supersedes
+(``TableLayer.expire``; the snapshot log keeps their entries). A delta
+table's accumulated edges are read with ``load_all`` (every committed
+snapshot as one table); a fold with no new edges commits no delta. The
+tables are parquet (``backend="parquet"``): an Iceberg ``TableLayer``
+commits by replacing the table, so a delta table's history would go
+with snapshot expiry. Iceberg streaming state waits for an append
+commit and an Iceberg runtime to test it against.
 
 At 100 TB scale the same foreachBatch plan runs against a Kafka edge
 feed; the per-batch work is one left join against the state table (hash
@@ -55,7 +57,6 @@ from __future__ import annotations
 
 import os
 from contextlib import ExitStack
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -87,7 +88,7 @@ def update_cc_state(
     spark: SparkSession, batch_edges: DataFrame, state_dir: str
 ) -> None:
     """Fold one edge batch into the persistent labeling (exact)."""
-    from ..operators.cc import cc_two_phase
+    from ..operators.cc import relabel
     from ..operators.graph import contract_edges
 
     edges = (
@@ -111,11 +112,7 @@ def update_cc_state(
         )
         frees.callback(release, cur)
         # contracted merge graph over labels — the only thing CC must run on
-        merge_edges = (
-            contract_edges(edges, cur)
-            .dropDuplicates(["src", "dst"])
-            .localCheckpoint(eager=True)
-        )
+        merge_edges = contract_edges(edges, cur).localCheckpoint(eager=True)
         frees.callback(release, merge_edges)
         # full state = old rows ∪ newly seen vertices, relabeled through the
         # merge result when something merges; labels outside the touched
@@ -124,25 +121,30 @@ def update_cc_state(
             cur.join(labels.select("vertex"), "vertex", "left_anti")
         )
         if not merge_edges.isEmpty():
-            mlabels, _ = cc_two_phase(spark, merge_edges)
-            remap = mlabels.select(
-                F.col("vertex").alias("label"), F.col("label").alias("_new")
-            )
-            new_state = new_state.join(remap, "label", "left").select(
-                "vertex", F.coalesce("_new", F.col("label")).alias("label")
-            )
-        _tables(spark, state_dir).save_snapshot("labels", new_state)
+            new_state, _ = relabel(spark, new_state, merge_edges)
+        tables = _tables(spark, state_dir)
+        tables.save_snapshot("labels", new_state)
+        tables.expire("labels")
 
 
-def _drain(spark, source_dir, schema_from, state_dir, fold, timeout_sec, what) -> None:
+def incremental_cc_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema_from: str,
+    state_dir: str,
+    timeout_sec: int = 120,
+) -> None:
     """Drain all currently-available edge files (availableNow trigger)
-    through foreachBatch into ``fold(spark, batch)``. Restartable: the
-    stream checkpoint under ``state_dir`` tracks consumed files, so a
-    re-run after new files arrive folds only the new edges."""
+    through foreachBatch into the persistent labeling. Restartable: the
+    stream checkpoint under ``state_dir`` tracks consumed files, the
+    labels state tracks the unions, so a re-run after new files arrive
+    folds only the new edges."""
     schema = spark.read.parquet(schema_from).schema
     q = (
         spark.readStream.schema(schema).parquet(source_dir).writeStream
-        .foreachBatch(lambda batch_df, _: fold(batch_df.sparkSession, batch_df))
+        .foreachBatch(
+            lambda batch_df, _: update_cc_state(batch_df.sparkSession, batch_df, state_dir)
+        )
         .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
@@ -153,23 +155,9 @@ def _drain(spark, source_dir, schema_from, state_dir, fold, timeout_sec, what) -
         # fail loudly (round-4 review)
         q.stop()
         raise TimeoutError(
-            f"incremental {what} stream did not drain within {timeout_sec}s; "
+            f"incremental CC stream did not drain within {timeout_sec}s; "
             "state is mid-fold — re-run to continue from the checkpoint"
         )
-
-
-def incremental_cc_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema_from: str,
-    state_dir: str,
-    timeout_sec: int = 120,
-) -> None:
-    """Drain the edge-file feed into the persistent labeling (see
-    :func:`_drain`): the stream checkpoint tracks consumed files, the
-    labels state tracks the unions."""
-    fold = partial(update_cc_state, state_dir=state_dir)
-    _drain(spark, source_dir, schema_from, state_dir, fold, timeout_sec, "CC")
 
 
 # ---------------------------------------------------------------------------
@@ -323,26 +311,13 @@ def update_pagerank_state(
         )
         frees.callback(release, ranks)
         tables.save_snapshot("ranks", ranks)
+        tables.expire("ranks")
     return runner.num_iterations
 
 
 def pagerank_state_ranks(spark: SparkSession, state_dir: str) -> DataFrame:
     """Latest committed ranks(vertex, rank), empty before the first batch."""
     return _latest(spark, state_dir, "ranks", "vertex long, rank double")
-
-
-def incremental_pagerank_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema_from: str,
-    state_dir: str,
-    timeout_sec: int = 300,
-    tol: float = 1e-6,
-) -> None:
-    """Drain the edge-file feed into the warm-started rank state; same
-    contract as :func:`incremental_cc_stream`."""
-    fold = partial(update_pagerank_state, state_dir=state_dir, tol=tol)
-    _drain(spark, source_dir, schema_from, state_dir, fold, timeout_sec, "PageRank")
 
 
 # ---------------------------------------------------------------------------

@@ -181,17 +181,51 @@ def test_afforest_hub_graph(spark):
     e = spark.createDataFrame(edges, "src long, dst long")
     from parallel_connected_components_spark.operators import cc_afforest
 
-    # detect_giant defaults False since round 3 (the vote is diagnostic —
-    # the contraction subsumes the skip); request it to pin its output
-    labels, runner = cc_afforest(spark, e, detect_giant=True)
+    labels, runner = cc_afforest(spark, e)
     assert labels_dict(labels) == union_find_oracle(edges)
-    giant = [m for m in runner.metrics if m.extra.get("phase") == "giant_sample"]
-    assert giant and giant[0].extra["giant_label"] == 0
-    # per-phase iteration counts split sampling from the finish, and the
-    # diagnostic marker row is excluded from num_iterations
+    # per-phase iteration counts split sampling from the finish
     phases = runner.phase_iterations
     assert set(phases) <= {"a_sample", "b_finish"} and phases["a_sample"] >= 1
     assert runner.num_iterations == sum(phases.values())
+
+
+# two paths and a cycle, ids at both ends of the int64 range
+HANDOFF_EDGES = [
+    (-(2**63), 5), (5, 3), (3, 9), (9, 1),
+    (100, 2**63 - 1), (2**63 - 1, 50), (50, 70), (70, 60),
+    (10, 30), (30, 20), (20, 40), (40, 11), (11, 10),
+]
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_relabel_finishes_capped_label_propagation(spark, k):
+    """The CC hand-off on its own: label propagation stopped after k
+    rounds leaves a partly solved labeling; contracting the edges through
+    it and relabeling through two-phase gives the exact min-id labels."""
+    from parallel_connected_components_spark.operators.cc import relabel
+    from parallel_connected_components_spark.operators.graph import contract_edges
+
+    sym = symmetrize(spark.createDataFrame(HANDOFF_EDGES, "src long, dst long"))
+    mid, runner = cc_label_propagation(spark, sym, max_iterations=k, raise_on_cap=False)
+    assert runner.num_iterations == k
+    labels, _ = relabel(spark, mid, contract_edges(sym, mid))
+    assert labels_dict(labels) == union_find_oracle(HANDOFF_EDGES)
+
+
+def test_two_phase_reads_pinned_input_as_is(spark):
+    """A Pinned table skips the canonicalize: symmetric edges with
+    duplicates and self-loops (weaker than canonical) still give the
+    oracle's labels."""
+    from parallel_connected_components_spark.operators.graph import pin_edges
+
+    base = gen_component_graph(120, 4, 2, seed=41)
+    noisy = base + [(v, u) for u, v in base] + base[::4] + [(i, i) for i in range(0, 120, 7)]
+    pinned = pin_edges(spark, spark.createDataFrame(noisy, "src long, dst long"))
+    try:
+        labels, _ = cc_two_phase(spark, pinned)
+        assert labels_dict(labels) == union_find_oracle(noisy)
+    finally:
+        pinned.edges.unpersist()
 
 
 def rdds_read_by(df) -> set[int]:

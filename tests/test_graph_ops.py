@@ -14,7 +14,6 @@ from parallel_connected_components_spark.operators import (
     cc_two_phase,
     component_stats,
     degree_stats,
-    exclude_giant_component,
     giant_component_sample,
     label_propagation_communities,
     symmetrize,
@@ -155,7 +154,7 @@ def test_mtx_isolated_vertices_counted_via_header(spark, tmp_path):
     assert count_components(labels) == 3
 
 
-def test_giant_component_sample_and_exclusion(spark):
+def test_giant_component_sample(spark):
     # skew fixture: one giant component (90 vertices) + 5 small ones
     edge_list = [(i, i + 1) for i in range(89)] + [
         (100 + 10 * k, 101 + 10 * k) for k in range(5)
@@ -164,8 +163,6 @@ def test_giant_component_sample_and_exclusion(spark):
     labels, _ = cc_two_phase(spark, edges)
     giant, hits = giant_component_sample(labels, num_samples=64, seed=1)
     assert giant == 0
-    remaining = exclude_giant_component(spark, symmetrize(edges), labels, giant)
-    assert remaining.count() == 2 * 5  # only the small components' edges
 
 
 def test_count_components_approx(spark):

@@ -64,9 +64,7 @@ def test_stall_detector_fires_on_grid(spark):
     # far fewer iterations than the diameter.
     w, h = 20, 15
     edges = symmetrize(gen_grid_edges(spark, w, h))
-    _, runner = cc_label_propagation(
-        spark, edges, stall_window=3, stall_min_iterations=5
-    )
+    _, runner = cc_label_propagation(spark, edges, stall=True)
     assert runner.stalled
     assert runner.num_iterations < grid_diameter(w, h)
 
@@ -76,9 +74,7 @@ def test_stall_detector_quiet_on_web_graph(spark):
     # not fire there (same defaults cc_auto uses).
     pages = gen_pages(spark, 400, num_components=8)
     edges = symmetrize(edges_from_pages(pages, keep_dangling=False))
-    labels, runner = cc_label_propagation(
-        spark, edges, stall_window=3, stall_min_iterations=5
-    )
+    labels, runner = cc_label_propagation(spark, edges, stall=True)
     assert not runner.stalled
 
 
@@ -123,12 +119,17 @@ def test_cc_auto_matches_lp_full_run_on_grid(spark):
     assert _labels_dict(hybrid) == _labels_dict(plain)
 
 
-def test_cc_auto_fuzz_random_graphs(spark):
+def test_cc_auto_fuzz_random_graphs(spark, monkeypatch):
     """Property: cc_auto equals the union-find oracle on arbitrary random
     graphs, whichever path the stall detector picks (aggressive settings
     make BOTH paths fire across the examples)."""
     hypothesis = pytest.importorskip("hypothesis")
     from hypothesis import given, settings, strategies as st
+
+    from parallel_connected_components_spark.operators import cc
+
+    monkeypatch.setattr(cc, "STALL_WINDOW", 2)
+    monkeypatch.setattr(cc, "STALL_MIN_ITERATIONS", 2)
 
     paths_taken = set()
 
@@ -153,12 +154,7 @@ def test_cc_auto_fuzz_random_graphs(spark):
         if not rows:
             return
         df = spark.createDataFrame(rows, "src long, dst long")
-        labels, info = cc_auto(
-            spark,
-            symmetrize(df),
-            stall_window=2,
-            stall_min_iterations=2,
-        )
+        labels, info = cc_auto(spark, symmetrize(df))
         paths_taken.add(info["algorithm"])
         uf = union_find_oracle(rows)
         got = {r["vertex"]: r["label"] for r in labels.collect()}

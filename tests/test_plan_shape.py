@@ -486,17 +486,17 @@ def test_bucketed_reload_after_catalog_loss_and_lp_parity(spark, tmp_path):
 
 
 def test_two_phase_pre_partitioned_runs_without_exchange(spark, tmp_path):
-    """cc_two_phase(partition_by="pre", assume_canonical=True) over a
-    bucketed canonical table: phase 1's mapInPandas must read the bucket
-    partitions as-is (no Exchange between scan and the local-UF pass),
-    and labels must match the hash-partitioned run."""
+    """cc_two_phase over a pinned bucketed canonical table (a ``Pinned``,
+    as the CLI's --bucketed passes it): phase 1's mapInPandas must read
+    the bucket partitions as-is (no Exchange between scan and the
+    local-UF pass), and labels must match the hash-partitioned run."""
     from parallel_connected_components_spark.operators import (
         canonicalize,
         cc_two_phase,
     )
     from parallel_connected_components_spark.operators.cc import _local_uf_partition
     from parallel_connected_components_spark.sources.bucketed import (
-        load_bucketed_edges,
+        pin_bucketed_edges,
         save_bucketed_edges,
     )
     from tests.test_cc import gen_component_graph, labels_dict
@@ -507,16 +507,15 @@ def test_two_phase_pre_partitioned_runs_without_exchange(spark, tmp_path):
         spark, canon, "pccs_test_bkt3", str(tmp_path / "bkt_canon"), num_buckets=8
     )
     try:
-        e, _ = load_bucketed_edges(spark, "pccs_test_bkt3")
-        # the phase-1 plan as cc_two_phase builds it under "pre"
-        local = e.mapInPandas(_local_uf_partition, schema="src long, dst long")
+        e = pin_bucketed_edges(spark, "pccs_test_bkt3")
+        # the phase-1 plan as cc_two_phase builds it over a Pinned table
+        local = e.edges.mapInPandas(_local_uf_partition, schema="src long, dst long")
         plan = executed_plan(local)
         assert "Exchange" not in plan, plan
-        got, _ = cc_two_phase(
-            spark, e, partition_by="pre", assume_canonical=True
-        )
+        got, _ = cc_two_phase(spark, e)
         want, _ = cc_two_phase(spark, canon, partition_by="hash")
         assert labels_dict(got) == labels_dict(want)
+        e.edges.unpersist()
     finally:
         spark.sql("DROP TABLE IF EXISTS pccs_test_bkt3")
 

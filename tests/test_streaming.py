@@ -431,6 +431,35 @@ def _chain_batches(spark):
     return b1, b2, [spark.createDataFrame(b, "src long, dst long") for b in (b1, b2)]
 
 
+def test_full_state_tables_keep_only_the_latest_snapshot(spark, tmp_path):
+    """Two CC folds and two PageRank folds leave one ``snap=`` directory in
+    each full-state table (``labels``, ``ranks``, ``cc/labels``); the
+    snapshot log keeps every entry, an expired snapshot does not load,
+    and the delta table ``edges`` keeps every snapshot."""
+    from parallel_connected_components_spark.sources.tables import TableLayer
+    from parallel_connected_components_spark.streaming import graph as sg
+
+    _, _, (d1, d2) = _chain_batches(spark)
+    cc_state, pr_state = str(tmp_path / "cc_state"), str(tmp_path / "pr_state")
+    for d in (d1, d2):
+        sg.update_cc_state(spark, d, cc_state)
+        sg.update_pagerank_state(spark, d, pr_state, tol=1e-4)
+    sg._PR_EDGE_CACHE.pop(pr_state)["pinned"].edges.unpersist()
+
+    def snap_dirs(root, name):
+        return sorted(d for d in os.listdir(os.path.join(root, name)) if d.startswith("snap="))
+
+    for root, name in (
+        (cc_state, "labels"), (pr_state, "ranks"), (os.path.join(pr_state, "cc"), "labels")
+    ):
+        assert snap_dirs(root, name) == ["snap=1"], (root, name)
+        tables = TableLayer(spark, root, backend="parquet")
+        assert [s["snap"] for s in tables.snapshots(name)] == [0, 1]
+        with pytest.raises(FileNotFoundError):
+            tables.load(name, snap=0)
+    assert snap_dirs(pr_state, "edges") == ["snap=0", "snap=1"]
+
+
 def test_pagerank_fold_failing_in_cc_update_replays_into_cc_state(
     spark, tmp_path, monkeypatch
 ):
