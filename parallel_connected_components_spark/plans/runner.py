@@ -191,25 +191,35 @@ class IterationMetrics:
         return d
 
 
-class CompileMeter:
-    """Cumulative (generated classes compiled, JIT milliseconds) of the
-    driver JVM: the count of Spark's ``CodegenMetrics`` compilation-time
-    histogram (one entry per Janino compile, i.e. per codegen cache miss)
-    and ``CompilationMXBean.getTotalCompilationTime``. The JVM handles are
-    looked up once, so :meth:`totals` costs two py4j calls. Warm reruns of
-    a pipeline should compile nothing; a count that keeps rising means the
-    codegen cache is too small for the working set or a per-run literal
-    is defeating it (session.py, ``spark.sql.codegen.cache.maxEntries``)."""
+class JvmMeter:
+    """Cumulative (generated classes compiled, JIT milliseconds, GC
+    milliseconds) of the driver JVM: the count of Spark's ``CodegenMetrics``
+    compilation-time histogram (one entry per Janino compile, i.e. per
+    codegen cache miss), ``CompilationMXBean.getTotalCompilationTime`` and
+    the sum of ``GarbageCollectorMXBean.getCollectionTime`` over the JVM's
+    collectors. The JVM handles are looked up once, so :meth:`totals`
+    costs a py4j call per handle. Warm reruns of a pipeline should compile
+    nothing; a count that keeps rising means the codegen cache is too
+    small for the working set or a per-run literal is defeating it
+    (session.py, ``spark.sql.codegen.cache.maxEntries``). GC time is what
+    the collectors report (their collection time), not their threads'
+    CPU."""
 
     def __init__(self, spark: SparkSession) -> None:
         jvm = spark.sparkContext._jvm
+        mx = jvm.java.lang.management.ManagementFactory
         self._compiles = (
             jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
         )
-        self._jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        self._jit = mx.getCompilationMXBean()
+        self._gcs = list(mx.getGarbageCollectorMXBeans())
 
-    def totals(self) -> tuple[int, int]:
-        return self._compiles.getCount(), self._jit.getTotalCompilationTime()
+    def totals(self) -> tuple[int, int, int]:
+        return (
+            self._compiles.getCount(),
+            self._jit.getTotalCompilationTime(),
+            sum(max(0, gc.getCollectionTime()) for gc in self._gcs),
+        )
 
 
 def release(df: DataFrame) -> None:
@@ -434,10 +444,11 @@ class FixpointRunner:
     records the deltas since the previous poll in ``IterationMetrics.extra``:
     ``shuffle_read_bytes`` / ``shuffle_write_bytes`` (:class:`ShuffleMeter`),
     ``codegen_compiles``, the generated classes Spark compiled (codegen cache
-    misses), and ``jit_ms``, the driver JVM's JIT compilation time
-    (:class:`CompileMeter`). A warm rerun of the same pipeline should show
-    ``codegen_compiles == 0``; ``pagerank`` is the known exception (its
-    per-iteration dangling mass is an inlined double literal).
+    misses), ``jit_ms``, the driver JVM's JIT compilation time, and
+    ``gc_ms``, its collectors' time (:class:`JvmMeter`). A warm rerun of
+    the same pipeline should show ``codegen_compiles == 0``; ``pagerank``
+    is the known exception (its per-iteration dangling mass is an inlined
+    double literal).
     """
 
     def __init__(
@@ -540,8 +551,8 @@ class FixpointRunner:
                     state = init_state.localCheckpoint(eager=True)
                 meter = ShuffleMeter()
                 shuffle0 = meter.totals(self.spark)
-                compiles = CompileMeter(self.spark)
-                compiles0 = compiles.totals()
+                jvm_meter = JvmMeter(self.spark)
+                jvm0 = jvm_meter.totals()
                 for it in range(start_iter, self.max_iterations):
                     t0 = time.perf_counter()
                     df, obs = self._observed(step(state, it), observe, it)
@@ -561,13 +572,14 @@ class FixpointRunner:
                     # the run's totals include its last job.
                     poll = changed == 0 or (it - start_iter) % 4 == 3
                     if poll:
-                        compiles1 = compiles.totals()
+                        jvm1 = jvm_meter.totals()
                         extra = dict(
                             extra,
-                            codegen_compiles=compiles1[0] - compiles0[0],
-                            jit_ms=compiles1[1] - compiles0[1],
+                            codegen_compiles=jvm1[0] - jvm0[0],
+                            jit_ms=jvm1[1] - jvm0[1],
+                            gc_ms=jvm1[2] - jvm0[2],
                         )
-                        compiles0 = compiles1
+                        jvm0 = jvm1
                     if poll and shuffle0 is not None:
                         shuffle1 = meter.totals(self.spark, drain=changed == 0)
                         if shuffle1 is not None:

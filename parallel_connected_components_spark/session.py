@@ -9,12 +9,29 @@ the analog of the reference's dynamic scheduling,
 Python UDFs are vectorized per BASELINE.json input_hint), UTC session
 timezone (DuckDB oracle parity), shuffle partitions sized to cores rather
 than the 200 default.
+
+The driver JVM runs the Parallel (throughput) collector, not the JDK's
+default G1. The engine is driver-bound: its short supersteps spend their
+CPU on Catalyst, codegen and JIT in the driver JVM, and a throughput
+collector pauses briefly instead of running concurrent marking threads
+beside them. Per warm hub-skew pass, G1's collector threads used
+0.6-10.5 s of CPU in per-thread probes against 0.1-0.4 s for Parallel's,
+and the benchmark's hub-skew ``cpu_s`` fell 13-18% in median
+(BENCH/BASELINE.md, "Driver collector"). In local mode the driver JVM
+also runs every task, so this covers the engine's whole heap. The flag
+goes in ``spark.driver.defaultJavaOptions``, which Spark puts in front
+of ``spark.driver.extraJavaOptions``: a caller's ``extraJavaOptions``
+(the benchmark passes its own) add to it instead of replacing it.
+Executor JVMs on a real cluster keep the collector their deployment
+gives them; that layout is unmeasured.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import zipfile
+from collections.abc import Mapping
 
 from pyspark import SparkFiles
 from pyspark.sql import SparkSession
@@ -26,6 +43,36 @@ def default_parallelism() -> int:
     if env:
         return int(env)
     return os.cpu_count() or 8
+
+
+DEFAULT_JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
+EXTRA_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+DRIVER_GC = "-XX:+UseParallelGC"
+# A HotSpot flag that selects a collector; the JVM refuses to start when
+# two are selected ("Multiple garbage collectors selected").
+_SELECTS_GC = re.compile(
+    r"-XX:\+Use(?:Serial|Parallel|ParallelOld|G1|ConcMarkSweep|Z|Shenandoah|Epsilon)GC\b"
+)
+# Environment variables whose JVM options reach the driver JVM: the first
+# two every HotSpot JVM reads, the last spark-submit's launcher passes on.
+_JVM_ENV_OPTIONS = ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+
+
+def driver_java_options(
+    extra_conf: Mapping[str, str], env: Mapping[str, str] = os.environ
+) -> str:
+    """The session's ``spark.driver.defaultJavaOptions``: the caller's own
+    value from ``extra_conf``, led by :data:`DRIVER_GC` unless the caller
+    already selects a collector, in the default or extra driver options
+    or in an environment variable the driver JVM reads. A collector
+    chosen in spark-defaults.conf or ``PYSPARK_SUBMIT_ARGS`` is not seen."""
+    default = extra_conf.get(DEFAULT_JAVA_OPTIONS, "")
+    chosen = [extra_conf.get(EXTRA_JAVA_OPTIONS, ""), default] + [
+        env.get(var, "") for var in _JVM_ENV_OPTIONS
+    ]
+    if any(_SELECTS_GC.search(opts) for opts in chosen):
+        return default
+    return f"{DRIVER_GC} {default}".strip()
 
 
 def get_spark(
@@ -118,7 +165,13 @@ def get_spark(
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
         builder = builder.config("spark.local.dir", os.path.join(shm, "pccs-spark"))
     builder = builder.master(master)
-    for k, v in (extra_conf or {}).items():
+    # Parallel collector for the driver JVM (module docstring), set
+    # through defaultJavaOptions so a caller's extraJavaOptions still
+    # reach the JVM; no flag is added when the caller picks a collector.
+    conf = dict(extra_conf or {})
+    if opts := driver_java_options(conf):
+        conf[DEFAULT_JAVA_OPTIONS] = opts
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -4,9 +4,9 @@ oracle_sql() via DuckDB — row count, column names, and an
 order-insensitive value comparison (sorted rows, columns sorted by name).
 
 The last line reports the generated classes the run compiled and the
-driver JVM's JIT seconds. On a cold session the compile count bounds the
-codegen working set of all queries; session.py sizes Spark's codegen
-cache from it, so re-measure when queries change.
+driver JVM's JIT and GC seconds. On a cold session the compile count
+bounds the codegen working set of all queries; session.py sizes Spark's
+codegen cache from it, so re-measure when queries change.
 
 Usage: python scripts/check_entry.py [sf_dir]
 """
@@ -23,7 +23,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
-from parallel_connected_components_spark.plans.runner import CompileMeter  # noqa: E402
+from parallel_connected_components_spark.plans.runner import JvmMeter  # noqa: E402
 from parallel_connected_components_spark.session import get_spark  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -51,8 +51,8 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     spark = get_spark("check-entry")
-    compiles = CompileMeter(spark)
-    compiles0 = compiles.totals()
+    jvm_meter = JvmMeter(spark)
+    jvm0 = jvm_meter.totals()
     qs, oracles = E.queries(), E.oracle_sql()
     if only:
         qs = {k: v for k, v in qs.items() if k in only}
@@ -96,10 +96,11 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             failures += 1
         else:
             print(f"ok    {name}: {len(rows)} rows match oracle ({dt:.1f}s)")
-    n_compiles, jit_ms = (b - a for a, b in zip(compiles0, compiles.totals()))
+    n_compiles, jit_ms, gc_ms = (b - a for a, b in zip(jvm0, jvm_meter.totals()))
     spark.stop()
     print(f"\n{len(qs)} queries, {len(oracles)} with oracle, {failures} failures")
-    print(f"codegen: {n_compiles} classes compiled, {jit_ms / 1000:.1f} s JIT")
+    print(f"codegen: {n_compiles} classes compiled, {jit_ms / 1000:.1f} s JIT,"
+          f" {gc_ms / 1000:.1f} s GC")
     return 1 if failures else 0
 
 

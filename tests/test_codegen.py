@@ -6,7 +6,7 @@ conf ``spark.sql.codegen.cache.maxEntries`` (session.py). At Spark's
 default of 100 entries the cc + lpa + scc sequence below already thrashes:
 each rerun recompiles ~140 classes, and the driver pays Janino and JIT
 again. The compile count is the count of Spark's ``CodegenMetrics``
-compilation-time histogram (plans/runner.py:CompileMeter)."""
+compilation-time histogram (plans/runner.py:JvmMeter)."""
 
 from __future__ import annotations
 
@@ -18,7 +18,7 @@ from parallel_connected_components_spark.operators import (
     scc,
     symmetrize,
 )
-from parallel_connected_components_spark.plans.runner import CompileMeter
+from parallel_connected_components_spark.plans.runner import JvmMeter
 
 
 def _hub_edges(spark, n: int = 300, sites: int = 3):
@@ -42,7 +42,7 @@ def _hub_edges(spark, n: int = 300, sites: int = 3):
 
 def test_warm_rerun_compiles_no_classes(spark):
     edges = _hub_edges(spark)
-    meter = CompileMeter(spark)
+    meter = JvmMeter(spark)
 
     def once():
         sym = symmetrize(edges).persist()
@@ -59,8 +59,9 @@ def test_warm_rerun_compiles_no_classes(spark):
     c0 = meter.totals()[0]
     runners = once()
     assert meter.totals()[0] - c0 == 0
-    # the runner ledger sees the same: every poll records zero compiles
+    # the runner ledger sees the same: every poll records zero compiles,
+    # and the driver's GC time next to its JIT time
     for r in runners:
-        polled = [m.extra["codegen_compiles"] for m in r.metrics
-                  if "codegen_compiles" in m.extra]
-        assert polled and not any(polled), r.name
+        polls = [m.extra for m in r.metrics if "codegen_compiles" in m.extra]
+        assert polls and not any(p["codegen_compiles"] for p in polls), r.name
+        assert all(p["jit_ms"] >= 0 and p["gc_ms"] >= 0 for p in polls), r.name

@@ -1,4 +1,5 @@
-"""Session factory: the package ships to workers once per SparkContext."""
+"""Session factory: the package ships to workers once per SparkContext,
+and the driver JVM runs the Parallel collector."""
 
 from __future__ import annotations
 
@@ -34,3 +35,41 @@ def test_package_ships_once_per_context(spark, monkeypatch):
     assert os.path.isfile(
         os.path.join(root, "pyfiles", "parallel_connected_components_spark.zip")
     )
+
+
+def test_driver_runs_parallel_collector(spark):
+    """The driver JVM (in local mode also every task's heap) runs the
+    Parallel collector that ``get_spark`` selects."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    names = {gc.getName() for gc in mx.getGarbageCollectorMXBeans()}
+    assert names == {"PS Scavenge", "PS MarkSweep"}
+
+
+def test_driver_java_options_compose_with_callers():
+    """The collector flag leads the caller's default options and is left
+    out when the caller selects a collector: HotSpot refuses to start
+    with two ("Multiple garbage collectors selected")."""
+    from parallel_connected_components_spark.session import (
+        DEFAULT_JAVA_OPTIONS as DEFAULT,
+        DRIVER_GC,
+        EXTRA_JAVA_OPTIONS as EXTRA,
+        driver_java_options,
+    )
+
+    def opts(default=None, extra=None, env=None):
+        conf = {k: v for k, v in ((DEFAULT, default), (EXTRA, extra)) if v is not None}
+        return driver_java_options(conf, env or {})
+
+    assert opts() == DRIVER_GC
+    # the benchmark's own extraJavaOptions ride next to it
+    assert opts(extra="-XX:-UsePerfData") == DRIVER_GC
+    assert opts(default="-Xss4m") == f"{DRIVER_GC} -Xss4m"
+    assert opts(extra="-Xss4m -XX:+UseG1GC") == ""
+    assert opts(default="-XX:+UseZGC -Xss4m") == "-XX:+UseZGC -Xss4m"
+    assert opts(default="-Xss4m", extra="-XX:+UseSerialGC") == "-Xss4m"
+    for var in ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS"):
+        assert opts(env={var: "-XX:+UseShenandoahGC"}) == ""
+    # flags that only mention GC select nothing
+    for flag in ("-XX:-UseG1GC", "-XX:+UseGCOverheadLimit",
+                 "-XX:+UseAdaptiveSizePolicyWithSystemGC"):
+        assert opts(extra=flag) == DRIVER_GC, flag
